@@ -4,7 +4,11 @@ Single place that pins the configs the engine depends on:
 - AQE on (runtime coalesce / skew handling),
 - Arrow on (all Python kernels are Arrow-batched, never per-row),
 - UTC session timezone (oracle parity with DuckDB's UTC-naive timestamps),
-- shuffle partitions sized to cores for local mode (not the 200 default).
+- shuffle partitions sized to cores for local mode (not the 200 default),
+- driver heap at half the host's RAM, capped at 24g (``SPARK_DRIVER_MEM``
+  overrides),
+- Python workers forked from ``pydaemon``, which keeps PySpark's per-task
+  ``invalidate_caches`` from re-reading Spark's archives on the worker path.
 """
 
 from __future__ import annotations
@@ -12,6 +16,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 24g: a heap larger than RAM lets the
+    JVM grow into the OOM killer instead of collecting."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(24, int(ram_gb // 2)))}g"
 
 
 def get_spark(
@@ -34,6 +45,7 @@ def get_spark(
     # tools/scaling_bench.py --mode executors for cluster-shaped scaling
     # evidence without a cluster manager.
     master = os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cores}]"
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -43,7 +55,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # zstd shuffle/spill compression: ~30% fewer shuffle bytes than
@@ -66,14 +81,13 @@ def get_spark(
         # embed truncated blob copies in every footer — cap them
         .config("spark.hadoop.parquet.statistics.truncate.length", "16")
         .config("spark.hadoop.parquet.columnindex.truncate.length", "16")
+        # the worker daemon imports this package, whatever the JVM's cwd
+        .config("spark.executorEnv.PYTHONPATH", repo_root)
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
     )
     if master.startswith("local-cluster"):
-        # executor JVMs are separate processes: they need the repo on the
-        # python workers' path and the same GC policy as the driver
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        # executor JVMs are separate processes: same GC policy as the driver
         builder = builder.config(
-            "spark.executorEnv.PYTHONPATH", repo_root
-        ).config(
             "spark.executor.extraJavaOptions",
             "-XX:+UseParallelGC -XX:ParallelGCThreads=2",
         )

@@ -51,8 +51,9 @@ def new_files_frame(
 
     Reads the whole sink dir through ``_spark_metadata`` (committed files
     only — stale uncommitted files from a crashed earlier drain are
-    ignored) and restricts to this drain's file basenames; Spark prunes
-    non-matching files at the scan.
+    ignored) and restricts to this drain's file basenames.  An
+    ``input_file_name()`` filter prunes no files at the scan, so a count
+    over this frame reads every file in the sink's history.
     """
     return spark.read.parquet(output_dir).where(
         F.element_at(F.split(F.input_file_name(), "/"), -1).isin(
