@@ -29,10 +29,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL twins (same column names as the Spark queries).
 
-    Keys absent here (the xxhash-based q43 simhash kernel, LSH-ANN/IVF
-    recall queries, xxhash-dependent codec-name column) are genuinely
-    non-SQL-expressible — the driver records rows-only checks; pytest
-    covers them with recall/round-trip assertions instead.  SimHash
-    itself IS oracle-checked via the md5-based twin q56.
+    Keys absent here — the xxhash-based q43 SimHash kernel and the q54
+    IVF-ANN with its trained k-means quantizer — are genuinely
+    non-SQL-expressible: the driver records rows-only checks; pytest
+    covers them with recall assertions instead.  SimHash itself IS
+    oracle-checked via the md5-based twin q56, the IVF assignment
+    structure via q65, and LSH-ANN (q46) and the embedding near-dup
+    (q66) end to end, through their sequential-fold bucket kernel.
     """
     return dict(ORACLES)

@@ -67,7 +67,8 @@ if _missing:  # pragma: no cover - import-time sanity
 #   1. oracle-backed queries (green-able), ascending by number — EXCEPT
 #   2. demoted oracle-backed queries whose SURVEY §2 row is already proven
 #      by another green query (q16 ⊂ A10 via q40, q44 ⊂ cosine via q45,
-#      q24/q23 ⊂ F-family via q22/q25/q26 + transform pytest, and q23's
+#      q46 ⊂ LSH buckets via q66 + top-5 ranking via q45, q24/q23 ⊂
+#      F-family via q22/q25/q26 + transform pytest, and q23's
 #      histogram-on-computed-key shape ⊂ A6 via q13) — these ride at the
 #      back of the oracle-backed block so the window always prefers
 #      unique-capability proofs (q24's slot went to q64, the stateful
@@ -86,10 +87,9 @@ _DEMOTED = (
     "q44_top20_similar_pairs",
     "q24_ship_month",
     "q23_props_extract",
-    # q63's bucket-structure proof is subsumed by q66 (same seq-fold
-    # kernel + planes; a bucket error changes q66's pair set and fails
-    # the hash compare), whose slot proves the full near-dup operator
-    "q63_lsh_bucket_histogram",
+    # q46 = q66's LSH buckets (same kernel, planes and candidate CTE) +
+    # q45's exact top-5 ranking; both of those hold window slots
+    "q46_ann_lsh_topk",
 )
 
 

@@ -4,18 +4,22 @@
   unrolled over the fixed dim entirely JVM-side (whole-stage codegen) in
   double precision so the DuckDB oracle (same fold order, same casts)
   matches bit-for-bit before rounding.
-- q46: LSH-bucketed ANN (the scale path) — deterministic random-hyperplane
-  signs bucket the vectors; only same-bucket pairs are scored.  At 10^9
-  vectors the bucket join replaces the O(n²) cross-join; recall is traded
-  via the number of hyperplanes.  Rows-only driver check; pytest measures
-  recall against the brute-force top-k.
+- q46/q66: LSH-bucketed ANN top-k and embedding near-dup (the scale
+  path) — deterministic random-hyperplane signs bucket the vectors; only
+  same-bucket pairs are scored.  At 10^9 vectors the bucket join replaces
+  the O(n²) cross-join; recall is traded via the number of hyperplanes.
+  The one bucket kernel folds each plane dot left to right, the IEEE
+  association of DuckDB's ``list_dot_product``, so both queries are
+  oracle-checked end to end; pytest measures recall against brute force.
+- q54/q65: IVF ANN with a trained quantizer, and its deterministic
+  assignment-structure twin.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .common import t
@@ -38,23 +42,37 @@ _NORM = "sqrt(" + " + ".join(f"v[{i}] * v[{i}]" for i in range(_DIM)) + ")"
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-dim contract: only ``_DIM``-length embeddings flow downstream.
+    """Fixed-dim, non-zero vectors with their norms.
 
     The unrolled ``_DOT``/``_NORM`` expressions index ``v[0.._DIM-1]``
     directly, and Spark 4 ANSI mode turns an out-of-range index into
     INVALID_ARRAY_INDEX — so a single malformed row would fail the whole
     query.  The size filter is a cheap codegen predicate that makes the
-    contract explicit (malformed rows are dropped, not fatal)."""
+    contract explicit (malformed rows are dropped, not fatal).  A
+    zero-norm vector has no direction, so it is dropped too: its cosine
+    divides by zero, which ANSI mode turns into DIVIDE_BY_ZERO (and
+    without ANSI into NaN, which Spark orders above every double, so
+    ``NaN >= τ`` would hold).  That filter tests the raw elements'
+    extremes, not ``nrm > 0``: Catalyst pushes a filter on ``nrm`` below
+    the projection by inlining ``_NORM`` with an array cast per term,
+    which doubled the wall of the brute-force and LSH queries."""
     return (
         t(spark, sf_dir, "embeddings")
         .filter(F.size("embedding") == _DIM)
+        .filter(
+            (F.array_max("embedding") != 0) | (F.array_min("embedding") != 0)
+        )
         .select("vec_id", F.expr(_TO_DOUBLE).alias("v"))
         .withColumn("nrm", F.expr(_NORM))
     )
 
 
-def _pair_cosine(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cross join with cosine; caller filters/limits."""
+def _pair_cosine(
+    a: DataFrame, b: DataFrame, pairs: DataFrame | None = None
+) -> DataFrame:
+    """``(a_id, b_id, cos)`` over every ``a`` × ``b`` pair (cross join), or
+    over just the ``(a_id, b_id)`` id pairs in ``pairs``, whose vectors
+    are joined back; caller filters/limits."""
     aa = a.select(
         F.col("vec_id").alias("a_id"),
         F.col("v").alias("va"),
@@ -65,10 +83,31 @@ def _pair_cosine(a: DataFrame, b: DataFrame) -> DataFrame:
         F.col("v").alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    return aa.crossJoin(bb).select(
+    joined = (
+        aa.crossJoin(bb)
+        if pairs is None
+        else pairs.join(aa, "a_id").join(bb, "b_id")
+    )
+    return joined.select(
         "a_id",
         "b_id",
         (F.expr(_DOT) / (F.col("na") * F.col("nb"))).alias("cos"),
+    )
+
+
+def _top5(pairs: DataFrame) -> DataFrame:
+    """Top-5 ``b_id`` per ``a_id`` by (cos DESC, b_id ASC)."""
+    w = Window.partitionBy("a_id").orderBy(F.desc("cos"), F.asc("b_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .select(
+            F.col("a_id").alias("query_id"),
+            F.col("b_id").alias("neighbor_id"),
+            F.col("rank"),
+            F.round("cos", 6).alias("cosine"),
+        )
+        .orderBy("query_id", "rank")
     )
 
 
@@ -88,20 +127,7 @@ def q45_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
     queries = v.filter(F.col("vec_id") < 10)
     pairs = _pair_cosine(queries, v).filter(F.col("a_id") != F.col("b_id"))
-    w = Window.partitionBy("a_id").orderBy(
-        F.desc("cos"), F.asc("b_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            F.col("a_id").alias("query_id"),
-            F.col("b_id").alias("neighbor_id"),
-            F.col("rank"),
-            F.round("cos", 6).alias("cosine"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _top5(pairs)
 
 
 def lsh_plane_literals(
@@ -114,259 +140,112 @@ def lsh_plane_literals(
     ).tolist()
 
 
-def _lsh_bucket_udf():
-    """Vectorized bucket-id kernel: one (n × dim) @ (dim × L·k) matmul per
-    Arrow batch → L bucket ids per vector.
+_PLANES = np.asarray(lsh_plane_literals(), dtype=np.float64)  # (L, k, dim)
+
+
+def seq_dots(m: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    """(n, dim) × (r, dim) → (n, r) dot products, each a SEQUENTIAL fold
+    over dim (one column at a time, left to right).
+
+    That is the IEEE association of DuckDB's ``list_dot_product``, so an
+    oracle reproduces every sign or argmax decision bit for bit.  A BLAS
+    matmul reassociates the sum and can flip a decision that sits at the
+    ulp level; the column loop keeps one vectorized (n × r) update per
+    step (~7 µs per vector at r = 32, dim = 64 on a 4-core x86 host)."""
+    acc = np.zeros((len(m), len(rows)))
+    for j in range(rows.shape[1]):
+        acc += m[:, j : j + 1] * rows[:, j]
+    return acc
+
+
+def lsh_bucket_ids(vs: pd.Series) -> pd.Series:
+    """Arrow-batch bucket kernel: L bucket ids (k sign bits each) per vector.
 
     A SQL-expression formulation of the 32 plane dots (even fully
     unrolled) puts ~64 multi-thousand-term expressions into the plan —
-    Catalyst spends seconds ANALYZING the tree before any data moves.
-    The numpy kernel keeps the plan tiny and is the right shape at 10^9
-    vectors anyway (BLAS matmul, one pass)."""
-    planes = np.asarray(lsh_plane_literals(), dtype=np.float64)  # (L,k,dim)
-    weights = (1 << np.arange(planes.shape[1])).astype(np.int64)  # (k,)
-
-    @F.pandas_udf("array<int>")
-    def _buckets(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:  # np.stack raises on an empty batch
-            return pd.Series([], dtype=object)
-        m = np.stack(vs.to_numpy()).astype(np.float64)  # (n, dim)
-        # (n, L, k) sign bits via one tensordot over dim
-        bits = np.tensordot(m, planes, axes=([1], [2])) >= 0.0
-        ids = (bits * weights).sum(axis=2).astype(np.int32)  # (n, L)
-        return pd.Series(list(ids))
-
-    return _buckets
+    Catalyst spends seconds ANALYZING the tree before any data moves —
+    so the dots run in numpy over each Arrow batch."""
+    if len(vs) == 0:  # np.stack raises on an empty batch
+        return pd.Series([], dtype=object)
+    m = np.stack(vs.to_numpy()).astype(np.float64)  # (n, dim)
+    n_tables, k_planes, _ = _PLANES.shape
+    dots = seq_dots(m, _PLANES.reshape(n_tables * k_planes, -1))
+    bits = dots.reshape(len(m), n_tables, k_planes) >= 0.0
+    ids = (bits * (1 << np.arange(k_planes))).sum(axis=2).astype(np.int32)
+    return pd.Series(list(ids))
 
 
 def _lsh_bucketed(v: DataFrame) -> DataFrame:
-    """Explode each vector into its (table_idx, bucket) LSH cells.
+    """Explode each vector into its ``(vec_id, table_idx, bucket)`` cells.
 
     L hash tables (OR) of k sign-bit planes (AND) — the standard
     recall/cost amplification shared by the ANN top-k (q46) and the
-    embedding near-dup pass (q55).  Bucket ids come from one vectorized
-    Arrow kernel (see :func:`_lsh_bucket_udf`)."""
-    buckets = _lsh_bucket_udf()
+    embedding near-dup pass (q66)."""
+    buckets = F.pandas_udf(lsh_bucket_ids, "array<int>")
     return v.select(
         "vec_id",
-        "v",
-        "nrm",
         F.posexplode(buckets(F.col("v"))).alias("table_idx", "bucket"),
+    )
+
+
+def _lsh_candidates(v: DataFrame, pair_filter: Column) -> DataFrame:
+    """Distinct ``(a_id, b_id)`` pairs that share a bucket in ANY table
+    and pass ``pair_filter``.  Candidate generation moves 16-byte id
+    pairs only; vectors join back AFTER the distinct, so the dedup
+    shuffle never carries the embeddings."""
+    cells = _lsh_bucketed(v)
+    a = cells.select(F.col("vec_id").alias("a_id"), "table_idx", "bucket")
+    b = cells.select(F.col("vec_id").alias("b_id"), "table_idx", "bucket")
+    return (
+        a.join(b, ["table_idx", "bucket"])
+        .filter(pair_filter)
+        .select("a_id", "b_id")
+        .distinct()
     )
 
 
 def q46_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-5 neighbors for the first 10 vectors.
 
-    L hash tables (OR) of k sign-bit planes (AND): a pair is a candidate
-    if any table puts both vectors in the same bucket — the standard
-    recall/cost amplification.  At 10^9 vectors the per-table bucket join
-    replaces the O(n²) cross-join; L and k tune recall vs candidates.
-    Rows-only driver check (approximate by construction); pytest measures
-    recall against the brute-force top-k.
-    """
-    bucketed = _lsh_bucketed(_vectors(spark, sf_dir))
-    qa = bucketed.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("a_id"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-        "table_idx",
-        "bucket",
-    )
-    cb = bucketed.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-        "table_idx",
-        "bucket",
-    )
-    pairs = (
-        qa.join(cb, ["table_idx", "bucket"])
-        .filter(F.col("a_id") != F.col("b_id"))
-        .select("a_id", "b_id", "va", "vb", "na", "nb")
-        .dropDuplicates(["a_id", "b_id"])
-        .select(
-            "a_id",
-            "b_id",
-            (F.expr(_DOT) / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("a_id").orderBy(F.desc("cos"), F.asc("b_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            F.col("a_id").alias("query_id"),
-            F.col("b_id").alias("neighbor_id"),
-            F.col("rank"),
-            F.round("cos", 6).alias("cosine"),
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-def _lsh_bucket_seq_udf():
-    """Bucket-id kernel with SEQUENTIAL (left-to-right) dot accumulation.
-
-    Same planes as :func:`_lsh_bucket_udf`, but each plane dot is the last
-    element of ``np.cumsum`` over the signed values — the exact IEEE
-    association of DuckDB's ``list_dot_product`` fold, so the bucket ids
-    (sign decisions included) are reproducible in the oracle bit-for-bit.
-    The production tensordot kernel trades that association for BLAS
-    speed; this twin exists to make the bucket structure value-checkable.
-    """
-    planes = np.asarray(lsh_plane_literals(), dtype=np.float64)  # (L,k,dim)
-    n_tables, k_planes, dim = planes.shape
-    flat = planes.reshape(n_tables * k_planes, dim)  # (L*k, dim)
-    weights = (1 << np.arange(k_planes)).astype(np.int64)
-
-    @F.pandas_udf("array<int>")
-    def _buckets(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        m = np.stack(vs.to_numpy()).astype(np.float64)  # (n, dim)
-        # (n, L*k, dim) signed terms → sequential fold along dim
-        signed = m[:, None, :] * flat[None, :, :]
-        dots = np.cumsum(signed, axis=2)[:, :, -1]
-        bits = dots.reshape(len(m), n_tables, k_planes) >= 0.0
-        ids = (bits * weights).sum(axis=2).astype(np.int32)
-        return pd.Series(list(ids))
-
-    return _buckets
-
-
-def q63_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable LSH twin: per-(table, bucket) population histogram.
-
-    q46/q55's production bucket kernel is not SQL-expressible (tensordot
-    accumulation order), so — the q56 trick — this twin recomputes the
-    SAME deterministic sign-plane bucket ids with a sequential-fold Arrow
-    kernel (see :func:`_lsh_bucket_seq_udf`) whose IEEE association
-    matches DuckDB's ``list_dot_product`` fold bit-for-bit, making the
-    full bucket-population distribution (the candidate-generation
-    structure the ANN/near-dup queries rely on) value-checkable against
-    the oracle.  Plan shape at 10^9 vectors: one scan, one vectorized
-    Arrow projection, one 8-way explode (the L tables), one hash
-    aggregate — no joins, no driver data path.
+    A pair is a candidate if any table puts both vectors in the same
+    bucket; candidates are ranked by exact cosine (q45's ranking).  At
+    10^9 vectors the per-table bucket join replaces the O(n²) cross-join;
+    L and k tune recall vs candidates.  The result is approximate vs
+    q45 (pytest measures recall) but deterministic, so its DuckDB oracle
+    checks it exactly.
     """
     v = _vectors(spark, sf_dir)
-    buckets = _lsh_bucket_seq_udf()
-    return (
-        v.select(
-            F.posexplode(buckets(F.col("v"))).alias("table_idx", "bucket")
-        )
-        .groupBy("table_idx", "bucket")
-        .agg(F.count("*").alias("n_vectors"))
-        .orderBy("table_idx", "bucket")
+    cand = _lsh_candidates(
+        v, (F.col("a_id") < 10) & (F.col("a_id") != F.col("b_id"))
     )
+    return _top5(_pair_cosine(v, v, cand))
 
 
 NEARDUP_COS = 0.40  # τ tuned to the synthetic embedding distribution
 
 
 def q66_embedding_neardup_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fully oracle-backed embedding near-dup: seq-fold LSH candidates +
-    exact cosine verify ≥ τ.
+    """Embedding-cosine near-duplicate pairs: LSH candidates + exact verify.
 
-    Same pipeline as the production q55 (bucket-join candidate
-    generation → exact-cosine verification, precision 1.0 by
-    construction), but the bucket ids come from the SEQUENTIAL-fold
-    kernel (:func:`_lsh_bucket_seq_udf`, the q63 twin) whose IEEE
-    association DuckDB reproduces bit-for-bit — so the ENTIRE operator
-    (candidate structure + pair set + verified cosines) is
-    value-checkable, not just its bucket histogram.  q63's standalone
-    histogram twin is demoted from the driver window in favor of this:
-    any bucket error here changes the pair set and fails the hash
-    compare, so the structure proof is subsumed.
-
-    Plan shape at 10^9 vectors: identical to q55 — the dedup shuffle
-    carries 16-byte id pairs only (vectors join back after the
-    distinct), no cross join, no driver data path.
+    The dedup variant of the ANN machinery: same-bucket pairs (see
+    :func:`_lsh_candidates`) are the candidates, and each one is verified
+    with the exact cosine before being reported as a near-dup (cosine ≥
+    τ).  Precision is 1.0 by construction; recall is the LSH recall,
+    measured in pytest against the brute-force pair set.  At 10^9
+    vectors the bucket join is the only pair generator — no cross join,
+    no driver data path (reference capability: duplicate detection, its
+    ``sql/queries.sql`` exact-dup query; this is the embedding-space
+    analogue for training-data curation).  The whole operator — bucket
+    structure, pair set and verified cosines — is oracle-checked.
     """
     v = _vectors(spark, sf_dir)
-    buckets = _lsh_bucket_seq_udf()
-    bucketed = v.select(
-        "vec_id",
-        F.posexplode(buckets(F.col("v"))).alias("table_idx", "bucket"),
-    )
-    a = bucketed.select(F.col("vec_id").alias("a_id"), "table_idx", "bucket")
-    b = bucketed.select(F.col("vec_id").alias("b_id"), "table_idx", "bucket")
-    cand = (
-        a.join(b, ["table_idx", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    va = v.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    vb = v.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
+    cand = _lsh_candidates(v, F.col("a_id") < F.col("b_id"))
     return (
-        cand.join(va, "a_id")
-        .join(vb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            (F.expr(_DOT) / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
+        _pair_cosine(v, v, cand)
         .filter(F.col("cos") >= NEARDUP_COS)
         .select("a_id", "b_id", F.round("cos", 6).alias("cosine"))
         .orderBy(F.desc("cosine"), "a_id", "b_id")
     )
-
-
-def _oracle_embedding_neardup() -> str:
-    """Buckets via the q63 CASE-bit construction; norms via
-    ``list_dot_product(vec, vec)`` (proven sequential association — the
-    τ comparison happens on unrounded doubles, so the norm must match
-    Spark's unrolled sum bit-for-bit, not just to 6 decimals)."""
-    planes = lsh_plane_literals()
-    legs = []
-    for ti, table in enumerate(planes):
-        bits = " + ".join(
-            "(CASE WHEN list_dot_product(vec, ["
-            + ", ".join(f"{float(p[i])}" for i in range(len(p)))
-            + f"]) >= 0 THEN {1 << j} ELSE 0 END)"
-            for j, p in enumerate(table)
-        )
-        legs.append(
-            f"SELECT vec_id, {ti} AS table_idx, "
-            f"CAST({bits} AS INT) AS bucket FROM v"
-        )
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH {_SQL_VECTORS},
-        nd AS (
-            SELECT vec_id, vec,
-                   sqrt(list_dot_product(vec, vec)) AS nrm
-            FROM v
-        ),
-        cells AS ({union}),
-        cand AS (
-            SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-            FROM cells a
-            JOIN cells b
-              ON a.table_idx = b.table_idx AND a.bucket = b.bucket
-             AND a.vec_id < b.vec_id
-        ),
-        verified AS (
-            SELECT c.a_id, c.b_id,
-                   list_dot_product(x.vec, y.vec) / (x.nrm * y.nrm) AS cos
-            FROM cand c
-            JOIN nd x ON x.vec_id = c.a_id
-            JOIN nd y ON y.vec_id = c.b_id
-        )
-        SELECT a_id, b_id, round(cos, 6) AS cosine
-        FROM verified
-        WHERE cos >= {NEARDUP_COS}
-        ORDER BY cosine DESC, a_id, b_id
-    """
 
 
 _IVF_TWIN_CELLS = 32  # fixed quantizer size for the oracle-checkable twin
@@ -379,17 +258,17 @@ def q65_ivf_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     q54's production IVF path is not SQL-expressible end-to-end (the
     k-means trainer's partial-sum reduction order is
     partition-arrival-dependent, and its assignment kernel folds dots
-    BLAS-style), so — the q63 trick applied to IVF — this twin recomputes
-    the exact ASSIGNMENT STRUCTURE the inverted file relies on with fully
-    deterministic, cross-engine-reproducible pieces:
+    BLAS-style), so — the sequential-fold trick of the LSH kernel — this
+    twin recomputes the exact ASSIGNMENT STRUCTURE the inverted file
+    relies on with fully deterministic, cross-engine-reproducible pieces:
 
     - centroids = the ``_IVF_TWIN_CELLS`` vectors with the smallest
       ``md5_60bit(vec_id)`` (the cross-engine portable hash,
       ``common.md5_60bit``), unit-normalized with a SEQUENTIAL
       sum-of-squares fold — i.e. the seeded-trainer's deterministic
       seeding step, iteration 0;
-    - per-vector cell dots via a sequential-fold Arrow kernel whose IEEE
-      association matches DuckDB's ``list_dot_product`` bit-for-bit;
+    - per-vector cell dots via :func:`seq_dots`, whose IEEE association
+      matches DuckDB's ``list_dot_product`` bit-for-bit;
     - top-``_IVF_TWIN_REPLICAS`` cells per vector with the same
       (dot DESC, cell ASC) tie-break as the oracle's ``row_number``.
 
@@ -403,7 +282,7 @@ def q65_ivf_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .common import md5_60bit
 
-    v = _vectors(spark, sf_dir).filter(F.col("nrm") > 0)
+    v = _vectors(spark, sf_dir)
     seeds = (
         v.select("vec_id", "v")
         .withColumn("_h", md5_60bit(F.col("vec_id").cast("string")))
@@ -424,19 +303,9 @@ def q65_ivf_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            # (n, cells, dim) signed terms → sequential fold along dim;
-            # chunked so the intermediate stays ~tens of MB per slice
-            out_cells = []
-            for lo in range(0, len(m), 2048):
-                mm = m[lo : lo + 2048]
-                dots = np.cumsum(
-                    mm[:, None, :] * cents[None, :, :], axis=2
-                )[:, :, -1]
-                # stable argsort of -dots == (dot DESC, cell ASC)
-                out_cells.append(
-                    np.argsort(-dots, axis=1, kind="stable")[:, :n_replicas]
-                )
-            top = np.concatenate(out_cells)
+            # stable argsort of -dots == (dot DESC, cell ASC)
+            top = np.argsort(-seq_dots(m, cents), axis=1, kind="stable")
+            top = top[:, :n_replicas]
             yield pd.DataFrame(
                 {
                     "cell": top.ravel().astype(np.int32),
@@ -455,78 +324,10 @@ def q65_ivf_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_ivf_cell_histogram() -> str:
-    return f"""
-        WITH v0 AS (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-            FROM embeddings
-            WHERE len(embedding) = {_DIM}
-        ),
-        nz AS (
-            SELECT vec_id, vec FROM v0
-            WHERE sqrt(list_aggregate(list_transform(vec, x -> x * x),
-                                      'sum')) > 0
-        ),
-        h AS (
-            SELECT vec_id, vec,
-                   CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
-                        AS BIGINT) AS hh
-            FROM nz
-        ),
-        seeds AS (
-            SELECT CAST(row_number() OVER (ORDER BY hh, vec_id) - 1
-                        AS INT) AS cell,
-                   list_transform(
-                       vec, x -> x / sqrt(list_dot_product(vec, vec))
-                   ) AS c
-            FROM h
-            QUALIFY row_number() OVER (ORDER BY hh, vec_id)
-                    <= {_IVF_TWIN_CELLS}
-        ),
-        dots AS (
-            SELECT nz.vec_id, s.cell, list_dot_product(nz.vec, s.c) AS d
-            FROM nz CROSS JOIN seeds s
-        ),
-        ranked AS (
-            SELECT vec_id, cell,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d DESC, cell ASC) AS rnk
-            FROM dots
-        )
-        SELECT cell, CAST(rnk - 1 AS INT) AS replica,
-               count(*) AS n_vectors
-        FROM ranked
-        WHERE rnk <= {_IVF_TWIN_REPLICAS}
-        GROUP BY cell, replica
-        ORDER BY cell, replica
-    """
-
-
-def _oracle_bucket_histogram() -> str:
-    planes = lsh_plane_literals()
-    legs = []
-    for ti, table in enumerate(planes):
-        bits = " + ".join(
-            "(CASE WHEN list_dot_product(vec, ["
-            + ", ".join(f"{float(p[i])}" for i in range(len(p)))
-            + f"]) >= 0 THEN {1 << j} ELSE 0 END)"
-            for j, p in enumerate(table)
-        )
-        legs.append(
-            f"SELECT {ti} AS table_idx, CAST({bits} AS INT) AS bucket FROM v"
-        )
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH {_SQL_VECTORS},
-        cells AS ({union})
-        SELECT table_idx, bucket, count(*) AS n_vectors
-        FROM cells
-        GROUP BY table_idx, bucket
-        ORDER BY table_idx, bucket
-    """
-
-
+# DuckDB side.  ``n`` holds the fixed-dim, non-zero vectors with
+# ``sqrt(list_dot_product(vec, vec))`` norms: the same left-to-right fold
+# as Spark's unrolled ``_NORM``, so unrounded cosines — compared against τ
+# and ranked — match bit for bit, not just to 6 decimals.
 _SQL_VECTORS = f"""
     v AS (
         SELECT vec_id,
@@ -535,17 +336,118 @@ _SQL_VECTORS = f"""
         WHERE len(embedding) = {_DIM}
     ),
     n AS (
-        SELECT vec_id, vec,
-               sqrt(list_aggregate(list_transform(vec, x -> x * x), 'sum'))
-                   AS nrm
+        SELECT vec_id, vec, sqrt(list_dot_product(vec, vec)) AS nrm
         FROM v
+        WHERE list_dot_product(vec, vec) > 0
     )
 """
 
+
+def _sql_lsh_candidates(pair_filter: str) -> str:
+    """``cells`` and ``cand`` CTEs: :func:`_lsh_candidates` in DuckDB.
+
+    Each table's bucket id is the sum of CASE sign bits over
+    ``list_dot_product`` with the same ±1 planes — the association
+    :func:`seq_dots` reproduces in Spark."""
+    legs = []
+    for ti, table in enumerate(lsh_plane_literals()):
+        bits = " + ".join(
+            "(CASE WHEN list_dot_product(vec, ["
+            + ", ".join(f"{float(x)}" for x in plane)
+            + f"]) >= 0 THEN {1 << j} ELSE 0 END)"
+            for j, plane in enumerate(table)
+        )
+        legs.append(
+            f"SELECT vec_id, {ti} AS table_idx, "
+            f"CAST({bits} AS INT) AS bucket FROM n"
+        )
+    return f"""
+        cells AS ({" UNION ALL ".join(legs)}),
+        cand AS (
+            SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+            FROM cells a
+            JOIN cells b
+              ON a.table_idx = b.table_idx AND a.bucket = b.bucket
+            WHERE {pair_filter}
+        )
+    """
+
+
+def _oracle_top5(pairs_from: str, *ctes: str) -> str:
+    """:func:`_top5` over the ``a``/``b`` pairs of ``pairs_from``."""
+    return f"""
+        WITH {", ".join((_SQL_VECTORS, *ctes))},
+        pairs AS (
+            SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+                   list_dot_product(a.vec, b.vec) / (a.nrm * b.nrm) AS cos
+            FROM {pairs_from}
+        ),
+        ranked AS (
+            SELECT query_id, neighbor_id,
+                   CAST(row_number() OVER (PARTITION BY query_id
+                        ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank,
+                   round(cos, 6) AS cosine
+            FROM pairs
+        )
+        SELECT query_id, neighbor_id, rank, cosine
+        FROM ranked
+        WHERE rank <= 5
+        ORDER BY query_id, rank
+    """
+
+
+_ORACLE_EMBEDDING_NEARDUP = f"""
+    WITH {_SQL_VECTORS}, {_sql_lsh_candidates("a.vec_id < b.vec_id")},
+    verified AS (
+        SELECT c.a_id, c.b_id,
+               list_dot_product(x.vec, y.vec) / (x.nrm * y.nrm) AS cos
+        FROM cand c
+        JOIN n x ON x.vec_id = c.a_id
+        JOIN n y ON y.vec_id = c.b_id
+    )
+    SELECT a_id, b_id, round(cos, 6) AS cosine
+    FROM verified
+    WHERE cos >= {NEARDUP_COS}
+    ORDER BY cosine DESC, a_id, b_id
+"""
+
+_ORACLE_IVF_CELL_HISTOGRAM = f"""
+    WITH {_SQL_VECTORS},
+    h AS (
+        SELECT vec_id, vec, nrm,
+               CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
+                    AS BIGINT) AS hh
+        FROM n
+    ),
+    seeds AS (
+        SELECT CAST(row_number() OVER (ORDER BY hh, vec_id) - 1
+                    AS INT) AS cell,
+               list_transform(vec, x -> x / nrm) AS c
+        FROM h
+        QUALIFY row_number() OVER (ORDER BY hh, vec_id)
+                <= {_IVF_TWIN_CELLS}
+    ),
+    dots AS (
+        SELECT n.vec_id, s.cell, list_dot_product(n.vec, s.c) AS d
+        FROM n CROSS JOIN seeds s
+    ),
+    ranked AS (
+        SELECT vec_id, cell,
+               row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY d DESC, cell ASC) AS rnk
+        FROM dots
+    )
+    SELECT cell, CAST(rnk - 1 AS INT) AS replica,
+           count(*) AS n_vectors
+    FROM ranked
+    WHERE rnk <= {_IVF_TWIN_REPLICAS}
+    GROUP BY cell, replica
+    ORDER BY cell, replica
+"""
+
 SIMILARITY_ORACLES: dict[str, str] = {
-    "q63_lsh_bucket_histogram": _oracle_bucket_histogram(),
-    "q65_ivf_cell_histogram": _oracle_ivf_cell_histogram(),
-    "q66_embedding_neardup_sql": _oracle_embedding_neardup(),
+    "q65_ivf_cell_histogram": _ORACLE_IVF_CELL_HISTOGRAM,
+    "q66_embedding_neardup_sql": _ORACLE_EMBEDDING_NEARDUP,
     "q44_top20_similar_pairs": f"""
         WITH {_SQL_VECTORS}
         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
@@ -579,25 +481,13 @@ SIMILARITY_ORACLES: dict[str, str] = {
               FROM embeddings GROUP BY label) v USING (label)
         ORDER BY label
     """,
-    "q45_cosine_topk": f"""
-        WITH {_SQL_VECTORS},
-        pairs AS (
-            SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                   list_dot_product(a.vec, b.vec) / (a.nrm * b.nrm) AS cos
-            FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
-        ),
-        ranked AS (
-            SELECT query_id, neighbor_id,
-                   CAST(row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank,
-                   round(cos, 6) AS cosine
-            FROM pairs
-        )
-        SELECT query_id, neighbor_id, rank, cosine
-        FROM ranked
-        WHERE rank <= 5
-        ORDER BY query_id, rank
-    """,
+    "q45_cosine_topk": _oracle_top5(
+        "n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id"
+    ),
+    "q46_ann_lsh_topk": _oracle_top5(
+        "cand c JOIN n a ON a.vec_id = c.a_id JOIN n b ON b.vec_id = c.b_id",
+        _sql_lsh_candidates("a.vec_id < 10 AND a.vec_id != b.vec_id"),
+    ),
 }
 
 
@@ -624,57 +514,6 @@ def q49_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
         )
         .orderBy("label")
-    )
-
-
-def q55_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: LSH candidates + exact verify.
-
-    The dedup variant of the ANN machinery: every vector is bucketed in L
-    sign-plane tables (see :func:`_lsh_bucketed`), same-bucket pairs are
-    the candidates, and each candidate is verified with the exact cosine
-    before being reported as a near-dup (cosine ≥ τ).  Precision is 1.0 by
-    construction — every reported pair really clears τ; recall is the LSH
-    recall, measured in pytest against the brute-force pair set.  At 10^9
-    vectors the bucket join is the only pair generator — no cross-join
-    anywhere (reference capability: duplicate detection, its
-    ``sql/queries.sql`` exact-dup query; this is the embedding-space
-    analogue for training-data curation).  Rows-only driver check
-    (approximate by construction).
-    """
-    v = _vectors(spark, sf_dir)
-    bucketed = _lsh_bucketed(v).select("vec_id", "table_idx", "bucket")
-    # candidate generation over 16-byte id pairs; vectors join back AFTER
-    # the distinct so the dedup shuffle never carries the embeddings
-    a = bucketed.select(F.col("vec_id").alias("a_id"), "table_idx", "bucket")
-    b = bucketed.select(F.col("vec_id").alias("b_id"), "table_idx", "bucket")
-    cand = (
-        a.join(b, ["table_idx", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    va = v.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    vb = v.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        cand.join(va, "a_id")
-        .join(vb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            (F.expr(_DOT) / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= NEARDUP_COS)
-        .select("a_id", "b_id", F.round("cos", 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), "a_id", "b_id")
     )
 
 
@@ -862,15 +701,4 @@ def q54_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.expr(_DOT) / (F.col("na") * F.col("nb"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("a_id").orderBy(F.desc("cos"), F.asc("b_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            F.col("a_id").alias("query_id"),
-            F.col("b_id").alias("neighbor_id"),
-            F.col("rank"),
-            F.round("cos", 6).alias("cosine"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _top5(pairs)

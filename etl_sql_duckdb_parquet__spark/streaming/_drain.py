@@ -6,8 +6,9 @@ sessions, so anything O(emitted rows) on the driver is a scale bug
 (round-4 verdict's one weak item).  The pattern here:
 
 - diff the sink's data-file LISTING before/after the drain (names only),
-- read JUST the new files back through the ``_spark_metadata``-respecting
-  reader and aggregate DISTRIBUTED (``groupBy().count()``),
+- read JUST the new committed files back (by path, picked from the
+  ``_spark_metadata`` log) and aggregate DISTRIBUTED
+  (``groupBy().count()``),
 - accumulate per-batch state metrics (``numInputRows``,
   ``numRowsDroppedByWatermark``) through a ``StreamingQueryListener``
   rather than ``q.recentProgress`` — the progress ring buffer keeps only
@@ -23,7 +24,6 @@ import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -49,17 +49,20 @@ def new_files_frame(
 ) -> DataFrame:
     """The rows a drain just appended, as a distributed DataFrame.
 
-    Reads the whole sink dir through ``_spark_metadata`` (committed files
-    only — stale uncommitted files from a crashed earlier drain are
-    ignored) and restricts to this drain's file basenames.  An
-    ``input_file_name()`` filter prunes no files at the scan, so a count
-    over this frame reads every file in the sink's history.
+    The committed file list comes from the sink's ``_spark_metadata`` log
+    (``inputFiles()`` of the sink reader), so stale files of failed task
+    attempts or a crashed earlier drain stay excluded.  Only the committed
+    files among ``new_files`` are read, with the sink's schema: the data
+    read is O(this drain), not O(sink history).  No match → an empty
+    frame.
     """
-    return spark.read.parquet(output_dir).where(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).isin(
-            [*new_files]
-        )
-    )
+    sink = spark.read.parquet(output_dir)
+    paths = [
+        p for p in sink.inputFiles() if p.rsplit("/", 1)[-1] in new_files
+    ]
+    if not paths:
+        return spark.createDataFrame([], sink.schema)
+    return spark.read.schema(sink.schema).parquet(*paths)
 
 
 class DrainMetricsListener(StreamingQueryListener):

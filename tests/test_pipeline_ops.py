@@ -24,12 +24,12 @@ from etl_sql_duckdb_parquet__spark.queries.multimodal import (  # noqa: E402
 )
 from etl_sql_duckdb_parquet__spark.queries.similarity import (  # noqa: E402
     NEARDUP_COS,
-    _lsh_bucketed,
-    _vectors,
+    _PLANES,
+    lsh_bucket_ids,
     q45_cosine_topk,
     q46_ann_lsh_topk,
-    q55_embedding_neardup,
-    q63_lsh_bucket_histogram,
+    q66_embedding_neardup_sql,
+    seq_dots,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
@@ -79,36 +79,36 @@ def test_ann_lsh_recall_vs_brute_force(spark):
     assert all(q < 10 for q, _ in approx)
 
 
-def test_lsh_bucket_twin_matches_production_kernel(spark):
-    """The oracle-checkable sequential-fold twin (q63) and the production
-    tensordot kernel (q46/q55's `_lsh_bucketed`) must assign identical
-    bucket populations on the test data — the accumulation orders differ
-    only at the ulp level and no plane dot sits on a sign boundary here,
-    so the candidate-generation structure the ANN queries rely on is
-    exactly the structure the oracle verified."""
-    twin = {
-        (r["table_idx"], r["bucket"]): r["n_vectors"]
-        for r in q63_lsh_bucket_histogram(spark, SF_DIR).collect()
-    }
-    prod = {
-        (r["table_idx"], r["bucket"]): r["n"]
-        for r in _lsh_bucketed(_vectors(spark, SF_DIR))
-        .groupBy("table_idx", "bucket")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert twin == prod
+def test_lsh_kernel_is_a_sequential_fold():
+    """The bucket kernel's plane dots must equal a left-to-right cumsum
+    fold over dim bit for bit — the association DuckDB's
+    ``list_dot_product`` uses, which is what lets the q46/q66 oracles
+    reproduce every bucket — and an empty Arrow batch must map to an
+    empty series (``np.stack`` raises on one)."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    m = rng.standard_normal((500, _PLANES.shape[2]))
+    flat = _PLANES.reshape(-1, _PLANES.shape[2])
+    want = np.cumsum(m[:, None, :] * flat, axis=2)[:, :, -1]
+    got = seq_dots(m, flat)
+    assert got.view(np.int64).tolist() == want.view(np.int64).tolist()
+
+    ids = lsh_bucket_ids(pd.Series(list(m.astype(np.float32))))
+    assert len(ids) == len(m) and len(ids[0]) == _PLANES.shape[0]
+    assert lsh_bucket_ids(pd.Series([], dtype=object)).empty
 
 
 def test_embedding_neardup_precision_and_recall(spark):
-    """q55: every reported pair must truly clear τ (precision 1.0 by
+    """q66: every reported pair must truly clear τ (precision 1.0 by
     construction — candidates are exact-verified), and LSH recall vs the
     brute-force pair set must hold (measured ≈0.83 on sf0.01 at τ=0.4)."""
     import numpy as np
 
     got = {
         (r["a_id"], r["b_id"]): r["cosine"]
-        for r in q55_embedding_neardup(spark, SF_DIR).collect()
+        for r in q66_embedding_neardup_sql(spark, SF_DIR).collect()
     }
     # brute-force truth, numpy (same doubles as the JVM expression)
     rows = (

@@ -170,14 +170,9 @@ def test_q60_range_join_is_window_not_nested_loop(spark):
     assert "Window" in plan
 
 
-def test_q55_neardup_is_not_cartesian(spark):
-    plan = plan_of(REGISTRY["q55_embedding_neardup"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-
-
 def test_q66_neardup_sql_twin_is_not_cartesian(spark):
-    """The fully-oracle-backed near-dup twin must keep q55's plan shape:
-    bucket-join candidate generation, no cartesian product."""
+    """The embedding near-dup must generate candidates by bucket join,
+    never a cartesian product."""
     plan = plan_of(REGISTRY["q66_embedding_neardup_sql"](spark, SF_DIR))
     assert "CartesianProduct" not in plan
 

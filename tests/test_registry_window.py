@@ -55,3 +55,14 @@ def test_demoted_entries_are_real_oracle_backed_queries():
             f"_DEMOTED entry {name!r} is not an oracle-backed registry "
             "query — stale demotion"
         )
+
+
+def test_rows_only_queries_are_pinned():
+    """Queries without a DuckDB oracle get only a rows-only driver check.
+    Both are approximate by construction with a trained or xxhash-seeded
+    component no SQL engine reproduces (pytest checks their recall); a
+    new rows-only query must be a deliberate edit here."""
+    assert set(REGISTRY) - set(ORACLES) == {
+        "q43_simhash_pairs",
+        "q54_ann_ivf_topk",
+    }

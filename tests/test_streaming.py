@@ -576,11 +576,16 @@ def test_streaming_dedup_across_drains(spark, tmp_path):
     runner: an in-batch duplicate and a cross-drain re-delivery (state
     carried by the checkpoint) are both dropped and ACCOUNTED FOR in the
     metadata-sized audit report; a too-late row lands in the
-    rows_dropped_by_watermark count; new keys pass through exactly once."""
+    rows_dropped_by_watermark count; new keys pass through exactly once;
+    the report reads only the drain's own sink files."""
     import datetime as dt
 
     from etl_sql_duckdb_parquet__spark.streaming import (
         run_dedup_available_now,
+    )
+    from etl_sql_duckdb_parquet__spark.streaming._drain import (
+        data_files,
+        new_files_frame,
     )
 
     landing = str(tmp_path / "dd_landing")
@@ -631,7 +636,14 @@ def test_streaming_dedup_across_drains(spark, tmp_path):
         sch,
     )
     w2.write.mode("append").parquet(landing)
+    before = data_files(outdir)
     rep = drain()
+    # the report reads only this drain's committed files, not the sink's
+    # history; a set naming no committed file reads nothing
+    new = data_files(outdir) - before
+    read = new_files_frame(spark, outdir, new).inputFiles()
+    assert read and {p.rsplit("/", 1)[-1] for p in read} <= new
+    assert new_files_frame(spark, outdir, {"absent.parquet"}).count() == 0
     # d2's re-delivery hit the checkpointed state entry and was dropped;
     # d9 was watermark-dropped (audited separately from dedup); only the
     # genuinely new d4 was emitted
