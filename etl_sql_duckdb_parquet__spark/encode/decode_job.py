@@ -1,9 +1,11 @@
 """Decode path: blobs → token table, bit-identical (the north-rule invariant).
 
-Reads the manifest to pick, per partition, the latest successful run (so
-orphaned blob files from a crashed run can never leak into results), joins
-the blob table on (part_id, run_id), and reverses every codec inside an
-Arrow-native ``mapInArrow``.  The token lists are assembled ZERO-COPY with
+One typed manifest collect picks, on the driver, the snapshot(s) to read
+and the winning (latest successful) run of every partition, so orphaned
+blob files from a crashed run can never leak into results; the winners
+join the typed blob scan on (part_id, run_id) as a driver-built
+LocalRelation, and every codec is reversed inside an Arrow-native
+``mapInArrow``.  The token lists are assembled ZERO-COPY with
 ``pa.ListArray.from_arrays(offsets, values)`` — no per-document
 ``np.split``/pandas-object materialization, which dominated decode time at
 many-docs scale (tens of thousands of small docs per partition).
@@ -15,11 +17,19 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..codecs import decode_int, decode_strings
-from .manifest import blobs_path, plan_path, read_manifest
+from .encode_job import BLOB_SCHEMA
+from .manifest import (
+    PLAN_SCHEMA,
+    blobs_path,
+    local_frame,
+    plan_path,
+    read_manifest,
+    read_typed,
+)
 
 DECODED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -117,20 +127,23 @@ def winning_blobs(
     snapshots here — use "latest" or an explicit id in that situation.
     ``snapshots="snap_..."``: decode exactly that snapshot id (as recorded
     in the manifest), pinning the choice independent of finish order.
-    Within a snapshot, the winner per part_id is the latest OK run, so a
-    resumed/re-run snapshot still dedupes exactly.
+    Within a snapshot, the winner per part_id is the latest OK run — the
+    max of ``(finished_at, run_id)`` — so a resumed/re-run snapshot still
+    dedupes exactly.  The winners are picked on the driver from the one
+    manifest collect and join the blob scan as a LocalRelation.
     """
-    ok, _ = _resolve_snapshots(spark, out_dir, snapshots)
-    w = Window.partitionBy("snapshot_id", "part_id").orderBy(
-        F.desc("finished_at"), F.desc("run_id")
+    best: dict[tuple[str, int], Row] = {}
+    for r in _resolve_snapshots(spark, out_dir, snapshots):
+        key = (r["snapshot_id"], r["part_id"])
+        if key not in best or _recency(r) > _recency(best[key]):
+            best[key] = r
+    pairs = sorted({(r["part_id"], r["run_id"]) for r in best.values()})
+    winners = local_frame(
+        spark,
+        [{"part_id": p, "run_id": run} for p, run in pairs],
+        "part_id int, run_id string",
     )
-    winners = (
-        ok.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("part_id", "run_id")
-        .distinct()
-    )
-    blobs = spark.read.parquet(blobs_path(out_dir))
+    blobs = spark.read.schema(BLOB_SCHEMA).parquet(blobs_path(out_dir))
     return blobs.join(F.broadcast(winners), ["part_id", "run_id"], "inner")
 
 
@@ -172,52 +185,56 @@ def decode_token_table(
     return blobs.select(*needed).mapInArrow(_make_decoder(cols), schema)
 
 
+def _recency(r: Row) -> tuple:
+    """Commit order of ok manifest rows: ``(finished_at, run_id)``."""
+    return (r["finished_at"], r["run_id"])
+
+
 def _resolve_snapshots(
     spark: SparkSession, out_dir: str, snapshots: str
-) -> tuple[DataFrame, set[str] | None]:
+) -> list[Row]:
     """THE snapshot-arg resolution, shared by every decode-side entry
     (``winning_blobs`` and the lookup coverage check) so the coverage
     check can never validate a different snapshot set than the one the
     decode actually reads.
 
-    Returns (ok manifest rows filtered to the selection, the selected
-    snapshot-id set — or ``None`` for ``"all"``, whose materialization is
-    a Spark job the winning-blobs path doesn't need).  Validates the
-    argument and, for an explicit ``snap_`` id, its existence — a typo'd
-    id must raise here, not surface downstream as a misleading
-    missing-plan/backfill error.
+    Returns the ok ``(snapshot_id, part_id, run_id, finished_at)``
+    manifest rows of the selection — one metadata job; every decision
+    after it runs on the driver.  Validates the argument and, for an
+    explicit ``snap_`` id, its existence — a typo'd id must raise here,
+    not surface downstream as a misleading missing-plan/backfill error.
     """
-    manifest = read_manifest(spark, out_dir)
-    if manifest is None:
-        raise FileNotFoundError(f"no manifest under {out_dir}")
-    ok = manifest.filter(F.col("status") == "ok")
-    if snapshots == "latest":
-        latest = (
-            ok.orderBy(F.desc("finished_at"), F.desc("run_id"))
-            .select("snapshot_id")
-            .first()
-        )
-        if latest is None:
-            raise ValueError(
-                f"manifest under {out_dir} has no status='ok' rows — "
-                "nothing to decode (all runs failed or were aborted)"
-            )
-        snap = latest["snapshot_id"]
-        return ok.filter(F.col("snapshot_id") == snap), {snap}
-    if snapshots.startswith("snap_"):
-        ok = ok.filter(F.col("snapshot_id") == snapshots)
-        if ok.select("part_id").first() is None:
-            raise ValueError(
-                f"snapshot {snapshots!r} has no status='ok' manifest rows "
-                f"under {out_dir}"
-            )
-        return ok, {snapshots}
-    if snapshots != "all":
+    if snapshots not in ("all", "latest") and not snapshots.startswith(
+        "snap_"
+    ):
         raise ValueError(
             "snapshots must be 'latest', 'all', or an explicit "
             f"'snap_...' id: {snapshots!r}"
         )
-    return ok, None
+    manifest = read_manifest(spark, out_dir)
+    if manifest is None:
+        raise FileNotFoundError(f"no manifest under {out_dir}")
+    ok = (
+        manifest.filter(F.col("status") == "ok")
+        .select("snapshot_id", "part_id", "run_id", "finished_at")
+        .collect()
+    )
+    if snapshots == "all":
+        return ok
+    if snapshots == "latest":
+        if not ok:
+            raise ValueError(
+                f"manifest under {out_dir} has no status='ok' rows — "
+                "nothing to decode (all runs failed or were aborted)"
+            )
+        snapshots = max(ok, key=_recency)["snapshot_id"]
+    rows = [r for r in ok if r["snapshot_id"] == snapshots]
+    if not rows:
+        raise ValueError(
+            f"snapshot {snapshots!r} has no status='ok' manifest rows "
+            f"under {out_dir}"
+        )
+    return rows
 
 
 def _decoded_snapshot_ids(
@@ -225,13 +242,17 @@ def _decoded_snapshot_ids(
 ) -> set[str]:
     """The ok snapshot ids a decode with this ``snapshots`` arg will read
     (same resolution rules as :func:`winning_blobs` — shared resolver)."""
-    ok, snap_ids = _resolve_snapshots(spark, out_dir, snapshots)
-    if snap_ids is not None:
-        return snap_ids
-    return {
-        r["snapshot_id"]
-        for r in ok.select("snapshot_id").distinct().collect()
-    }
+    rows = _resolve_snapshots(spark, out_dir, snapshots)
+    return {r["snapshot_id"] for r in rows}
+
+
+def _doc_ids_frame(spark: SparkSession, doc_ids: list[str]) -> DataFrame:
+    """The distinct requested ids as a LocalRelation."""
+    return local_frame(
+        spark,
+        [{"doc_id": str(d)} for d in dict.fromkeys(doc_ids)],
+        "doc_id string",
+    )
 
 
 def candidate_parts(
@@ -254,26 +275,22 @@ def candidate_parts(
     newer plans only and silently miss docs living in the plan-less
     snapshot.  Coverage is validated against the manifest and a missing
     snapshot raises the same backfill error as a missing plan directory.
+
+    Two metadata jobs (the plan and manifest collects); the hashes come
+    from ``xxhash64`` over a LocalRelation, which runs none, and the
+    ``pmod`` is Python's ``%`` (equal for ``salts > 0``).
     """
-    ppath = plan_path(out_dir)
-    try:
-        plan = (
-            spark.read.parquet(ppath)
-            .select("snapshot_id", "source", "offset", "salts")
-            .distinct()
-        )
-    except Exception:
+    plan = read_typed(spark, plan_path(out_dir), PLAN_SCHEMA)
+    if plan is None:
         raise FileNotFoundError(
             f"no partition plan under {out_dir} — the store predates "
             "lookup support; re-encode with --no-resume (a resumed no-op "
             "run also backfills the plan), or decode fully and filter"
-        ) from None
-    plan_snaps = {
-        r["snapshot_id"]
-        for r in plan.select("snapshot_id").distinct().collect()
-    }
+        )
+    plan_rows = set(map(tuple, plan.collect()))
     uncovered = sorted(
-        _decoded_snapshot_ids(spark, out_dir, snapshots) - plan_snaps
+        _decoded_snapshot_ids(spark, out_dir, snapshots)
+        - {snap for snap, *_ in plan_rows}
     )
     if uncovered:
         raise FileNotFoundError(
@@ -283,26 +300,18 @@ def candidate_parts(
             "(a resumed no-op run backfills the plan), or decode fully "
             "and filter"
         )
-    if source is not None:
-        # uniform plans carry source=NULL and match any doc
-        plan = plan.filter(
-            (F.col("source") == source) | F.col("source").isNull()
-        )
-    ids = spark.createDataFrame(
-        [(str(d),) for d in dict.fromkeys(doc_ids)], "doc_id string"
+    # uniform plans carry source=NULL and match any doc
+    ranges = {
+        (offset, salts)
+        for _, src, offset, salts in plan_rows
+        if source is None or src is None or src == source
+    }
+    hashes = (
+        _doc_ids_frame(spark, doc_ids).select(F.xxhash64("doc_id")).collect()
     )
-    cand = (
-        ids.crossJoin(plan)
-        .select(
-            (
-                F.col("offset") + F.pmod(F.xxhash64("doc_id"), F.col("salts"))
-            )
-            .cast("int")
-            .alias("part_id")
-        )
-        .distinct()
+    return sorted(
+        {off + h % salts for (h,) in hashes for off, salts in ranges}
     )
-    return sorted(r["part_id"] for r in cand.collect())
 
 
 def lookup_docs(
@@ -337,9 +346,7 @@ def lookup_docs(
             spark, out_dir, doc_ids, source=source, snapshots=snapshots
         )
     decoded = decode_token_table(spark, out_dir, snapshots, cols, parts=parts)
-    ids = spark.createDataFrame(
-        [(str(d),) for d in dict.fromkeys(doc_ids)], "doc_id string"
-    )
+    ids = _doc_ids_frame(spark, doc_ids)
     out = decoded.join(F.broadcast(ids), "doc_id", "left_semi")
     return out.select(*columns) if columns is not None else out
 

@@ -24,6 +24,7 @@ snapshot — kill it anywhere and re-run.
 
 from __future__ import annotations
 
+import datetime
 import json
 import math
 import os
@@ -31,7 +32,6 @@ import time
 import uuid
 
 import numpy as np
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,11 +39,16 @@ from ..codecs import encode_strings
 from ..codecs.core import encode_int_best, encode_int_best_with_stats
 from ..codecs.core import CODEC_IDS, codec_of, zunwrap, zwrap_best
 from .manifest import (
+    MANIFEST_SCHEMA,
+    PLAN_SCHEMA,
     append_manifest,
     append_running_marker,
+    arrow_table,
     blobs_path,
     completed_parts,
+    local_frame,
     plan_path,
+    read_typed,
 )
 
 DEFAULT_TARGET_TOKENS = 2_000_000
@@ -53,11 +58,19 @@ DEFAULT_TARGET_TOKENS = 2_000_000
 # metadata) across millions of files at 100 TB scale
 ENCODED_SCHEMA = "part_id int, tokens_blob binary, lengths_blob binary, docids_blob binary, sources_blob binary, meta string"
 
-META_SCHEMA = (
-    "codec string, n_docs long, n_tokens long, raw_bytes long, "
-    "comp_bytes long, encode_s double, checksum long, "
-    "n_distinct long, n_runs long, vmin long, vmax long"
-)
+# the blob tree as readers see it: the sink partitions by run_id
+BLOB_SCHEMA = f"{ENCODED_SCHEMA}, run_id string"
+
+# the manifest facts of a planned partition that received no docs
+_EMPTY_META = {
+    "codec": "empty",
+    "n_docs": 0,
+    "n_tokens": 0,
+    "raw_bytes": 0,
+    "comp_bytes": 0,
+    "encode_s": 0.0,
+    "checksum": 0,
+}
 
 
 def input_stats(df: DataFrame) -> tuple[list, str]:
@@ -340,36 +353,29 @@ def _append_plan_rows(
     with identical content instead of accumulating duplicates — which is
     also what lets the fully-resumed path backfill plans for stores
     encoded before this feature existed.  (The remote branch appends a
-    part file per run instead; ``candidate_parts`` reads the plan
-    through ``.distinct()``, so duplicates only cost bytes.)
+    part file per run instead; ``candidate_parts`` dedupes the plan
+    rows it collects, so duplicates only cost bytes.)
     """
     ppath = plan_path(out_dir)
+    ddl = f"run_id string, {PLAN_SCHEMA}"
+    rows = [
+        {"run_id": run_id, "snapshot_id": snapshot_id, "source": s,
+         "offset": o, "salts": k}
+        for s, o, k in plan_rows
+    ]
     if "://" not in ppath or ppath.startswith("file:"):
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         local = ppath[len("file:"):] if ppath.startswith("file:") else ppath
         os.makedirs(local, exist_ok=True)
-        tbl = pa.table(
-            {
-                "run_id": pa.array([run_id] * len(plan_rows), pa.string()),
-                "snapshot_id": pa.array(
-                    [snapshot_id] * len(plan_rows), pa.string()
-                ),
-                "source": pa.array([s for s, _, _ in plan_rows], pa.string()),
-                "offset": pa.array([o for _, o, _ in plan_rows], pa.int32()),
-                "salts": pa.array([k for _, _, k in plan_rows], pa.int32()),
-            }
-        )
         pq.write_table(
-            tbl, os.path.join(local, f"plan-{snapshot_id}.parquet")
+            arrow_table(rows, ddl),
+            os.path.join(local, f"plan-{snapshot_id}.parquet"),
         )
         return
-    spark.createDataFrame(
-        [(run_id, snapshot_id, s, o, k) for s, o, k in plan_rows],
-        "run_id string, snapshot_id string, source string, "
-        "offset int, salts int",
-    ).coalesce(1).write.mode("append").parquet(ppath)
+    local_frame(spark, rows, ddl).coalesce(1).write.mode("append").parquet(
+        ppath
+    )
 
 
 def encode_sink_frame(
@@ -447,15 +453,16 @@ def encode_token_table(
     if n_parts > 0:
         _append_plan_rows(spark, run_id, snapshot_id, plan_rows, out_dir)
 
-    done_ids: set[int] = set()
+    done_ids = (
+        completed_parts(spark, out_dir, snapshot_id) if resume else set()
+    )
     pending = planned
-    if resume:
-        done = completed_parts(spark, out_dir, snapshot_id)
-        if done is not None:
-            # metadata-sized (O(parts)); the id set also feeds the
-            # empty-partition backfill below
-            done_ids = {r["part_id"] for r in done.collect()}
-            pending = planned.join(F.broadcast(done), "part_id", "left_anti")
+    if done_ids:
+        # a LocalRelation: the anti-join's build side is metadata-sized
+        done = local_frame(
+            spark, [{"part_id": p} for p in sorted(done_ids)], "part_id int"
+        )
+        pending = planned.join(F.broadcast(done), "part_id", "left_anti")
     skipped = len(done_ids)
 
     # same snapshot id ⇒ same data AND same plan parameters ⇒ same plan, so
@@ -489,105 +496,67 @@ def encode_token_table(
         .parquet(blobs_path(out_dir))
     )
 
-    # derive manifest rows from the blobs just written (single encode pass —
-    # no recompute, no cache): read ONLY this run's blob directory — a
-    # whole-tree read would re-list every historical run's files (O(store)
-    # metadata I/O per encode on an object store) just to filter them out
-    # one small row per partition (meta column only — parquet column
-    # pruning skips the blob bytes); cached because both the manifest
-    # write and the totals aggregation consume it
-    try:
-        written = (
-            spark.read.parquet(f"{blobs_path(out_dir)}/run_id={run_id}")
-            .select("part_id", F.from_json("meta", META_SCHEMA).alias("m"))
-            .select("part_id", "m.*")
-            .cache()
-        )
-        written.count()
-    except AnalysisException as e:
-        # A run whose pending parts were ALL empty writes no blob rows, so
-        # its run_id= directory never materializes — and ONLY that case may
-        # take the empty fallback.  Any other failure (transient FS error,
-        # corrupt footer, executor death) must re-raise: swallowing it here
-        # would let the empty-partition backfill below durably commit
-        # status='ok' codec='empty' manifest rows for partitions that DO
-        # hold data — silent loss that resume then treats as complete.
-        if (e.getCondition() or "") != "PATH_NOT_FOUND":
-            raise
-        written = spark.createDataFrame(
-            [], f"part_id int, {META_SCHEMA}"
-        ).cache()
-    manifest_rows = written.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(snapshot_id).alias("snapshot_id"),
-        "part_id",
-        "codec",
-        "n_docs",
-        "n_tokens",
-        "raw_bytes",
-        "comp_bytes",
-        "encode_s",
-        "checksum",
-        "n_distinct",
-        "n_runs",
-        "vmin",
-        "vmax",
-        F.lit("ok").alias("status"),
-        F.current_timestamp().alias("finished_at"),
+    # Commit: ONE metadata job collects this run's (part_id, meta) rows —
+    # parquet column pruning skips the blob bytes — and the manifest rows,
+    # the empty-partition backfill and the run totals all derive from them
+    # on the driver.  Read ONLY this run's blob directory: a whole-tree
+    # read would re-list every historical run's files (O(store) metadata
+    # I/O per encode on an object store) just to filter them out.
+    run_blobs = read_typed(
+        spark, f"{blobs_path(out_dir)}/run_id={run_id}", ENCODED_SCHEMA
     )
-    append_manifest(manifest_rows, out_dir)
-
+    # A run whose pending parts were ALL empty writes no blob rows, so its
+    # run_id= directory never materializes — and ONLY that case
+    # (PATH_NOT_FOUND, the one failure read_typed maps to None) may commit
+    # nothing but empties.  Any other failure (transient FS error, corrupt
+    # footer, executor death) re-raises: swallowing it would durably
+    # commit status='ok' codec='empty' manifest rows for partitions that
+    # DO hold data — silent loss that resume then treats as complete.
+    written = (
+        []
+        if run_blobs is None
+        else [
+            (r["part_id"], json.loads(r["meta"]))
+            for r in run_blobs.select("part_id", "meta").collect()
+        ]
+    )
     # A planned partition can legitimately receive ZERO docs (a salted hot
     # source whose few doc-id hashes don't cover every salt bucket).  The
     # kernel yields no blob row for it, so without a manifest row resume
     # would re-plan it forever: skipped < n_parts on every re-run, each
     # appending a new running marker that never commits — permanently
     # blocking vacuum/compact.  Commit empty partitions as zero-row ok
-    # facts instead (no blob; decode's inner join to blobs skips them).
-    written_ids = {r["part_id"] for r in written.select("part_id").collect()}
-    empty_ids = sorted(set(range(n_parts)) - done_ids - written_ids)
-    if empty_ids:
-        empties = spark.createDataFrame(
-            [(p,) for p in empty_ids], "part_id int"
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-            "part_id",
-            F.lit("empty").alias("codec"),
-            F.lit(0).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_tokens"),
-            F.lit(0).cast("long").alias("raw_bytes"),
-            F.lit(0).cast("long").alias("comp_bytes"),
-            F.lit(0.0).alias("encode_s"),
-            F.lit(0).cast("long").alias("checksum"),
-            *[
-                F.lit(None).cast("long").alias(c)
-                for c in ("n_distinct", "n_runs", "vmin", "vmax")
+    # facts instead (no blob; decode's join to blobs skips them).
+    empty_ids = sorted(
+        set(range(n_parts)) - done_ids - {p for p, _ in written}
+    )
+    now = datetime.datetime.now(datetime.timezone.utc)
+    append_manifest(
+        local_frame(
+            spark,
+            [
+                {"run_id": run_id, "snapshot_id": snapshot_id,
+                 "part_id": p, **meta, "status": "ok", "finished_at": now}
+                for p, meta in written + [(p, _EMPTY_META) for p in empty_ids]
             ],
-            F.lit("ok").alias("status"),
-            F.current_timestamp().alias("finished_at"),
-        )
-        append_manifest(empties, out_dir)
+            MANIFEST_SCHEMA,
+        ),
+        out_dir,
+    )
 
-    agg = written.agg(
-        F.count("*").alias("parts"),
-        F.sum("n_docs").alias("docs"),
-        F.sum("n_tokens").alias("tokens"),
-        F.sum("raw_bytes").alias("raw"),
-        F.sum("comp_bytes").alias("comp"),
-        F.sum("encode_s").alias("cpu_s"),
-    ).first()
-    written.unpersist()
+    def total(key: str):
+        return sum(meta[key] for _, meta in written)
+
     return {
         "run_id": run_id,
         "snapshot_id": snapshot_id,
         "n_parts_planned": n_parts,
         "n_parts_skipped_resume": skipped,
         "n_parts_empty": len(empty_ids),
-        "n_parts_encoded": agg["parts"] or 0,
-        "n_docs": agg["docs"] or 0,
-        "n_tokens": agg["tokens"] or 0,
-        "raw_bytes": agg["raw"] or 0,
-        "comp_bytes": agg["comp"] or 0,
-        "encode_cpu_s": agg["cpu_s"] or 0.0,
+        "n_parts_encoded": len(written),
+        "n_docs": total("n_docs"),
+        "n_tokens": total("n_tokens"),
+        "raw_bytes": total("raw_bytes"),
+        "comp_bytes": total("comp_bytes"),
+        "encode_cpu_s": float(total("encode_s")),
     }

@@ -54,6 +54,20 @@ def _is_compacted(snapshot_id: str) -> bool:
     return snapshot_id.endswith("-compact")
 
 
+def _uncommitted_runs(rows) -> list[str]:
+    """Run ids with a running marker and no ok rows: in flight, or
+    crashed (marker timestamps are run-START times, so age proves
+    nothing)."""
+    committed = {r["run_id"] for r in rows if r["status"] == "ok"}
+    return sorted(
+        {
+            r["run_id"]
+            for r in rows
+            if r["status"] == "running" and r["run_id"] not in committed
+        }
+    )
+
+
 def compact_store(
     spark: SparkSession,
     out_dir: str,
@@ -81,17 +95,14 @@ def compact_store(
     manifest = read_manifest(spark, out_dir)
     if manifest is None:
         raise FileNotFoundError(f"no manifest under {out_dir}")
-    rows = manifest.select("run_id", "snapshot_id", "status").collect()
+    # one metadata job serves the in-flight guard and the per-snapshot
+    # FIRST- and LAST-commit times (from which the snapshot list derives)
+    rows = manifest.select(
+        "run_id", "snapshot_id", "status", "finished_at"
+    ).collect()
     if vacuum:
         _require_filesystem(out_dir)
-        committed = {r["run_id"] for r in rows if r["status"] == "ok"}
-        pre_inflight = sorted(
-            {
-                r["run_id"]
-                for r in rows
-                if r["status"] == "running" and r["run_id"] not in committed
-            }
-        )
+        pre_inflight = _uncommitted_runs(rows)
         if pre_inflight:
             raise RuntimeError(
                 f"uncommitted encode run(s) {pre_inflight} exist under "
@@ -100,19 +111,12 @@ def compact_store(
                 "crashed markers with vacuum_store(force=True), or compact "
                 "with vacuum=False"
             )
-    # one metadata job: per-snapshot FIRST- and LAST-commit times, from
-    # which the snapshot list also derives
-    snap_ts = (
-        manifest.filter(F.col("status") == "ok")
-        .groupBy("snapshot_id")
-        .agg(
-            F.min("finished_at").alias("born"),
-            F.max("finished_at").alias("last"),
-        )
-        .collect()
-    )
-    birth_ts = {r["snapshot_id"]: r["born"] for r in snap_ts}
-    last_ts = {r["snapshot_id"]: r["last"] for r in snap_ts}
+    birth_ts, last_ts = {}, {}
+    for r in rows:
+        if r["status"] == "ok":
+            snap, t = r["snapshot_id"], r["finished_at"]
+            birth_ts[snap] = min(birth_ts.get(snap, t), t)
+            last_ts[snap] = max(last_ts.get(snap, t), t)
     snaps = sorted(birth_ts)
     if len(snaps) <= 1:
         return {"compacted": False, "n_snapshots": len(snaps)}
@@ -236,13 +240,7 @@ def vacuum_store(
     # that started before the kept snapshot committed (and is still
     # writing blobs).  The cost is that a crashed run's stale marker
     # blocks vacuum until force=True; that is the safe direction.
-    inflight = sorted(
-        {
-            r["run_id"]
-            for r in rows
-            if r["status"] == "running" and r["run_id"] not in committed
-        }
-    )
+    inflight = _uncommitted_runs(rows)
     if inflight and not force:
         raise RuntimeError(
             f"uncommitted encode run(s) {inflight} exist under {out_dir} — "

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +31,50 @@ MANIFEST_SCHEMA = (
 )
 
 MANIFEST_COLS = [f.split(" ")[0] for f in MANIFEST_SCHEMA.split(", ")]
+
+# the plan columns a lookup reads; writers prepend ``run_id string``
+PLAN_SCHEMA = "snapshot_id string, source string, offset int, salts int"
+
+
+def arrow_table(rows: list[dict], ddl: str):
+    """``rows`` as a pyarrow Table typed by a flat ``"name type, ..."`` DDL
+    string (absent keys read as nulls)."""
+    import pyarrow as pa
+
+    types = {
+        "string": pa.string(),
+        "int": pa.int32(),
+        "long": pa.int64(),
+        "double": pa.float64(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+    }
+    schema = pa.schema(
+        (name, types[typ])
+        for name, typ in (f.rsplit(" ", 1) for f in ddl.split(", "))
+    )
+    return pa.Table.from_pylist(rows, schema=schema)
+
+
+def local_frame(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
+    """A driver-built frame of metadata-sized ``rows`` that runs no Spark
+    job to scan: a pyarrow Table becomes a LocalRelation, where a Python
+    list would go through ``parallelize`` (a job per use) and an empty
+    pandas frame falls back to that list path."""
+    return spark.createDataFrame(arrow_table(rows, ddl), ddl)
+
+
+def read_typed(
+    spark: SparkSession, path: str, ddl: str
+) -> DataFrame | None:
+    """``path`` read with a declared schema, or ``None`` when it does not
+    exist.  An untyped ``spark.read.parquet`` runs a footer-inference job
+    per call; the declared schema makes the read itself job-free."""
+    try:
+        return spark.read.schema(ddl).parquet(path)
+    except AnalysisException as e:
+        if (e.getCondition() or "") != "PATH_NOT_FOUND":
+            raise
+        return None
 
 
 def manifest_path(out_dir: str) -> str:
@@ -63,84 +108,64 @@ def append_running_marker(
     (the row is metadata-sized; a Spark write job costs ~1 s of fixed
     overhead per encode run); remote URIs go through a Spark append.
     """
-    # Both writers derive the row from MANIFEST_SCHEMA — the single source
-    # of truth — so a schema change cannot leave marker files with a
-    # divergent layout in the append-only manifest directory (mixed file
+    # Both writers build the row against MANIFEST_SCHEMA — the single
+    # source of truth — so a schema change cannot leave marker files with
+    # a divergent layout in the append-only manifest directory (mixed file
     # schemas read back nondeterministically under mergeSchema=false).
-    fields = [tuple(f.rsplit(" ", 1)) for f in MANIFEST_SCHEMA.split(", ")]
-    fixed = {
+    import datetime
+
+    row = {
         "run_id": run_id,
         "snapshot_id": snapshot_id,
         "part_id": -1,
         "status": "running",
+        "finished_at": datetime.datetime.now(datetime.timezone.utc),
     }
     mpath = manifest_path(out_dir)
     if "://" not in mpath or mpath.startswith("file:"):
-        import datetime
-
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pa_types = {
-            "string": pa.string(),
-            "int": pa.int32(),
-            "long": pa.int64(),
-            "double": pa.float64(),
-            "timestamp": pa.timestamp("us", tz="UTC"),
-        }
         local = mpath[len("file:"):] if mpath.startswith("file:") else mpath
         os.makedirs(local, exist_ok=True)
-        now = datetime.datetime.now(datetime.timezone.utc)
-        tbl = pa.table(
-            {
-                name: pa.array(
-                    [now if name == "finished_at" else fixed.get(name)],
-                    pa_types[typ],
-                )
-                for name, typ in fields
-            }
+        pq.write_table(
+            arrow_table([row], MANIFEST_SCHEMA),
+            os.path.join(local, f"marker-{run_id}.parquet"),
         )
-        pq.write_table(tbl, os.path.join(local, f"marker-{run_id}.parquet"))
         return
-    marker = spark.range(1).select(
-        *[
-            (
-                F.current_timestamp()
-                if name == "finished_at"
-                else F.lit(fixed.get(name))
-            )
-            .cast(typ)
-            .alias(name)
-            for name, typ in fields
-        ]
-    )
-    append_manifest(marker, out_dir)
+    append_manifest(local_frame(spark, [row], MANIFEST_SCHEMA), out_dir)
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = manifest_path(out_dir)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None  # first run: no manifest yet
+    """The manifest with ``MANIFEST_SCHEMA`` (no footer job), or ``None``
+    before the first run.  An empty manifest directory reads as an empty
+    frame; any failure other than a missing path raises."""
+    return read_typed(spark, manifest_path(out_dir), MANIFEST_SCHEMA)
 
 
 def append_manifest(df: DataFrame, out_dir: str) -> None:
-    df.select(*MANIFEST_COLS).write.mode("append").parquet(manifest_path(out_dir))
+    """Append metadata-sized rows as one file (every manifest read opens
+    each file)."""
+    df.select(*MANIFEST_COLS).coalesce(1).write.mode("append").parquet(
+        manifest_path(out_dir)
+    )
 
 
 def completed_parts(
     spark: SparkSession, out_dir: str, snapshot_id: str
-) -> DataFrame | None:
-    """part_ids already encoded OK for this exact input snapshot."""
+) -> set[int]:
+    """part_ids already encoded OK for this exact input snapshot (one
+    metadata job; empty before the first run)."""
     m = read_manifest(spark, out_dir)
     if m is None:
-        return None
-    return (
-        m.filter((F.col("snapshot_id") == snapshot_id) & (F.col("status") == "ok"))
+        return set()
+    return {
+        r["part_id"]
+        for r in m.filter(
+            (F.col("snapshot_id") == snapshot_id) & (F.col("status") == "ok")
+        )
         .select("part_id")
-        .distinct()
-    )
+        .collect()
+    }
 
 
 def snapshot_id_of(df: DataFrame) -> str:

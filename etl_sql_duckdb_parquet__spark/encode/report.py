@@ -16,8 +16,9 @@ def manifest_report(spark: SparkSession, out_dir: str) -> str:
     m = read_manifest(spark, out_dir)
     if m is None:
         return "# Encode report\n\nNo manifest found.\n"
+    ok = m.filter(F.col("status") == "ok")
     by_codec = (
-        m.filter(F.col("status") == "ok")
+        ok
         .groupBy("codec")
         .agg(
             F.count("*").alias("parts"),
@@ -30,9 +31,15 @@ def manifest_report(spark: SparkSession, out_dir: str) -> str:
         .orderBy("codec")
         .collect()
     )
+    if not by_codec:
+        # an empty manifest directory, or only the running marker of a
+        # first encode that never committed
+        return "\n".join(
+            ["# Encode report", "", "No committed partitions."]
+            + _events_section(spark, out_dir)
+        ) + "\n"
     total = (
-        m.filter(F.col("status") == "ok")
-        .agg(
+        ok.agg(
             F.countDistinct("run_id").alias("runs"),
             F.count("*").alias("parts"),
             F.sum("raw_bytes").alias("raw"),

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import threading
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
@@ -31,8 +32,19 @@ def data_files(output_dir: str) -> set:
     """Basenames of the sink's data files (metadata-only directory walk).
 
     File-sink part names are per-batch UUIDs, so basenames identify a
-    drain's files uniquely across the sink's lifetime.
+    drain's files uniquely across the sink's lifetime.  Filesystem sinks
+    only (a ``file:`` URI is stripped): ``os.walk`` reads any other URI as
+    a missing relative path and would list nothing, so the drain report
+    would count every emitted row as a duplicate.
     """
+    scheme = urlsplit(output_dir).scheme
+    if scheme and scheme != "file":
+        raise NotImplementedError(
+            f"drain reports list filesystem sinks; {output_dir!r} is a "
+            f"{scheme}: URI — run the drain against a mounted path"
+        )
+    if scheme:
+        output_dir = output_dir[len("file:"):]
     found = set()
     for root, dirs, files in os.walk(output_dir):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]

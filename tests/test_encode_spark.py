@@ -478,3 +478,29 @@ def test_plan_backfill_on_resumed_noop(spark, token_df, tmp_path):
     stats = encode_token_table(spark, token_df, out, target_tokens=5_000)
     assert stats["n_parts_encoded"] == 0  # resume no-op...
     assert candidate_parts(spark, out, ["doc_0"])  # ...but plan is back
+
+
+def test_lookup_candidates_match_encode_assignment(spark, tmp_path):
+    """candidate_parts replays the encode's ``offset + pmod(xxhash64,
+    salts)`` on the driver (Python ``%``); on a hot source split over
+    several salts — where negative hashes occur — every doc's candidate
+    must be exactly the part_id plan_partitions gave it."""
+    from etl_sql_duckdb_parquet__spark.encode import candidate_parts
+
+    df = synth_token_table(spark, n_docs=40, seed=11, avg_len=64)
+    target = 700
+    planned, _, plan_rows = plan_partitions(df, target_tokens=target)
+    salts = {src: k for src, _, k in plan_rows}
+    assert salts["web"] > 1, plan_rows
+    assigned = planned.select(
+        "doc_id",
+        "source",
+        "part_id",
+        (F.xxhash64("doc_id") < 0).alias("neg"),
+    ).collect()
+    assert {r["neg"] for r in assigned} == {True, False}
+    out = str(tmp_path / "enc_assign")
+    encode_token_table(spark, df, out, target_tokens=target)
+    for r in assigned:
+        got = candidate_parts(spark, out, [r["doc_id"]], source=r["source"])
+        assert got == [r["part_id"]], (r, got)

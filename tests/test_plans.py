@@ -212,6 +212,48 @@ def test_encode_sink_has_no_repack_exchange(spark):
     assert plan.index("MapInArrow") < plan.index("Exchange"), plan
 
 
+def _jobs_run_by(spark, call) -> int:
+    """Spark jobs a driver call submits (its own job group; the status
+    store is fed by the async listener bus, so drain it first)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_calls_run_one_job_per_metadata_read(spark, tmp_path):
+    """Store-layer calls pay one Spark job per metadata read, not one per
+    decision: typed reads (no footer-inference jobs), one collect per
+    manifest or plan read, and driver-built frames as LocalRelations.
+    An encode is the stats scan (2), the sink write (3: plan broadcast,
+    shuffle, write), the commit collect and the manifest append; a decode
+    plan costs its one manifest collect; a candidate lookup its plan and
+    manifest collects."""
+    from etl_sql_duckdb_parquet__spark.encode import (
+        candidate_parts,
+        decode_token_table,
+        encode_token_table,
+        synth_token_table,
+    )
+
+    df = synth_token_table(spark, n_docs=200, seed=5)
+    out = str(tmp_path / "jobs_store")
+    assert _jobs_run_by(
+        spark, lambda: encode_token_table(spark, df, out, target_tokens=20_000)
+    ) == 7
+    assert _jobs_run_by(spark, lambda: decode_token_table(spark, out)) == 1
+    assert _jobs_run_by(
+        spark, lambda: candidate_parts(spark, out, ["doc_000000000001"])
+    ) == 2
+
+
 def test_similarity_dot_products_are_codegen(spark):
     """The unrolled dot product must stay out of interpreted HOF-lambda
     land: no zip_with/lambda anywhere, and (in the post-AQE final plan —

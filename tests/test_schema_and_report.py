@@ -54,3 +54,20 @@ def test_manifest_report(spark, sf_dir, tmp_path):
     assert manifest_report(spark, str(tmp_path / "nope")).endswith(
         "No manifest found.\n"
     )
+
+
+def test_manifest_report_without_committed_rows(spark, tmp_path):
+    """A store whose only manifest row is the running marker of a first
+    encode that crashed, and an empty manifest directory, both report
+    "No committed partitions" instead of failing on NULL totals."""
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        append_running_marker,
+    )
+
+    crashed = str(tmp_path / "crashed")
+    append_running_marker(spark, crashed, "run_crashed", "snap_x")
+    empty = tmp_path / "empty"
+    (empty / "manifest").mkdir(parents=True)
+    for out in (crashed, str(empty)):
+        rep = manifest_report(spark, out)
+        assert rep == "# Encode report\n\nNo committed partitions.\n", rep

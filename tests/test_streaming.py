@@ -571,6 +571,25 @@ def test_vacuum_aborts_on_marker_appended_mid_vacuum(spark, tmp_path, monkeypatc
     assert verify_roundtrip(df, decode_token_table(spark, out))["ok"]
 
 
+def test_drain_listing_refuses_unlistable_uris(tmp_path):
+    """data_files lists filesystem sinks only: a ``file:`` URI is the
+    same directory, and an object-store URI raises instead of listing
+    nothing (an empty listing would report every drained row as a
+    duplicate)."""
+    import pytest
+
+    from etl_sql_duckdb_parquet__spark.streaming._drain import data_files
+
+    sink = tmp_path / "sink"
+    (sink / "_spark_metadata").mkdir(parents=True)
+    (sink / "part-0001.parquet").write_bytes(b"")
+    (sink / "_spark_metadata" / "0.parquet").write_bytes(b"")
+    assert data_files(str(sink)) == {"part-0001.parquet"}
+    assert data_files(f"file:{sink}") == {"part-0001.parquet"}
+    with pytest.raises(NotImplementedError, match="s3a"):
+        data_files("s3a://b/sink")
+
+
 def test_streaming_dedup_across_drains(spark, tmp_path):
     """dropDuplicatesWithinWatermark-based feed dedup via the drain
     runner: an in-batch duplicate and a cross-drain re-delivery (state
