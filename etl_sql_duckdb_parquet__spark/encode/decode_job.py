@@ -2,10 +2,10 @@
 
 One typed manifest collect picks, on the driver, the snapshot(s) to read
 and the winning (latest successful) run of every partition, so orphaned
-blob files from a crashed run can never leak into results; the winners
-join the typed blob scan on (part_id, run_id) as a driver-built
-LocalRelation, and every codec is reversed inside an Arrow-native
-``mapInArrow``.  The token lists are assembled ZERO-COPY with
+blob files from a crashed run can never leak into results; the blob
+scan then lists only the winning runs' ``run_id=`` directories (by path:
+no join, no broadcast job), and every codec is reversed inside an
+Arrow-native ``mapInArrow``.  The token lists are assembled ZERO-COPY with
 ``pa.ListArray.from_arrays(offsets, values)`` — no per-document
 ``np.split``/pandas-object materialization, which dominated decode time at
 many-docs scale (tens of thousands of small docs per partition).
@@ -129,22 +129,53 @@ def winning_blobs(
     in the manifest), pinning the choice independent of finish order.
     Within a snapshot, the winner per part_id is the latest OK run — the
     max of ``(finished_at, run_id)`` — so a resumed/re-run snapshot still
-    dedupes exactly.  The winners are picked on the driver from the one
-    manifest collect and join the blob scan as a LocalRelation.
+    dedupes exactly.
+
+    The winners are picked on the driver from the one manifest collect
+    and reach the blob scan without a join: the scan reads only the
+    winning runs' ``run_id=`` directories (by path, so the listing is
+    O(winning runs), not O(store history); a run none of whose winning
+    partitions holds docs has no directory and is skipped), and drops
+    ``(part_id, run_id) IN (losing pairs)`` — the blob rows of a read
+    run whose partition a later run won.  That list is empty in every
+    state the writers produce (a commit is one whole run, derived from
+    that run's own directory), and reading whole run directories rests
+    on the same assumption the commit does: a run's directory holds
+    exactly that run's commit.
     """
+    rows = _resolve_snapshots(spark, out_dir, snapshots)
     best: dict[tuple[str, int], Row] = {}
-    for r in _resolve_snapshots(spark, out_dir, snapshots):
+    for r in rows:
         key = (r["snapshot_id"], r["part_id"])
         if key not in best or _recency(r) > _recency(best[key]):
             best[key] = r
-    pairs = sorted({(r["part_id"], r["run_id"]) for r in best.values()})
-    winners = local_frame(
-        spark,
-        [{"part_id": p, "run_id": run} for p, run in pairs],
-        "part_id int, run_id string",
+    # only partitions that received docs have blob rows
+    stored = {
+        (r["part_id"], r["run_id"]) for r in rows if r["codec"] != "empty"
+    }
+    winners = {(r["part_id"], r["run_id"]) for r in best.values()} & stored
+    runs = sorted({run for _, run in winners})
+    if not runs:
+        return local_frame(spark, [], BLOB_SCHEMA)
+    root = blobs_path(out_dir)
+    blobs = (
+        spark.read.schema(BLOB_SCHEMA)
+        .option("basePath", root)
+        .parquet(*(f"{root}/run_id={run}" for run in runs))
     )
-    blobs = spark.read.schema(BLOB_SCHEMA).parquet(blobs_path(out_dir))
-    return blobs.join(F.broadcast(winners), ["part_id", "run_id"], "inner")
+    losing = sorted({pr for pr in stored if pr[1] in runs} - winners)
+    if losing:
+        blobs = blobs.filter(
+            ~F.struct("part_id", "run_id").isin(
+                [
+                    F.struct(
+                        F.lit(p).alias("part_id"), F.lit(run).alias("run_id")
+                    )
+                    for p, run in losing
+                ]
+            )
+        )
+    return blobs
 
 
 def decode_token_table(
@@ -179,8 +210,9 @@ def decode_token_table(
     schema = ", ".join(f"{c} {_COLUMN_TYPES[c][0]}" for c in cols)
     blobs = winning_blobs(spark, out_dir, snapshots)
     if parts is not None:
-        # partition pruning: the IN filter pushes through the winners
-        # join to the blob scan (parquet row-group stats skip the rest)
+        # partition pruning: the IN filter reaches the blob scan
+        # (parquet row-group stats skip the rest); bounded by the lookup's
+        # ids, never one literal per store partition
         blobs = blobs.filter(F.col("part_id").isin([int(p) for p in parts]))
     return blobs.select(*needed).mapInArrow(_make_decoder(cols), schema)
 
@@ -198,7 +230,7 @@ def _resolve_snapshots(
     check can never validate a different snapshot set than the one the
     decode actually reads.
 
-    Returns the ok ``(snapshot_id, part_id, run_id, finished_at)``
+    Returns the ok ``(snapshot_id, part_id, run_id, codec, finished_at)``
     manifest rows of the selection — one metadata job; every decision
     after it runs on the driver.  Validates the argument and, for an
     explicit ``snap_`` id, its existence — a typo'd id must raise here,
@@ -216,7 +248,7 @@ def _resolve_snapshots(
         raise FileNotFoundError(f"no manifest under {out_dir}")
     ok = (
         manifest.filter(F.col("status") == "ok")
-        .select("snapshot_id", "part_id", "run_id", "finished_at")
+        .select("snapshot_id", "part_id", "run_id", "codec", "finished_at")
         .collect()
     )
     if snapshots == "all":
@@ -244,15 +276,6 @@ def _decoded_snapshot_ids(
     (same resolution rules as :func:`winning_blobs` — shared resolver)."""
     rows = _resolve_snapshots(spark, out_dir, snapshots)
     return {r["snapshot_id"] for r in rows}
-
-
-def _doc_ids_frame(spark: SparkSession, doc_ids: list[str]) -> DataFrame:
-    """The distinct requested ids as a LocalRelation."""
-    return local_frame(
-        spark,
-        [{"doc_id": str(d)} for d in dict.fromkeys(doc_ids)],
-        "doc_id string",
-    )
 
 
 def candidate_parts(
@@ -307,7 +330,13 @@ def candidate_parts(
         if source is None or src is None or src == source
     }
     hashes = (
-        _doc_ids_frame(spark, doc_ids).select(F.xxhash64("doc_id")).collect()
+        local_frame(
+            spark,
+            [{"doc_id": str(d)} for d in dict.fromkeys(doc_ids)],
+            "doc_id string",
+        )
+        .select(F.xxhash64("doc_id"))
+        .collect()
     )
     return sorted(
         {off + h % salts for (h,) in hashes for off, salts in ranges}
@@ -331,9 +360,10 @@ def lookup_docs(
     P (the hash-partitioned answer to what zone maps do for range-
     partitioned stores).  Candidate part ids across snapshots are unioned
     (a part id needed for one snapshot also selects the same id in
-    others — superset, filtered by the doc-id semi-join below, so the
-    result is exact).  ``doc_ids`` is broadcast: point lookups are by
-    definition metadata-sized; for bulk id sets use a decode + join.
+    others — superset, filtered by ``doc_id IN ids`` below, so the
+    result is exact).  The ids are literals in the plan: point lookups
+    are by definition metadata-sized; for bulk id sets use a decode +
+    join.
     ``source`` (when every requested id comes from that source) collapses
     candidates to one partition per (doc, plan).  ``parts`` lets a caller
     that already ran :func:`candidate_parts` skip recomputing them.
@@ -346,8 +376,9 @@ def lookup_docs(
             spark, out_dir, doc_ids, source=source, snapshots=snapshots
         )
     decoded = decode_token_table(spark, out_dir, snapshots, cols, parts=parts)
-    ids = _doc_ids_frame(spark, doc_ids)
-    out = decoded.join(F.broadcast(ids), "doc_id", "left_semi")
+    out = decoded.filter(
+        F.col("doc_id").isin([str(d) for d in dict.fromkeys(doc_ids)])
+    )
     return out.select(*columns) if columns is not None else out
 
 

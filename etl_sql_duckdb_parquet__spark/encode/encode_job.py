@@ -27,7 +27,6 @@ from __future__ import annotations
 import datetime
 import json
 import math
-import os
 import time
 import uuid
 
@@ -39,16 +38,15 @@ from ..codecs import encode_strings
 from ..codecs.core import encode_int_best, encode_int_best_with_stats
 from ..codecs.core import CODEC_IDS, codec_of, zunwrap, zwrap_best
 from .manifest import (
-    MANIFEST_SCHEMA,
     PLAN_SCHEMA,
     append_manifest,
     append_running_marker,
-    arrow_table,
     blobs_path,
     completed_parts,
     local_frame,
     plan_path,
     read_typed,
+    write_rows,
 )
 
 DEFAULT_TARGET_TOKENS = 2_000_000
@@ -177,8 +175,21 @@ def plan_partitions(
         if bin_open:
             off += 1
         n_parts = off
-        plan = spark.createDataFrame(
-            rows, "source string, _offset int, _salts int"
+        if n_parts == 1:
+            # one bin: every source has offset 0 and one salt, so every
+            # doc's part is 0 — no plan frame, no broadcast
+            return df.withColumn("part_id", F.lit(0)), n_parts, rows
+        # a LocalRelation build side: a frame built from a Python list
+        # would broadcast through a Python-worker ``parallelize`` job.  A
+        # join, not a literal map/CASE lookup: that costs O(sources) per
+        # row (2M docs: 0.26 s join vs 2.4 s map at 1,000 sources)
+        plan = local_frame(
+            spark,
+            [
+                {"source": src, "_offset": o, "_salts": k}
+                for src, o, k in rows
+            ],
+            "source string, _offset int, _salts int",
         )
         out = (
             df.join(F.broadcast(plan), "source")
@@ -342,39 +353,24 @@ def _append_plan_rows(
 ) -> None:
     """Persist the (source → offset/salts) plan beside the manifest.
 
-    Driver-side pyarrow for filesystem paths — the rows are
-    metadata-sized and a Spark write job costs ~1 s of fixed overhead
-    per encode run; remote URIs (s3a:// etc.) go through a Spark write.
-    Both paths emit the identical schema (int32 offset/salts) so mixed
-    stores read back without a merge conflict.
-
-    The local file is named by SNAPSHOT (the plan is a pure function of
+    The file is named by SNAPSHOT (the plan is a pure function of
     snapshot + plan params), so re-runs and resumed no-op runs overwrite
     with identical content instead of accumulating duplicates — which is
     also what lets the fully-resumed path backfill plans for stores
-    encoded before this feature existed.  (The remote branch appends a
-    part file per run instead; ``candidate_parts`` dedupes the plan
-    rows it collects, so duplicates only cost bytes.)
+    encoded before this feature existed.  (Remote stores append a part
+    file per run instead; ``candidate_parts`` dedupes the plan rows it
+    collects, so duplicates only cost bytes.)
     """
-    ppath = plan_path(out_dir)
-    ddl = f"run_id string, {PLAN_SCHEMA}"
-    rows = [
-        {"run_id": run_id, "snapshot_id": snapshot_id, "source": s,
-         "offset": o, "salts": k}
-        for s, o, k in plan_rows
-    ]
-    if "://" not in ppath or ppath.startswith("file:"):
-        import pyarrow.parquet as pq
-
-        local = ppath[len("file:"):] if ppath.startswith("file:") else ppath
-        os.makedirs(local, exist_ok=True)
-        pq.write_table(
-            arrow_table(rows, ddl),
-            os.path.join(local, f"plan-{snapshot_id}.parquet"),
-        )
-        return
-    local_frame(spark, rows, ddl).coalesce(1).write.mode("append").parquet(
-        ppath
+    write_rows(
+        spark,
+        plan_path(out_dir),
+        f"plan-{snapshot_id}.parquet",
+        [
+            {"run_id": run_id, "snapshot_id": snapshot_id, "source": s,
+             "offset": o, "salts": k}
+            for s, o, k in plan_rows
+        ],
+        f"run_id string, {PLAN_SCHEMA}",
     )
 
 
@@ -532,16 +528,14 @@ def encode_token_table(
     )
     now = datetime.datetime.now(datetime.timezone.utc)
     append_manifest(
-        local_frame(
-            spark,
-            [
-                {"run_id": run_id, "snapshot_id": snapshot_id,
-                 "part_id": p, **meta, "status": "ok", "finished_at": now}
-                for p, meta in written + [(p, _EMPTY_META) for p in empty_ids]
-            ],
-            MANIFEST_SCHEMA,
-        ),
+        spark,
         out_dir,
+        f"ok-{run_id}-{uuid.uuid4().hex[:8]}.parquet",
+        [
+            {"run_id": run_id, "snapshot_id": snapshot_id,
+             "part_id": p, **meta, "status": "ok", "finished_at": now}
+            for p, meta in written + [(p, _EMPTY_META) for p in empty_ids]
+        ],
     )
 
     def total(key: str):

@@ -37,17 +37,26 @@ from pyspark.sql import functions as F
 
 from .decode_job import decode_token_table
 from .encode_job import DEFAULT_TARGET_TOKENS, encode_token_table
-from .manifest import blobs_path, manifest_path, plan_path, read_manifest
+from .manifest import (
+    MANIFEST_SCHEMA,
+    blobs_path,
+    filesystem_path,
+    manifest_path,
+    plan_path,
+    read_manifest,
+    write_rows,
+)
 
 
 def _require_filesystem(out_dir: str) -> str:
-    if "://" in out_dir and not out_dir.startswith("file:"):
+    local = filesystem_path(out_dir)
+    if local is None:
         raise NotImplementedError(
             "vacuum_store operates on filesystem stores; for object "
             "stores run it from a host with the store mounted, or prune "
             "via the object-store's own lifecycle tooling"
         )
-    return out_dir[len("file:"):] if out_dir.startswith("file:") else out_dir
+    return local
 
 
 def _is_compacted(snapshot_id: str) -> bool:
@@ -215,9 +224,10 @@ def vacuum_store(
     manifest = read_manifest(spark, out_dir)
     if manifest is None:
         raise FileNotFoundError(f"no manifest under {out_dir}")
-    rows = manifest.select(
-        "run_id", "snapshot_id", "status", "finished_at"
-    ).collect()  # metadata-sized: O(partitions) rows
+    # ONE metadata job serves every guard below AND the survivors
+    # rewrite; Arrow keeps finished_at in UTC, where collect() would
+    # return naive local-time datetimes
+    rows = manifest.toArrow().to_pylist()  # metadata-sized: O(partitions)
     ok_rows = [r for r in rows if r["status"] == "ok"]
     if not ok_rows:
         raise ValueError(f"no status='ok' manifest rows under {out_dir}")
@@ -293,10 +303,17 @@ def vacuum_store(
     # (the in-flight guard above, or force), and committed runs' markers
     # serve no further purpose — carrying them through the rewrite would
     # leave permanent cruft every manifest reader must filter.
-    survivors = manifest.filter(
-        (F.col("snapshot_id") == snap) & (F.col("status") != "running")
+    write_rows(
+        spark,
+        tmp,
+        f"vacuum-{snap}.parquet",
+        [
+            r
+            for r in rows
+            if r["snapshot_id"] == snap and r["status"] != "running"
+        ],
+        MANIFEST_SCHEMA,
     )
-    survivors.coalesce(1).write.mode("overwrite").parquet(tmp)
     os.rename(mpath, old)
     os.rename(tmp, mpath)
     shutil.rmtree(old)

@@ -17,6 +17,7 @@ are re-encoded.  Spark has no built-in batch resume; this is ours.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +44,7 @@ def arrow_table(rows: list[dict], ddl: str):
 
     types = {
         "string": pa.string(),
+        "binary": pa.binary(),
         "int": pa.int32(),
         "long": pa.int64(),
         "double": pa.float64(),
@@ -91,6 +93,45 @@ def plan_path(out_dir: str) -> str:
     return os.path.join(out_dir, "plan")
 
 
+def filesystem_path(path: str) -> str | None:
+    """``path`` as a local filesystem path (a ``file:`` URI is stripped),
+    or ``None`` for a remote URI (``s3a://`` etc.)."""
+    if "://" in path and not path.startswith("file:"):
+        return None
+    return path[len("file:"):] if path.startswith("file:") else path
+
+
+def write_rows(
+    spark: SparkSession, path: str, name: str, rows: list[dict], ddl: str
+) -> None:
+    """Write metadata-sized ``rows`` as ONE parquet file in directory
+    ``path`` — the single writer of every store metadata file.
+
+    Filesystem stores: a driver-side pyarrow write (no Spark job; a Spark
+    write of a few rows costs ~150 ms against ~45 ms) to a ``.``-prefixed
+    temporary name in the same directory, then ``os.replace`` to
+    ``name``.  Spark's file listing skips dot files, so a crash mid-write
+    leaves at most an invisible temporary, never a truncated file that
+    would break every later read of the directory.  Remote URIs get a
+    one-file Spark append (``name`` is then Spark's part-file name)."""
+    local = filesystem_path(path)
+    if local is None:
+        local_frame(spark, rows, ddl).coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+        return
+    import pyarrow.parquet as pq
+
+    os.makedirs(local, exist_ok=True)
+    tmp = os.path.join(local, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
+    try:
+        pq.write_table(arrow_table(rows, ddl), tmp)
+        os.replace(tmp, os.path.join(local, name))
+    finally:
+        if os.path.exists(tmp):  # the write failed
+            os.remove(tmp)
+
+
 def append_running_marker(
     spark: SparkSession, out_dir: str, run_id: str, snapshot_id: str
 ) -> None:
@@ -104,14 +145,8 @@ def append_running_marker(
     while any such run exists (``force=True`` overrides and clears the
     marker).
     Every reader filters ``status == 'ok'``, so the marker is invisible to
-    decode/resume.  Filesystem stores get a driver-side pyarrow write
-    (the row is metadata-sized; a Spark write job costs ~1 s of fixed
-    overhead per encode run); remote URIs go through a Spark append.
+    decode/resume.
     """
-    # Both writers build the row against MANIFEST_SCHEMA — the single
-    # source of truth — so a schema change cannot leave marker files with
-    # a divergent layout in the append-only manifest directory (mixed file
-    # schemas read back nondeterministically under mergeSchema=false).
     import datetime
 
     row = {
@@ -121,18 +156,7 @@ def append_running_marker(
         "status": "running",
         "finished_at": datetime.datetime.now(datetime.timezone.utc),
     }
-    mpath = manifest_path(out_dir)
-    if "://" not in mpath or mpath.startswith("file:"):
-        import pyarrow.parquet as pq
-
-        local = mpath[len("file:"):] if mpath.startswith("file:") else mpath
-        os.makedirs(local, exist_ok=True)
-        pq.write_table(
-            arrow_table([row], MANIFEST_SCHEMA),
-            os.path.join(local, f"marker-{run_id}.parquet"),
-        )
-        return
-    append_manifest(local_frame(spark, [row], MANIFEST_SCHEMA), out_dir)
+    append_manifest(spark, out_dir, f"marker-{run_id}.parquet", [row])
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -142,12 +166,15 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return read_typed(spark, manifest_path(out_dir), MANIFEST_SCHEMA)
 
 
-def append_manifest(df: DataFrame, out_dir: str) -> None:
-    """Append metadata-sized rows as one file (every manifest read opens
-    each file)."""
-    df.select(*MANIFEST_COLS).coalesce(1).write.mode("append").parquet(
-        manifest_path(out_dir)
-    )
+def append_manifest(
+    spark: SparkSession, out_dir: str, name: str, rows: list[dict]
+) -> None:
+    """Append metadata-sized manifest rows (dicts over ``MANIFEST_COLS``;
+    absent keys read as nulls) as one file named ``name`` — every
+    manifest read opens each file, and every file carries
+    ``MANIFEST_SCHEMA`` exactly (mixed file schemas read back
+    nondeterministically under ``mergeSchema=false``)."""
+    write_rows(spark, manifest_path(out_dir), name, rows, MANIFEST_SCHEMA)
 
 
 def completed_parts(

@@ -81,46 +81,69 @@ class DrainMetricsListener(StreamingQueryListener):
     """Per-drain audit counters accumulated across ALL micro-batches.
 
     Attach BEFORE ``start()``, then :meth:`bind` the started query's
-    ``runId`` IMMEDIATELY after ``start()`` returns, and call
-    :meth:`wait_terminated` after ``awaitTermination()``: listener events
-    are dispatched asynchronously on the streaming bus, so a PRIOR
-    query's trailing progress/termination events can arrive while this
-    listener is attached — every event is therefore ignored until bound,
-    and filtered by runId afterwards (an unbound listener absorbing a
-    stale event would corrupt the very audit counts this class exists to
-    make exact).  Binding is synchronous and happens before the first
-    micro-batch can possibly complete, so no own-query event is missed.
-    Unlike ``q.recentProgress`` (a ring buffer of the last ~100
-    progresses) these sums are exact for arbitrarily long drains.
+    ``runId`` after ``start()`` returns, and call :meth:`wait_terminated`
+    after ``awaitTermination()``.  Listener events are dispatched
+    asynchronously on the streaming bus, so a PRIOR query's trailing
+    events can arrive while this listener is attached, and the query's
+    OWN first events can arrive between ``start()`` and ``bind`` (the
+    callback runs on the Py4J thread).  Every event is therefore kept
+    per ``runId`` until bound; ``bind`` adopts the matching run's sums
+    and termination and drops the rest, and later events of other runs
+    are ignored — a stale event can never corrupt the audit counts, and
+    an early own event is never lost.  Unlike ``q.recentProgress`` (a
+    ring buffer of the last ~100 progresses) these sums are exact for
+    arbitrarily long drains.
     """
 
     def __init__(self) -> None:
-        self.input_rows = 0
-        self.dropped_by_watermark = 0
+        self._lock = threading.Lock()
         self._run_id: str | None = None
+        # runId → [input rows, rows dropped by watermark]
+        self._sums: dict[str, list[int]] = {}
+        self._terminated: set[str] = set()
         self._done = threading.Event()
 
     def bind(self, run_id) -> None:
-        self._run_id = str(run_id)
+        with self._lock:
+            self._run_id = str(run_id)
+            self._sums = {self._run_id: self._sums.get(self._run_id, [0, 0])}
+            if self._run_id in self._terminated:
+                self._done.set()
+            self._terminated.clear()
+
+    @property
+    def input_rows(self) -> int:
+        return self._sums.get(self._run_id, [0, 0])[0]
+
+    @property
+    def dropped_by_watermark(self) -> int:
+        return self._sums.get(self._run_id, [0, 0])[1]
 
     def onQueryStarted(self, event) -> None:
         pass
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
-        if self._run_id is None or str(p.runId) != self._run_id:
-            return
-        self.input_rows += p["numInputRows"]
-        self.dropped_by_watermark += sum(
-            op["numRowsDroppedByWatermark"] for op in p["stateOperators"]
-        )
+        key = str(p.runId)
+        with self._lock:
+            if self._run_id not in (None, key):
+                return
+            sums = self._sums.setdefault(key, [0, 0])
+            sums[0] += p["numInputRows"]
+            sums[1] += sum(
+                op["numRowsDroppedByWatermark"] for op in p["stateOperators"]
+            )
 
     def onQueryIdle(self, event) -> None:
         pass
 
     def onQueryTerminated(self, event) -> None:
-        if self._run_id is not None and str(event.runId) == self._run_id:
-            self._done.set()
+        key = str(event.runId)
+        with self._lock:
+            if self._run_id is None:
+                self._terminated.add(key)
+            elif key == self._run_id:
+                self._done.set()
 
     def wait_terminated(self, timeout: float = 60.0) -> bool:
         return self._done.wait(timeout)
@@ -133,7 +156,7 @@ class drain_metrics:
 
         with drain_metrics(spark) as m:
             q = df.writeStream...start()
-            m.bind(q.runId)  # REQUIRED: events are ignored until bound
+            m.bind(q.runId)  # REQUIRED: events are buffered until bound
             q.awaitTermination()
         # m.input_rows / m.dropped_by_watermark are now exact
     """

@@ -504,3 +504,132 @@ def test_lookup_candidates_match_encode_assignment(spark, tmp_path):
     for r in assigned:
         got = candidate_parts(spark, out, [r["doc_id"]], source=r["source"])
         assert got == [r["part_id"]], (r, got)
+
+
+def _run_dirs(paths) -> set[str]:
+    """The ``run_id=`` directory names of blob file paths."""
+    return {
+        part
+        for p in paths
+        for part in p.split("/")
+        if part.startswith("run_id=")
+    }
+
+
+def test_decode_reads_only_winning_run_directories(spark, tmp_path):
+    """Winners reach the blob scan as a ``run_id`` partition filter, so
+    the listing is pruned to the winning runs' directories: neither an
+    older snapshot's run (for ``latest``) nor a crashed run's orphan
+    blobs are ever listed."""
+    import os
+    import shutil
+
+    from etl_sql_duckdb_parquet__spark.encode.decode_job import (
+        winning_blobs,
+    )
+
+    out = str(tmp_path / "enc_prune")
+    a = synth_token_table(spark, 300, avg_len=32, seed=1)
+    b = synth_token_table(spark, 200, avg_len=32, seed=2).withColumn(
+        "doc_id", F.concat(F.lit("b_"), F.col("doc_id"))
+    )
+    ra = encode_token_table(spark, a, out, target_tokens=5_000)["run_id"]
+    rb = encode_token_table(spark, b, out, target_tokens=5_000)["run_id"]
+    # a crashed run: blob files on disk, no ok manifest rows
+    blobs = os.path.join(out, "blobs")
+    shutil.copytree(
+        os.path.join(blobs, f"run_id={rb}"),
+        os.path.join(blobs, "run_id=run_crashed"),
+    )
+    assert _run_dirs(
+        winning_blobs(spark, out, "all").inputFiles()
+    ) == {f"run_id={ra}", f"run_id={rb}"}
+    assert _run_dirs(winning_blobs(spark, out).inputFiles()) == {
+        f"run_id={rb}"
+    }
+    v = verify_roundtrip(
+        a.unionByName(b), decode_token_table(spark, out, snapshots="all")
+    )
+    assert v["ok"], v
+
+
+def test_decode_drops_losing_pair_of_winning_run(spark, tmp_path):
+    """A winning run whose partition a later run of the same snapshot
+    won: the run filter admits the run's directory, so the losing
+    ``(part_id, run_id)`` pair must still be excluded — decode returns
+    every doc exactly once."""
+    import datetime as dt
+
+    from etl_sql_duckdb_parquet__spark.encode.encode_job import (
+        ENCODED_SCHEMA,
+    )
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        append_manifest,
+        read_typed,
+    )
+
+    out = str(tmp_path / "enc_losing")
+    df = synth_token_table(spark, 300, avg_len=32, seed=3)
+    df.cache().count()
+    stats = encode_token_table(spark, df, out, target_tokens=5_000)
+    r1 = stats["run_id"]
+    assert stats["n_parts_encoded"] > 1
+    # run_later re-commits partition 0 of the same snapshot, later
+    read_typed(
+        spark, f"{out}/blobs/run_id={r1}", ENCODED_SCHEMA
+    ).filter(F.col("part_id") == 0).write.option(
+        "compression", "none"
+    ).parquet(f"{out}/blobs/run_id=run_later")
+    row0 = (
+        read_manifest(spark, out)
+        .filter((F.col("status") == "ok") & (F.col("part_id") == 0))
+        .toArrow()
+        .to_pylist()
+    )
+    assert len(row0) == 1
+    later = dt.datetime(2035, 1, 1, tzinfo=dt.timezone.utc)
+    append_manifest(
+        spark, out, "ok-run_later.parquet",
+        [{**row0[0], "run_id": "run_later", "finished_at": later}],
+    )
+    decoded = decode_token_table(spark, out)
+    assert decoded.count() == df.count()
+    v = verify_roundtrip(df, decoded)
+    assert v["ok"], v
+    df.unpersist()
+
+
+def test_manifest_write_crash_leaves_store_readable(
+    spark, tmp_path, monkeypatch
+):
+    """A metadata write that dies mid-file must not leave a truncated
+    parquet file where manifest readers list it: the driver writes to a
+    dot-prefixed temporary and renames it into place, and readers skip
+    dot files (also the temporary of a writer killed outright)."""
+    import pyarrow.parquet as pq
+
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        append_running_marker,
+    )
+
+    out = str(tmp_path / "enc_torn")
+    df = synth_token_table(spark, 50, avg_len=32, seed=4)
+    encode_token_table(spark, df, out, target_tokens=5_000)
+
+    def torn_write(table, where, *args, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="disk full"):
+        append_running_marker(spark, out, "run_torn", "snap_x")
+    monkeypatch.undo()
+    # the temporary a killed writer leaves behind
+    (tmp_path / "enc_torn" / "manifest" / ".marker-x.parquet.0.tmp").write_bytes(
+        b"PAR1 torn"
+    )
+    rows = read_manifest(spark, out).collect()
+    assert rows and "run_torn" not in {r["run_id"] for r in rows}
+    v = verify_roundtrip(df, decode_token_table(spark, out))
+    assert v["ok"], v

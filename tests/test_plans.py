@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 import sys
 
+from pyspark.sql import functions as F
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_sql_duckdb_parquet__spark.queries import REGISTRY  # noqa: E402
@@ -212,6 +214,37 @@ def test_encode_sink_has_no_repack_exchange(spark):
     assert plan.index("MapInArrow") < plan.index("Exchange"), plan
 
 
+def test_one_part_encode_sink_has_no_plan_join(spark):
+    """With ONE planned partition every doc's part is 0: the plan is a
+    literal, with no broadcast join, but the part_id hash exchange stays
+    (a narrow ``coalesce(1)`` would pull the whole upstream, e.g. a
+    selective filter over a large table, into one task)."""
+    from etl_sql_duckdb_parquet__spark.encode import (
+        plan_partitions,
+        synth_token_table,
+    )
+    from etl_sql_duckdb_parquet__spark.encode.encode_job import (
+        encode_sink_frame,
+        input_stats,
+    )
+
+    df = synth_token_table(spark, n_docs=20, seed=5)
+    shares, _ = input_stats(df)
+    planned, n_parts, _ = plan_partitions(
+        df, target_tokens=20_000, shares=shares
+    )
+    assert n_parts == 1
+    plan = plan_of(
+        encode_sink_frame(planned, n_parts, "run_plan_test"), "simple"
+    )
+    assert "BroadcastHashJoin" not in plan, plan
+    # repartition(1, part_id) plans as a one-partition SHUFFLE exchange
+    # (Spark prints it as SinglePartition, not hashpartitioning)
+    assert plan.count("- Exchange ") == 1, plan
+    assert "Exchange SinglePartition, REPARTITION_BY_NUM" in plan, plan
+    assert "Coalesce" not in plan, plan
+
+
 def _jobs_run_by(spark, call) -> int:
     """Spark jobs a driver call submits (its own job group; the status
     store is fed by the async listener bus, so drain it first)."""
@@ -231,11 +264,11 @@ def _jobs_run_by(spark, call) -> int:
 def test_store_calls_run_one_job_per_metadata_read(spark, tmp_path):
     """Store-layer calls pay one Spark job per metadata read, not one per
     decision: typed reads (no footer-inference jobs), one collect per
-    manifest or plan read, and driver-built frames as LocalRelations.
-    An encode is the stats scan (2), the sink write (3: plan broadcast,
-    shuffle, write), the commit collect and the manifest append; a decode
-    plan costs its one manifest collect; a candidate lookup its plan and
-    manifest collects."""
+    manifest or plan read, driver-built frames as LocalRelations, and
+    metadata rows written by the driver.  An encode is the stats scan
+    (2), the sink write (3: plan broadcast, shuffle, write) and the
+    commit collect; a decode plan costs its one manifest collect; a
+    candidate lookup its plan and manifest collects."""
     from etl_sql_duckdb_parquet__spark.encode import (
         candidate_parts,
         decode_token_table,
@@ -247,11 +280,71 @@ def test_store_calls_run_one_job_per_metadata_read(spark, tmp_path):
     out = str(tmp_path / "jobs_store")
     assert _jobs_run_by(
         spark, lambda: encode_token_table(spark, df, out, target_tokens=20_000)
-    ) == 7
+    ) == 6
     assert _jobs_run_by(spark, lambda: decode_token_table(spark, out)) == 1
     assert _jobs_run_by(
         spark, lambda: candidate_parts(spark, out, ["doc_000000000001"])
     ) == 2
+
+
+def test_store_call_job_budgets(spark, tmp_path):
+    """The rest of a store's life, one pin per call:
+
+    - a resumed one-part encode (a drain epoch): stats scan (2), the
+      completed-parts collect, shuffle, write and commit collect — no
+      plan broadcast (the one part is a literal) and no manifest write
+      job (6);
+    - a decode run: its manifest collect and the scan, winners being a
+      run filter, not a broadcast join (2);
+    - ``lookup_docs(...).collect()``: its ``candidate_parts`` (2), the
+      decode's manifest collect and the scan, ids being a filter (4);
+    - ``compact_store``: its manifest collect, the union decode's, a
+      resumed multi-part encode (7) and vacuum's read and pre-swap
+      re-read (11).
+    """
+    from etl_sql_duckdb_parquet__spark.encode import (
+        compact_store,
+        decode_token_table,
+        encode_token_table,
+        lookup_docs,
+        synth_token_table,
+    )
+
+    out = str(tmp_path / "jobs_life")
+    encode_token_table(
+        spark, synth_token_table(spark, n_docs=200, seed=5), out,
+        target_tokens=20_000,
+    )
+    epoch = synth_token_table(spark, n_docs=20, seed=6).withColumn(
+        "doc_id", F.concat(F.lit("e_"), F.col("doc_id"))
+    )
+    stats = {}
+
+    def drain_epoch():
+        stats.update(
+            encode_token_table(spark, epoch, out, target_tokens=20_000)
+        )
+
+    assert _jobs_run_by(spark, drain_epoch) == 6
+    assert stats["n_parts_planned"] == 1
+    assert _jobs_run_by(
+        spark,
+        lambda: decode_token_table(spark, out, snapshots="all")
+        .write.format("noop").mode("overwrite").save(),
+    ) == 2
+    found = []
+    assert _jobs_run_by(
+        spark,
+        lambda: found.extend(
+            lookup_docs(
+                spark, out, ["e_doc_000000000001"], snapshots="all"
+            ).collect()
+        ),
+    ) == 4
+    assert [r["doc_id"] for r in found] == ["e_doc_000000000001"]
+    assert _jobs_run_by(
+        spark, lambda: compact_store(spark, out, target_tokens=20_000)
+    ) == 11
 
 
 def test_similarity_dot_products_are_codegen(spark):

@@ -348,6 +348,50 @@ def test_drain_metrics_exact_past_progress_ring_buffer(spark, tmp_path):
         spark.catalog.dropTempView("rb_test")
 
 
+def test_drain_listener_keeps_events_before_bind():
+    """The Py4J callback thread can deliver the query's own first
+    progress, or even its termination, before ``bind(q.runId)``: those
+    must count, while another query's events, before or after the bind,
+    must not."""
+    from types import SimpleNamespace
+
+    from etl_sql_duckdb_parquet__spark.streaming._drain import (
+        DrainMetricsListener,
+    )
+
+    class Progress(dict):
+        def __init__(self, run_id, rows, dropped=0):
+            super().__init__(
+                numInputRows=rows,
+                stateOperators=[{"numRowsDroppedByWatermark": dropped}],
+            )
+            self.runId = run_id
+
+    def progress(run_id, rows, dropped=0):
+        return SimpleNamespace(progress=Progress(run_id, rows, dropped))
+
+    def terminated(run_id):
+        return SimpleNamespace(runId=run_id)
+
+    m = DrainMetricsListener()
+    m.onQueryProgress(progress("stale", 100, 7))
+    m.onQueryTerminated(terminated("stale"))
+    m.onQueryProgress(progress("own", 5, 1))
+    m.bind("own")
+    m.onQueryProgress(progress("own", 3))
+    m.onQueryProgress(progress("stale", 50, 2))
+    assert (m.input_rows, m.dropped_by_watermark) == (8, 1)
+    assert not m.wait_terminated(0)
+    m.onQueryTerminated(terminated("own"))
+    assert m.wait_terminated(0)
+
+    early = DrainMetricsListener()
+    early.onQueryProgress(progress("own", 4))
+    early.onQueryTerminated(terminated("own"))
+    early.bind("own")
+    assert early.input_rows == 4 and early.wait_terminated(0)
+
+
 def test_compact_and_vacuum_streamed_store(spark, tmp_path):
     """Two streamed waves → compact merges them into one snapshot and
     vacuum reclaims the superseded per-epoch blobs; decode(all) ==
@@ -770,7 +814,10 @@ def test_compact_guard_catches_resumed_epoch(spark, tmp_path):
                 for c in MANIFEST_COLS
             ]
         )
-        append_manifest(resumed, out)
+        append_manifest(
+            spark, out, f"resumed-{ts.year}.parquet",
+            resumed.toArrow().to_pylist(),
+        )
     with pytest.raises(RuntimeError, match="compacted snapshot"):
         compact_store(spark, out, target_tokens=20_000, vacuum=False)
 
