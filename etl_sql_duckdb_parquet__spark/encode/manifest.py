@@ -70,7 +70,15 @@ def read_typed(
 ) -> DataFrame | None:
     """``path`` read with a declared schema, or ``None`` when it does not
     exist.  An untyped ``spark.read.parquet`` runs a footer-inference job
-    per call; the declared schema makes the read itself job-free."""
+    per call; the declared schema makes the read itself job-free.
+
+    A missing filesystem path is answered here: handed to Spark it would
+    throw inside ``FileStreamSink.hasMetadata``, which logs a WARN with a
+    Java stack trace before PATH_NOT_FOUND maps to ``None``.  Remote URIs
+    keep that mapping; every other error re-raises."""
+    local = filesystem_path(path)
+    if local is not None and not os.path.exists(local):
+        return None
     try:
         return spark.read.schema(ddl).parquet(path)
     except AnalysisException as e:

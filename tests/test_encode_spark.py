@@ -599,6 +599,44 @@ def test_decode_drops_losing_pair_of_winning_run(spark, tmp_path):
     df.unpersist()
 
 
+def test_read_typed_answers_missing_local_path_without_spark(tmp_path):
+    """A missing filesystem path reads as ``None`` before Spark is asked
+    (Spark would log a WARN with a Java stack trace first); a remote URI
+    still goes to Spark, which maps only PATH_NOT_FOUND to ``None``."""
+    from pyspark.errors import AnalysisException
+
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        MANIFEST_SCHEMA,
+        read_typed,
+    )
+
+    class Raised(AnalysisException):
+        def __init__(self, condition):
+            self.condition = condition
+
+        def getCondition(self):
+            return self.condition
+
+    class Session:
+        def __init__(self, error):
+            self.error = error
+
+        @property
+        def read(self):
+            raise self.error
+
+    never = Session(AssertionError("a missing local path reached Spark"))
+    for path in (str(tmp_path / "absent"), f"file:{tmp_path}/absent"):
+        assert read_typed(never, path, MANIFEST_SCHEMA) is None
+    remote = "s3a://bucket/store/manifest"
+    assert read_typed(
+        Session(Raised("PATH_NOT_FOUND")), remote, MANIFEST_SCHEMA
+    ) is None
+    with pytest.raises(AnalysisException):
+        read_typed(Session(Raised("UNABLE_TO_INFER_SCHEMA")), remote,
+                   MANIFEST_SCHEMA)
+
+
 def test_manifest_write_crash_leaves_store_readable(
     spark, tmp_path, monkeypatch
 ):

@@ -347,6 +347,60 @@ def test_store_call_job_budgets(spark, tmp_path):
     ) == 11
 
 
+def _classes_compiled_by(spark, call) -> int:
+    """Janino compiles a driver call causes, i.e. generated-code cache
+    misses (local mode runs the tasks' compiles in the driver JVM)."""
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    before = compiles.getCount()
+    call()
+    return compiles.getCount() - before
+
+
+def test_warm_calls_compile_nothing(spark, sf_dir, tmp_path):
+    """A warm pass over the benchmark's queries plus one store round
+    reuses every generated class: the codegen cache holds the working set
+    (a 100-entry cache evicts each class before its reuse, and every warm
+    query recompiles 11-33).  q41 and q42 are left out: their AQE plan
+    shape varies between calls, so they compile a few classes until every
+    variant is cached."""
+    from etl_sql_duckdb_parquet__spark.encode import (
+        decode_token_table,
+        encode_token_table,
+        lookup_docs,
+        synth_token_table,
+    )
+
+    queries = (
+        "q04_segment_revenue",
+        "q10_returnflag_summary",
+        "q17_dedup_keep_latest",
+        "q45_cosine_topk",
+        "q46_ann_lsh_topk",
+        "q50_codec_selection",
+        "q66_embedding_neardup_sql",
+    )
+
+    def one_pass(out):
+        for q in queries:
+            REGISTRY[q](spark, sf_dir).toPandas()
+        encode_token_table(
+            spark, synth_token_table(spark, n_docs=200, seed=5), out,
+            target_tokens=20_000,
+        )
+        decode_token_table(spark, out).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        lookup_docs(spark, out, ["doc_000000000001"]).collect()
+
+    one_pass(str(tmp_path / "cold"))
+    assert _classes_compiled_by(
+        spark, lambda: one_pass(str(tmp_path / "warm"))
+    ) == 0
+
+
 def test_similarity_dot_products_are_codegen(spark):
     """The unrolled dot product must stay out of interpreted HOF-lambda
     land: no zip_with/lambda anywhere, and (in the post-AQE final plan —
