@@ -22,14 +22,7 @@ from pyspark.sql import functions as F
 
 from ..codecs import decode_int, decode_strings
 from .encode_job import BLOB_SCHEMA
-from .manifest import (
-    PLAN_SCHEMA,
-    blobs_path,
-    local_frame,
-    plan_path,
-    read_manifest,
-    read_typed,
-)
+from .manifest import blobs_path, local_frame, read_manifest
 
 DECODED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -143,7 +136,7 @@ def winning_blobs(
     on the same assumption the commit does: a run's directory holds
     exactly that run's commit.
     """
-    rows = _resolve_snapshots(spark, out_dir, snapshots)
+    rows, _ = _resolve_snapshots(spark, out_dir, snapshots)
     best: dict[tuple[str, int], Row] = {}
     for r in rows:
         key = (r["snapshot_id"], r["part_id"])
@@ -224,17 +217,18 @@ def _recency(r: Row) -> tuple:
 
 def _resolve_snapshots(
     spark: SparkSession, out_dir: str, snapshots: str
-) -> list[Row]:
+) -> tuple[list[Row], list[Row]]:
     """THE snapshot-arg resolution, shared by every decode-side entry
     (``winning_blobs`` and the lookup coverage check) so the coverage
     check can never validate a different snapshot set than the one the
     decode actually reads.
 
-    Returns the ok ``(snapshot_id, part_id, run_id, codec, finished_at)``
-    manifest rows of the selection — one metadata job; every decision
-    after it runs on the driver.  Validates the argument and, for an
-    explicit ``snap_`` id, its existence — a typo'd id must raise here,
-    not surface downstream as a misleading missing-plan/backfill error.
+    Returns the selection's ok ``(snapshot_id, part_id, run_id, codec,
+    finished_at)`` manifest rows and its plan ``(snapshot_id, source,
+    part_id, salts)`` rows — one metadata job; every decision after it
+    runs on the driver.  Validates the argument and, for an explicit
+    ``snap_`` id, its existence — a typo'd id must raise here, not
+    surface downstream as a misleading plan-coverage error.
     """
     if snapshots not in ("all", "latest") and not snapshots.startswith(
         "snap_"
@@ -246,13 +240,15 @@ def _resolve_snapshots(
     manifest = read_manifest(spark, out_dir)
     if manifest is None:
         raise FileNotFoundError(f"no manifest under {out_dir}")
-    ok = (
-        manifest.filter(F.col("status") == "ok")
-        .select("snapshot_id", "part_id", "run_id", "codec", "finished_at")
+    rows = (
+        manifest.filter(F.col("status").isin("ok", "plan"))
+        .select(
+            "snapshot_id", "part_id", "run_id", "codec", "finished_at",
+            "status", "source", "salts",
+        )
         .collect()
     )
-    if snapshots == "all":
-        return ok
+    ok = [r for r in rows if r["status"] == "ok"]
     if snapshots == "latest":
         if not ok:
             raise ValueError(
@@ -260,22 +256,19 @@ def _resolve_snapshots(
                 "nothing to decode (all runs failed or were aborted)"
             )
         snapshots = max(ok, key=_recency)["snapshot_id"]
-    rows = [r for r in ok if r["snapshot_id"] == snapshots]
-    if not rows:
-        raise ValueError(
-            f"snapshot {snapshots!r} has no status='ok' manifest rows "
-            f"under {out_dir}"
-        )
-    return rows
-
-
-def _decoded_snapshot_ids(
-    spark: SparkSession, out_dir: str, snapshots: str
-) -> set[str]:
-    """The ok snapshot ids a decode with this ``snapshots`` arg will read
-    (same resolution rules as :func:`winning_blobs` — shared resolver)."""
-    rows = _resolve_snapshots(spark, out_dir, snapshots)
-    return {r["snapshot_id"] for r in rows}
+    if snapshots != "all":
+        ok = [r for r in ok if r["snapshot_id"] == snapshots]
+        if not ok:
+            raise ValueError(
+                f"snapshot {snapshots!r} has no status='ok' manifest rows "
+                f"under {out_dir}"
+            )
+    selected = {r["snapshot_id"] for r in ok}
+    plan = [
+        r for r in rows
+        if r["status"] == "plan" and r["snapshot_id"] in selected
+    ]
+    return ok, plan
 
 
 def candidate_parts(
@@ -285,35 +278,27 @@ def candidate_parts(
     source: str | None = None,
     snapshots: str = "all",
 ) -> list[int]:
-    """Partitions that can contain the given doc ids, from the persisted
-    plan: ``part_id = offset + pmod(xxhash64(doc_id), salts)`` — one
-    candidate per (doc, source, plan) instead of the whole store.  Pass
-    ``source`` when known (the common case — the caller knows which feed
-    a doc came from): candidates collapse to exactly one per (doc, plan).
+    """Partitions that can contain the given doc ids, from the plan rows
+    in the manifest: ``part_id = offset + pmod(xxhash64(doc_id), salts)``
+    — one candidate per (doc, source, plan) instead of the whole store.
+    Pass ``source`` when known (the common case — the caller knows which
+    feed a doc came from): candidates collapse to exactly one per (doc,
+    plan).
 
     ``snapshots`` names the snapshot set the lookup will decode (same
-    semantics as :func:`decode_token_table`); the plan must COVER it —
-    a store where an old snapshot predates plan support while newer
-    encodes wrote plan rows would otherwise compute candidates from the
-    newer plans only and silently miss docs living in the plan-less
-    snapshot.  Coverage is validated against the manifest and a missing
-    snapshot raises the same backfill error as a missing plan directory.
+    semantics as :func:`decode_token_table`); the plan rows must COVER
+    it — a store where an old snapshot has no plan rows (encoded before
+    plans were kept) would otherwise compute candidates from the newer
+    plans only and silently miss docs living in the plan-less snapshot.
 
-    Two metadata jobs (the plan and manifest collects); the hashes come
-    from ``xxhash64`` over a LocalRelation, which runs none, and the
-    ``pmod`` is Python's ``%`` (equal for ``salts > 0``).
+    One metadata job (the manifest collect the decode's snapshot
+    resolution also runs); the hashes come from ``xxhash64`` over a
+    LocalRelation, which runs none, and the ``pmod`` is Python's ``%``
+    (equal for ``salts > 0``).
     """
-    plan = read_typed(spark, plan_path(out_dir), PLAN_SCHEMA)
-    if plan is None:
-        raise FileNotFoundError(
-            f"no partition plan under {out_dir} — the store predates "
-            "lookup support; re-encode with --no-resume (a resumed no-op "
-            "run also backfills the plan), or decode fully and filter"
-        )
-    plan_rows = set(map(tuple, plan.collect()))
+    ok, plan = _resolve_snapshots(spark, out_dir, snapshots)
     uncovered = sorted(
-        _decoded_snapshot_ids(spark, out_dir, snapshots)
-        - {snap for snap, *_ in plan_rows}
+        {r["snapshot_id"] for r in ok} - {r["snapshot_id"] for r in plan}
     )
     if uncovered:
         raise FileNotFoundError(
@@ -325,9 +310,9 @@ def candidate_parts(
         )
     # uniform plans carry source=NULL and match any doc
     ranges = {
-        (offset, salts)
-        for _, src, offset, salts in plan_rows
-        if source is None or src is None or src == source
+        (r["part_id"], r["salts"])
+        for r in plan
+        if source is None or r["source"] is None or r["source"] == source
     }
     hashes = (
         local_frame(
@@ -355,7 +340,7 @@ def lookup_docs(
     """Point lookup: decode ONLY the partitions that can contain the ids.
 
     The encode partitioning is a pure function of (source, doc_id) — the
-    persisted plan replays it, so a k-id lookup against a store of P
+    manifest's plan rows replay it, so a k-id lookup against a store of P
     partitions decodes at most ``k × sources × snapshots`` partitions, not
     P (the hash-partitioned answer to what zone maps do for range-
     partitioned stores).  Candidate part ids across snapshots are unioned

@@ -38,15 +38,12 @@ from ..codecs import encode_strings
 from ..codecs.core import encode_int_best, encode_int_best_with_stats
 from ..codecs.core import CODEC_IDS, codec_of, zunwrap, zwrap_best
 from .manifest import (
-    PLAN_SCHEMA,
     append_manifest,
     append_running_marker,
     blobs_path,
     completed_parts,
     local_frame,
-    plan_path,
     read_typed,
-    write_rows,
 )
 
 DEFAULT_TARGET_TOKENS = 2_000_000
@@ -142,8 +139,9 @@ def plan_partitions(
     ``plan_rows`` is the deterministic doc→partition mapping as
     ``(source, offset, salts)`` tuples (``(None, 0, n_parts)`` for the
     uniform plan): ``part_id = offset + pmod(xxhash64(doc_id), salts)``.
-    Persisted beside the manifest so point lookups can recompute a doc's
-    partition instead of scanning the store (:func:`decode_job.lookup_docs`).
+    Persisted as ``status='plan'`` manifest rows so point lookups can
+    recompute a doc's partition instead of scanning the store
+    (:func:`decode_job.lookup_docs`).
     """
     spark = df.sparkSession
     if by_source:
@@ -348,32 +346,6 @@ def _encode_arrow_partition(batches):
         )
 
 
-def _append_plan_rows(
-    spark, run_id: str, snapshot_id: str, plan_rows: list, out_dir: str
-) -> None:
-    """Persist the (source → offset/salts) plan beside the manifest.
-
-    The file is named by SNAPSHOT (the plan is a pure function of
-    snapshot + plan params), so re-runs and resumed no-op runs overwrite
-    with identical content instead of accumulating duplicates — which is
-    also what lets the fully-resumed path backfill plans for stores
-    encoded before this feature existed.  (Remote stores append a part
-    file per run instead; ``candidate_parts`` dedupes the plan rows it
-    collects, so duplicates only cost bytes.)
-    """
-    write_rows(
-        spark,
-        plan_path(out_dir),
-        f"plan-{snapshot_id}.parquet",
-        [
-            {"run_id": run_id, "snapshot_id": snapshot_id, "source": s,
-             "offset": o, "salts": k}
-            for s, o, k in plan_rows
-        ],
-        f"run_id string, {PLAN_SCHEMA}",
-    )
-
-
 def encode_sink_frame(
     pending: DataFrame, n_parts: int, run_id: str
 ) -> DataFrame:
@@ -439,18 +411,10 @@ def encode_token_table(
     if snapshot_salt is not None:
         snapshot_id = f"{snapshot_id}-{snapshot_salt}"
 
-    # persist the doc→partition mapping up front (metadata-sized: one row
-    # per source) so point lookups can target candidate partitions
-    # (decode_job.lookup_docs).  Before the encode work AND on the
-    # fully-resumed path below, so a crash-and-resume can never leave a
-    # committed manifest without its plan, and stores encoded before
-    # this feature backfill on their next (even no-op) run.  Idempotent:
-    # the file is keyed by snapshot id.
-    if n_parts > 0:
-        _append_plan_rows(spark, run_id, snapshot_id, plan_rows, out_dir)
-
-    done_ids = (
-        completed_parts(spark, out_dir, snapshot_id) if resume else set()
+    done_ids, has_plan = (
+        completed_parts(spark, out_dir, snapshot_id)
+        if resume
+        else (set(), False)
     )
     pending = planned
     if done_ids:
@@ -461,11 +425,26 @@ def encode_token_table(
         pending = planned.join(F.broadcast(done), "part_id", "left_anti")
     skipped = len(done_ids)
 
+    # the doc→partition mapping as manifest rows (metadata-sized: one row
+    # per source), so point lookups can target candidate partitions
+    # (decode_job.lookup_docs).  Written with the running marker, before
+    # any blob moves, so a committed snapshot always has its plan; a
+    # fully-resumed run writes them only when the snapshot has none (a
+    # store encoded before plans were kept backfills on its next run).
+    started = datetime.datetime.now(datetime.timezone.utc)
+    plan = [] if has_plan else [
+        {"run_id": run_id, "snapshot_id": snapshot_id, "part_id": offset,
+         "source": source, "salts": salts, "status": "plan",
+         "finished_at": started}
+        for source, offset, salts in plan_rows
+    ]
     # same snapshot id ⇒ same data AND same plan parameters ⇒ same plan, so
     # "all planned parts already in the manifest" decides completion without
     # evaluating `pending` (an isEmpty() here would cost an extra pass over
     # the input)
     if skipped >= n_parts:
+        if plan:
+            append_manifest(spark, out_dir, f"plan-{run_id}.parquet", plan)
         return {
             "run_id": run_id,
             "snapshot_id": snapshot_id,
@@ -482,7 +461,7 @@ def encode_token_table(
     # in-flight marker BEFORE any blob bytes move: a concurrent/later
     # vacuum sees this run as running-until-committed and refuses to
     # reclaim its blob directory (maintenance.vacuum_store's guard)
-    append_running_marker(spark, out_dir, run_id, snapshot_id)
+    append_running_marker(spark, out_dir, run_id, snapshot_id, plan)
 
     (
         encode_sink_frame(pending, n_parts, run_id)

@@ -6,10 +6,10 @@ after N waves a ``decode(snapshots="all")`` unions N snapshots' blobs.
 ``compact_store`` re-encodes the union as ONE new snapshot (full-size
 partitions, fresh codec selection over the merged value distribution);
 ``vacuum_store`` then drops everything the latest snapshot superseded —
-old run directories under ``blobs/``, their manifest rows, and their
-plan files.  This is the maintenance loop the reference's background
-scheduler performed for its Parquet outputs (``src/scheduler.py:17-131``),
-reshaped for the snapshot/manifest store.
+old run directories under ``blobs/`` and their manifest rows (ok, plan
+and marker rows alike).  This is the maintenance loop the reference's
+background scheduler performed for its Parquet outputs
+(``src/scheduler.py:17-131``), reshaped for the snapshot/manifest store.
 
 Scale design: compaction is just decode→encode — both ends are the
 distributed mapInArrow engine, no driver data path; vacuum touches only
@@ -42,7 +42,6 @@ from .manifest import (
     blobs_path,
     filesystem_path,
     manifest_path,
-    plan_path,
     read_manifest,
     write_rows,
 )
@@ -193,8 +192,8 @@ def vacuum_store(
     """Keep only the latest snapshot; reclaim everything it superseded.
 
     Deletes blob ``run_id=...`` directories not referenced by the latest
-    snapshot, rewrites the manifest to that snapshot's rows, and drops
-    other snapshots' plan files.  After vacuum,
+    snapshot and rewrites the manifest to that snapshot's ok and plan
+    rows.  After vacuum,
     ``decode(snapshots="all") == decode(snapshots="latest")``.
 
     Two refusal guards (both overridable with ``force=True``):
@@ -298,7 +297,8 @@ def vacuum_store(
     # discard (mpath already holds the rewritten manifest) — and os.rename
     # below cannot replace a non-empty directory, so clear it first
     shutil.rmtree(old, ignore_errors=True)
-    # keep the surviving snapshot's rows, minus ALL running markers: after
+    # keep the surviving snapshot's ok and plan rows (every other
+    # snapshot's plan rows go with it), minus ALL running markers: after
     # a successful vacuum no uncommitted run survives by construction
     # (the in-flight guard above, or force), and committed runs' markers
     # serve no further purpose — carrying them through the rewrite would
@@ -334,14 +334,6 @@ def vacuum_store(
             )
         shutil.rmtree(victim)
         n_deleted += 1
-
-    # drop other snapshots' plan files (Spark-written part files from
-    # remote-era appends are left for read-side distinct() to dedupe)
-    pdir = plan_path(local)
-    if os.path.isdir(pdir):
-        for entry in os.listdir(pdir):
-            if entry.startswith("plan-") and entry != f"plan-{snap}.parquet":
-                os.remove(os.path.join(pdir, entry))
 
     return {
         "kept_snapshot": snap,

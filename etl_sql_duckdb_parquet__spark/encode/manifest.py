@@ -3,11 +3,20 @@
 Plays the role of the reference's SQLite run-history audit trail
 (reference ``src/history.py:22-48``: per-run status, row counts, duration)
 and its per-row audit columns (reference ``src/etl/ingest.py:53-58``),
-reshaped for a distributed encode job: one append-only Parquet table with
-one row per encoded partition::
+reshaped for a distributed encode job: one append-only Parquet table, the
+store's single log::
 
     (run_id, snapshot_id, part_id, codec, n_docs, n_tokens,
-     raw_bytes, comp_bytes, encode_s, checksum, status, finished_at)
+     raw_bytes, comp_bytes, encode_s, checksum,
+     n_distinct, n_runs, vmin, vmax, status, finished_at, source, salts)
+
+Three kinds of row, by ``status``:
+
+- ``'ok'``: one committed partition (codec choice, sizes, checksum);
+- ``'running'``: a run's in-flight marker (``part_id = -1``);
+- ``'plan'``: one source's slice of the snapshot's doc→partition plan,
+  ``part_id = offset + pmod(xxhash64(doc_id), salts)`` with ``part_id``
+  holding the offset (``source`` is NULL for a uniform plan).
 
 Resume = anti-join of the planned partition list against committed
 manifest rows for the same input snapshot — only missing/failed partitions
@@ -28,13 +37,10 @@ MANIFEST_SCHEMA = (
     "n_docs long, n_tokens long, raw_bytes long, comp_bytes long, "
     "encode_s double, checksum long, "
     "n_distinct long, n_runs long, vmin long, vmax long, "
-    "status string, finished_at timestamp"
+    "status string, finished_at timestamp, source string, salts int"
 )
 
 MANIFEST_COLS = [f.split(" ")[0] for f in MANIFEST_SCHEMA.split(", ")]
-
-# the plan columns a lookup reads; writers prepend ``run_id string``
-PLAN_SCHEMA = "snapshot_id string, source string, offset int, salts int"
 
 
 def arrow_table(rows: list[dict], ddl: str):
@@ -95,12 +101,6 @@ def blobs_path(out_dir: str) -> str:
     return os.path.join(out_dir, "blobs")
 
 
-def plan_path(out_dir: str) -> str:
-    """The persisted doc→partition mapping (one row per source per run):
-    ``part_id = offset + pmod(xxhash64(doc_id), salts)``."""
-    return os.path.join(out_dir, "plan")
-
-
 def filesystem_path(path: str) -> str | None:
     """``path`` as a local filesystem path (a ``file:`` URI is stripped),
     or ``None`` for a remote URI (``s3a://`` etc.)."""
@@ -141,10 +141,14 @@ def write_rows(
 
 
 def append_running_marker(
-    spark: SparkSession, out_dir: str, run_id: str, snapshot_id: str
+    spark: SparkSession,
+    out_dir: str,
+    run_id: str,
+    snapshot_id: str,
+    plan_rows: list[dict] = (),
 ) -> None:
     """One run-level ``status='running'`` manifest row, written BEFORE the
-    encode starts moving data.
+    encode starts moving data, in one file with the run's ``plan_rows``.
 
     Lets maintenance see runs that may still be writing blobs: a run_id
     with a running row and no ok rows is in-flight (or died — the marker
@@ -152,8 +156,8 @@ def append_running_marker(
     :func:`maintenance.vacuum_store` refuses to reclaim blob directories
     while any such run exists (``force=True`` overrides and clears the
     marker).
-    Every reader filters ``status == 'ok'``, so the marker is invisible to
-    decode/resume.
+    Every reader filters ``status``, so the marker is invisible to
+    decode/resume/lookup.
     """
     import datetime
 
@@ -164,7 +168,9 @@ def append_running_marker(
         "status": "running",
         "finished_at": datetime.datetime.now(datetime.timezone.utc),
     }
-    append_manifest(spark, out_dir, f"marker-{run_id}.parquet", [row])
+    append_manifest(
+        spark, out_dir, f"marker-{run_id}.parquet", [row, *plan_rows]
+    )
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -187,20 +193,23 @@ def append_manifest(
 
 def completed_parts(
     spark: SparkSession, out_dir: str, snapshot_id: str
-) -> set[int]:
-    """part_ids already encoded OK for this exact input snapshot (one
-    metadata job; empty before the first run)."""
+) -> tuple[set[int], bool]:
+    """part_ids already encoded OK for this exact input snapshot, and
+    whether the manifest holds the snapshot's plan rows (one metadata
+    job; nothing and False before the first run)."""
     m = read_manifest(spark, out_dir)
     if m is None:
-        return set()
-    return {
-        r["part_id"]
-        for r in m.filter(
-            (F.col("snapshot_id") == snapshot_id) & (F.col("status") == "ok")
+        return set(), False
+    rows = (
+        m.filter(
+            (F.col("snapshot_id") == snapshot_id)
+            & F.col("status").isin("ok", "plan")
         )
-        .select("part_id")
+        .select("part_id", "status")
         .collect()
-    }
+    )
+    done = {r["part_id"] for r in rows if r["status"] == "ok"}
+    return done, any(r["status"] == "plan" for r in rows)
 
 
 def snapshot_id_of(df: DataFrame) -> str:

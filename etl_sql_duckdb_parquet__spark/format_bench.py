@@ -39,10 +39,10 @@ def _latest_ok_manifest(spark: SparkSession, store: str):
     default ``decode``/``lookup`` reads: running markers and earlier
     snapshots (a reused work dir accumulates them via resume) excluded,
     so reported totals describe the store the timed paths decode."""
-    from .encode.decode_job import _decoded_snapshot_ids
+    from .encode.decode_job import _resolve_snapshots
     from .encode.manifest import read_manifest
 
-    (snap,) = _decoded_snapshot_ids(spark, store, "latest")
+    snap = _resolve_snapshots(spark, store, "latest")[0][0]["snapshot_id"]
     m = read_manifest(spark, store).filter(
         (F.col("status") == "ok") & (F.col("snapshot_id") == snap)
     )
@@ -434,8 +434,8 @@ def run_format_benchmark(
             f"{ls['lookup_any_ms']:.0f} | {r_any:.1f}x |",
             "",
             "The lookup's wall time is dominated by a ~2-3 s fixed "
-            "metadata cost (plan read + candidate job, manifest "
-            "winner-window, blob file listing) that does NOT grow with "
+            "metadata cost (manifest reads for the plan and the "
+            "winners, blob file listing) that does NOT grow with "
             "store size, while the full decode grows linearly with it — "
             "whether the partition work ratio shows up as wall time at a "
             "given store size depends on where that crossover sits "

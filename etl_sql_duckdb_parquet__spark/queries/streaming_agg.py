@@ -156,9 +156,20 @@ def q64_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             # mid-drain and no late row is dropped).  A batching change
             # (maxFilesPerTrigger, a second file matching the glob) must
             # fail loudly here, not as a silent driver-gate mismatch.
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
+            # recentProgress is a ring buffer that Spark trims to fewer
+            # than numRecentProgressUpdates entries: a full buffer may
+            # have dropped data batches, so it cannot prove the invariant.
+            progress = q.recentProgress
+            cap = int(
+                spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
+            )
+            if len(progress) >= cap - 1:
+                raise AssertionError(
+                    "q64's progress buffer is full "
+                    f"(numRecentProgressUpdates={cap}); it cannot show "
+                    "that the drain ran one data batch"
+                )
+            data_batches = [p for p in progress if p["numInputRows"] > 0]
             if len(data_batches) != 1:
                 raise AssertionError(
                     f"q64 drained {len(data_batches)} data batches; the "

@@ -461,18 +461,19 @@ def test_cli_point_lookup(spark, token_df, tmp_path):
 
 
 def test_plan_backfill_on_resumed_noop(spark, token_df, tmp_path):
-    """A store whose plan is missing (encoded before lookup support, or a
-    crash between writes) must regain it from the next run — even a
-    fully-resumed no-op — since the plan write precedes the resume
-    early-return and is idempotent per snapshot."""
-    import shutil
+    """A store whose plan rows are missing (encoded before lookup
+    support) must regain them from the next run — even a fully-resumed
+    no-op, which writes plan rows when its snapshot has none."""
+    import os
 
     from etl_sql_duckdb_parquet__spark.encode import candidate_parts
 
     out = str(tmp_path / "enc_backfill")
-    encode_token_table(spark, token_df, out, target_tokens=5_000)
-    shutil.rmtree(f"{out}/plan")
-    with pytest.raises(FileNotFoundError, match="no partition plan"):
+    first = encode_token_table(spark, token_df, out, target_tokens=5_000)
+    # the run's marker-and-plan file: without it the store looks like one
+    # encoded before plans were kept
+    os.remove(f"{out}/manifest/marker-{first['run_id']}.parquet")
+    with pytest.raises(FileNotFoundError, match="no partition-plan rows"):
         candidate_parts(spark, out, ["doc_0"])
 
     stats = encode_token_table(spark, token_df, out, target_tokens=5_000)

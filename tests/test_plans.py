@@ -264,11 +264,11 @@ def _jobs_run_by(spark, call) -> int:
 def test_store_calls_run_one_job_per_metadata_read(spark, tmp_path):
     """Store-layer calls pay one Spark job per metadata read, not one per
     decision: typed reads (no footer-inference jobs), one collect per
-    manifest or plan read, driver-built frames as LocalRelations, and
-    metadata rows written by the driver.  An encode is the stats scan
-    (2), the sink write (3: plan broadcast, shuffle, write) and the
-    commit collect; a decode plan costs its one manifest collect; a
-    candidate lookup its plan and manifest collects."""
+    manifest read, driver-built frames as LocalRelations, and metadata
+    rows written by the driver.  An encode is the stats scan (2), the
+    sink write (3: plan broadcast, shuffle, write) and the commit
+    collect; a decode plan costs its one manifest collect; a candidate
+    lookup too, its plan rows being manifest rows."""
     from etl_sql_duckdb_parquet__spark.encode import (
         candidate_parts,
         decode_token_table,
@@ -284,7 +284,7 @@ def test_store_calls_run_one_job_per_metadata_read(spark, tmp_path):
     assert _jobs_run_by(spark, lambda: decode_token_table(spark, out)) == 1
     assert _jobs_run_by(
         spark, lambda: candidate_parts(spark, out, ["doc_000000000001"])
-    ) == 2
+    ) == 1
 
 
 def test_store_call_job_budgets(spark, tmp_path):
@@ -296,8 +296,8 @@ def test_store_call_job_budgets(spark, tmp_path):
       job (6);
     - a decode run: its manifest collect and the scan, winners being a
       run filter, not a broadcast join (2);
-    - ``lookup_docs(...).collect()``: its ``candidate_parts`` (2), the
-      decode's manifest collect and the scan, ids being a filter (4);
+    - ``lookup_docs(...).collect()``: its ``candidate_parts`` (1), the
+      decode's manifest collect and the scan, ids being a filter (3);
     - ``compact_store``: its manifest collect, the union decode's, a
       resumed multi-part encode (7) and vacuum's read and pre-swap
       re-read (11).
@@ -340,7 +340,7 @@ def test_store_call_job_budgets(spark, tmp_path):
                 spark, out, ["e_doc_000000000001"], snapshots="all"
             ).collect()
         ),
-    ) == 4
+    ) == 3
     assert [r["doc_id"] for r in found] == ["e_doc_000000000001"]
     assert _jobs_run_by(
         spark, lambda: compact_store(spark, out, target_tokens=20_000)

@@ -285,6 +285,30 @@ def test_q64_twice_in_one_session_is_identical(spark):
     assert len(views) == 1
 
 
+def test_q64_refuses_a_full_progress_buffer(spark):
+    """q64's one-data-batch check reads ``q.recentProgress``, a ring
+    buffer of ``spark.sql.streaming.numRecentProgressUpdates`` entries: a
+    full buffer may have dropped batches, so q64 must raise rather than
+    pass the check on what is left."""
+    import pytest
+
+    from etl_sql_duckdb_parquet__spark.queries.streaming_agg import (
+        q64_streaming_sessions,
+    )
+
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01"
+    )
+    conf = "spark.sql.streaming.numRecentProgressUpdates"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        with pytest.raises(AssertionError, match="progress buffer is full"):
+            q64_streaming_sessions(spark, sf_dir)
+    finally:
+        spark.conf.set(conf, before)
+
+
 def test_drain_metrics_exact_past_progress_ring_buffer(spark, tmp_path):
     """The audit counters must stay exact when a drain outruns
     ``q.recentProgress`` (a ring buffer of the last
@@ -398,6 +422,7 @@ def test_compact_and_vacuum_streamed_store(spark, tmp_path):
     decode(latest) == the exact union, bit-identical."""
     from etl_sql_duckdb_parquet__spark.encode import (
         compact_store,
+        lookup_docs,
         read_manifest,
     )
 
@@ -421,7 +446,24 @@ def test_compact_and_vacuum_streamed_store(spark, tmp_path):
 
     m = read_manifest(spark, out)
     assert m.select("snapshot_id").distinct().count() == 1
+    # the plan lives in the manifest: no plan directory, and vacuum kept
+    # only the kept snapshot's plan rows
+    assert not os.path.exists(os.path.join(out, "plan"))
+    plan_snaps = {
+        r["snapshot_id"]
+        for r in m.filter(F.col("status") == "plan").collect()
+    }
+    assert plan_snaps == {result["vacuum"]["kept_snapshot"]}
     union = w1.unionByName(w2)
+    # a lookup of a doc from each merged epoch returns it bit-identically
+    ids = [w1.first()["doc_id"], w2.first()["doc_id"]]
+    want = sorted(
+        union.filter(F.col("doc_id").isin(ids))
+        .select("doc_id", "tokens", "n_tok", "source")
+        .collect()
+    )
+    assert len(want) == 2
+    assert sorted(lookup_docs(spark, out, ids).collect()) == want
     for mode in ("latest", "all"):
         v = verify_roundtrip(
             union, decode_token_table(spark, out, snapshots=mode)
@@ -893,31 +935,27 @@ def test_lookup_requires_plan_coverage(spark, tmp_path):
     import pytest
 
     from etl_sql_duckdb_parquet__spark.encode import candidate_parts
-    from etl_sql_duckdb_parquet__spark.encode.manifest import plan_path
+
+    def markers():
+        return {
+            f for f in _os.listdir(_os.path.join(out, "manifest"))
+            if f.startswith("marker-")
+        }
 
     landing = str(tmp_path / "pc_landing")
     out = str(tmp_path / "pc_encoded")
     _wave(spark, 80, seed=71, prefix="p1_").write.parquet(landing)
     run_available_now(spark, landing, out, target_tokens=20_000)
+    (first,) = markers()
     _wave(spark, 60, seed=72, prefix="p2_").write.mode("append").parquet(
         landing
     )
     run_available_now(spark, landing, out, target_tokens=20_000)
+    assert len(markers()) == 2
 
-    # simulate a plan-less legacy snapshot: drop the FIRST epoch's plan
-    pdir = plan_path(out)
-    plans = sorted(
-        f for f in _os.listdir(pdir) if f.startswith("plan-")
-    )
-    assert len(plans) == 2
-    # identify the latest snapshot's plan so we delete the other one
-    from etl_sql_duckdb_parquet__spark.encode.decode_job import (
-        _decoded_snapshot_ids,
-    )
-
-    (latest,) = _decoded_snapshot_ids(spark, out, "latest")
-    victim = next(f for f in plans if f != f"plan-{latest}.parquet")
-    _os.remove(_os.path.join(pdir, victim))
+    # simulate a plan-less legacy snapshot: drop the FIRST epoch's
+    # marker-and-plan file
+    _os.remove(_os.path.join(out, "manifest", first))
 
     # decoding 'all' would include the plan-less snapshot → refuse
     with pytest.raises(FileNotFoundError, match="no partition-plan rows"):
