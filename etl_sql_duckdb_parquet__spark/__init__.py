@@ -6,9 +6,11 @@ re-expressed Spark-first:
 
 - ``codecs``    — numpy codec kernels: dictionary, RLE, delta, bit-packing,
                   frame-of-reference, FSST symbol table; statistics-driven
-                  auto-selection.  (North star: the reference delegates its
-                  columnar encoding to Parquet/ZSTD — reference
-                  ``src/etl/load.py:44-48`` — here the codecs are ours.)
+                  auto-selection, with pyarrow's ZSTD as the entropy layer
+                  on top (a requirement).  (North star: the reference
+                  delegates its columnar encoding to Parquet/ZSTD —
+                  reference ``src/etl/load.py:44-48`` — here the light
+                  codecs are ours.)
 - ``encode``    — DataFrame-level encode/decode jobs over tokenized-sequence
                   tables ``(doc_id, tokens, n_tok, source)``, with explicit
                   repartitioning, a per-partition lineage manifest, and

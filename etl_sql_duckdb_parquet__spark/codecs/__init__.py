@@ -6,8 +6,13 @@ delta / bit-packing in ``docs/benchmark_results.md:72-77``).  Here the codec
 family is implemented from scratch so the engine owns the encoding:
 
 - ``core``     — integer codecs: PLAIN, FOR (frame-of-reference + bit-pack),
-                 DELTA, RLE, DICT, with exact-size statistics-driven
-                 auto-selection (``encode_int_best``).
+                 DELTA, RLE, DICT, VARDICT (frequency-ranked dictionary),
+                 with exact-size statistics-driven auto-selection
+                 (``encode_int_best``); and ``zwrap_best``, the ZSTD entropy
+                 layer over any blob.  pyarrow with the zstd codec is
+                 required.  The retired VARINT (id 9), FORBLOCK (11) and
+                 DEFLATE wrap (13) are not readable: such blobs raise and
+                 must be re-encoded from source.
 - ``fsst``     — FSST symbol-table compression for byte strings (public
                  algorithm: Boncz, Neumann, Leis — "FSST: Fast Random Access
                  String Compression", VLDB 2020).
@@ -25,7 +30,6 @@ from .core import (
     decode_int,
     encode_int,
     encode_int_best,
-    select_int_codec,
 )
 from .strings import decode_strings, encode_strings
 
@@ -35,7 +39,6 @@ __all__ = [
     "decode_int",
     "encode_int",
     "encode_int_best",
-    "select_int_codec",
     "decode_strings",
     "encode_strings",
 ]

@@ -1,7 +1,9 @@
-"""Integer codec kernels: PLAIN / FOR / DELTA / RLE / DICT + auto-selector.
+"""Integer codec kernels: PLAIN / FOR / DELTA / RLE / DICT / VARDICT +
+auto-selector, and the ZSTD entropy layer over any blob.
 
-Pure numpy, no Spark dependency — unit-testable standalone and invoked from
-Arrow-batched UDFs in ``encode.encode_job``.
+Numpy kernels plus pyarrow's bundled ZSTD, no Spark dependency —
+unit-testable standalone and invoked from Arrow-batched UDFs in
+``encode.encode_job``.
 
 Blob layout (all little-endian)::
 
@@ -12,6 +14,9 @@ Blob layout (all little-endian)::
     DELTA : u64 n, i64 first             | nested blob of diffs (n-1 values)
     RLE   : u64 n                        | nested(run values) + nested(run lengths)
     DICT  : u64 n, u32 card, u8 codewidth| nested(sorted unique) + bit-packed codes
+    VARDICT: u64 n, u32 card             | nested(uniques by frequency rank)
+                                           + u64 len + LEB128 rank codes
+    ZSTD  : u64 raw_len, u64 zlen        | zstd frame of any other blob
 
 "nested blob" = u64 byte-length prefix + a recursively encoded blob, so every
 blob is self-describing and ``decode_int`` needs no side metadata.
@@ -38,6 +43,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 CODEC_PLAIN = 0
 CODEC_FOR = 1
@@ -45,11 +51,10 @@ CODEC_DELTA = 2
 CODEC_RLE = 3
 CODEC_DICT = 4
 # 5..8 are byte/string codecs — see fsst.py / strings.py.
-CODEC_VARINT = 9  # zigzag + LEB128 (skewed magnitude distributions)
+# 9 (VARINT), 11 (FORBLOCK) and 13 (DEFLATE wrap) are retired: blobs that
+# carry them raise "unknown codec id" and must be re-encoded from source.
 CODEC_VARDICT = 10  # frequency-ordered dictionary + LEB128 rank codes
-CODEC_FORBLOCK = 11  # FOR with per-miniblock bit widths (locally clustered)
-CODEC_ZWRAP = 13  # DEFLATE entropy layer over any other blob (when it wins)
-CODEC_ZSTD = 14  # ZSTD entropy layer (preferred; DEFLATE kept for old blobs)
+CODEC_ZSTD = 14  # ZSTD entropy layer over any other blob (when it wins)
 
 CODEC_NAMES = {
     CODEC_PLAIN: "plain",
@@ -61,13 +66,9 @@ CODEC_NAMES = {
     6: "strarr",
     7: "plainbytes",
     8: "strdict",
-    CODEC_VARINT: "varint",
     CODEC_VARDICT: "vardict",
-    CODEC_FORBLOCK: "forblock",
-    CODEC_ZWRAP: "zwrap",
     CODEC_ZSTD: "zstd",
 }
-CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
 
 # Values per bit-pack chunk. Must be a multiple of 8 (byte alignment of
 # chunk boundaries for every width). 2^18 values * 32 bits = 1 MiB packed,
@@ -76,6 +77,16 @@ CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
 _CHUNK = 1 << 18
 
 _MAX_NEST_DEPTH = 3
+
+# The entropy layer is pyarrow's bundled ZSTD, a hard requirement: building
+# the codec here fails the import on a pyarrow without it.  Level 1: on
+# already-packed blobs higher levels measured BOTH larger and slower (e.g.
+# vardict tokens: L1 0.768@789 MB/s vs L3 0.775@187 MB/s vs L6 0.784@68
+# MB/s), since match-finding beyond greedy buys nothing once the light codec
+# removed the structure.
+_ZSTD = pa.Codec("zstd", compression_level=1)
+# keep the frame only when it saves ≥ 2% (17-byte header included)
+_ZSTD_MIN_RATIO = 0.98
 
 
 # ---------------------------------------------------------------------------
@@ -154,7 +165,7 @@ def unpack_uint(buf: bytes, n: int, width: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# LEB128 varints (vectorized) — the entropy-ish path for skewed data
+# LEB128 varints (vectorized) — VARDICT's frequency-rank codes
 # ---------------------------------------------------------------------------
 
 _VARINT_THRESHOLDS = [1 << (7 * k) for k in range(1, 10)]
@@ -211,18 +222,6 @@ def varint_decode(buf: bytes, n: int) -> np.ndarray:
     return out
 
 
-def _zigzag(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.int64, copy=False)
-    return ((v << 1) ^ (v >> 63)).view(np.uint64)
-
-
-def _unzigzag(u: np.ndarray) -> np.ndarray:
-    u = u.astype(np.uint64, copy=False)
-    return ((u >> np.uint64(1)).view(np.int64)) ^ -(u & np.uint64(1)).view(
-        np.int64
-    )
-
-
 def _width(lo: int, hi: int) -> int:
     """Bits needed for values in [lo, hi] after subtracting lo."""
     return int(hi - lo).bit_length()
@@ -239,15 +238,6 @@ def _plain_itemsize(vmin: int, vmax: int) -> int:
 # ---------------------------------------------------------------------------
 # statistics + selection
 # ---------------------------------------------------------------------------
-
-
-_FORBLOCK_BS = 1024
-_POW2 = np.concatenate([[1], np.uint64(1) << np.arange(1, 64, dtype=np.uint64)])
-
-
-def _bit_widths(u: np.ndarray) -> np.ndarray:
-    """Vectorized bit_length for non-negative uint64 values."""
-    return np.searchsorted(_POW2, u, side="right").astype(np.uint8)
 
 
 def _prepare(v64: np.ndarray) -> dict:
@@ -289,18 +279,6 @@ def _inverse(prep: dict) -> np.ndarray:
     return np.searchsorted(prep["uniq"], prep["v"])
 
 
-def _block_widths(u: np.ndarray, bs: int) -> np.ndarray:
-    """Per-miniblock bit widths of a non-negative uint64 buffer."""
-    n = len(u)
-    m = n // bs
-    maxes = []
-    if m:
-        maxes.append(u[: m * bs].reshape(m, bs).max(axis=1))
-    if n % bs:
-        maxes.append(np.array([u[m * bs :].max()], dtype=np.uint64))
-    return _bit_widths(np.concatenate(maxes)) if maxes else np.zeros(0, np.uint8)
-
-
 def _sizes(prep: dict) -> dict[str, int]:
     n = prep["n"]
     vmin, vmax = prep["vmin"], prep["vmax"]
@@ -335,29 +313,11 @@ def _sizes(prep: dict) -> dict[str, int]:
         w_codes = max(card - 1, 0).bit_length()
         sizes["dict"] = 14 + 8 + dict_blob_bound + _packed_bytes(n, w_codes)
 
-    # varint over zigzag values: exact byte count, vectorized
-    zz_nb = _varint_nbytes(_zigzag(prep["uniq"]))
-    sizes["varint"] = 17 + int((zz_nb * prep["counts"]).sum())
-
     # vardict: frequency-rank codes as varints + dictionary in rank order
     rank_nb = _varint_nbytes(prep["ranks"].astype(np.uint64))
     sizes["vardict"] = (
         13 + 8 + dict_blob_bound + 8 + int((rank_nb * prep["counts"]).sum())
     )
-
-    # forblock: per-miniblock widths
-    u = (prep["v"] - vmin).astype(np.uint64)
-    bw = _block_widths(u, _FORBLOCK_BS)
-    nblocks = len(bw)
-    payload = 0
-    for i, w in enumerate(bw):
-        blk = (
-            _FORBLOCK_BS
-            if i < nblocks - 1 or n % _FORBLOCK_BS == 0
-            else n % _FORBLOCK_BS
-        )
-        payload += _packed_bytes(blk, int(w))
-    sizes["forblock"] = 19 + nblocks + payload
     return sizes
 
 
@@ -397,18 +357,10 @@ _TIE_ORDER = {
     "for": 0,
     "rle": 1,
     "dict": 2,
-    "forblock": 3,
-    "delta": 4,
-    "vardict": 5,
-    "varint": 6,
-    "plain": 7,
+    "delta": 3,
+    "vardict": 4,
+    "plain": 5,
 }
-
-
-def select_int_codec(vals: np.ndarray) -> str:
-    """Pick the codec with the smallest exact encoded size (deterministic)."""
-    sizes = analyze_int(vals)["sizes"]
-    return min(sizes, key=lambda k: (sizes[k], _TIE_ORDER[k]))
 
 
 # ---------------------------------------------------------------------------
@@ -466,9 +418,6 @@ def encode_int(
             + _encode_nested(uniq, _depth + 1)
             + pack_uint(codes.astype(np.uint64), w_codes)
         )
-    if codec == "varint":
-        payload = varint_encode(_zigzag(v))
-        return struct.pack("<BQQ", CODEC_VARINT, n, len(payload)) + payload
     if codec == "vardict":
         if n == 0:
             return encode_int(v, "plain")
@@ -493,20 +442,6 @@ def encode_int(
             + struct.pack("<Q", len(payload))
             + payload
         )
-    if codec == "forblock":
-        if n == 0:
-            return encode_int(v, "plain")
-        ref = int(v.min())
-        u = (v - ref).astype(np.uint64)
-        bs = _FORBLOCK_BS
-        bw = _block_widths(u, bs)
-        parts = [
-            struct.pack("<BQqH", CODEC_FORBLOCK, n, ref, bs),
-            bw.tobytes(),
-        ]
-        for i, w in enumerate(bw):
-            parts.append(pack_uint(u[i * bs : (i + 1) * bs], int(w)))
-        return b"".join(parts)
     raise ValueError(f"unknown integer codec: {codec!r}")
 
 
@@ -569,103 +504,41 @@ def encode_int_best_with_stats(
 # ---------------------------------------------------------------------------
 
 
-def _zstd_codec():
-    """pyarrow's bundled ZSTD codec, or None when this build lacks it."""
-    try:
-        import pyarrow as pa
-
-        if pa.lib.Codec.is_available("zstd"):
-            return pa
-    except Exception:
-        pass
-    return None
-
-
-def zwrap_best(
-    blob: bytes,
-    level: int = 6,
-    zstd_level: int = 1,
-    min_ratio: float = 0.98,
-) -> bytes:
-    """Optionally add an entropy layer on top of a finished blob.
+def zwrap_best(blob: bytes) -> bytes:
+    """Add a ZSTD entropy layer on top of a finished blob when it wins.
 
     Bit-packed/dictionary output still carries residual entropy skew that a
     general-purpose entropy coder captures (the same layering the reference
     relies on: Parquet's light encodings + ZSTD on top, reference
-    ``docs/benchmark_results.md:72-77``).  ZSTD (via pyarrow's bundled
-    codec) is preferred — measurably smaller AND faster than DEFLATE on
-    these blobs; ``zstd_level`` is passed explicitly (default 1: on
-    already-packed blobs higher levels measured BOTH larger and slower —
-    e.g. vardict tokens: L1 0.768@789 MB/s vs L3 0.775@187 MB/s vs L6
-    0.784@68 MB/s — because match-finding beyond greedy buys nothing once
-    the light codec removed the structure).  ``level`` is the DEFLATE
-    level, used when pyarrow lacks zstd OR as a fall-through when zstd
-    compressed *something* but missed the ≥2% gate (if zstd found zero
-    redundancy, DEFLATE won't either, so fully incompressible blobs pay
-    exactly one compress attempt).  Works over ANY blob (integer or
-    string containers) — decoders dispatch on the leading codec id.
+    ``docs/benchmark_results.md:72-77``).  The frame is kept only when it
+    undercuts the blob by ``_ZSTD_MIN_RATIO``; otherwise the blob is
+    returned unchanged.  Works over ANY blob (integer or string
+    containers) — decoders dispatch on the leading codec id.
     """
-    pa = _zstd_codec()
-    if pa is not None:
-        z = bytes(
-            pa.Codec("zstd", compression_level=zstd_level).compress(blob)
-        )
-        if len(z) + 17 < min_ratio * len(blob):
-            return struct.pack("<BQQ", CODEC_ZSTD, len(blob), len(z)) + z
-        if len(z) >= len(blob):
-            return blob
-    import zlib
-
-    z = zlib.compress(blob, level)
-    if len(z) + 17 < min_ratio * len(blob):
-        return struct.pack("<BQQ", CODEC_ZWRAP, len(blob), len(z)) + z
+    z = bytes(_ZSTD.compress(blob))
+    if len(z) + 17 < _ZSTD_MIN_RATIO * len(blob):
+        return struct.pack("<BQQ", CODEC_ZSTD, len(blob), len(z)) + z
     return blob
 
 
 def zunwrap(blob: bytes | memoryview) -> bytes:
-    """Remove the entropy layer (ZSTD or DEFLATE) if present."""
+    """Remove the ZSTD entropy layer if present."""
     buf = memoryview(blob)
-    if len(buf) and buf[0] in (CODEC_ZWRAP, CODEC_ZSTD):
+    if len(buf) and buf[0] == CODEC_ZSTD:
         raw_len, zlen = struct.unpack_from("<QQ", buf, 1)
-        payload = bytes(buf[17 : 17 + zlen])
-        if buf[0] == CODEC_ZSTD:
-            pa = _zstd_codec()
-            if pa is not None:
-                inner = bytes(
-                    pa.decompress(
-                        payload, decompressed_size=raw_len, codec="zstd"
-                    )
+        try:
+            return bytes(
+                _ZSTD.decompress(
+                    bytes(buf[17 : 17 + zlen]), decompressed_size=raw_len
                 )
-            else:
-                # mixed-environment safety net: a writer with zstd + a
-                # reader whose pyarrow build lacks it must still decode —
-                # fall back to the pure `zstandard` package if installed,
-                # else fail with the environment requirement spelled out
-                try:
-                    import zstandard
-                except ImportError:
-                    raise ValueError(
-                        "blob has a ZSTD entropy layer but this "
-                        "environment has no zstd decoder: install a "
-                        "pyarrow build with the zstd codec or the "
-                        "`zstandard` package (CODEC_ZSTD blobs are "
-                        "written whenever the writer's pyarrow has zstd; "
-                        "see zwrap_best)"
-                    ) from None
-                inner = zstandard.ZstdDecompressor().decompress(
-                    payload, max_output_size=raw_len
-                )
-        else:
-            import zlib
-
-            inner = zlib.decompress(payload)
-        if len(inner) != raw_len:
-            # explicit raise (not assert): the integrity check must survive
-            # python -O — a truncated blob must never decode silently
-            raise ValueError(
-                f"zwrap blob corrupt: inner {len(inner)} != header {raw_len}"
             )
-        return inner
+        except OSError as e:
+            # pyarrow raises when the frame does not decompress to exactly
+            # the header's raw_len: a truncated or corrupt blob must never
+            # decode silently
+            raise ValueError(
+                f"zwrap blob corrupt (header raw_len {raw_len}): {e}"
+            ) from None
     return bytes(buf)
 
 
@@ -710,32 +583,12 @@ def _decode_at(buf: memoryview, off: int) -> tuple[np.ndarray, int]:
         nbytes = _packed_bytes(n, w_codes)
         codes = unpack_uint(bytes(buf[mid : mid + nbytes]), n, w_codes)
         return uniq[codes.astype(np.int64)], mid + nbytes
-    if codec_id == CODEC_VARINT:
-        n, plen = struct.unpack_from("<QQ", buf, off + 1)
-        start = off + 17
-        u = varint_decode(bytes(buf[start : start + plen]), n)
-        return _unzigzag(u), start + plen
     if codec_id == CODEC_VARDICT:
         n, card = struct.unpack_from("<QI", buf, off + 1)
         dictvals, mid = _decode_nested(buf, off + 13)
         (plen,) = struct.unpack_from("<Q", buf, mid)
         codes = varint_decode(bytes(buf[mid + 8 : mid + 8 + plen]), n)
         return dictvals[codes.astype(np.int64)], mid + 8 + plen
-    if codec_id == CODEC_FORBLOCK:
-        n, ref, bs = struct.unpack_from("<QqH", buf, off + 1)
-        nblocks = (n + bs - 1) // bs
-        widths = np.frombuffer(buf[off + 19 : off + 19 + nblocks], dtype=np.uint8)
-        p = off + 19 + nblocks
-        out = np.empty(n, dtype=np.int64)
-        for i, w in enumerate(widths):
-            m = bs if i < nblocks - 1 or n % bs == 0 else n % bs
-            nbytes = _packed_bytes(m, int(w))
-            out[i * bs : i * bs + m] = unpack_uint(
-                bytes(buf[p : p + nbytes]), m, int(w)
-            ).astype(np.int64)
-            p += nbytes
-        out += ref
-        return out, p
     raise ValueError(f"unknown codec id {codec_id} at offset {off}")
 
 

@@ -22,15 +22,13 @@ import struct
 
 import numpy as np
 
-from .core import decode_int, encode_int_best
+from .core import _ZSTD, decode_int, encode_int_best, zunwrap
 from .fsst import CODEC_FSST, _sample, decode_fsst, encode_fsst, estimate_ratio
 
 CODEC_STRARR = 6
 CODEC_PLAINBYTES = 7
 CODEC_STRDICT = 8
 CODEC_PATTERNID = 12
-
-_FSST_GATE = 0.95  # vs plain: only when zstd is unavailable (fallback)
 
 # FSST selection decision table (round-5 cost guard).  The numpy FSST
 # compress kernel is a measured local optimum at ~11-14 MB/s warm
@@ -49,16 +47,10 @@ _FSST_GATE = 0.95  # vs plain: only when zstd is unavailable (fallback)
 _FSST_VS_ZSTD = 0.90
 
 
-def _zstd_sampled_ratio(sample: bytes) -> float | None:
+def _zstd_sampled_ratio(sample: bytes) -> float:
     """Sampled (compressed+header)/raw of the plain+zstd-L1 alternative —
-    what the caller's ``zwrap_best`` would achieve on a PLAIN buffer.
-    None when pyarrow lacks zstd (fall back to the plain gate)."""
-    from .core import _zstd_codec
-
-    pa = _zstd_codec()
-    if pa is None or not sample:
-        return None
-    z = pa.Codec("zstd", compression_level=1).compress(sample)
+    what the caller's ``zwrap_best`` would achieve on a PLAIN buffer."""
+    z = _ZSTD.compress(sample)
     return (len(z) + 17) / len(sample)  # 17 = zwrap frame header
 
 
@@ -124,18 +116,12 @@ def encode_bytes_best(data: bytes) -> bytes:
     """Byte buffer: FSST only when it pays (see the decision table above),
     else plain — the caller's ``zwrap_best`` entropy layer then captures
     whatever redundancy is left at wire speed."""
-    if len(data) >= 64:
-        f_ratio = estimate_ratio(data)
-        z_ratio = _zstd_sampled_ratio(_sample(data))
-        pays = (
-            _fsst_pays(f_ratio, z_ratio)
-            if z_ratio is not None
-            else f_ratio < _FSST_GATE
-        )
-        if pays:
-            blob = encode_fsst(data)
-            if len(blob) < 9 + len(data):
-                return blob
+    if len(data) >= 64 and _fsst_pays(
+        estimate_ratio(data), _zstd_sampled_ratio(_sample(data))
+    ):
+        blob = encode_fsst(data)
+        if len(blob) < 9 + len(data):
+            return blob
     return struct.pack("<BQ", CODEC_PLAINBYTES, len(data)) + data
 
 
@@ -202,8 +188,6 @@ def encode_strings(values) -> bytes:
 
 
 def decode_strings(blob: bytes) -> list[str]:
-    from .core import zunwrap
-
     blob = zunwrap(blob)
     buf = memoryview(blob)
     codec_id = buf[0]

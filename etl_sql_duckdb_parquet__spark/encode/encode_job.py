@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..codecs import encode_strings
 from ..codecs.core import encode_int_best, encode_int_best_with_stats
-from ..codecs.core import CODEC_IDS, codec_of, zunwrap, zwrap_best
+from ..codecs.core import CODEC_ZSTD, zwrap_best
 from .manifest import (
     append_manifest,
     append_running_marker,
@@ -231,9 +231,9 @@ def _encode_blob_row(
             "int32 Arrow list-offset range — lower target_tokens or split "
             "the oversized document"
         )
-    # per-column light codec first, then an optional DEFLATE entropy layer
-    # where it still wins ≥2% (the reference's own layering: Parquet light
-    # encodings + ZSTD on top)
+    # per-column light codec first, then the ZSTD entropy layer where it
+    # still wins ≥2% (the reference's own layering: Parquet light encodings
+    # + ZSTD on top)
     raw_tokens_blob, tok_stats = encode_int_best_with_stats(values)
     tokens_blob = zwrap_best(raw_tokens_blob)
     lengths_blob = zwrap_best(encode_int_best(lengths))
@@ -252,12 +252,10 @@ def _encode_blob_row(
         values.astype(np.uint64, copy=False).sum(dtype=np.uint64)
         & np.uint64(0x7FFF_FFFF_FFFF_FFFF)
     )
-    inner_codec = codec_of(zunwrap(tokens_blob))
-    if tokens_blob and tokens_blob[0] in (CODEC_IDS["zwrap"], CODEC_IDS["zstd"]):
-        inner_codec += "+z"
     meta = json.dumps(
         {
-            "codec": inner_codec,
+            "codec": tok_stats["codec"]
+            + ("+z" if tokens_blob[0] == CODEC_ZSTD else ""),
             "n_docs": len(lengths),
             "n_tokens": len(values),
             "raw_bytes": raw_bytes,

@@ -20,9 +20,15 @@ from etl_sql_duckdb_parquet__spark.codecs import (
     encode_int,
     encode_int_best,
     encode_strings,
-    select_int_codec,
 )
-from etl_sql_duckdb_parquet__spark.codecs.core import codec_of, pack_uint, unpack_uint
+from etl_sql_duckdb_parquet__spark.codecs.core import (
+    CODEC_ZSTD,
+    codec_of,
+    pack_uint,
+    unpack_uint,
+    zunwrap,
+    zwrap_best,
+)
 from etl_sql_duckdb_parquet__spark.codecs.fsst import (
     build_table,
     compress,
@@ -57,7 +63,7 @@ ADVERSARIAL = {
 
 
 @pytest.mark.parametrize("name", sorted(ADVERSARIAL))
-@pytest.mark.parametrize("codec", ["plain", "for", "delta", "rle", "dict", "varint", "vardict", "forblock"])
+@pytest.mark.parametrize("codec", ["plain", "for", "delta", "rle", "dict", "vardict"])
 def test_roundtrip_every_codec(name, codec):
     vals = ADVERSARIAL[name]
     decoded = decode_int(encode_int(vals, codec))
@@ -80,14 +86,41 @@ def test_auto_never_bigger_than_plain():
 
 
 def test_selector_picks_sensible_codecs():
-    assert select_int_codec(ADVERSARIAL["constant"]) in ("for", "rle")
+    def picked(vals):
+        return codec_of(encode_int_best(vals))
+
+    assert picked(ADVERSARIAL["constant"]) in ("for", "rle")
     # long runs → rle
-    assert select_int_codec(ADVERSARIAL["runs"]) == "rle"
+    assert picked(ADVERSARIAL["runs"]) == "rle"
     # sorted ascending → delta wins (tiny diffs)
-    assert select_int_codec(ADVERSARIAL["sorted"]) == "delta"
+    assert picked(ADVERSARIAL["sorted"]) == "delta"
     # low cardinality, wide range → dict or small-width for
     low_wide = (RNG.integers(0, 5, 5000) * 10**8).astype(I32)
-    assert select_int_codec(low_wide) == "dict"
+    assert picked(low_wide) == "dict"
+
+
+def test_selector_wrapped_size_not_worse_than_for():
+    """On u⁶-skewed tokens the selector's pick must not lose to FOR once
+    both are ZSTD-wrapped.  The retired VARINT won here before the wrap
+    (and was picked) but came out ~6% larger after it."""
+    rng = np.random.default_rng(7)
+    x = np.floor(50257 * rng.random(140_000) ** 6).astype(np.int64)
+    best = zwrap_best(encode_int_best(x))
+    assert len(best) <= len(zwrap_best(encode_int(x, "for")))
+    np.testing.assert_array_equal(decode_int(best), x)
+
+
+@pytest.mark.parametrize("codec_id", [9, 11, 13])
+def test_retired_codec_ids_raise(codec_id):
+    """VARINT (9), FORBLOCK (11) and the DEFLATE wrap (13) are retired:
+    a blob led by one of them must raise, never decode to something."""
+    import struct
+
+    blob = struct.pack("<BQQ", codec_id, 4, 4) + b"\x00" * 32
+    with pytest.raises(ValueError, match="unknown"):
+        decode_int(blob)
+    with pytest.raises(ValueError, match="unknown"):
+        decode_strings(blob)
 
 
 def test_analyze_sizes_are_exact():
@@ -98,7 +131,7 @@ def test_analyze_sizes_are_exact():
             actual = len(encode_int(vals, codec))
             # nested blobs are auto-selected, so predictions for delta/rle/
             # dict are upper bounds (nested FOR assumed); plain & for exact
-            if codec in ("plain", "for", "varint", "forblock"):
+            if codec in ("plain", "for"):
                 assert actual == predicted, (name, codec, actual, predicted)
             else:
                 assert actual <= predicted, (name, codec, actual, predicted)
@@ -118,7 +151,7 @@ def test_blob_is_self_describing():
 
 @given(
     st.lists(st.integers(min_value=INT32_MIN, max_value=INT32_MAX), max_size=300),
-    st.sampled_from(["plain", "for", "delta", "rle", "dict", "varint", "vardict", "forblock"]),
+    st.sampled_from(["plain", "for", "delta", "rle", "dict", "vardict"]),
 )
 @settings(max_examples=200, deadline=None)
 def test_roundtrip_property(xs, codec):
@@ -169,18 +202,11 @@ def test_fsst_compresses_ids():
 
 
 def test_zunwrap_rejects_truncated_blob():
-    import struct
-    import zlib
-
-    from etl_sql_duckdb_parquet__spark.codecs.core import (
-        CODEC_ZWRAP,
-        zunwrap,
-    )
-
     inner = b"payload-bytes" * 10
-    z = zlib.compress(inner)
+    good = zwrap_best(inner)
+    assert good[0] == CODEC_ZSTD and zunwrap(good) == inner
     # header lies: claims one byte more than the payload decompresses to
-    bad = struct.pack("<BQQ", CODEC_ZWRAP, len(inner) + 1, len(z)) + z
+    bad = bytes([CODEC_ZSTD]) + (len(inner) + 1).to_bytes(8, "little") + good[9:]
     with pytest.raises(ValueError, match="zwrap blob corrupt"):
         zunwrap(bad)
 
@@ -241,8 +267,6 @@ def test_fsst_selector_pays_for_its_throughput_cost():
         f"https://example.com/page/{i}?ref=abc".encode() for i in range(500)
     )
     z_ratio = S._zstd_sampled_ratio(text)
-    if z_ratio is None:  # pyarrow without zstd: the plain-gate fallback
-        pytest.skip("pyarrow lacks the zstd codec on this host")
     assert z_ratio < 0.5  # zstd really does crush it
     blob = S.encode_bytes_best(text)
     assert blob[0] == S.CODEC_PLAINBYTES
@@ -329,24 +353,12 @@ def test_pattern_id_rejects_non_uniform():
 
 
 def test_zwrap_roundtrip_and_gate():
-    import numpy as np
-
-    from etl_sql_duckdb_parquet__spark.codecs.core import (
-        CODEC_ZSTD,
-        CODEC_ZWRAP,
-        decode_int,
-        encode_int_best,
-        zunwrap,
-        zwrap_best,
-    )
-
     rng = np.random.default_rng(3)
-    # skewed data: light codec leaves entropy → zwrap should engage
-    # (ZSTD when pyarrow provides it, DEFLATE fallback otherwise)
+    # skewed data: light codec leaves entropy → the ZSTD layer engages
     x = np.floor(50257 * rng.random(200_000) ** 3).astype(np.int64)
     blob = encode_int_best(x)
     wrapped = zwrap_best(blob)
-    assert wrapped[0] in (CODEC_ZSTD, CODEC_ZWRAP) and len(wrapped) < len(blob)
+    assert wrapped[0] == CODEC_ZSTD and len(wrapped) < len(blob)
     assert zunwrap(wrapped) == blob
     assert np.array_equal(decode_int(wrapped), x)
     # incompressible-ish data: gate must refuse (blob returned unchanged)
@@ -355,62 +367,37 @@ def test_zwrap_roundtrip_and_gate():
     assert np.array_equal(decode_int(zwrap_best(blob_y)), y)
 
 
-def test_zwrap_explicit_level_and_deflate_fallback(monkeypatch):
-    """zstd_level is honored (not silently pyarrow's default), and when
-    pyarrow lacks zstd the writer emits DEFLATE blobs that round-trip."""
-    import numpy as np
-
-    from etl_sql_duckdb_parquet__spark.codecs import core
-
-    rng = np.random.default_rng(11)
-    x = np.floor(50257 * rng.random(200_000) ** 3).astype(np.int64)
-    blob = core.encode_int_best(x)
-    for lvl in (1, 3):
-        wrapped = core.zwrap_best(blob, zstd_level=lvl)
-        assert core.zunwrap(wrapped) == blob
-        assert np.array_equal(core.decode_int(wrapped), x)
-
-    # environment without pyarrow zstd: writer falls back to DEFLATE
-    monkeypatch.setattr(core, "_zstd_codec", lambda: None)
-    wrapped = core.zwrap_best(blob)
-    assert wrapped[0] == core.CODEC_ZWRAP and len(wrapped) < len(blob)
-    assert np.array_equal(core.decode_int(wrapped), x)
-    # and a CODEC_ZSTD blob in that environment raises the documented
-    # environment-requirement error (no `zstandard` package here)
-    import struct
-
-    fake = struct.pack("<BQQ", core.CODEC_ZSTD, len(blob), 4) + b"\x00" * 4
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="no zstd decoder"):
-        core.zunwrap(fake)
-
-
-def test_zwrap_legacy_deflate_blobs_still_decode():
-    """Blobs written by the round-1 DEFLATE wrap must keep decoding after
-    the switch to ZSTD (manifest resume can mix blob generations)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from etl_sql_duckdb_parquet__spark.codecs.core import (
-        CODEC_ZWRAP,
-        decode_int,
-        encode_int_best,
-    )
-
-    x = np.arange(10_000, dtype=np.int64) % 97
-    inner = encode_int_best(x)
-    z = zlib.compress(inner, 6)
-    legacy = struct.pack("<BQQ", CODEC_ZWRAP, len(inner), len(z)) + z
-    assert np.array_equal(decode_int(legacy), x)
-
-
 def test_zwrap_strings_dispatch():
-    from etl_sql_duckdb_parquet__spark.codecs import decode_strings, encode_strings
-    from etl_sql_duckdb_parquet__spark.codecs.core import zwrap_best
-
     vals = [f"user_{i % 7}@example.com" for i in range(5000)]
     blob = encode_strings(vals)
     assert decode_strings(zwrap_best(blob)) == vals
+
+
+def test_encode_meta_names_codec_without_decompressing(monkeypatch):
+    """The partition meta's ``codec`` comes from the selector's stats and
+    the frame's leading byte; encoding a partition must not decompress
+    the token blob it just wrapped."""
+    import json
+
+    from etl_sql_duckdb_parquet__spark.codecs import core
+    from etl_sql_duckdb_parquet__spark.encode import encode_job
+
+    rng = np.random.default_rng(5)
+    values = np.floor(50257 * rng.random(20_000) ** 3).astype(np.int32)
+    expected = codec_of(encode_int_best(values)) + "+z"
+
+    def boom(blob):
+        raise AssertionError("token blob decompressed during encode")
+
+    monkeypatch.setattr(core, "zunwrap", boom)
+    monkeypatch.setattr(encode_job, "zunwrap", boom, raising=False)
+    row = encode_job._encode_blob_row(
+        3,
+        values,
+        np.array([12_000, 8_000], dtype=np.int32),
+        ["doc_0000000001", "doc_0000000002"],
+        ["web", "web"],
+        0.0,
+    )
+    assert row["tokens_blob"][0] == CODEC_ZSTD
+    assert json.loads(row["meta"])["codec"] == expected
