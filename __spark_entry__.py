@@ -29,12 +29,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL twins (same column names as the Spark queries).
 
-    Keys absent here — the xxhash-based q43 SimHash kernel and the q54
-    IVF-ANN with its trained k-means quantizer — are genuinely
-    non-SQL-expressible: the driver records rows-only checks; pytest
-    covers them with recall assertions instead.  SimHash itself IS
-    oracle-checked via the md5-based twin q56, the IVF assignment
-    structure via q65, and LSH-ANN (q46) and the embedding near-dup
-    (q66) end to end, through their sequential-fold bucket kernel.
+    Every ``queries()`` key has one.  The approximate operators are
+    deterministic, so their oracles check them exactly: SimHash (q56)
+    through an md5-derived word hash both engines compute, and the LSH
+    (q46, q66) and IVF (q54) ANN paths through kernels that fold every
+    dot product left to right, as DuckDB's ``list_dot_product`` does.
+    pytest measures their recall against brute force.
     """
     return dict(ORACLES)

@@ -52,20 +52,12 @@ BENCH_QUERIES = [
 SYNTH_DOCS = 75_000  # ~19M tokens at avg_len=256
 
 
-def dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
+    from etl_sql_duckdb_parquet__spark.encode.cli import dir_bytes
     from etl_sql_duckdb_parquet__spark.encode.decode_job import (
         decode_token_table,
         verify_roundtrip,

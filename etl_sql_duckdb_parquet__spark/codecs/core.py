@@ -50,7 +50,7 @@ CODEC_FOR = 1
 CODEC_DELTA = 2
 CODEC_RLE = 3
 CODEC_DICT = 4
-# 5..8 are byte/string codecs — see fsst.py / strings.py.
+# 5..8 and 12 are byte/string codecs — see fsst.py / strings.py.
 # 9 (VARINT), 11 (FORBLOCK) and 13 (DEFLATE wrap) are retired: blobs that
 # carry them raise "unknown codec id" and must be re-encoded from source.
 CODEC_VARDICT = 10  # frequency-ordered dictionary + LEB128 rank codes
@@ -67,6 +67,7 @@ CODEC_NAMES = {
     7: "plainbytes",
     8: "strdict",
     CODEC_VARDICT: "vardict",
+    12: "patternid",
     CODEC_ZSTD: "zstd",
 }
 

@@ -24,6 +24,8 @@ import time
 
 
 def dir_bytes(path: str) -> int:
+    """Bytes of the data files under ``path``; Spark's ``_``/``.``-prefixed
+    metadata files (``_SUCCESS``, ``.crc``) are not counted."""
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -42,7 +44,6 @@ def main(argv: list[str] | None = None) -> dict:
                     help="use the synthetic generator with N docs instead of documents.parquet")
     ap.add_argument("--input-parquet", default=None,
                     help="encode an existing (doc_id, tokens, n_tok, source) parquet table")
-    ap.add_argument("--partition-mode", choices=["source", "hash"], default="source")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--warmup-runs", type=int, default=0,
                     help="untimed full-path encode runs before the timed one "
@@ -170,7 +171,6 @@ def main(argv: list[str] | None = None) -> dict:
             df.limit(args.warmup_docs),
             os.path.join(args.out, f"_warmup_{w}"),
             target_tokens=args.target_tokens,
-            by_source=args.partition_mode == "source",
             resume=False,
         )
 
@@ -180,7 +180,6 @@ def main(argv: list[str] | None = None) -> dict:
         df,
         args.out,
         target_tokens=args.target_tokens,
-        by_source=args.partition_mode == "source",
         resume=not args.no_resume,
     )
     stats["encode_wall_s"] = round(time.perf_counter() - t0, 3)

@@ -116,8 +116,8 @@ def winning_blobs(
     partitions are unioned (each ingest batch encoded as its own snapshot
     concatenates, the Iceberg-append ingestion shape).  Note the snapshot
     id includes the encode plan parameters, so the SAME data re-encoded
-    under different ``target_tokens``/``by_source`` counts as two
-    snapshots here — use "latest" or an explicit id in that situation.
+    under a different ``target_tokens`` counts as two snapshots here —
+    use "latest" or an explicit id in that situation.
     ``snapshots="snap_..."``: decode exactly that snapshot id (as recorded
     in the manifest), pinning the choice independent of finish order.
     Within a snapshot, the winner per part_id is the latest OK run — the
@@ -308,7 +308,8 @@ def candidate_parts(
             "(a resumed no-op run backfills the plan), or decode fully "
             "and filter"
         )
-    # uniform plans carry source=NULL and match any doc
+    # stores written by the retired uniform-hash plan carry source=NULL
+    # plan rows, which match any doc
     ranges = {
         (r["part_id"], r["salts"])
         for r in plan

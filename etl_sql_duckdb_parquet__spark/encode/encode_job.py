@@ -2,20 +2,25 @@
 
 DataFrame program (SURVEY.md §7.0a):
 
-1. :func:`plan_partitions` — EXPLICIT partition assignment.  Default mode is
-   source-aware + salted: partitions are source-homogeneous (same-source
-   token streams share statistics → better codec fits), and each source gets
+1. :func:`plan_partitions` — EXPLICIT partition assignment, source-aware
+   and salted: partitions are source-homogeneous (same-source token
+   streams share statistics → better codec fits), and each source gets
    ``ceil(source_tokens / target_tokens)`` salt buckets keyed by
    ``xxhash64(doc_id)`` — a 70%-hot source is split across proportionally
    many partitions instead of melting one executor.  This is the skew
-   handling the AQE can't do for groupBy-aggregate workloads.
-2. One ``groupBy(part_id).applyInPandas`` — the single shuffle of the job.
-   Inside the UDF everything is vectorized numpy over Arrow batches
-   (no per-row Python; reference's only per-row op, the row hash at
+   handling the AQE can't do for groupBy-aggregate workloads.  The plan
+   is also written as ``status='plan'`` manifest rows, which point
+   lookups use to find a doc's partition.
+2. One ``repartition(n_parts, part_id)`` — the single shuffle of the job —
+   then a streaming ``mapInArrow`` kernel (:func:`encode_sink_frame`).
+   Inside it everything is vectorized numpy over Arrow columns (no
+   per-row Python; reference's only per-row op, the row hash at
    ``src/etl/ingest.py:56-58``, is replaced by vectorized checksums).
 3. Blobs written as uncompressed Parquet (our codecs ARE the compression;
-   a codec on top would contaminate the size measurement), partitioned by
-   run so re-runs never collide; manifest rows appended per partition.
+   a codec on top would contaminate the size measurement) straight from
+   the encode tasks, partitioned by run so re-runs never collide.  The
+   commit then collects the run's per-partition metadata in one job, and
+   the driver writes the manifest rows for the whole run as one file.
 
 Resume: planned parts are anti-joined against the manifest before encoding
 (only missing/failed partitions run), making the job idempotent per input
@@ -124,91 +129,80 @@ def input_stats(df: DataFrame) -> tuple[list, str]:
 def plan_partitions(
     df: DataFrame,
     target_tokens: int = DEFAULT_TARGET_TOKENS,
-    by_source: bool = True,
     shares: list | None = None,
 ) -> tuple[DataFrame, int, list]:
     """Assign an explicit ``part_id`` to every doc; returns
     (df, n_parts, plan_rows).
 
-    ``by_source=True``: contiguous part-id ranges per source, salted by
-    doc-id hash, salt count ∝ the source's token mass (skew-proof).
-    ``by_source=False``: plain uniform ``xxhash64(doc_id) mod n``.
-    ``shares``: precomputed per-source rows from :func:`input_stats`
-    (avoids an extra input scan).
+    Contiguous part-id ranges per source, salted by doc-id hash, salt
+    count ∝ the source's token mass (skew-proof).  ``shares``:
+    precomputed per-source rows from :func:`input_stats` (avoids an extra
+    input scan).
 
     ``plan_rows`` is the deterministic doc→partition mapping as
-    ``(source, offset, salts)`` tuples (``(None, 0, n_parts)`` for the
-    uniform plan): ``part_id = offset + pmod(xxhash64(doc_id), salts)``.
+    ``(source, offset, salts)`` tuples:
+    ``part_id = offset + pmod(xxhash64(doc_id), salts)``.
     Persisted as ``status='plan'`` manifest rows so point lookups can
     recompute a doc's partition instead of scanning the store
     (:func:`decode_job.lookup_docs`).
     """
     spark = df.sparkSession
-    if by_source:
-        if shares is None:
-            shares, _ = input_stats(df)
-        # Hot sources get ceil(tok/target) salted partitions of their own;
-        # small sources are greedily bin-packed into shared partitions so a
-        # long tail of sources can't explode the partition count (and with
-        # it per-partition codec-table overhead).
-        rows, off = [], 0
-        bin_tok = 0
-        bin_open = False
-        for r in shares:
-            tok = r["tok"] or 0
-            if tok >= target_tokens // 2:
-                if bin_open:
-                    off += 1
-                    bin_open, bin_tok = False, 0
-                salts = max(1, math.ceil(tok / target_tokens))
-                rows.append((r["source"], off, salts))
-                off += salts
-            else:
-                if bin_open and bin_tok + tok > target_tokens:
-                    off += 1
-                    bin_tok = 0
-                rows.append((r["source"], off, 1))
-                bin_tok += tok
-                bin_open = True
-        if bin_open:
-            off += 1
-        n_parts = off
-        if n_parts == 1:
-            # one bin: every source has offset 0 and one salt, so every
-            # doc's part is 0 — no plan frame, no broadcast
-            return df.withColumn("part_id", F.lit(0)), n_parts, rows
-        # a LocalRelation build side: a frame built from a Python list
-        # would broadcast through a Python-worker ``parallelize`` job.  A
-        # join, not a literal map/CASE lookup: that costs O(sources) per
-        # row (2M docs: 0.26 s join vs 2.4 s map at 1,000 sources)
-        plan = local_frame(
-            spark,
-            [
-                {"source": src, "_offset": o, "_salts": k}
-                for src, o, k in rows
-            ],
-            "source string, _offset int, _salts int",
-        )
-        out = (
-            df.join(F.broadcast(plan), "source")
-            .withColumn(
-                "part_id",
-                (
-                    F.col("_offset")
-                    + F.pmod(F.xxhash64("doc_id"), F.col("_salts"))
-                ).cast("int"),
-            )
-            .drop("_offset", "_salts")
-        )
-        return out, n_parts, rows
     if shares is None:
         shares, _ = input_stats(df)
-    total = sum(r["tok"] or 0 for r in shares)
-    n_parts = max(1, math.ceil(total / target_tokens))
-    out = df.withColumn(
-        "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
+    # Hot sources get ceil(tok/target) salted partitions of their own;
+    # small sources are greedily bin-packed into shared partitions so a
+    # long tail of sources can't explode the partition count (and with
+    # it per-partition codec-table overhead).
+    rows, off = [], 0
+    bin_tok = 0
+    bin_open = False
+    for r in shares:
+        tok = r["tok"] or 0
+        if tok >= target_tokens // 2:
+            if bin_open:
+                off += 1
+                bin_open, bin_tok = False, 0
+            salts = max(1, math.ceil(tok / target_tokens))
+            rows.append((r["source"], off, salts))
+            off += salts
+        else:
+            if bin_open and bin_tok + tok > target_tokens:
+                off += 1
+                bin_tok = 0
+            rows.append((r["source"], off, 1))
+            bin_tok += tok
+            bin_open = True
+    if bin_open:
+        off += 1
+    n_parts = off
+    if n_parts == 1:
+        # one bin: every source has offset 0 and one salt, so every
+        # doc's part is 0 — no plan frame, no broadcast
+        return df.withColumn("part_id", F.lit(0)), n_parts, rows
+    # a LocalRelation build side: a frame built from a Python list
+    # would broadcast through a Python-worker ``parallelize`` job.  A
+    # join, not a literal map/CASE lookup: that costs O(sources) per
+    # row (2M docs: 0.26 s join vs 2.4 s map at 1,000 sources)
+    plan = local_frame(
+        spark,
+        [
+            {"source": src, "_offset": o, "_salts": k}
+            for src, o, k in rows
+        ],
+        "source string, _offset int, _salts int",
     )
-    return out, n_parts, [(None, 0, n_parts)]
+    out = (
+        df.join(F.broadcast(plan), "source")
+        .withColumn(
+            "part_id",
+            (
+                F.col("_offset")
+                + F.pmod(F.xxhash64("doc_id"), F.col("_salts"))
+            ).cast("int"),
+        )
+        .drop("_offset", "_salts")
+    )
+    return out, n_parts, rows
 
 
 def _encode_blob_row(
@@ -377,7 +371,6 @@ def encode_token_table(
     df: DataFrame,
     out_dir: str,
     target_tokens: int = DEFAULT_TARGET_TOKENS,
-    by_source: bool = True,
     resume: bool = True,
     run_id: str | None = None,
     snapshot_salt: str | None = None,
@@ -398,14 +391,13 @@ def encode_token_table(
             "decode materializes int32 Arrow list offsets per partition"
         )
     shares, data_snapshot = input_stats(df)
-    planned, n_parts, plan_rows = plan_partitions(
-        df, target_tokens, by_source, shares
-    )
+    planned, n_parts, plan_rows = plan_partitions(df, target_tokens, shares)
     # The manifest key is (data fingerprint + plan parameters): part_ids are
-    # only comparable across runs when target_tokens/by_source match, so a
-    # re-run of the same data under a coarser/finer plan must NOT resume
-    # against (or union with) the old plan's partitions.
-    snapshot_id = f"{data_snapshot}-tt{target_tokens}{'s' if by_source else 'g'}"
+    # only comparable across runs when target_tokens match, so a re-run of
+    # the same data under a coarser/finer plan must NOT resume against (or
+    # union with) the old plan's partitions.  The trailing "s" names the
+    # source-salted plan; it stays so existing stores still resume.
+    snapshot_id = f"{data_snapshot}-tt{target_tokens}s"
     if snapshot_salt is not None:
         snapshot_id = f"{snapshot_id}-{snapshot_salt}"
 

@@ -49,15 +49,6 @@ def _latest_ok_manifest(spark: SparkSession, store: str):
     return snap, m
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
 def _replicate(df: DataFrame, n: int, id_col: str) -> DataFrame:
     """Deterministically inflate a table n-fold (distinct ids per copy) so
     scan costs dominate fixed job overhead at small SF."""
@@ -266,6 +257,7 @@ def run_format_benchmark(
     lookup_scale_docs: int = 0,
 ) -> str:
     """Run the suite; returns the markdown report."""
+    from .encode.cli import dir_bytes
     from .encode.decode_job import (
         candidate_parts,
         decode_token_table,
@@ -274,7 +266,7 @@ def run_format_benchmark(
 
     paths = prepared or prepare_formats(spark, sf_dir, work_dir, replicate)
 
-    sizes = {k: _dir_bytes(p) if os.path.isdir(p) else 0 for k, p in paths.items()}
+    sizes = {k: dir_bytes(p) if os.path.isdir(p) else 0 for k, p in paths.items()}
     doc_rows = []
     for name, q in DOC_QUERIES.items():
         csv_ms = _median_time(

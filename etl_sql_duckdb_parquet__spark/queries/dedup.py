@@ -12,20 +12,16 @@ Scale design (the point of each variant at 100 TB):
   band bucket are compared, so the self-join touches candidate pairs, not
   all pairs.  Bucket join keys are (band_idx, band_hash) — uniformly
   distributed, no skew salting needed.
-- SimHash: one 64-bit signature per doc; candidates from 16-bit band
+- SimHash: one 60-bit signature per doc; candidates from 15-bit band
   collisions, verified by exact Hamming distance.
 
-Jaccard/exact have DuckDB oracle twins.  q43's fast SimHash kernel uses
-xxhash64, which DuckDB lacks → rows-only driver check, with pytest
-asserting collision behavior; q56 is the oracle-checked SimHash twin —
-its word hash is md5-derived so DuckDB reproduces the signatures
-bit-for-bit and the driver gate hash-compares the pairs.
+Every variant has a DuckDB oracle twin.  SimHash's word hash is the first
+60 bits of md5 (``common.md5_60bit``), which both engines compute, so the
+signatures and pairs are reproduced bit for bit.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,6 +31,7 @@ N_MINHASH = 16
 LSH_ROWS_PER_BAND = 4  # 4 bands of 4
 JACCARD_THRESHOLD = 0.5
 SIMHASH_MAX_HAMMING = 8
+_SIMHASH_BAND_BITS = 15  # 4 bands cover the 60-bit signature
 
 
 def _shingles(docs: DataFrame, k: int = 3) -> DataFrame:
@@ -186,49 +183,19 @@ def q42_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified.select("a_id", "b_id", "jaccard").orderBy("a_id", "b_id")
 
 
-def _simhash_batch(iterator):
-    """Vectorized SimHash kernel: the whole Arrow batch is processed as ONE
-    concatenated word-hash bit matrix with per-document segment sums
-    (``np.add.reduceat``) — no per-document Python loop."""
-    shifts = np.arange(64, dtype=np.uint64)[None, :]
-    weights = (np.uint64(1) << shifts.ravel()).astype(np.uint64)
-    for pdf in iterator:
-        word_lists = pdf["text"].astype(str).str.lower().str.split()
-        lengths = word_lists.str.len().to_numpy(dtype=np.int64)
-        n_docs = len(pdf)
-        scores = np.zeros((n_docs, 64), dtype=np.int64)
-        nonempty = np.flatnonzero(lengths > 0)
-        if nonempty.size:
-            flat = np.concatenate(
-                [np.asarray(word_lists.iloc[i], dtype=object) for i in nonempty]
-            )
-            hashes = pd.util.hash_array(flat).astype(np.uint64)
-            bits = ((hashes[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
-            contrib = 2 * bits - 1
-            # segment boundaries of each non-empty doc in the flat array
-            starts = np.zeros(nonempty.size, dtype=np.int64)
-            starts[1:] = np.cumsum(lengths[nonempty])[:-1]
-            scores[nonempty] = np.add.reduceat(contrib, starts, axis=0)
-        sigs = ((scores > 0).astype(np.uint64) * weights[None, :]).sum(
-            axis=1, dtype=np.uint64
-        )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "simhash": sigs.astype(np.int64)}
-        )
-
-
-def _simhash_band_pairs(sigs: DataFrame, band_bits: int) -> DataFrame:
+def _simhash_band_pairs(sigs: DataFrame) -> DataFrame:
     """Banded candidate join + exact-Hamming verify over (doc_id, simhash).
 
-    4 bands of ``band_bits`` bits each; only docs colliding in some band
-    are paired, so the self-join touches candidate pairs, not all pairs.
+    4 bands of ``_SIMHASH_BAND_BITS`` bits each; only docs colliding in
+    some band are paired, so the self-join touches candidate pairs, not
+    all pairs.
     """
-    mask = (1 << band_bits) - 1
+    mask = (1 << _SIMHASH_BAND_BITS) - 1
     bands = F.array(
         *[
-            F.shiftrightunsigned(F.col("simhash"), band_bits * b).bitwiseAND(
-                F.lit(mask)
-            )
+            F.shiftrightunsigned(
+                F.col("simhash"), _SIMHASH_BAND_BITS * b
+            ).bitwiseAND(F.lit(mask))
             for b in range(4)
         ]
     )
@@ -262,35 +229,20 @@ def _simhash_band_pairs(sigs: DataFrame, band_bits: int) -> DataFrame:
     )
 
 
-def q43_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: 16-bit band candidates + exact Hamming ≤ 8.
-
-    Rows-only driver check; the signature kernel is an Arrow-batched
-    mapInPandas (numpy bit math, no per-row Python in the hash loop).
-    q56 is the oracle-checked twin (md5-derived hashes both engines can
-    compute); this variant keeps the fast vectorized-xxhash kernel.
-    """
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = docs.mapInPandas(_simhash_batch, "doc_id long, simhash long")
-    return _simhash_band_pairs(sigs, band_bits=16)
-
-
 _SIMHASH_SQL_BITS = 60  # 15 hex chars of md5 — fits signed 64-bit in both engines
 
 
 def q56_simhash_sql_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with a bit-identical DuckDB oracle.
+    """SimHash near-dup pairs: 15-bit band candidates + exact Hamming ≤ 8.
 
-    Same banded-candidate + Hamming-verify shape as q43, but the word
-    hash is the first 60 bits of md5(word) — a hash both engines share —
-    so signatures and pairs are exactly reproducible in ANSI SQL and the
-    driver gate can hash-compare them (q43's xxhash kernel cannot be).
+    The word hash is the first 60 bits of md5(word) — a hash both engines
+    share — so signatures and pairs are exactly reproducible in ANSI SQL
+    and the driver gate can hash-compare them.
 
     Scale design: everything is JVM built-ins — one explode, one
     groupBy(doc_id) with 60 small integer aggregates (map-side partial
-    agg; ~480 bytes of agg state per doc), then the same 4-band
-    self-join as q43.  No Python in the plan; survives 100× the same way
-    q43 does.
+    agg; ~480 bytes of agg state per doc), then a 4-band self-join that
+    touches candidate pairs, not all pairs.  No Python in the plan.
     """
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     words = docs.select(
@@ -315,7 +267,7 @@ def q56_simhash_sql_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(*aggs)
         .select("doc_id", sig.cast("long").alias("simhash"))
     )
-    return _simhash_band_pairs(sigs, band_bits=15)
+    return _simhash_band_pairs(sigs)
 
 
 # q56's oracle is generated: 60 per-bit sums + the signature fold, kept
@@ -353,7 +305,8 @@ DEDUP_ORACLES: dict[str, str] = {
         ),
         b AS (
             SELECT doc_id, simhash, i AS band_idx,
-                   (simhash >> (15 * CAST(i AS INT))) & 32767 AS band_val
+                   (simhash >> ({_SIMHASH_BAND_BITS} * CAST(i AS INT)))
+                       & {(1 << _SIMHASH_BAND_BITS) - 1} AS band_val
             FROM sig, unnest(range(0, 4)) AS u(i)
         )
         SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id,

@@ -71,7 +71,7 @@ def encoded_source_stats(
     every source fits one salt, so the output is byte-identical to an
     unsalted encode.
     """
-    planned, _, _ = plan_partitions(toks, target_tokens, by_source=True)
+    planned, _, _ = plan_partitions(toks, target_tokens)
     per_part = planned.groupBy("source", "part_id").applyInPandas(
         _encode_stats_group, _STATS_SCHEMA
     )

@@ -55,32 +55,27 @@ for oracles in (
 ):
     ORACLES.update(oracles)
 
-# every oracle key must have a query
-_missing = set(ORACLES) - set(REGISTRY)
-if _missing:  # pragma: no cover - import-time sanity
-    raise RuntimeError(f"oracles without queries: {sorted(_missing)}")
+# every query has an oracle and every oracle a query
+_unpaired = set(ORACLES) ^ set(REGISTRY)
+if _unpaired:  # pragma: no cover - import-time sanity
+    raise RuntimeError(f"queries and oracles unpaired: {sorted(_unpaired)}")
 
 # --- insertion-order policy for the driver's bounded correctness window ---
 # The driver compares the FIRST 50 registry entries against their DuckDB
-# oracles; anything past the window gets no correctness row even when an
-# oracle exists.  Order therefore encodes priority:
-#   1. oracle-backed queries (green-able), ascending by number — EXCEPT
-#   2. demoted oracle-backed queries whose SURVEY §2 row is already proven
-#      by another green query (q16 ⊂ A10 via q40, q44 ⊂ cosine via q45,
-#      q46 ⊂ LSH buckets via q66 + top-5 ranking via q45, q24/q23 ⊂
-#      F-family via q22/q25/q26 + transform pytest, and q23's
-#      histogram-on-computed-key shape ⊂ A6 via q13) — these ride at the
-#      back of the oracle-backed block so the window always prefers
-#      unique-capability proofs (q24's slot went to q64, the stateful
-#      streaming-sessionization proof; q23's goes to q65, the IVF
-#      assignment-structure twin);
-#   3. no-oracle queries last (they can only ever produce rows-only checks,
-#      so a window slot is wasted on them).
+# oracles; anything past the window gets no correctness row.  Order
+# therefore encodes priority: queries ascending by number, EXCEPT the
+# demoted ones whose SURVEY §2 row is already proven by another green
+# query (q16 ⊂ A10 via q40, q44 ⊂ cosine via q45, q46 ⊂ LSH buckets via
+# q66 + top-5 ranking via q45, q24/q23 ⊂ F-family via q22/q25/q26 +
+# transform pytest, and q23's histogram-on-computed-key shape ⊂ A6 via
+# q13) — these ride at the back so the window always prefers
+# unique-capability proofs (q24's slot went to q64, the stateful
+# streaming-sessionization proof; q23's to the IVF ANN q54).
 # All entries remain registered and value-checked by test_oracle_parity.py
 # regardless of position.  The 50-slot budget is EXECUTABLY guarded by
-# tests/test_registry_window.py: adding an oracle-backed query without a
-# matching demotion fails the suite loudly instead of silently evicting a
-# green row (the round-3 bug class).
+# tests/test_registry_window.py: adding a query without a matching
+# demotion fails the suite loudly instead of silently evicting a green row
+# (the round-3 bug class).
 DRIVER_WINDOW = 50
 _DEMOTED = (
     "q16_duplicate_events",
@@ -92,13 +87,6 @@ _DEMOTED = (
     "q46_ann_lsh_topk",
 )
 
-
-def _window_rank(name: str) -> tuple[int, str]:
-    if name not in ORACLES:
-        return (2, name)
-    if name in _DEMOTED:
-        return (1, name)
-    return (0, name)
-
-
-REGISTRY = dict(sorted(REGISTRY.items(), key=lambda kv: _window_rank(kv[0])))
+REGISTRY = dict(
+    sorted(REGISTRY.items(), key=lambda kv: (kv[0] in _DEMOTED, kv[0]))
+)

@@ -11,8 +11,8 @@
   The one bucket kernel folds each plane dot left to right, the IEEE
   association of DuckDB's ``list_dot_product``, so both queries are
   oracle-checked end to end; pytest measures recall against brute force.
-- q54/q65: IVF ANN with a trained quantizer, and its deterministic
-  assignment-structure twin.
+- q54: IVF ANN over √n md5-seeded cells.  Cell dots use the same
+  sequential fold, so it is oracle-checked end to end too.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .common import t
+from .common import md5_60bit, t
 
 _DIM = 64
 _N_TABLES = 8  # OR-amplification: candidate if ANY table buckets a pair together
@@ -248,80 +248,84 @@ def q66_embedding_neardup_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_TWIN_CELLS = 32  # fixed quantizer size for the oracle-checkable twin
-_IVF_TWIN_REPLICAS = 2  # same multi-assignment R as the production IVF
+# Recall vs q45's top-5 (sf0.01 / sf0.1) and the share of vectors each
+# query scores, by (R, share): (2, 3) 0.80 / 0.90 at 0.54; (3, 3) 0.86 /
+# 0.94 at 0.70; (2, 2) 0.84 / 1.00 at 0.75; (3, 2) 0.92 / 1.00 at 0.87.
+_PROBE_SHARE = 3  # probe n_cells // _PROBE_SHARE cells per query
+_ASSIGN_REPLICAS = 3  # index each vector in its R nearest cells
 
 
-def q65_ivf_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable IVF twin: per-(cell, replica) assignment histogram.
+def _nearest_cells(cents: np.ndarray, k: int):
+    """mapInPandas kernel: ``(vec_id, cell)`` for each vector's ``k``
+    nearest centroids.  Dots are :func:`seq_dots` folds, and a stable
+    argsort of ``-dots`` ranks by (dot DESC, cell ASC), so the oracle's
+    ``row_number`` picks the same cells bit for bit."""
 
-    q54's production IVF path is not SQL-expressible end-to-end (the
-    k-means trainer's partial-sum reduction order is
-    partition-arrival-dependent, and its assignment kernel folds dots
-    BLAS-style), so — the sequential-fold trick of the LSH kernel — this
-    twin recomputes the exact ASSIGNMENT STRUCTURE the inverted file
-    relies on with fully deterministic, cross-engine-reproducible pieces:
-
-    - centroids = the ``_IVF_TWIN_CELLS`` vectors with the smallest
-      ``md5_60bit(vec_id)`` (the cross-engine portable hash,
-      ``common.md5_60bit``), unit-normalized with a SEQUENTIAL
-      sum-of-squares fold — i.e. the seeded-trainer's deterministic
-      seeding step, iteration 0;
-    - per-vector cell dots via :func:`seq_dots`, whose IEEE association
-      matches DuckDB's ``list_dot_product`` bit-for-bit;
-    - top-``_IVF_TWIN_REPLICAS`` cells per vector with the same
-      (dot DESC, cell ASC) tie-break as the oracle's ``row_number``.
-
-    The resulting (cell, replica) population histogram value-checks the
-    multi-assignment candidate-generation structure of the last
-    unverified ANN path (q54 keeps its pytest recall check for the
-    trained quantizer).  Plan shape at 10^9 vectors: one TakeOrdered for
-    the 32 seeds (O(cells) driver traffic, same as production), one scan
-    through a vectorized Arrow projection, one 2-way explode, one hash
-    aggregate — no joins, no O(data) driver path.
-    """
-    from .common import md5_60bit
-
-    v = _vectors(spark, sf_dir)
-    seeds = (
-        v.select("vec_id", "v")
-        .withColumn("_h", md5_60bit(F.col("vec_id").cast("string")))
-        .orderBy("_h", "vec_id")
-        .limit(_IVF_TWIN_CELLS)
-        .collect()
-    )
-    cents = np.stack([np.asarray(r["v"], dtype=np.float64) for r in seeds])
-    # sequential-fold norm (cumsum == DuckDB's list_dot_product(vec,vec)
-    # left-to-right association), then one elementwise divide — the
-    # centroid DOUBLES are bit-identical to the oracle's
-    norms = np.sqrt(np.cumsum(cents * cents, axis=1)[:, -1])
-    cents = cents / norms[:, None]
-    n_replicas = min(_IVF_TWIN_REPLICAS, len(seeds))
-
-    def _assign(iterator):
+    def kernel(iterator):
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
             m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            # stable argsort of -dots == (dot DESC, cell ASC)
             top = np.argsort(-seq_dots(m, cents), axis=1, kind="stable")
-            top = top[:, :n_replicas]
+            top = top[:, :k]
+            ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {
+                    "vec_id": np.repeat(ids, top.shape[1]),
                     "cell": top.ravel().astype(np.int32),
-                    "replica": np.tile(
-                        np.arange(n_replicas, dtype=np.int32), len(m)
-                    ),
                 }
             )
 
-    return (
-        v.select("v")
-        .mapInPandas(_assign, "cell int, replica int")
-        .groupBy("cell", "replica")
-        .agg(F.count("*").alias("n_vectors"))
-        .orderBy("cell", "replica")
+    return kernel
+
+
+def q54_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN top-5 neighbors for the first 10 vectors: √n cells.
+
+    The inverted-file pattern with deterministic, cross-engine pieces:
+
+    - centroids = the ``n_cells`` vectors with the smallest
+      ``md5_60bit(vec_id)`` (a seed-free uniform sample), divided by their
+      ``_NORM``, the same left-to-right fold as DuckDB's
+      ``list_dot_product``;
+    - every vector is indexed in its ``_ASSIGN_REPLICAS`` nearest cells
+      (R x storage, so a neighbor just across a cell boundary is still
+      found) and each query probes its ``nprobe`` nearest cells, both
+      through :func:`_nearest_cells`;
+    - same-cell pairs are ranked by exact cosine (q45's ranking).
+
+    At 10^9 vectors the cell join replaces the O(n²) cross-join; the
+    driver sees two metadata-sized actions (the count and the
+    ``n_cells`` seed rows), and the candidate join moves id pairs only.
+    The result is approximate vs q45 (pytest measures recall) but
+    deterministic, so its DuckDB oracle checks it exactly.
+    """
+    v = _vectors(spark, sf_dir)
+    n_cells = int(np.clip(round(np.sqrt(v.count())), 4, 256))
+    nprobe = max(2, n_cells // _PROBE_SHARE)
+    seeds = (
+        v.withColumn("_h", md5_60bit(F.col("vec_id").cast("string")))
+        .orderBy("_h", "vec_id")
+        .limit(n_cells)
+        .collect()
     )
+    cents = np.array([np.asarray(r["v"]) / r["nrm"] for r in seeds])
+    vecs = v.select("vec_id", "v")
+    assigned = vecs.mapInPandas(
+        _nearest_cells(cents, _ASSIGN_REPLICAS), "vec_id long, cell int"
+    ).select(F.col("vec_id").alias("b_id"), "cell")
+    probes = (
+        vecs.filter(F.col("vec_id") < 10)
+        .mapInPandas(_nearest_cells(cents, nprobe), "vec_id long, cell int")
+        .select(F.col("vec_id").alias("a_id"), "cell")
+    )
+    cand = (
+        probes.join(assigned, "cell")
+        .filter(F.col("a_id") != F.col("b_id"))
+        .select("a_id", "b_id")
+        .distinct()
+    )
+    return _top5(_pair_cosine(v, v, cand))
 
 
 # DuckDB side.  ``n`` holds the fixed-dim, non-zero vectors with
@@ -411,8 +415,13 @@ _ORACLE_EMBEDDING_NEARDUP = f"""
     ORDER BY cosine DESC, a_id, b_id
 """
 
-_ORACLE_IVF_CELL_HISTOGRAM = f"""
-    WITH {_SQL_VECTORS},
+# :func:`q54_ann_ivf_topk`'s cells and ``cand`` pairs in DuckDB
+_SQL_IVF_CANDIDATES = f"""
+    ivf AS (
+        SELECT CAST(least(greatest(round(sqrt(count(*))), 4), 256)
+                    AS INT) AS n_cells
+        FROM n
+    ),
     h AS (
         SELECT vec_id, vec, nrm,
                CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)
@@ -425,28 +434,31 @@ _ORACLE_IVF_CELL_HISTOGRAM = f"""
                list_transform(vec, x -> x / nrm) AS c
         FROM h
         QUALIFY row_number() OVER (ORDER BY hh, vec_id)
-                <= {_IVF_TWIN_CELLS}
+                <= (SELECT n_cells FROM ivf)
     ),
     dots AS (
         SELECT n.vec_id, s.cell, list_dot_product(n.vec, s.c) AS d
         FROM n CROSS JOIN seeds s
     ),
-    ranked AS (
+    cell_rank AS (
         SELECT vec_id, cell,
                row_number() OVER (PARTITION BY vec_id
                                   ORDER BY d DESC, cell ASC) AS rnk
         FROM dots
+    ),
+    cand AS (
+        SELECT DISTINCT p.vec_id AS a_id, x.vec_id AS b_id
+        FROM cell_rank p
+        JOIN cell_rank x ON p.cell = x.cell
+        WHERE p.vec_id < 10
+          AND p.rnk <= (SELECT greatest(2, n_cells // {_PROBE_SHARE})
+                        FROM ivf)
+          AND x.rnk <= {_ASSIGN_REPLICAS}
+          AND p.vec_id != x.vec_id
     )
-    SELECT cell, CAST(rnk - 1 AS INT) AS replica,
-           count(*) AS n_vectors
-    FROM ranked
-    WHERE rnk <= {_IVF_TWIN_REPLICAS}
-    GROUP BY cell, replica
-    ORDER BY cell, replica
 """
 
 SIMILARITY_ORACLES: dict[str, str] = {
-    "q65_ivf_cell_histogram": _ORACLE_IVF_CELL_HISTOGRAM,
     "q66_embedding_neardup_sql": _ORACLE_EMBEDDING_NEARDUP,
     "q44_top20_similar_pairs": f"""
         WITH {_SQL_VECTORS}
@@ -488,6 +500,10 @@ SIMILARITY_ORACLES: dict[str, str] = {
         "cand c JOIN n a ON a.vec_id = c.a_id JOIN n b ON b.vec_id = c.b_id",
         _sql_lsh_candidates("a.vec_id < 10 AND a.vec_id != b.vec_id"),
     ),
+    "q54_ann_ivf_topk": _oracle_top5(
+        "cand c JOIN n a ON a.vec_id = c.a_id JOIN n b ON b.vec_id = c.b_id",
+        _SQL_IVF_CANDIDATES,
+    ),
 }
 
 
@@ -515,190 +531,3 @@ def q49_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("label")
     )
-
-
-_KMEANS_ITERS = 3
-_PROBE_SHARE = 3  # probe n_cells // _PROBE_SHARE cells per query
-_ASSIGN_REPLICAS = 2  # index each vector in its R nearest cells
-
-
-def _unit_rows(pdf) -> "np.ndarray":
-    import pandas as pd  # noqa: F401 (Arrow batches arrive as pandas)
-
-    m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-    norms = np.linalg.norm(m, axis=1)
-    norms[norms == 0] = 1.0
-    return m / norms[:, None]
-
-
-def _merge_cell_partials(pdf) -> "pd.DataFrame":
-    """Reduce one cell's per-batch partials to a single (n, sum-vector)
-    row — numpy element-wise, O(upstream partitions) rows per group."""
-    m = np.stack(pdf["s"].to_numpy()).astype(np.float64)
-    return pd.DataFrame(
-        {
-            "cell": [int(pdf["cell"].iloc[0])],
-            "n": [int(pdf["n"].sum())],
-            "s": [m.sum(axis=0)],
-        }
-    )
-
-
-def train_kmeans_cells(
-    v: DataFrame, n_cells: int, iters: int = _KMEANS_ITERS
-) -> np.ndarray:
-    """Spherical k-means coarse quantizer, trained distributed.
-
-    Seeding is deterministic (the ``n_cells`` vectors with the smallest
-    ``xxhash64(vec_id)`` — a seed-free uniform sample).  Each Lloyd
-    iteration is ONE pass over the vectors: an Arrow-batched kernel emits
-    per-batch partial (cell, count, sum-vector) rows — a map-side combine,
-    so nothing bigger than ``n_cells x dim`` per batch ever shuffles — and
-    a per-cell array-wise reduce yields the new centroids.  Driver traffic
-    per iteration is O(cells) rows each carrying one dim-array (~16 MB at
-    10^9 vectors), not O(cells x dim) scalar rows; the current centroid
-    matrix rides a ``sparkContext.broadcast`` (torrent-distributed once
-    per executor), never task-closure pickling.
-    """
-    spark = v.sparkSession
-    seeds = (
-        v.select("vec_id", "v")
-        .withColumn("_h", F.xxhash64(F.col("vec_id").cast("string")))
-        .orderBy("_h", "vec_id")
-        .limit(n_cells)
-        .collect()
-    )
-    cent = np.stack([np.asarray(r["v"], dtype=np.float64) for r in seeds])
-    cent /= np.maximum(np.linalg.norm(cent, axis=1), 1e-12)[:, None]
-
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(cent)
-
-        def _partials(iterator):
-            import pandas as pd
-
-            c = bc.value
-            for pdf in iterator:
-                if len(pdf) == 0:
-                    continue
-                u = _unit_rows(pdf)
-                cell = (u @ c.T).argmax(axis=1)
-                hit = np.unique(cell)
-                sums = np.zeros((hit.size, c.shape[1]))
-                counts = np.zeros(hit.size, dtype=np.int64)
-                for j, cc in enumerate(hit):
-                    sel = cell == cc
-                    sums[j] = u[sel].sum(axis=0)
-                    counts[j] = int(sel.sum())
-                yield pd.DataFrame(
-                    {
-                        "cell": hit.astype(np.int32),
-                        "n": counts,
-                        "s": list(sums),
-                    }
-                )
-
-        rows = (
-            v.select("v")
-            .mapInPandas(_partials, "cell int, n long, s array<double>")
-            .groupBy("cell")
-            .applyInPandas(
-                _merge_cell_partials, "cell int, n long, s array<double>"
-            )
-            .collect()
-        )
-        bc.destroy()
-        new = cent.copy()
-        for r in rows:
-            new[r["cell"]] = np.asarray(r["s"], dtype=np.float64)
-        # cells absent from `rows` (no assignments) keep their previous
-        # centroid because `new` starts as a copy
-        norms = np.maximum(np.linalg.norm(new, axis=1), 1e-12)
-        cent = new / norms[:, None]
-    return cent
-
-
-def q54_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a real coarse quantizer: √n spherical-k-means cells.
-
-    Train ``n_cells ≈ √n`` centroids (see :func:`train_kmeans_cells`),
-    assign every vector to its nearest cell in one Arrow-batched pass (no
-    n x cells row explosion, no per-vector shuffle), and for each query
-    probe only the nearest quarter of the cells — the inverted-file
-    pattern: at 10^9 vectors the candidate set shrinks ~√n vs brute
-    force while multi-probe keeps recall high.  Rows-only driver check
-    (approximate by construction); pytest measures recall vs exact top-k.
-    """
-    v = _vectors(spark, sf_dir)
-    n = v.count()
-    n_cells = int(np.clip(round(np.sqrt(n)), 4, 256))
-    nprobe = max(2, n_cells // _PROBE_SHARE)
-    # the trained quantizer ships via sparkContext.broadcast (one torrent
-    # transfer per executor) instead of being pickled into every task
-    bc_cent = spark.sparkContext.broadcast(train_kmeans_cells(v, n_cells))
-
-    def _assign(iterator):
-        import pandas as pd
-
-        cent = bc_cent.value
-        # multi-assignment: each vector is indexed in its R nearest cells
-        # (R x storage, standard IVF trick) so a neighbor sitting just
-        # across a cell boundary is still found by the probe
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            u = _unit_rows(pdf)
-            top = np.argsort(-(u @ cent.T), axis=1)[:, :_ASSIGN_REPLICAS]
-            rep = np.repeat(np.arange(len(pdf)), _ASSIGN_REPLICAS)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[rep],
-                    "v": pdf["v"].to_numpy()[rep],
-                    "nrm": pdf["nrm"].to_numpy()[rep],
-                    "cell": top.ravel().astype(np.int32),
-                }
-            )
-
-    assigned = v.mapInPandas(
-        _assign, "vec_id long, v array<double>, nrm double, cell int"
-    )
-
-    def _probe(iterator):
-        import pandas as pd
-
-        cent = bc_cent.value
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            u = _unit_rows(pdf)
-            top = np.argsort(-(u @ cent.T), axis=1)[:, :nprobe]
-            rep = np.repeat(np.arange(len(pdf)), nprobe)
-            yield pd.DataFrame(
-                {
-                    "a_id": pdf["vec_id"].to_numpy()[rep],
-                    "va": pdf["v"].to_numpy()[rep],
-                    "na": pdf["nrm"].to_numpy()[rep],
-                    "cell": top.ravel().astype(np.int32),
-                }
-            )
-
-    probes = v.filter(F.col("vec_id") < 10).mapInPandas(
-        _probe, "a_id long, va array<double>, na double, cell int"
-    )
-    cand = assigned.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-        "cell",
-    )
-    pairs = (
-        probes.join(cand, "cell")
-        .filter(F.col("a_id") != F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-        .select(
-            "a_id",
-            "b_id",
-            (F.expr(_DOT) / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
-    )
-    return _top5(pairs)

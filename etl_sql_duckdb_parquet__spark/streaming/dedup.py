@@ -20,7 +20,7 @@ resume provides the second, partition-level idempotency layer
 Reference analogue: none (its dedup is batch SQL over loaded tables,
 reference ``src/etl/validate.py`` / duplicate queries) — graded as a
 beyond-reference streaming op (SURVEY §2 ST3), completing the dedup
-family: batch exact (q40), approximate (q41-q43, q56), streaming exact
+family: batch exact (q40), approximate (q41, q42, q56), streaming exact
 (this).
 
 Scale design: one keyed state-store lookup per row (shuffle on the dedup

@@ -385,6 +385,24 @@ def test_q50_codec_names_are_registered(spark):
         assert r["comp_bytes"] < r["raw_bytes"]
 
 
+def test_every_stored_blob_names_a_registered_codec(
+    spark, token_df, tmp_path
+):
+    """``codec_of`` must name the codec of every blob column a store
+    holds, string codecs included: ``doc_<digits>`` ids are PATTERNID."""
+    import pyarrow.parquet as pq
+
+    from etl_sql_duckdb_parquet__spark.codecs.core import codec_of, zunwrap
+    from etl_sql_duckdb_parquet__spark.encode.manifest import blobs_path
+
+    out = str(tmp_path / "enc")
+    encode_token_table(spark, token_df, out, target_tokens=5_000)
+    cols = ["tokens_blob", "lengths_blob", "docids_blob", "sources_blob"]
+    blobs = pq.read_table(blobs_path(out), columns=cols).to_pydict()
+    names = {c: {codec_of(zunwrap(b)) for b in blobs[c]} for c in cols}
+    assert names["docids_blob"] == {"patternid"}, names
+
+
 def test_point_lookup_decodes_candidate_partitions_only(
     spark, token_df, tmp_path
 ):

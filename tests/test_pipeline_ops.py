@@ -1,6 +1,6 @@
 """Behavioral tests for the approximate training-data-pipeline operators
-(the ones the driver can only rows-only check): MinHash-LSH recall vs
-exact Jaccard, SimHash self-consistency, LSH-ANN recall vs brute force,
+(what oracle parity cannot show): MinHash-LSH recall vs exact Jaccard,
+SimHash self-consistency, LSH- and IVF-ANN recall vs brute force,
 multimodal metadata parity with the raw bytes.
 """
 
@@ -17,7 +17,7 @@ from etl_sql_duckdb_parquet__spark.queries.dedup import (  # noqa: E402
     JACCARD_THRESHOLD,
     q41_ngram_jaccard_pairs,
     q42_minhash_lsh_pairs,
-    q43_simhash_pairs,
+    q56_simhash_sql_pairs,
 )
 from etl_sql_duckdb_parquet__spark.queries.multimodal import (  # noqa: E402
     q47_media_metadata,
@@ -28,6 +28,7 @@ from etl_sql_duckdb_parquet__spark.queries.similarity import (  # noqa: E402
     lsh_bucket_ids,
     q45_cosine_topk,
     q46_ann_lsh_topk,
+    q54_ann_ivf_topk,
     q66_embedding_neardup_sql,
     seq_dots,
 )
@@ -55,7 +56,7 @@ def test_minhash_pairs_subset_of_exact(spark):
 def test_simhash_identical_docs_collide(spark):
     """Exact duplicates (if any) must have Hamming distance 0; pair list
     is symmetric-free (a_id < b_id) and within the distance bound."""
-    rows = q43_simhash_pairs(spark, SF_DIR).collect()
+    rows = q56_simhash_sql_pairs(spark, SF_DIR).collect()
     for r in rows:
         assert r["a_id"] < r["b_id"]
         assert 0 <= r["hamming"] <= 8
@@ -176,13 +177,9 @@ def test_sql_entry_point_over_views(spark):
 
 
 def test_ann_ivf_recall_vs_brute_force(spark):
-    """IVF ANN with the √n spherical-k-means quantizer (multi-assignment
-    R=2, probe n_cells/3) — measured recall ≈0.86 on sf0.01; the floor
-    guards the ≥0.7 target on these weakly-clustered synthetic vectors."""
-    from etl_sql_duckdb_parquet__spark.queries.similarity import (
-        q54_ann_ivf_topk,
-    )
-
+    """IVF ANN over √n md5-seeded cells (multi-assignment R=3, probe
+    n_cells/3) — measured recall 0.86 on sf0.01 and 0.94 on sf0.1; the
+    query is deterministic, so the floor is the measured value."""
     truth = {
         (r["query_id"], r["neighbor_id"])
         for r in q45_cosine_topk(spark, SF_DIR).collect()
@@ -193,7 +190,7 @@ def test_ann_ivf_recall_vs_brute_force(spark):
     }
     assert len(approx) == 50
     recall = len(truth & approx) / len(truth)
-    assert recall >= 0.7, f"IVF recall {recall} below floor"
+    assert recall >= 0.86, f"IVF recall {recall} below floor"
 
 
 def test_asof_join_edge_semantics(spark):

@@ -28,7 +28,7 @@ from etl_sql_duckdb_parquet__spark.queries.registry import (  # noqa: E402
 def test_promoted_oracle_queries_exactly_fill_the_window():
     promoted = [q for q in ORACLES if q not in _DEMOTED]
     assert len(promoted) == DRIVER_WINDOW, (
-        f"{len(promoted)} oracle-backed non-demoted queries for "
+        f"{len(promoted)} non-demoted queries for "
         f"{DRIVER_WINDOW} driver slots — "
         + (
             "demote a §2-redundant query in registry._DEMOTED"
@@ -57,12 +57,7 @@ def test_demoted_entries_are_real_oracle_backed_queries():
         )
 
 
-def test_rows_only_queries_are_pinned():
-    """Queries without a DuckDB oracle get only a rows-only driver check.
-    Both are approximate by construction with a trained or xxhash-seeded
-    component no SQL engine reproduces (pytest checks their recall); a
-    new rows-only query must be a deliberate edit here."""
-    assert set(REGISTRY) - set(ORACLES) == {
-        "q43_simhash_pairs",
-        "q54_ann_ivf_topk",
-    }
+def test_every_query_has_an_oracle():
+    """The driver value-checks only queries with a DuckDB oracle; a query
+    without one would get a rows-only check, which proves nothing."""
+    assert set(REGISTRY) == set(ORACLES)

@@ -65,9 +65,13 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     only = {s for s in args.only.split(",") if s}
-    failures, passed, rows_only = [], 0, 0
+    failures, passed = [], 0
     for name, fn in sorted(qs.items()):
         if only and name not in only:
+            continue
+        if name not in oracles:
+            failures.append((name, "no DuckDB oracle"))
+            print(f"✗ {name}: no oracle")
             continue
         t0 = time.perf_counter()
         try:
@@ -75,13 +79,6 @@ def main() -> int:
         except Exception:
             failures.append((name, "SPARK ERROR\n" + traceback.format_exc()))
             print(f"✗ {name}: spark error")
-            continue
-        if name not in oracles:
-            rows_only += 1
-            print(
-                f"~ {name}: rows-only ({len(sdf)} rows, "
-                f"{time.perf_counter() - t0:.1f}s)"
-            )
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -112,10 +109,7 @@ def main() -> int:
                 f"✓ {name} ({len(sdf)} rows, {time.perf_counter() - t0:.1f}s)"
             )
 
-    print(
-        f"\n{passed} oracle-verified, {rows_only} rows-only, "
-        f"{len(failures)} failed"
-    )
+    print(f"\n{passed} oracle-verified, {len(failures)} failed")
     for name, msg in failures:
         print(f"\n--- {name}\n{msg[:2000]}")
     return 1 if failures else 0
