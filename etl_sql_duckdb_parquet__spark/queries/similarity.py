@@ -1,9 +1,9 @@
 """Similarity search over the ``embeddings`` table.
 
-- q44/q45: brute-force cosine (exact baseline) — cross-join, dot product
-  unrolled over the fixed dim entirely JVM-side (whole-stage codegen) in
-  double precision so the DuckDB oracle (same fold order, same casts)
-  matches bit-for-bit before rounding.
+- q44/q45: brute-force cosine (exact baseline) — cross-join; each pair is
+  scored by one Arrow kernel (:data:`_COSINE`) that folds the dim left to
+  right in double precision, the IEEE order of DuckDB's
+  ``list_dot_product``, so the oracle matches bit for bit before rounding.
 - q46/q66: LSH-bucketed ANN top-k and embedding near-dup (the scale
   path) — deterministic random-hyperplane signs bucket the vectors; only
   same-bucket pairs are scored.  At 10^9 vectors the bucket join replaces
@@ -18,9 +18,10 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
 from .common import md5_60bit, t
 
@@ -29,70 +30,93 @@ _N_TABLES = 8  # OR-amplification: candidate if ANY table buckets a pair togethe
 _K_PLANES = 4  # AND within a table: k sign bits per bucket id
 _SEED = 42
 
-# Dot products / norms are UNROLLED over the fixed dim instead of
-# aggregate(zip_with(...)): Catalyst evaluates higher-order-function
-# lambdas interpreted (outside whole-stage codegen), which dominated the
-# brute-force queries; the unrolled sum is pure codegen.  Bit-identity
-# with the old fold (and the DuckDB oracle's list_dot_product, same
-# left-to-right order) is preserved: the fold's seed step 0.0+x0 == x0
-# and both shapes associate ((x0+x1)+x2)+... in IEEE doubles.
-_DOT = " + ".join(f"va[{i}] * vb[{i}]" for i in range(_DIM))
-_TO_DOUBLE = "CAST(embedding AS array<double>)"
-_NORM = "sqrt(" + " + ".join(f"v[{i}] * v[{i}]" for i in range(_DIM)) + ")"
+
+def vector_matrix(arr: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """``(n, _DIM)`` float64 rows of a ``list<float>`` Arrow array, exact
+    as the oracle's ``CAST(x AS DOUBLE)``.  ``flatten()`` honours a sliced
+    array's offset; ``.values`` does not."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(-1, _DIM)
+
+
+def seq_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Dot products over the last axis of two broadcastable arrays, each a
+    SEQUENTIAL fold seeded with 0.0 (``acc += a[..., j] * b[..., j]``).
+
+    That is the IEEE association of DuckDB's ``list_dot_product``, so an
+    oracle reproduces every cosine, sign or argmax decision bit for bit.
+    A BLAS matmul reassociates the sum and can flip a decision that sits
+    at the ulp level; the loop keeps one vectorized update per dim.  Pass
+    ``m[:, None]`` and ``rows[None]`` for the ``(n, r)`` table of every
+    row of ``m`` against every row of ``rows``."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a.shape[-1]):
+        acc += a[..., j] * b[..., j]
+    return acc
+
+
+def cosine_kernel(va: pa.Array, vb: pa.Array) -> pa.Array:
+    """Arrow batch kernel: ``dot / (sqrt(aa) * sqrt(bb))`` per row, every
+    term a :func:`seq_dots` fold — the oracle's ``list_dot_product(a, b)
+    / (a.nrm * b.nrm)`` bit for bit."""
+    a, b = vector_matrix(va), vector_matrix(vb)
+    norms = np.sqrt(seq_dots(a, a)) * np.sqrt(seq_dots(b, b))
+    return pa.array(seq_dots(a, b) / norms)
+
+
+_COSINE = F.arrow_udf(cosine_kernel, DoubleType())
+# Catalyst pushes nothing through a nondeterministic projection, so a
+# filter on its ``cos`` cannot be pushed below it and run the kernel twice.
+# A second UDF: ``asNondeterministic()`` mutates the one it is called on.
+_COSINE_UNPUSHED = F.arrow_udf(
+    cosine_kernel, DoubleType()
+).asNondeterministic()
+
+
+def _cell_lists(cells: np.ndarray) -> pa.ListArray:
+    """``(n, k)`` int matrix → a ``list<int>`` array of its rows."""
+    n, k = cells.shape
+    offsets = pa.array(np.arange(0, n * k + 1, k, dtype=np.int32))
+    values = pa.array(cells.ravel().astype(np.int32))
+    return pa.ListArray.from_arrays(offsets, values)
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-dim, non-zero vectors with their norms.
+    """``(vec_id, v)``: the fixed-dim, non-zero vectors, ``v`` as stored.
 
-    The unrolled ``_DOT``/``_NORM`` expressions index ``v[0.._DIM-1]``
-    directly, and Spark 4 ANSI mode turns an out-of-range index into
-    INVALID_ARRAY_INDEX — so a single malformed row would fail the whole
-    query.  The size filter is a cheap codegen predicate that makes the
-    contract explicit (malformed rows are dropped, not fatal).  A
-    zero-norm vector has no direction, so it is dropped too: its cosine
-    divides by zero, which ANSI mode turns into DIVIDE_BY_ZERO (and
-    without ANSI into NaN, which Spark orders above every double, so
-    ``NaN >= τ`` would hold).  That filter tests the raw elements'
-    extremes, not ``nrm > 0``: Catalyst pushes a filter on ``nrm`` below
-    the projection by inlining ``_NORM`` with an array cast per term,
-    which doubled the wall of the brute-force and LSH queries."""
+    The kernels reshape each batch to ``(n, _DIM)``, so a malformed row
+    would fail the whole query; the size filter is a cheap codegen
+    predicate that drops it instead.  A zero-norm vector has no
+    direction, so it is dropped too: its cosine divides by zero, giving
+    NaN, which Spark orders above every double, so ``NaN >= τ`` would
+    hold.  That filter tests the raw elements' extremes, a pair of codegen
+    predicates, rather than a norm."""
     return (
         t(spark, sf_dir, "embeddings")
         .filter(F.size("embedding") == _DIM)
         .filter(
             (F.array_max("embedding") != 0) | (F.array_min("embedding") != 0)
         )
-        .select("vec_id", F.expr(_TO_DOUBLE).alias("v"))
-        .withColumn("nrm", F.expr(_NORM))
+        .select("vec_id", F.col("embedding").alias("v"))
     )
 
 
 def _pair_cosine(
-    a: DataFrame, b: DataFrame, pairs: DataFrame | None = None
+    a: DataFrame, b: DataFrame, pairs: DataFrame | None = None, cosine=_COSINE
 ) -> DataFrame:
     """``(a_id, b_id, cos)`` over every ``a`` × ``b`` pair (cross join), or
     over just the ``(a_id, b_id)`` id pairs in ``pairs``, whose vectors
     are joined back; caller filters/limits."""
-    aa = a.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    bb = b.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
+    aa = a.select(F.col("vec_id").alias("a_id"), F.col("v").alias("va"))
+    bb = b.select(F.col("vec_id").alias("b_id"), F.col("v").alias("vb"))
     joined = (
         aa.crossJoin(bb)
         if pairs is None
         else pairs.join(aa, "a_id").join(bb, "b_id")
     )
-    return joined.select(
-        "a_id",
-        "b_id",
-        (F.expr(_DOT) / (F.col("na") * F.col("nb"))).alias("cos"),
-    )
+    return joined.select("a_id", "b_id", cosine("va", "vb").alias("cos"))
 
 
 def _top5(pairs: DataFrame) -> DataFrame:
@@ -143,36 +167,21 @@ def lsh_plane_literals(
 _PLANES = np.asarray(lsh_plane_literals(), dtype=np.float64)  # (L, k, dim)
 
 
-def seq_dots(m: np.ndarray, rows: np.ndarray) -> np.ndarray:
-    """(n, dim) × (r, dim) → (n, r) dot products, each a SEQUENTIAL fold
-    over dim (one column at a time, left to right).
-
-    That is the IEEE association of DuckDB's ``list_dot_product``, so an
-    oracle reproduces every sign or argmax decision bit for bit.  A BLAS
-    matmul reassociates the sum and can flip a decision that sits at the
-    ulp level; the column loop keeps one vectorized (n × r) update per
-    step (~7 µs per vector at r = 32, dim = 64 on a 4-core x86 host)."""
-    acc = np.zeros((len(m), len(rows)))
-    for j in range(rows.shape[1]):
-        acc += m[:, j : j + 1] * rows[:, j]
-    return acc
-
-
-def lsh_bucket_ids(vs: pd.Series) -> pd.Series:
-    """Arrow-batch bucket kernel: L bucket ids (k sign bits each) per vector.
+def lsh_bucket_ids(vs: pa.Array) -> pa.Array:
+    """Arrow batch kernel: L bucket ids (k sign bits each) per vector.
 
     A SQL-expression formulation of the 32 plane dots (even fully
     unrolled) puts ~64 multi-thousand-term expressions into the plan —
     Catalyst spends seconds ANALYZING the tree before any data moves —
-    so the dots run in numpy over each Arrow batch."""
-    if len(vs) == 0:  # np.stack raises on an empty batch
-        return pd.Series([], dtype=object)
-    m = np.stack(vs.to_numpy()).astype(np.float64)  # (n, dim)
-    n_tables, k_planes, _ = _PLANES.shape
-    dots = seq_dots(m, _PLANES.reshape(n_tables * k_planes, -1))
+    so the dots run as :func:`seq_dots` folds over each Arrow batch."""
+    m = vector_matrix(vs)
+    n_tables, k_planes, dim = _PLANES.shape
+    dots = seq_dots(m[:, None], _PLANES.reshape(1, -1, dim))
     bits = dots.reshape(len(m), n_tables, k_planes) >= 0.0
-    ids = (bits * (1 << np.arange(k_planes))).sum(axis=2).astype(np.int32)
-    return pd.Series(list(ids))
+    return _cell_lists((bits * (1 << np.arange(k_planes))).sum(axis=2))
+
+
+_BUCKETS = F.arrow_udf(lsh_bucket_ids, ArrayType(IntegerType()))
 
 
 def _lsh_bucketed(v: DataFrame) -> DataFrame:
@@ -181,10 +190,8 @@ def _lsh_bucketed(v: DataFrame) -> DataFrame:
     L hash tables (OR) of k sign-bit planes (AND) — the standard
     recall/cost amplification shared by the ANN top-k (q46) and the
     embedding near-dup pass (q66)."""
-    buckets = F.pandas_udf(lsh_bucket_ids, "array<int>")
     return v.select(
-        "vec_id",
-        F.posexplode(buckets(F.col("v"))).alias("table_idx", "bucket"),
+        "vec_id", F.posexplode(_BUCKETS("v")).alias("table_idx", "bucket")
     )
 
 
@@ -241,7 +248,7 @@ def q66_embedding_neardup_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
     cand = _lsh_candidates(v, F.col("a_id") < F.col("b_id"))
     return (
-        _pair_cosine(v, v, cand)
+        _pair_cosine(v, v, cand, _COSINE_UNPUSHED)
         .filter(F.col("cos") >= NEARDUP_COS)
         .select("a_id", "b_id", F.round("cos", 6).alias("cosine"))
         .orderBy(F.desc("cosine"), "a_id", "b_id")
@@ -256,27 +263,16 @@ _ASSIGN_REPLICAS = 3  # index each vector in its R nearest cells
 
 
 def _nearest_cells(cents: np.ndarray, k: int):
-    """mapInPandas kernel: ``(vec_id, cell)`` for each vector's ``k``
-    nearest centroids.  Dots are :func:`seq_dots` folds, and a stable
-    argsort of ``-dots`` ranks by (dot DESC, cell ASC), so the oracle's
-    ``row_number`` picks the same cells bit for bit."""
+    """Arrow UDF: each vector's ``k`` nearest centroids, nearest first.
+    Dots are :func:`seq_dots` folds, and a stable argsort of ``-dots``
+    ranks by (dot DESC, cell ASC), so the oracle's ``row_number`` picks
+    the same cells bit for bit."""
 
-    def kernel(iterator):
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            top = np.argsort(-seq_dots(m, cents), axis=1, kind="stable")
-            top = top[:, :k]
-            ids = pdf["vec_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(ids, top.shape[1]),
-                    "cell": top.ravel().astype(np.int32),
-                }
-            )
+    def kernel(vs: pa.Array) -> pa.Array:
+        dots = seq_dots(vector_matrix(vs)[:, None], cents[None])
+        return _cell_lists(np.argsort(-dots, axis=1, kind="stable")[:, :k])
 
-    return kernel
+    return F.arrow_udf(kernel, ArrayType(IntegerType()))
 
 
 def q54_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,16 +281,19 @@ def q54_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The inverted-file pattern with deterministic, cross-engine pieces:
 
     - centroids = the ``n_cells`` vectors with the smallest
-      ``md5_60bit(vec_id)`` (a seed-free uniform sample), divided by their
-      ``_NORM``, the same left-to-right fold as DuckDB's
-      ``list_dot_product``;
+      ``md5_60bit(vec_id)`` (a seed-free uniform sample), collected and
+      divided by their :func:`seq_dots` norms, the same left-to-right
+      fold as DuckDB's ``list_dot_product``;
     - every vector is indexed in its ``_ASSIGN_REPLICAS`` nearest cells
       (R x storage, so a neighbor just across a cell boundary is still
       found) and each query probes its ``nprobe`` nearest cells, both
       through :func:`_nearest_cells`;
     - same-cell pairs are ranked by exact cosine (q45's ranking).
 
-    At 10^9 vectors the cell join replaces the O(n²) cross-join; the
+    At the test scales IVF barely prunes: each query scores 0.70 of all
+    vectors at sf0.01 and at sf0.1 (349/500 and 1,396/2,000), the share
+    that buys the recall measured beside ``_PROBE_SHARE``.  At 10^9
+    vectors the cell join replaces the O(n²) cross-join; the
     driver sees two metadata-sized actions (the count and the
     ``n_cells`` seed rows), and the candidate join moves id pairs only.
     The result is approximate vs q45 (pytest measures recall) but
@@ -303,21 +302,21 @@ def q54_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
     n_cells = int(np.clip(round(np.sqrt(v.count())), 4, 256))
     nprobe = max(2, n_cells // _PROBE_SHARE)
-    seeds = (
+    seeds = vector_matrix(
         v.withColumn("_h", md5_60bit(F.col("vec_id").cast("string")))
         .orderBy("_h", "vec_id")
         .limit(n_cells)
-        .collect()
+        .toArrow()
+        .column("v")
     )
-    cents = np.array([np.asarray(r["v"]) / r["nrm"] for r in seeds])
-    vecs = v.select("vec_id", "v")
-    assigned = vecs.mapInPandas(
-        _nearest_cells(cents, _ASSIGN_REPLICAS), "vec_id long, cell int"
-    ).select(F.col("vec_id").alias("b_id"), "cell")
-    probes = (
-        vecs.filter(F.col("vec_id") < 10)
-        .mapInPandas(_nearest_cells(cents, nprobe), "vec_id long, cell int")
-        .select(F.col("vec_id").alias("a_id"), "cell")
+    cents = seeds / np.sqrt(seq_dots(seeds, seeds))[:, None]
+    assign = _nearest_cells(cents, _ASSIGN_REPLICAS)
+    probe = _nearest_cells(cents, nprobe)
+    assigned = v.select(
+        F.col("vec_id").alias("b_id"), F.explode(assign("v")).alias("cell")
+    )
+    probes = v.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("a_id"), F.explode(probe("v")).alias("cell")
     )
     cand = (
         probes.join(assigned, "cell")
@@ -330,7 +329,7 @@ def q54_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # DuckDB side.  ``n`` holds the fixed-dim, non-zero vectors with
 # ``sqrt(list_dot_product(vec, vec))`` norms: the same left-to-right fold
-# as Spark's unrolled ``_NORM``, so unrounded cosines — compared against τ
+# as :func:`cosine_kernel`'s, so unrounded cosines — compared against τ
 # and ranked — match bit for bit, not just to 6 decimals.
 _SQL_VECTORS = f"""
     v AS (
@@ -512,10 +511,8 @@ def q49_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-dimension mean → re-assembled norm.  The aggregation shape IVF-style
     ANN uses to build coarse quantizers."""
     emb = t(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "label",
-        F.posexplode(F.expr(_TO_DOUBLE)).alias("dim", "x"),
-    )
+    vec = F.col("embedding").cast("array<double>")
+    dims = emb.select("label", F.posexplode(vec).alias("dim", "x"))
     cent = dims.groupBy("label", "dim").agg(F.avg("x").alias("c"))
     return (
         cent.groupBy("label")

@@ -25,6 +25,7 @@ from etl_sql_duckdb_parquet__spark.queries.multimodal import (  # noqa: E402
 from etl_sql_duckdb_parquet__spark.queries.similarity import (  # noqa: E402
     NEARDUP_COS,
     _PLANES,
+    cosine_kernel,
     lsh_bucket_ids,
     q45_cosine_topk,
     q46_ann_lsh_topk,
@@ -80,25 +81,86 @@ def test_ann_lsh_recall_vs_brute_force(spark):
     assert all(q < 10 for q, _ in approx)
 
 
-def test_lsh_kernel_is_a_sequential_fold():
-    """The bucket kernel's plane dots must equal a left-to-right cumsum
-    fold over dim bit for bit — the association DuckDB's
-    ``list_dot_product`` uses, which is what lets the q46/q66 oracles
-    reproduce every bucket — and an empty Arrow batch must map to an
-    empty series (``np.stack`` raises on one)."""
+def _python_dot(x, y) -> float:
+    """A plain left-to-right ``s += x*y`` loop in Python doubles."""
+    s = 0.0
+    for a, b in zip(x, y):
+        s += float(a) * float(b)
+    return s
+
+
+def _python_cosine(x, y) -> float:
+    import math
+
+    den = math.sqrt(_python_dot(x, x)) * math.sqrt(_python_dot(y, y))
+    return _python_dot(x, y) / den
+
+
+def _float_lists(rows):
+    import pyarrow as pa
+
+    return pa.array([list(r) for r in rows], pa.list_(pa.float32()))
+
+
+def _bits(xs) -> list:
     import numpy as np
-    import pandas as pd
+
+    return np.asarray(xs, dtype=np.float64).view(np.int64).tolist()
+
+
+def test_cosine_kernel_is_a_sequential_fold():
+    """The cosine kernel equals ``dot / (sqrt(aa) * sqrt(bb))`` over plain
+    Python left-to-right folds bit for bit — the association DuckDB's
+    ``list_dot_product`` uses, which lets the similarity oracles match
+    unrounded cosines.  Checked on random float32 vectors, on an empty
+    batch, and on a sliced ``ListArray`` whose offset is not zero (the
+    matrix helper must not read the parent's ``.values``)."""
+    import numpy as np
 
     rng = np.random.default_rng(5)
-    m = rng.standard_normal((500, _PLANES.shape[2]))
-    flat = _PLANES.reshape(-1, _PLANES.shape[2])
-    want = np.cumsum(m[:, None, :] * flat, axis=2)[:, :, -1]
-    got = seq_dots(m, flat)
-    assert got.view(np.int64).tolist() == want.view(np.int64).tolist()
+    a = rng.standard_normal((40, 64)).astype(np.float32)
+    b = rng.standard_normal((40, 64)).astype(np.float32)
+    got = cosine_kernel(_float_lists(a), _float_lists(b))
+    want = [_python_cosine(x, y) for x, y in zip(a, b)]
+    assert _bits(got.to_numpy()) == _bits(want)
 
-    ids = lsh_bucket_ids(pd.Series(list(m.astype(np.float32))))
-    assert len(ids) == len(m) and len(ids[0]) == _PLANES.shape[0]
-    assert lsh_bucket_ids(pd.Series([], dtype=object)).empty
+    got = cosine_kernel(
+        _float_lists(a).slice(7, 20), _float_lists(b).slice(3, 20)
+    )
+    want = [_python_cosine(x, y) for x, y in zip(a[7:27], b[3:23])]
+    assert _bits(got.to_numpy()) == _bits(want)
+
+    assert len(cosine_kernel(_float_lists([]), _float_lists([]))) == 0
+
+
+def test_lsh_kernel_is_a_sequential_fold():
+    """``seq_dots`` (every row against every plane) equals the Python
+    fold bit for bit, and the Arrow bucket kernel turns those plane dots
+    into L sign-bit bucket ids — also on a sliced batch and an empty
+    one."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    m = rng.standard_normal((60, _PLANES.shape[2])).astype(np.float32)
+    flat = _PLANES.reshape(-1, _PLANES.shape[2])
+    want = [[_python_dot(x, p) for p in flat] for x in m]
+    got = seq_dots(m.astype(np.float64)[:, None], flat[None])
+    assert _bits(got) == _bits(want)
+
+    n_tables, k_planes, _ = _PLANES.shape
+    want_ids = [
+        [
+            sum(1 << j for j in range(k_planes) if row[t * k_planes + j] >= 0)
+            for t in range(n_tables)
+        ]
+        for row in want
+    ]
+    ids = lsh_bucket_ids(_float_lists(m))
+    assert ids.to_pylist() == want_ids
+    assert lsh_bucket_ids(_float_lists(m).slice(11, 30)).to_pylist() == (
+        want_ids[11:41]
+    )
+    assert len(lsh_bucket_ids(_float_lists([]))) == 0
 
 
 def test_embedding_neardup_precision_and_recall(spark):

@@ -4,8 +4,9 @@ Correctness tests prove the operators compute the right rows; these prove
 the PLANS are the ones we'd want on a 1000-executor cluster: broadcast
 joins where a side is dimension-sized, predicate/projection pushdown into
 the parquet scans, no single-partition exchanges on unbounded data, no
-cartesian products outside the documented brute-force baselines, and no
-interpreted higher-order-function lambdas left in the similarity hot path.
+cartesian products outside the documented brute-force baselines, and
+similarity pairs scored in one Arrow kernel rather than in huge
+interpreted expressions.
 """
 
 from __future__ import annotations
@@ -401,16 +402,26 @@ def test_warm_calls_compile_nothing(spark, sf_dir, tmp_path):
     ) == 0
 
 
-def test_similarity_dot_products_are_codegen(spark):
-    """The unrolled dot product must stay out of interpreted HOF-lambda
-    land: no zip_with/lambda anywhere, and (in the post-AQE final plan —
-    codegen spans only materialize once adaptive execution finalizes) the
-    projection sits inside a WholeStageCodegen span."""
-    df = REGISTRY["q45_cosine_topk"](spark, SF_DIR)
-    plan = plan_of(df)
-    assert "zip_with" not in plan and "lambdafunction" not in plan
-    df.collect()
-    final = df._jdf.queryExecution().executedPlan().toString()
-    # "*(N)" prefixes mark WholeStageCodegen spans in the executed plan;
-    # the dot-product Project must sit inside one
-    assert "*(" in final and "Project [a_id" in final
+def test_similarity_pairs_are_scored_by_one_arrow_kernel(spark):
+    """q44 and q45 score each pair in ONE Arrow kernel, below which
+    Catalyst has already applied the pair filter: exactly one
+    ``ArrowEvalPython`` node, the filter in its subtree, and no unrolled
+    per-element term or higher-order-function lambda left in the plan.
+    q66 is built first: its unpushed cosine must not change theirs."""
+    import re
+
+    REGISTRY["q66_embedding_neardup_sql"](spark, SF_DIR)
+    for name, pair_filter in (
+        ("q44_top20_similar_pairs", r"a_id#\d+L < b_id#\d+L"),
+        ("q45_cosine_topk", r"NOT \(a_id#\d+L = b_id#\d+L\)"),
+    ):
+        df = REGISTRY[name](spark, SF_DIR)
+        lines = df._jdf.queryExecution().optimizedPlan().toString().split("\n")
+        evals = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+        assert len(evals) == 1, name
+        assert "cosine_kernel" in lines[evals[0]], name
+        below = [i for i, ln in enumerate(lines) if re.search(pair_filter, ln)]
+        assert below and min(below) > evals[0], name
+        plan = "\n".join(lines)
+        assert "lambdafunction" not in plan, name
+        assert "[63]" not in plan, name
