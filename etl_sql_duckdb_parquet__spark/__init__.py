@@ -5,7 +5,7 @@ the reference repo ``KamilJ117417/ETL-SQL-DuckDB-Parquet-`` (see SURVEY.md),
 re-expressed Spark-first:
 
 - ``codecs``    — numpy codec kernels: dictionary, RLE, delta, bit-packing,
-                  frame-of-reference, FSST symbol table; statistics-driven
+                  frame-of-reference, string pattern-id; statistics-driven
                   auto-selection, with pyarrow's ZSTD as the entropy layer
                   on top (a requirement).  (North star: the reference
                   delegates its columnar encoding to Parquet/ZSTD —

@@ -13,11 +13,10 @@ family is implemented from scratch so the engine owns the encoding:
                  required.  The retired VARINT (id 9), FORBLOCK (11) and
                  DEFLATE wrap (13) are not readable: such blobs raise and
                  must be re-encoded from source.
-- ``fsst``     — FSST symbol-table compression for byte strings (public
-                 algorithm: Boncz, Neumann, Leis — "FSST: Fast Random Access
-                 String Compression", VLDB 2020).
-- ``strings``  — string-array container: dictionary / FSST / plain, selected
-                 by cardinality and sampled compressibility.
+- ``strings``  — string-array container: pattern-id / dictionary / plain,
+                 selected by shape and cardinality; the byte buffer is
+                 left to the zstd layer.  Blobs of the retired byte codec
+                 (id 5) raise too and must be re-encoded from source.
 
 All kernels are vectorized numpy over contiguous buffers — they are invoked
 from Arrow-batched pandas UDFs, never per row.  Every blob is

@@ -50,9 +50,10 @@ CODEC_FOR = 1
 CODEC_DELTA = 2
 CODEC_RLE = 3
 CODEC_DICT = 4
-# 5..8 and 12 are byte/string codecs — see fsst.py / strings.py.
-# 9 (VARINT), 11 (FORBLOCK) and 13 (DEFLATE wrap) are retired: blobs that
-# carry them raise "unknown codec id" and must be re-encoded from source.
+# 6..8 and 12 are byte/string codecs — see strings.py.
+# 5 (FSST), 9 (VARINT), 11 (FORBLOCK) and 13 (DEFLATE wrap) are retired:
+# blobs that carry them raise "unknown ... codec id" and must be re-encoded
+# from source.
 CODEC_VARDICT = 10  # frequency-ordered dictionary + LEB128 rank codes
 CODEC_ZSTD = 14  # ZSTD entropy layer over any other blob (when it wins)
 
@@ -62,7 +63,6 @@ CODEC_NAMES = {
     CODEC_DELTA: "delta",
     CODEC_RLE: "rle",
     CODEC_DICT: "dict",
-    5: "fsst",
     6: "strarr",
     7: "plainbytes",
     8: "strdict",

@@ -1,9 +1,12 @@
-"""String-array codecs: dictionary / FSST / plain, auto-selected.
+"""String-array codecs: pattern-id / dictionary / plain, auto-selected.
 
-Handles the ``doc_id`` and ``source`` columns of the token table.  A string
-array is stored as lengths (integer blob, auto-selected codec — RLE shines
-for fixed-width ids) + a byte buffer (FSST when the sampled ratio says it
-wins, plain otherwise).  Low-cardinality arrays (``source`` has a handful of
+Handles the ``doc_id`` and ``source`` columns of the token table.  Ids of
+one shape (shared prefix + fixed-width decimal suffix) are stored as a
+prefix and an integer blob.  Other arrays are stored as lengths (integer
+blob, auto-selected codec — RLE shines for fixed-width ids) + the plain
+byte buffer, which the caller's ``zwrap_best`` zstd layer compresses (a
+symbol-table byte codec under it never won on a measured column: CLAUDE.md
+"Codec family").  Low-cardinality arrays (``source`` has a handful of
 distinct values) go through a string dictionary first.
 
 Blob layouts (little-endian)::
@@ -12,6 +15,8 @@ Blob layouts (little-endian)::
     STRARR(6)    : [u8=6][u64 n][nested int blob: utf8 lengths]
                    [nested bytes blob: concatenated utf8]
     STRDICT(8)   : [u8=8][u64 n][nested int blob: codes][nested STRARR: uniques]
+    PATTERNID(12): [u8=12][u64 n][u8 digits][u16 prefix len][prefix]
+                   [int blob: suffix values]
 
 "nested" = u64 byte-length prefix + blob.
 """
@@ -22,42 +27,12 @@ import struct
 
 import numpy as np
 
-from .core import _ZSTD, decode_int, encode_int_best, zunwrap
-from .fsst import CODEC_FSST, _sample, decode_fsst, encode_fsst, estimate_ratio
+from .core import decode_int, encode_int_best, zunwrap
 
 CODEC_STRARR = 6
 CODEC_PLAINBYTES = 7
 CODEC_STRDICT = 8
 CODEC_PATTERNID = 12
-
-# FSST selection decision table (round-5 cost guard).  The numpy FSST
-# compress kernel is a measured local optimum at ~11-14 MB/s warm
-# (fsst.py docstring) while the zstd-L1 wrap the caller applies to a
-# PLAIN buffer runs ~300+ MB/s — a ~10-25× encode-throughput gap.  FSST
-# therefore has to BUY its slot: it is selected only when its sampled
-# compressed size (table overhead included) undercuts the sampled
-# zstd-L1-on-plain size by ≥10% — a size win the entropy wrap cannot
-# recover, worth the throughput cost on cold-archive string columns.
-# Anything closer goes PLAIN and lets the caller's zwrap_best entropy
-# layer do the work at wire speed.
-#   sampled fsst/raw   sampled zstd/raw   pick
-#   0.50               0.90               FSST  (0.50 ≤ 0.9·0.90)
-#   0.85               0.90               PLAIN (zstd within 10%)
-#   0.95               0.40               PLAIN (zstd crushes text)
-_FSST_VS_ZSTD = 0.90
-
-
-def _zstd_sampled_ratio(sample: bytes) -> float:
-    """Sampled (compressed+header)/raw of the plain+zstd-L1 alternative —
-    what the caller's ``zwrap_best`` would achieve on a PLAIN buffer."""
-    z = _ZSTD.compress(sample)
-    return (len(z) + 17) / len(sample)  # 17 = zwrap frame header
-
-
-def _fsst_pays(fsst_ratio: float, zstd_ratio: float) -> bool:
-    """True when FSST's sampled size win over zstd-on-plain clears the
-    threshold that pays for its ~10× slower encode kernel."""
-    return fsst_ratio <= _FSST_VS_ZSTD * zstd_ratio
 
 
 def _try_pattern_id(strs: list[bytes]) -> bytes | None:
@@ -112,29 +87,15 @@ def _decode_pattern_id(buf: memoryview, off: int) -> list[bytes]:
     return [prefix + flat[i * ndig : (i + 1) * ndig] for i in range(n)]
 
 
-def encode_bytes_best(data: bytes) -> bytes:
-    """Byte buffer: FSST only when it pays (see the decision table above),
-    else plain — the caller's ``zwrap_best`` entropy layer then captures
-    whatever redundancy is left at wire speed."""
-    if len(data) >= 64 and _fsst_pays(
-        estimate_ratio(data), _zstd_sampled_ratio(_sample(data))
-    ):
-        blob = encode_fsst(data)
-        if len(blob) < 9 + len(data):
-            return blob
+def _encode_bytes(data: bytes) -> bytes:
     return struct.pack("<BQ", CODEC_PLAINBYTES, len(data)) + data
 
 
-def decode_bytes(blob: bytes | memoryview, off: int = 0) -> tuple[bytes, int]:
-    buf = memoryview(blob)
-    codec_id = buf[off]
-    if codec_id == CODEC_PLAINBYTES:
-        (n,) = struct.unpack_from("<Q", buf, off + 1)
-        start = off + 9
-        return bytes(buf[start : start + n]), start + n
-    if codec_id == CODEC_FSST:
-        return decode_fsst(buf, off)
-    raise ValueError(f"unknown bytes codec id {codec_id}")
+def _decode_bytes(buf: memoryview, off: int) -> bytes:
+    if buf[off] != CODEC_PLAINBYTES:
+        raise ValueError(f"unknown bytes codec id {buf[off]}")
+    (n,) = struct.unpack_from("<Q", buf, off + 1)
+    return bytes(buf[off + 9 : off + 9 + n])
 
 
 def _nested(blob: bytes) -> bytes:
@@ -147,7 +108,7 @@ def _encode_strarr(strs: list[bytes]) -> bytes:
     return (
         struct.pack("<BQ", CODEC_STRARR, len(strs))
         + _nested(encode_int_best(lengths))
-        + _nested(encode_bytes_best(data))
+        + _nested(_encode_bytes(data))
     )
 
 
@@ -158,7 +119,7 @@ def _decode_strarr(buf: memoryview, off: int) -> tuple[list[bytes], int]:
     lengths = decode_int(bytes(buf[p + 8 : p + 8 + ln]))
     p += 8 + ln
     (ln2,) = struct.unpack_from("<Q", buf, p)
-    data, _ = decode_bytes(buf, p + 8)
+    data = _decode_bytes(buf, p + 8)
     p += 8 + ln2
     out = []
     pos = 0
@@ -169,7 +130,7 @@ def _decode_strarr(buf: memoryview, off: int) -> tuple[list[bytes], int]:
 
 
 def encode_strings(values) -> bytes:
-    """Encode a sequence of strings: pattern-id → dictionary → FSST/plain."""
+    """Encode a sequence of strings: pattern-id → dictionary → plain."""
     strs = [v.encode("utf-8") if isinstance(v, str) else bytes(v) for v in values]
     n = len(strs)
     pat = _try_pattern_id(strs)

@@ -26,6 +26,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..encode.manifest import read_typed, write_rows
+
 EVENTS_SCHEMA = (
     "run_id string, table_name string, stage string, status string, "
     "message string, n_rows long, duration_s double, ts timestamp"
@@ -43,7 +45,7 @@ class EventLog:
         self.spark = spark
         self.out_dir = out_dir
         self.run_id = run_id or f"run_{uuid.uuid4().hex[:12]}"
-        self._rows: list[tuple] = []
+        self._rows: list[dict] = []
         self._t0: dict[tuple[str, str], float] = {}
 
     def start(self, table: str, stage: str) -> None:
@@ -66,28 +68,32 @@ class EventLog:
 
     def _add(self, table, stage, status, message, n_rows, dur) -> None:
         self._rows.append(
-            (
-                self.run_id,
-                table,
-                stage,
-                status,
-                message,
-                n_rows,
-                dur,
-                datetime.now(timezone.utc).replace(tzinfo=None),
-            )
+            {
+                "run_id": self.run_id,
+                "table_name": table,
+                "stage": stage,
+                "status": status,
+                "message": message,
+                "n_rows": n_rows,
+                "duration_s": dur,
+                "ts": datetime.now(timezone.utc),
+            }
         )
 
     def flush(self) -> None:
         if not self._rows:
             return
-        df = self.spark.createDataFrame(self._rows, EVENTS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(events_path(self.out_dir))
+        write_rows(
+            self.spark,
+            events_path(self.out_dir),
+            f"events-{self.run_id}.parquet",
+            self._rows,
+            EVENTS_SCHEMA,
+        )
         self._rows = []
 
 
 def read_events(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(events_path(out_dir))
-    except Exception:
-        return None
+    """The events table, or ``None`` when no run has written one; an
+    unreadable file raises."""
+    return read_typed(spark, events_path(out_dir), EVENTS_SCHEMA)

@@ -8,6 +8,8 @@ is bit-identical decode on every input, including degenerate ones.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -28,13 +30,6 @@ from etl_sql_duckdb_parquet__spark.codecs.core import (
     unpack_uint,
     zunwrap,
     zwrap_best,
-)
-from etl_sql_duckdb_parquet__spark.codecs.fsst import (
-    build_table,
-    compress,
-    decode_fsst,
-    decompress,
-    encode_fsst,
 )
 
 I32 = np.int32
@@ -110,17 +105,26 @@ def test_selector_wrapped_size_not_worse_than_for():
     np.testing.assert_array_equal(decode_int(best), x)
 
 
-@pytest.mark.parametrize("codec_id", [9, 11, 13])
+@pytest.mark.parametrize("codec_id", [5, 9, 11, 13])
 def test_retired_codec_ids_raise(codec_id):
-    """VARINT (9), FORBLOCK (11) and the DEFLATE wrap (13) are retired:
-    a blob led by one of them must raise, never decode to something."""
-    import struct
-
+    """FSST (5), VARINT (9), FORBLOCK (11) and the DEFLATE wrap (13) are
+    retired: a blob led by one of them, or a STRARR whose nested bytes blob
+    is, must raise, never decode to something."""
     blob = struct.pack("<BQQ", codec_id, 4, 4) + b"\x00" * 32
     with pytest.raises(ValueError, match="unknown"):
         decode_int(blob)
     with pytest.raises(ValueError, match="unknown"):
         decode_strings(blob)
+    strarr = bytearray(encode_strings(STRING_CASES["urls"]))
+    strarr[_bytes_blob_offset(strarr)] = codec_id
+    with pytest.raises(ValueError, match="unknown"):
+        decode_strings(bytes(strarr))
+
+
+def _bytes_blob_offset(blob: bytes) -> int:
+    """Offset of the nested bytes blob in a STRARR blob."""
+    (ln,) = struct.unpack_from("<Q", blob, 9)
+    return 9 + 8 + ln + 8
 
 
 def test_analyze_sizes_are_exact():
@@ -169,38 +173,6 @@ def test_pack_unpack_property(width, xs):
     np.testing.assert_array_equal(out, vals)
 
 
-# ---------------------------------------------------------------------------
-# FSST
-# ---------------------------------------------------------------------------
-
-FSST_CASES = {
-    "empty": b"",
-    "one_byte": b"x",
-    "repetitive": b"doc_000123" * 500,
-    "ids": b"".join(f"doc_{i:08d}".encode() for i in range(2000)),
-    "urls": b"".join(
-        f"https://example.com/page/{i}?ref=abc".encode() for i in range(500)
-    ),
-    "random": bytes(RNG.integers(0, 256, 4096, dtype=np.uint8)),
-    "all_escapes": bytes(range(256)) * 4,
-    "long_runs": b"a" * 10000,
-    "utf8": ("żółć🎉日本語 " * 300).encode("utf-8"),
-}
-
-
-@pytest.mark.parametrize("name", sorted(FSST_CASES))
-def test_fsst_roundtrip(name):
-    data = FSST_CASES[name]
-    decoded, _ = decode_fsst(encode_fsst(data))
-    assert decoded == data
-
-
-def test_fsst_compresses_ids():
-    data = FSST_CASES["ids"]
-    blob = encode_fsst(data)
-    assert len(blob) < 0.6 * len(data), f"FSST ratio {len(blob)/len(data):.2f}"
-
-
 def test_zunwrap_rejects_truncated_blob():
     inner = b"payload-bytes" * 10
     good = zwrap_best(inner)
@@ -209,90 +181,6 @@ def test_zunwrap_rejects_truncated_blob():
     bad = bytes([CODEC_ZSTD]) + (len(inner) + 1).to_bytes(8, "little") + good[9:]
     with pytest.raises(ValueError, match="zwrap blob corrupt"):
         zunwrap(bad)
-
-
-def test_fsst_throughput_vectorized():
-    """Regression guard for the vectorized kernels: 10 MB must compress in
-    seconds, not minutes (the old per-byte Python loop ran ~0.3-0.5 MB/s;
-    warm best-of-N on this host is ~11-14 MB/s compress on this exact
-    input, ~100 MB/s decompress — see the fsst module docstring for the
-    four benchmarked redesigns that could not beat it).  The compress
-    floor is ~2.3x below warm speed; since this sandbox's tenant-steal
-    windows can persist for minutes (CLAUDE.md), best-of-5 escalates to
-    best-of-15 before failing rather than flaking a full-suite run on a
-    slow window."""
-    import time
-
-    data = b"\x00".join(
-        f"web-crawl-{i % 500:04d}/doc_{i:08d}".encode() for i in range(400_000)
-    )[: 10 * 1024 * 1024]
-    mb = len(data) / 2**20
-    best_c = best_d = float("inf")
-    iters = 0
-    while iters < 15:
-        t0 = time.time()
-        blob = encode_fsst(data)
-        t1 = time.time()
-        decoded, _ = decode_fsst(blob)
-        t2 = time.time()
-        assert decoded == data
-        best_c = min(best_c, t1 - t0)
-        best_d = min(best_d, t2 - t1)
-        iters += 1
-        if iters >= 5 and mb / best_c > 5.0 and mb / best_d > 15.0:
-            break
-    assert mb / best_c > 5.0, f"compress {mb/best_c:.2f} MB/s"
-    assert mb / best_d > 15.0, f"decompress {mb/best_d:.2f} MB/s"
-    assert len(blob) < 0.5 * len(data)
-
-
-def test_fsst_selector_pays_for_its_throughput_cost():
-    """Round-5 cost guard: the FSST kernel runs ~10-25× slower than the
-    zstd-L1 wrap that a PLAIN buffer gets anyway, so the selector must
-    pick FSST only when its sampled size win over zstd-on-plain clears
-    the documented ≥10% threshold (decision table in codecs/strings.py)."""
-    from etl_sql_duckdb_parquet__spark.codecs import strings as S
-
-    # the decision function IS the documented table
-    assert S._fsst_pays(0.50, 0.90) is True
-    assert S._fsst_pays(0.85, 0.90) is False  # zstd within 10% → PLAIN
-    assert S._fsst_pays(0.95, 0.40) is False  # zstd crushes it → PLAIN
-    assert S._fsst_pays(0.36, 0.40) is True  # exactly at the threshold
-
-    # string-heavy repetitive text: zstd-L1 compresses it at wire speed,
-    # so the selector must go PLAIN (the old vs-plain gate picked FSST
-    # here and burned ~10× encode throughput for no net size win after
-    # the entropy wrap)
-    text = b"".join(
-        f"https://example.com/page/{i}?ref=abc".encode() for i in range(500)
-    )
-    z_ratio = S._zstd_sampled_ratio(text)
-    assert z_ratio < 0.5  # zstd really does crush it
-    blob = S.encode_bytes_best(text)
-    assert blob[0] == S.CODEC_PLAINBYTES
-    got, _ = S.decode_bytes(blob)
-    assert got == text
-
-    # when zstd genuinely can't touch the data but FSST can (forced via
-    # the sampled-ratio seam), FSST is still selected — the wiring keeps
-    # both outcomes reachable and the round-trip intact
-    orig = S._zstd_sampled_ratio
-    S._zstd_sampled_ratio = lambda sample: 1.0
-    try:
-        blob = S.encode_bytes_best(text)
-        assert blob[0] == S.CODEC_FSST
-        got, _ = S.decode_bytes(blob)
-        assert got == text
-    finally:
-        S._zstd_sampled_ratio = orig
-
-
-def test_fsst_table_respects_limits():
-    table = build_table(FSST_CASES["urls"])
-    assert len(table) <= 255
-    assert all(1 <= len(s) <= 8 for s in table)
-    payload = compress(FSST_CASES["urls"], table)
-    assert decompress(payload, table, len(FSST_CASES["urls"])) == FSST_CASES["urls"]
 
 
 # ---------------------------------------------------------------------------
@@ -306,6 +194,7 @@ STRING_CASES = {
     "low_card": ["web", "books", "code", "wiki"] * 800,
     "mixed_len": ["", "a", "ab" * 50, "x" * 999],
     "unicode": ["żółć", "日本語", "🎉emoji", "plain"] * 100,
+    "urls": [f"https://example.com/page/{i}?ref=abc" for i in range(500)],
 }
 
 
@@ -313,6 +202,14 @@ STRING_CASES = {
 def test_strings_roundtrip(name):
     vals = STRING_CASES[name]
     assert decode_strings(encode_strings(vals)) == vals
+
+
+def test_urls_keep_plain_bytes():
+    """Distinct URLs go STRARR with a PLAINBYTES (7) buffer: the zstd layer,
+    not a byte codec, compresses them."""
+    blob = encode_strings(STRING_CASES["urls"])
+    assert blob[0] == 6  # CODEC_STRARR
+    assert blob[_bytes_blob_offset(blob)] == 7  # CODEC_PLAINBYTES
 
 
 def test_strdict_picked_for_low_cardinality():

@@ -275,3 +275,22 @@ def test_run_pipeline_strict_and_quarantine(spark, dirty_path, tmp_path):
     ev_strict = read_events(spark, str(tmp_path / "strict"))
     assert ev_strict is not None
     assert ev_strict.filter(F.col("status") == "error").count() >= 1
+
+
+def test_read_events_missing_is_none_unreadable_raises(spark, tmp_path):
+    """No events directory reads as no history; an unreadable events file
+    must raise, never pass for "no history"."""
+    from etl_sql_duckdb_parquet__spark.etl.history import (
+        events_path,
+        read_events,
+    )
+
+    assert read_events(spark, str(tmp_path / "none")) is None
+    bad = events_path(str(tmp_path / "bad"))
+    os.makedirs(bad)
+    with open(os.path.join(bad, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    ev = read_events(spark, str(tmp_path / "bad"))
+    assert ev is not None
+    with pytest.raises(Exception, match="parquet"):
+        ev.collect()
