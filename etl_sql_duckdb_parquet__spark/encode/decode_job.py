@@ -1,8 +1,9 @@
 """Decode path: blobs → token table, bit-identical (the north-rule invariant).
 
-One typed manifest collect picks, on the driver, the snapshot(s) to read
-and the winning (latest successful) run of every partition, so orphaned
-blob files from a crashed run can never leak into results; the blob
+One manifest read (driver-side pyarrow on a filesystem store, no Spark
+job) picks, on the driver, the snapshot(s) to read and the winning
+(latest successful) run of every partition, so orphaned blob files from
+a crashed run can never leak into results; the blob
 scan then lists only the winning runs' ``run_id=`` directories (by path:
 no join, no broadcast job), and every codec is reversed inside an
 Arrow-native ``mapInArrow``.  The token lists are assembled ZERO-COPY with
@@ -17,12 +18,12 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..codecs import decode_int, decode_strings
 from .encode_job import BLOB_SCHEMA
-from .manifest import blobs_path, local_frame, read_manifest
+from .manifest import blobs_path, local_frame, manifest_rows
 
 DECODED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -124,8 +125,8 @@ def winning_blobs(
     max of ``(finished_at, run_id)`` — so a resumed/re-run snapshot still
     dedupes exactly.
 
-    The winners are picked on the driver from the one manifest collect
-    and reach the blob scan without a join: the scan reads only the
+    The winners are picked on the driver from the one manifest read and
+    reach the blob scan without a join: the scan reads only the
     winning runs' ``run_id=`` directories (by path, so the listing is
     O(winning runs), not O(store history); a run none of whose winning
     partitions holds docs has no directory and is skipped), and drops
@@ -137,7 +138,7 @@ def winning_blobs(
     exactly that run's commit.
     """
     rows, _ = _resolve_snapshots(spark, out_dir, snapshots)
-    best: dict[tuple[str, int], Row] = {}
+    best: dict[tuple[str, int], dict] = {}
     for r in rows:
         key = (r["snapshot_id"], r["part_id"])
         if key not in best or _recency(r) > _recency(best[key]):
@@ -210,14 +211,14 @@ def decode_token_table(
     return blobs.select(*needed).mapInArrow(_make_decoder(cols), schema)
 
 
-def _recency(r: Row) -> tuple:
+def _recency(r: dict) -> tuple:
     """Commit order of ok manifest rows: ``(finished_at, run_id)``."""
     return (r["finished_at"], r["run_id"])
 
 
 def _resolve_snapshots(
     spark: SparkSession, out_dir: str, snapshots: str
-) -> tuple[list[Row], list[Row]]:
+) -> tuple[list[dict], list[dict]]:
     """THE snapshot-arg resolution, shared by every decode-side entry
     (``winning_blobs`` and the lookup coverage check) so the coverage
     check can never validate a different snapshot set than the one the
@@ -225,7 +226,7 @@ def _resolve_snapshots(
 
     Returns the selection's ok ``(snapshot_id, part_id, run_id, codec,
     finished_at)`` manifest rows and its plan ``(snapshot_id, source,
-    part_id, salts)`` rows — one metadata job; every decision after it
+    part_id, salts)`` rows — one manifest read; every decision after it
     runs on the driver.  Validates the argument and, for an explicit
     ``snap_`` id, its existence — a typo'd id must raise here, not
     surface downstream as a misleading plan-coverage error.
@@ -237,17 +238,14 @@ def _resolve_snapshots(
             "snapshots must be 'latest', 'all', or an explicit "
             f"'snap_...' id: {snapshots!r}"
         )
-    manifest = read_manifest(spark, out_dir)
-    if manifest is None:
-        raise FileNotFoundError(f"no manifest under {out_dir}")
-    rows = (
-        manifest.filter(F.col("status").isin("ok", "plan"))
-        .select(
-            "snapshot_id", "part_id", "run_id", "codec", "finished_at",
-            "status", "source", "salts",
-        )
-        .collect()
+    rows = manifest_rows(
+        spark,
+        out_dir,
+        ["snapshot_id", "part_id", "run_id", "codec", "finished_at",
+         "status", "source", "salts"],
     )
+    if rows is None:
+        raise FileNotFoundError(f"no manifest under {out_dir}")
     ok = [r for r in rows if r["status"] == "ok"]
     if snapshots == "latest":
         if not ok:
@@ -291,10 +289,10 @@ def candidate_parts(
     plans were kept) would otherwise compute candidates from the newer
     plans only and silently miss docs living in the plan-less snapshot.
 
-    One metadata job (the manifest collect the decode's snapshot
-    resolution also runs); the hashes come from ``xxhash64`` over a
-    LocalRelation, which runs none, and the ``pmod`` is Python's ``%``
-    (equal for ``salts > 0``).
+    One manifest read (the one the decode's snapshot resolution also
+    makes; no Spark job on a filesystem store); the hashes come from
+    ``xxhash64`` over a LocalRelation, which runs none, and the ``pmod``
+    is Python's ``%`` (equal for ``salts > 0``).
     """
     ok, plan = _resolve_snapshots(spark, out_dir, snapshots)
     uncovered = sorted(

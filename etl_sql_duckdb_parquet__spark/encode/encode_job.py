@@ -19,8 +19,9 @@ DataFrame program (SURVEY.md §7.0a):
 3. Blobs written as uncompressed Parquet (our codecs ARE the compression;
    a codec on top would contaminate the size measurement) straight from
    the encode tasks, partitioned by run so re-runs never collide.  The
-   commit then collects the run's per-partition metadata in one job, and
-   the driver writes the manifest rows for the whole run as one file.
+   driver then reads the run's per-partition metadata back (no Spark job
+   on a filesystem store) and writes the manifest rows for the whole run
+   as one file.
 
 Resume: planned parts are anti-joined against the manifest before encoding
 (only missing/failed partitions run), making the job idempotent per input
@@ -48,7 +49,7 @@ from .manifest import (
     blobs_path,
     completed_parts,
     local_frame,
-    read_typed,
+    read_rows,
 )
 
 DEFAULT_TARGET_TOKENS = 2_000_000
@@ -461,30 +462,28 @@ def encode_token_table(
         .parquet(blobs_path(out_dir))
     )
 
-    # Commit: ONE metadata job collects this run's (part_id, meta) rows —
+    # Commit: ONE metadata read of this run's (part_id, meta) rows —
     # parquet column pruning skips the blob bytes — and the manifest rows,
     # the empty-partition backfill and the run totals all derive from them
     # on the driver.  Read ONLY this run's blob directory: a whole-tree
     # read would re-list every historical run's files (O(store) metadata
     # I/O per encode on an object store) just to filter them out.
-    run_blobs = read_typed(
-        spark, f"{blobs_path(out_dir)}/run_id={run_id}", ENCODED_SCHEMA
+    run_blobs = read_rows(
+        spark,
+        f"{blobs_path(out_dir)}/run_id={run_id}",
+        ENCODED_SCHEMA,
+        ["part_id", "meta"],
     )
     # A run whose pending parts were ALL empty writes no blob rows, so its
-    # run_id= directory never materializes — and ONLY that case
-    # (PATH_NOT_FOUND, the one failure read_typed maps to None) may commit
+    # run_id= directory never materializes — and ONLY that case (a
+    # missing path, the one failure read_rows maps to None) may commit
     # nothing but empties.  Any other failure (transient FS error, corrupt
     # footer, executor death) re-raises: swallowing it would durably
     # commit status='ok' codec='empty' manifest rows for partitions that
     # DO hold data — silent loss that resume then treats as complete.
-    written = (
-        []
-        if run_blobs is None
-        else [
-            (r["part_id"], json.loads(r["meta"]))
-            for r in run_blobs.select("part_id", "meta").collect()
-        ]
-    )
+    written = [
+        (r["part_id"], json.loads(r["meta"])) for r in run_blobs or []
+    ]
     # A planned partition can legitimately receive ZERO docs (a salted hot
     # source whose few doc-id hashes don't cover every salt bucket).  The
     # kernel yields no blob row for it, so without a manifest row resume

@@ -33,7 +33,6 @@ import os
 import shutil
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from .decode_job import decode_token_table
 from .encode_job import DEFAULT_TARGET_TOKENS, encode_token_table
@@ -42,7 +41,7 @@ from .manifest import (
     blobs_path,
     filesystem_path,
     manifest_path,
-    read_manifest,
+    manifest_rows,
     write_rows,
 )
 
@@ -100,14 +99,13 @@ def compact_store(
     markers — so the auto-vacuum can't fail afterwards and strand the
     store in that half-compacted state.
     """
-    manifest = read_manifest(spark, out_dir)
-    if manifest is None:
-        raise FileNotFoundError(f"no manifest under {out_dir}")
-    # one metadata job serves the in-flight guard and the per-snapshot
+    # one manifest read serves the in-flight guard and the per-snapshot
     # FIRST- and LAST-commit times (from which the snapshot list derives)
-    rows = manifest.select(
-        "run_id", "snapshot_id", "status", "finished_at"
-    ).collect()
+    rows = manifest_rows(
+        spark, out_dir, ["run_id", "snapshot_id", "status", "finished_at"]
+    )
+    if rows is None:
+        raise FileNotFoundError(f"no manifest under {out_dir}")
     if vacuum:
         _require_filesystem(out_dir)
         pre_inflight = _uncommitted_runs(rows)
@@ -220,13 +218,11 @@ def vacuum_store(
     re-renaming.
     """
     local = _require_filesystem(out_dir)
-    manifest = read_manifest(spark, out_dir)
-    if manifest is None:
+    # ONE manifest read serves every guard below AND the survivors
+    # rewrite (metadata-sized: O(partitions); finished_at stays UTC)
+    rows = manifest_rows(spark, out_dir)
+    if rows is None:
         raise FileNotFoundError(f"no manifest under {out_dir}")
-    # ONE metadata job serves every guard below AND the survivors
-    # rewrite; Arrow keeps finished_at in UTC, where collect() would
-    # return naive local-time datetimes
-    rows = manifest.toArrow().to_pylist()  # metadata-sized: O(partitions)
     ok_rows = [r for r in rows if r["status"] == "ok"]
     if not ok_rows:
         raise ValueError(f"no status='ok' manifest rows under {out_dir}")
@@ -262,24 +258,24 @@ def vacuum_store(
     }
 
     # Re-check for writers that appended their running marker AFTER the
-    # first manifest read (the guard above is check-then-act over a
-    # multi-second window — a fresh encode starting mid-vacuum would have
-    # its marker silently dropped by the rewrite and its blob dir
-    # reclaimed by the deletion loop).  Nothing destructive has happened
-    # yet, so refusing here is free; the remaining race window is the
-    # milliseconds between this read and the rename below, which — like
-    # Iceberg's expire_snapshots — is a documented quiesce requirement,
-    # not a guarantee this filesystem store can provide.
-    late = (
-        read_manifest(spark, out_dir)
-        .filter(
-            (F.col("status") == "running")
-            & ~F.col("run_id").isin(sorted(committed))
-        )
-        .select("run_id")
-        .collect()
+    # first manifest read (the guard above is check-then-act — a fresh
+    # encode starting mid-vacuum would have its marker silently dropped by
+    # the rewrite and its blob dir reclaimed by the deletion loop).
+    # Nothing destructive has happened yet, so refusing here is free; the
+    # re-read is a driver-side file read (milliseconds, no Spark job), and
+    # the remaining race window is the time between it and the rename
+    # below, which — like Iceberg's expire_snapshots — is a documented
+    # quiesce requirement, not a guarantee this filesystem store can
+    # provide.
+    late = manifest_rows(spark, out_dir, ["run_id", "status"]) or []
+    late_ids = sorted(
+        {
+            r["run_id"]
+            for r in late
+            if r["status"] == "running" and r["run_id"] not in committed
+        }
+        - set(inflight)
     )
-    late_ids = sorted({r["run_id"] for r in late} - set(inflight))
     if late_ids and not force:
         raise RuntimeError(
             f"encode run(s) {late_ids} started while this vacuum was "

@@ -1,67 +1,71 @@
 """Markdown metrics report over the encode manifest — the reference's
 benchmark/metrics report capability (ref ``src/reporting.py:273-343``,
 ``src/benchmarks.py:105-141``) applied to our engine's lineage manifest.
+
+The manifest and event rows are metadata-sized, so they are read once
+(:func:`manifest.read_rows`, no Spark job on a filesystem store) and
+grouped on the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from decimal import ROUND_HALF_UP, Decimal
 
-from .manifest import read_manifest
+from pyspark.sql import SparkSession
+
+from .manifest import manifest_rows, read_rows
+
+
+def _round3(x: float) -> float:
+    """SQL ``ROUND(x, 3)``: half-up on the shortest decimal form."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.001"), ROUND_HALF_UP))
 
 
 def manifest_report(spark: SparkSession, out_dir: str) -> str:
     """Per-codec and per-run totals from the manifest, as markdown."""
-    m = read_manifest(spark, out_dir)
-    if m is None:
-        return "# Encode report\n\nNo manifest found.\n"
-    ok = m.filter(F.col("status") == "ok")
-    by_codec = (
-        ok
-        .groupBy("codec")
-        .agg(
-            F.count("*").alias("parts"),
-            F.sum("n_docs").alias("docs"),
-            F.sum("n_tokens").alias("tokens"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("comp_bytes").alias("comp"),
-            F.round(F.sum("encode_s"), 3).alias("cpu_s"),
-        )
-        .orderBy("codec")
-        .collect()
+    rows = manifest_rows(
+        spark,
+        out_dir,
+        ["run_id", "codec", "n_docs", "n_tokens", "raw_bytes",
+         "comp_bytes", "encode_s", "status"],
     )
-    if not by_codec:
+    if rows is None:
+        return "# Encode report\n\nNo manifest found.\n"
+    ok = [r for r in rows if r["status"] == "ok"]
+    if not ok:
         # an empty manifest directory, or only the running marker of a
         # first encode that never committed
         return "\n".join(
             ["# Encode report", "", "No committed partitions."]
             + _events_section(spark, out_dir)
         ) + "\n"
-    total = (
-        ok.agg(
-            F.countDistinct("run_id").alias("runs"),
-            F.count("*").alias("parts"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("comp_bytes").alias("comp"),
-        )
-        .first()
-    )
+    runs = len({r["run_id"] for r in ok})
+    raw = sum(r["raw_bytes"] for r in ok)
+    comp = sum(r["comp_bytes"] for r in ok)
     lines = [
         "# Encode report",
         "",
-        f"Runs: {total['runs']}  |  partitions: {total['parts']}  |  "
-        f"raw: {total['raw']:,} B  |  compressed: {total['comp']:,} B  |  "
-        f"ratio: {total['raw'] / max(total['comp'], 1):.2f}x",
+        f"Runs: {runs}  |  partitions: {len(ok)}  |  "
+        f"raw: {raw:,} B  |  compressed: {comp:,} B  |  "
+        f"ratio: {raw / max(comp, 1):.2f}x",
         "",
         "| codec | parts | docs | tokens | raw B | comp B | ratio | cpu s |",
         "|---|---|---|---|---|---|---|---|",
     ]
-    for r in by_codec:
+    by_codec: dict[str, list[dict]] = {}
+    for r in ok:
+        by_codec.setdefault(r["codec"], []).append(r)
+    for codec in sorted(by_codec):
+        t = {
+            k: sum(r[k] for r in by_codec[codec])
+            for k in ("n_docs", "n_tokens", "raw_bytes", "comp_bytes",
+                      "encode_s")
+        }
         lines.append(
-            f"| {r['codec']} | {r['parts']} | {r['docs']:,} | "
-            f"{r['tokens']:,} | {r['raw']:,} | {r['comp']:,} | "
-            f"{r['raw'] / max(r['comp'], 1):.2f}x | {r['cpu_s']} |"
+            f"| {codec} | {len(by_codec[codec])} | {t['n_docs']:,} | "
+            f"{t['n_tokens']:,} | {t['raw_bytes']:,} | {t['comp_bytes']:,} | "
+            f"{t['raw_bytes'] / max(t['comp_bytes'], 1):.2f}x | "
+            f"{_round3(t['encode_s'])} |"
         )
     lines += _events_section(spark, out_dir)
     return "\n".join(lines) + "\n"
@@ -70,17 +74,15 @@ def manifest_report(spark: SparkSession, out_dir: str) -> str:
 def _events_section(spark: SparkSession, out_dir: str) -> list[str]:
     """Stage-level event history (``<out>/events``), if present — the
     reference's ``pipeline_events`` surface (ref ``src/history.py:39-52``)."""
-    from ..etl.history import read_events
+    from ..etl.history import EVENTS_SCHEMA, events_path
 
-    ev = read_events(spark, out_dir)
+    ev = read_rows(spark, events_path(out_dir), EVENTS_SCHEMA)
     if ev is None:
         return []
-    rows = (
-        ev.filter(F.col("status") != "start")
-        .orderBy("ts", "table_name", "stage")
-        .limit(100)
-        .collect()
-    )
+    rows = sorted(
+        (r for r in ev if r["status"] != "start"),
+        key=lambda r: (r["ts"], r["table_name"], r["stage"]),
+    )[:100]
     lines = [
         "",
         "## Stage events",

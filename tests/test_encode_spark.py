@@ -656,6 +656,174 @@ def test_read_typed_answers_missing_local_path_without_spark(tmp_path):
                    MANIFEST_SCHEMA)
 
 
+def _same_rows(got, want):
+    """Row lists equal row for row, values and Python types alike."""
+    def typed(rows):
+        return sorted(
+            (repr({k: (type(v).__name__, v) for k, v in r.items()})
+             for r in rows)
+        )
+
+    assert typed(got) == typed(want)
+
+
+def test_read_rows_matches_spark_typed_read(spark, tmp_path):
+    """On a store after encode → drain → compact (``vacuum=False``), with
+    ok, plan, running and empty-partition rows, the driver-side reader
+    returns what the typed Spark read returns through Arrow, row for
+    row: same values, types and nulls, ``finished_at`` in UTC."""
+    import datetime as dt
+
+    from etl_sql_duckdb_parquet__spark.encode.maintenance import (
+        compact_store,
+    )
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        MANIFEST_SCHEMA,
+        local_frame,
+        manifest_path,
+        read_rows,
+        read_typed,
+    )
+
+    out = str(tmp_path / "enc_rows")
+    encode_token_table(
+        spark, synth_token_table(spark, 200, seed=5), out,
+        target_tokens=20_000,
+    )
+    # a drain-shaped epoch: two docs of one hot source that hash to the
+    # same one of its two salt buckets, so the other commits as empty
+    hashed = local_frame(
+        spark, [{"doc_id": f"rr_{i}"} for i in range(16)], "doc_id string"
+    ).select("doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(2))).collect()
+    ids = [d for d, b in hashed if b == hashed[0][1]][:2]
+    epoch = spark.createDataFrame(
+        [(d, list(range(600)), 600, "hot") for d in ids],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    assert encode_token_table(
+        spark, epoch, out, target_tokens=1_000
+    )["n_parts_empty"] == 1
+    compact_store(spark, out, target_tokens=20_000, vacuum=False)
+
+    path = manifest_path(out)
+    got = read_rows(spark, path, MANIFEST_SCHEMA)
+    want = read_typed(spark, path, MANIFEST_SCHEMA).toArrow().to_pylist()
+    _same_rows(got, want)
+    assert {r["status"] for r in got} == {"ok", "plan", "running"}
+    assert any(r["codec"] == "empty" for r in got)
+    assert all(
+        r["finished_at"].utcoffset() == dt.timedelta(0) for r in got
+    )
+
+
+def test_read_rows_reads_spark_written_files(spark, tmp_path):
+    """Files Spark wrote (remote stores, and filesystem stores from
+    before driver-side writes) read the same through both readers:
+    ``finished_at`` stored as INT96, and a file holding a column subset,
+    whose missing columns read as nulls."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        MANIFEST_SCHEMA,
+        local_frame,
+        read_rows,
+        read_typed,
+    )
+
+    path = str(tmp_path / "spark_written")
+    finished = dt.datetime(2026, 3, 4, 5, 6, 7, 891011, tzinfo=dt.timezone.utc)
+    conf = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "INT96")
+    try:
+        local_frame(
+            spark,
+            [{"run_id": "r1", "part_id": 3, "n_docs": 5, "status": "ok",
+              "encode_s": 0.25, "finished_at": finished},
+             {"run_id": "r2", "part_id": -1, "status": "running"}],
+            MANIFEST_SCHEMA,
+        ).coalesce(1).write.parquet(path)
+    finally:
+        spark.conf.set(conf, before)
+    spark.createDataFrame(
+        [("r3", "plan", 7, 4)],
+        "run_id string, status string, part_id int, salts int",
+    ).coalesce(1).write.mode("append").parquet(path)
+    files = [f for f in tmp_path.joinpath("spark_written").iterdir()
+             if f.name.startswith("part-")]
+    physical = {
+        c.name: c.physical_type
+        for f in files
+        for c in pq.ParquetFile(f).schema
+    }
+    assert physical["finished_at"] == "INT96"
+
+    for columns in (None, ["run_id", "finished_at", "salts"]):
+        frame = read_typed(spark, path, MANIFEST_SCHEMA)
+        if columns is not None:
+            frame = frame.select(*columns)
+        got = read_rows(spark, path, MANIFEST_SCHEMA, columns)
+        _same_rows(got, frame.toArrow().to_pylist())
+    by_run = {r["run_id"]: r for r in got}
+    assert by_run["r1"]["finished_at"] == finished
+    assert by_run["r3"]["salts"] == 4 and by_run["r3"]["finished_at"] is None
+
+
+def test_read_rows_listing_rules(tmp_path):
+    """The driver-side reader lists files as Spark does: a dot-prefixed
+    torn temporary and ``_SUCCESS`` are skipped, and a non-parquet
+    ``part-*.parquet`` raises instead of reading as no rows.  A missing
+    local path is ``None`` without asking Spark; a remote URI goes to
+    Spark."""
+    import pyarrow as pa
+    from pyspark.errors import AnalysisException
+
+    from etl_sql_duckdb_parquet__spark.encode.manifest import (
+        MANIFEST_SCHEMA,
+        read_rows,
+        write_rows,
+    )
+
+    class Raised(AnalysisException):
+        def __init__(self, condition):
+            self.condition = condition
+
+        def getCondition(self):
+            return self.condition
+
+    class Session:
+        def __init__(self, error):
+            self.error = error
+
+        @property
+        def read(self):
+            raise self.error
+
+    never = Session(AssertionError("a filesystem read reached Spark"))
+    d = tmp_path / "m"
+    write_rows(never, str(d), "a.parquet", [{"run_id": "r1"}], MANIFEST_SCHEMA)
+    (d / ".marker-x.parquet.0.tmp").write_bytes(b"PAR1 torn")
+    (d / "_SUCCESS").write_bytes(b"")
+    for path in (str(d), f"file:{d}"):
+        rows = read_rows(never, path, MANIFEST_SCHEMA)
+        assert [r["run_id"] for r in rows] == ["r1"]
+    (d / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(pa.ArrowInvalid):
+        read_rows(never, str(d), MANIFEST_SCHEMA)
+
+    for path in (str(tmp_path / "absent"), f"file:{tmp_path}/absent"):
+        assert read_rows(never, path, MANIFEST_SCHEMA) is None
+    remote = "s3a://bucket/store/manifest"
+    assert read_rows(
+        Session(Raised("PATH_NOT_FOUND")), remote, MANIFEST_SCHEMA
+    ) is None
+    with pytest.raises(AnalysisException):
+        read_rows(Session(Raised("UNABLE_TO_INFER_SCHEMA")), remote,
+                  MANIFEST_SCHEMA)
+
+
 def test_manifest_write_crash_leaves_store_readable(
     spark, tmp_path, monkeypatch
 ):

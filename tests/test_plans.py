@@ -263,45 +263,56 @@ def _jobs_run_by(spark, call) -> int:
 
 
 def test_store_calls_run_one_job_per_metadata_read(spark, tmp_path):
-    """Store-layer calls pay one Spark job per metadata read, not one per
-    decision: typed reads (no footer-inference jobs), one collect per
-    manifest read, driver-built frames as LocalRelations, and metadata
-    rows written by the driver.  An encode is the stats scan (2), the
-    sink write (3: plan broadcast, shuffle, write) and the commit
-    collect; a decode plan costs its one manifest collect; a candidate
-    lookup too, its plan rows being manifest rows."""
+    """Store-layer calls pay one Spark job per metadata read on a remote
+    store and none on a filesystem store, where ``manifest.read_rows``
+    reads the metadata files on the driver with pyarrow (as
+    ``write_rows`` writes them); every decision runs on the driver and
+    driver-built frames are LocalRelations.  An encode is then the stats
+    scan (2) and the sink write (3: plan broadcast, shuffle, write); a
+    decode plan, a candidate lookup and the manifest report run none."""
     from etl_sql_duckdb_parquet__spark.encode import (
         candidate_parts,
         decode_token_table,
         encode_token_table,
         synth_token_table,
     )
+    from etl_sql_duckdb_parquet__spark.encode.report import manifest_report
+    from etl_sql_duckdb_parquet__spark.etl.history import EventLog
 
     df = synth_token_table(spark, n_docs=200, seed=5)
     out = str(tmp_path / "jobs_store")
     assert _jobs_run_by(
         spark, lambda: encode_token_table(spark, df, out, target_tokens=20_000)
-    ) == 6
-    assert _jobs_run_by(spark, lambda: decode_token_table(spark, out)) == 1
+    ) == 5
+    assert _jobs_run_by(spark, lambda: decode_token_table(spark, out)) == 0
     assert _jobs_run_by(
         spark, lambda: candidate_parts(spark, out, ["doc_000000000001"])
-    ) == 1
+    ) == 0
+    log = EventLog(spark, out)
+    log.start("docs", "encode")
+    log.end("docs", "encode", n_rows=200)
+    log.flush()
+    report = []
+    assert _jobs_run_by(
+        spark, lambda: report.append(manifest_report(spark, out))
+    ) == 0
+    assert "| docs | encode | ok | 200 |" in report[0], report[0]
 
 
 def test_store_call_job_budgets(spark, tmp_path):
-    """The rest of a store's life, one pin per call:
+    """The rest of a store's life on a filesystem store, one pin per
+    call (a remote store adds one job per metadata read):
 
-    - a resumed one-part encode (a drain epoch): stats scan (2), the
-      completed-parts collect, shuffle, write and commit collect — no
-      plan broadcast (the one part is a literal) and no manifest write
-      job (6);
-    - a decode run: its manifest collect and the scan, winners being a
-      run filter, not a broadcast join (2);
-    - ``lookup_docs(...).collect()``: its ``candidate_parts`` (1), the
-      decode's manifest collect and the scan, ids being a filter (3);
-    - ``compact_store``: its manifest collect, the union decode's, a
-      resumed multi-part encode (7) and vacuum's read and pre-swap
-      re-read (11).
+    - a resumed one-part encode (a drain epoch): stats scan (2), shuffle
+      and write — no plan broadcast (the one part is a literal), and the
+      completed-parts read, the commit read and the manifest write run
+      on the driver (4);
+    - a decode run: the scan alone, winners being a run filter, not a
+      broadcast join (1);
+    - ``lookup_docs(...).collect()``: the scan, ids being a filter (1);
+    - ``compact_store``: a resumed multi-part encode (5); its guard read,
+      the union decode's plan and vacuum's read and pre-swap re-read run
+      none (5).
     """
     from etl_sql_duckdb_parquet__spark.encode import (
         compact_store,
@@ -326,13 +337,13 @@ def test_store_call_job_budgets(spark, tmp_path):
             encode_token_table(spark, epoch, out, target_tokens=20_000)
         )
 
-    assert _jobs_run_by(spark, drain_epoch) == 6
+    assert _jobs_run_by(spark, drain_epoch) == 4
     assert stats["n_parts_planned"] == 1
     assert _jobs_run_by(
         spark,
         lambda: decode_token_table(spark, out, snapshots="all")
         .write.format("noop").mode("overwrite").save(),
-    ) == 2
+    ) == 1
     found = []
     assert _jobs_run_by(
         spark,
@@ -341,11 +352,11 @@ def test_store_call_job_budgets(spark, tmp_path):
                 spark, out, ["e_doc_000000000001"], snapshots="all"
             ).collect()
         ),
-    ) == 3
+    ) == 1
     assert [r["doc_id"] for r in found] == ["e_doc_000000000001"]
     assert _jobs_run_by(
         spark, lambda: compact_store(spark, out, target_tokens=20_000)
-    ) == 11
+    ) == 5
 
 
 def _classes_compiled_by(spark, call) -> int:

@@ -633,18 +633,18 @@ def test_vacuum_aborts_on_marker_appended_mid_vacuum(spark, tmp_path, monkeypatc
     df = _wave(spark, 100, seed=51, prefix="rc_")
     stats = encode_token_table(spark, df, out, target_tokens=20_000)
 
-    real = maintenance.read_manifest
+    real = maintenance.manifest_rows
     calls = {"n": 0}
 
-    def hooked(sp, od):
+    def hooked(sp, od, *args):
         calls["n"] += 1
         if calls["n"] == 2:  # between the guard read and the swap
             append_running_marker(
                 sp, od, "run_late_sim", stats["snapshot_id"]
             )
-        return real(sp, od)
+        return real(sp, od, *args)
 
-    monkeypatch.setattr(maintenance, "read_manifest", hooked)
+    monkeypatch.setattr(maintenance, "manifest_rows", hooked)
     with pytest.raises(RuntimeError, match="run_late_sim"):
         maintenance.vacuum_store(spark, out)
     monkeypatch.undo()
