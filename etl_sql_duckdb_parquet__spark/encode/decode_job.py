@@ -225,9 +225,9 @@ def _resolve_snapshots(
     decode actually reads.
 
     Returns the selection's ok ``(snapshot_id, part_id, run_id, codec,
-    finished_at)`` manifest rows and its plan ``(snapshot_id, source,
-    part_id, salts)`` rows — one manifest read; every decision after it
-    runs on the driver.  Validates the argument and, for an explicit
+    finished_at, n_tokens)`` manifest rows and its plan ``(snapshot_id,
+    source, part_id, salts)`` rows — one manifest read; every decision
+    after it runs on the driver.  Validates the argument and, for an explicit
     ``snap_`` id, its existence — a typo'd id must raise here, not
     surface downstream as a misleading plan-coverage error.
     """
@@ -242,7 +242,7 @@ def _resolve_snapshots(
         spark,
         out_dir,
         ["snapshot_id", "part_id", "run_id", "codec", "finished_at",
-         "status", "source", "salts"],
+         "n_tokens", "status", "source", "salts"],
     )
     if rows is None:
         raise FileNotFoundError(f"no manifest under {out_dir}")
@@ -306,12 +306,10 @@ def candidate_parts(
             "(a resumed no-op run backfills the plan), or decode fully "
             "and filter"
         )
-    # stores written by the retired uniform-hash plan carry source=NULL
-    # plan rows, which match any doc
     ranges = {
         (r["part_id"], r["salts"])
         for r in plan
-        if source is None or r["source"] is None or r["source"] == source
+        if source is None or r["source"] == source
     }
     hashes = (
         local_frame(

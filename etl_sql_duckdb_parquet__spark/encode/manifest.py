@@ -16,7 +16,7 @@ Three kinds of row, by ``status``:
 - ``'running'``: a run's in-flight marker (``part_id = -1``);
 - ``'plan'``: one source's slice of the snapshot's doc→partition plan,
   ``part_id = offset + pmod(xxhash64(doc_id), salts)`` with ``part_id``
-  holding the offset (``source`` is NULL for a uniform plan).
+  holding the offset.
 
 Resume = anti-join of the planned partition list against committed
 manifest rows for the same input snapshot — only missing/failed partitions
@@ -31,6 +31,7 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST_SCHEMA = (
     "run_id string, snapshot_id string, part_id int, codec string, "
@@ -78,7 +79,7 @@ def local_frame(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
 
 
 def read_typed(
-    spark: SparkSession, path: str, ddl: str
+    spark: SparkSession, path: str, ddl: str | StructType
 ) -> DataFrame | None:
     """``path`` read with a declared schema, or ``None`` when it does not
     exist.  An untyped ``spark.read.parquet`` runs a footer-inference job

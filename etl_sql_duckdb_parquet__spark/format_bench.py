@@ -34,21 +34,6 @@ from pyspark.sql import functions as F
 DOC_SCHEMA = "doc_id string, text string, lang string, source string, n_chars long"
 
 
-def _latest_ok_manifest(spark: SparkSession, store: str):
-    """(latest snapshot id, manifest rows scoped to it) — exactly what a
-    default ``decode``/``lookup`` reads: running markers and earlier
-    snapshots (a reused work dir accumulates them via resume) excluded,
-    so reported totals describe the store the timed paths decode."""
-    from .encode.decode_job import _resolve_snapshots
-    from .encode.manifest import read_manifest
-
-    snap = _resolve_snapshots(spark, store, "latest")[0][0]["snapshot_id"]
-    m = read_manifest(spark, store).filter(
-        (F.col("status") == "ok") & (F.col("snapshot_id") == snap)
-    )
-    return snap, m
-
-
 def _replicate(df: DataFrame, n: int, id_col: str) -> DataFrame:
     """Deterministically inflate a table n-fold (distinct ids per copy) so
     scan costs dominate fixed job overhead at small SF."""
@@ -194,6 +179,7 @@ def run_lookup_at_scale(
     candidate computation (the honest end-to-end cost a caller pays).
     """
     from .encode.decode_job import (
+        _resolve_snapshots,
         candidate_parts,
         decode_token_table,
         lookup_docs,
@@ -204,11 +190,8 @@ def run_lookup_at_scale(
     store = os.path.join(work_dir, "lookup_store")
     toks = synth_token_table(spark, n_docs)
     encode_token_table(spark, toks, store, resume=True)
-    _, m = _latest_ok_manifest(spark, store)
-    tot = m.agg(
-        F.sum("n_tokens").alias("t"),
-        F.countDistinct("part_id").alias("p"),
-    ).first()
+    # the latest snapshot's ok rows: what a default decode/lookup reads
+    ok, _ = _resolve_snapshots(spark, store, "latest")
     # ids drawn from one known source — the common case the lookup API
     # documents (the caller knows which feed a doc came from); the
     # source-unknown variant probes one candidate per (id, source)
@@ -236,8 +219,8 @@ def run_lookup_at_scale(
     )
     return {
         "n_docs": n_docs,
-        "n_tokens": int(tot["t"]),
-        "n_parts": int(tot["p"]),
+        "n_tokens": sum(r["n_tokens"] for r in ok),
+        "n_parts": len({r["part_id"] for r in ok}),
         "n_ids": len(ids),
         "cand_src": len(cand_src),
         "cand_any": len(cand_any),
@@ -259,6 +242,7 @@ def run_format_benchmark(
     """Run the suite; returns the markdown report."""
     from .encode.cli import dir_bytes
     from .encode.decode_job import (
+        _resolve_snapshots,
         candidate_parts,
         decode_token_table,
         lookup_docs,
@@ -317,8 +301,8 @@ def run_format_benchmark(
             .limit(3)
             .collect()
         ]
-        _, scoped_m = _latest_ok_manifest(spark, paths["blobs"])
-        n_parts = scoped_m.select("part_id").distinct().count()
+        ok, _ = _resolve_snapshots(spark, paths["blobs"], "latest")
+        n_parts = len({r["part_id"] for r in ok})
         cand = candidate_parts(
             spark, paths["blobs"], ids, source=src_name, snapshots="latest"
         )

@@ -19,10 +19,12 @@ this replaces polling with exactly-once streaming semantics.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..streaming._drain import drain_available_now
+
+_EVENTS = {"pathGlobFilter": "events.parquet"}
 
 
 def q57_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -32,38 +34,16 @@ def q57_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     are correctly withheld — asserting on the emitted set IS asserting
     the watermark semantics.
     """
-    # Drop memory-sink views left by earlier invocations in this session
-    # (each call gets a fresh name; old ones would otherwise pin their
-    # full result sets in driver memory for the session's lifetime).
-    for tbl in spark.catalog.listTables():
-        if tbl.name.startswith("q57_mem_"):
-            spark.catalog.dropTempView(tbl.name)
-    path = f"{sf_dir}/events.parquet"
-    qname = f"q57_mem_{uuid.uuid4().hex}"
-    # Hour-bucket alignment and the NTZ→instant cast depend on the
-    # session timezone (bound at plan analysis and captured by the
-    # streaming query at start); pin it to UTC for the build+run and
-    # restore the caller's setting afterwards (the sink then holds
-    # materialized NTZ results, which collect timezone-free).
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        sch = spark.read.parquet(path).schema
-        # The file streaming source wants a directory to watch; scope it
-        # to the events file with a glob filter (in production this is
-        # the landing directory and the filter matches the table's file
-        # pattern).
-        src = (
-            spark.readStream.schema(sch)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
+
+    def rollup(src: DataFrame) -> DataFrame:
         # Watermarks require an instant (TIMESTAMP) column; the testdata
-        # `ts` is TIMESTAMP_NTZ.  Under the pinned UTC timezone the
+        # `ts` is TIMESTAMP_NTZ.  Under the runner's UTC pin the
         # NTZ→instant→NTZ round-trip is the identity and window
-        # boundaries align with DuckDB's naive hour buckets.
+        # boundaries align with DuckDB's naive hour buckets; the memory
+        # sink holds the materialized NTZ results, which collect
+        # timezone-free.
         src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-        agg = (
+        return (
             src.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
             .agg(
@@ -71,25 +51,20 @@ def q57_streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 4).alias("sum_value"),
             )
             .select(
-                F.col("win.start")
-                .cast("timestamp_ntz")
-                .alias("window_start"),
+                F.col("win.start").cast("timestamp_ntz").alias("window_start"),
                 "event_type",
                 "n_events",
                 "sum_value",
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-    return spark.table(qname).orderBy("window_start", "event_type")
+
+    # The file streaming source wants a directory to watch; the glob
+    # scopes it to the events file (in production this is the landing
+    # directory and the filter matches the table's file pattern).
+    _, emitted = drain_available_now(
+        spark, sf_dir, rollup, memory_view="q57_mem_", options=_EVENTS
+    )
+    return emitted.orderBy("window_start", "event_type")
 
 
 def q64_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,25 +87,11 @@ def q64_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``datetime64[ms]``), and epoch-ms integers compare across engines
     free of timezone/precision formatting hazards.
     """
-    import tempfile
-
     from ..streaming.sessions import sessionize_events
 
-    for tbl in spark.catalog.listTables():
-        if tbl.name.startswith("q64_mem_"):
-            spark.catalog.dropTempView(tbl.name)
-    qname = f"q64_mem_{uuid.uuid4().hex}"
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        sch = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        src = (
-            spark.readStream.schema(sch)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
+    def sessions(src: DataFrame) -> DataFrame:
         sess = sessionize_events(src, gap_seconds=1800, watermark="1 hour")
-        out = sess.select(
+        return sess.select(
             "user_id",
             F.unix_millis("session_start").alias("session_start_ms"),
             F.unix_millis("session_end").alias("session_end_ms"),
@@ -138,47 +99,24 @@ def q64_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("sum_value", 4).alias("sum_value"),
             "closed_by",
         )
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                out.writeStream.format("memory")
-                .queryName(qname)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            # ORACLE INVARIANT: the DuckDB twin derives closed_by purely
-            # from position (non-tail='gap', tail='timeout'), which
-            # matches the kernel only because this drain processes the
-            # single events.parquet file in EXACTLY ONE data batch (the
-            # watermark is 0 while it runs, so nothing closes by timeout
-            # mid-drain and no late row is dropped).  A batching change
-            # (maxFilesPerTrigger, a second file matching the glob) must
-            # fail loudly here, not as a silent driver-gate mismatch.
-            # recentProgress is a ring buffer that Spark trims to fewer
-            # than numRecentProgressUpdates entries: a full buffer may
-            # have dropped data batches, so it cannot prove the invariant.
-            progress = q.recentProgress
-            cap = int(
-                spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
-            )
-            if len(progress) >= cap - 1:
-                raise AssertionError(
-                    "q64's progress buffer is full "
-                    f"(numRecentProgressUpdates={cap}); it cannot show "
-                    "that the drain ran one data batch"
-                )
-            data_batches = [p for p in progress if p["numInputRows"] > 0]
-            if len(data_batches) != 1:
-                raise AssertionError(
-                    f"q64 drained {len(data_batches)} data batches; the "
-                    "positional gap/timeout oracle is only valid for a "
-                    "single-data-batch drain"
-                )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-    return spark.table(qname).orderBy("user_id", "session_start_ms")
+
+    metrics, emitted = drain_available_now(
+        spark, sf_dir, sessions, memory_view="q64_mem_", options=_EVENTS
+    )
+    # ORACLE INVARIANT: the DuckDB twin derives closed_by purely from
+    # position (non-tail='gap', tail='timeout'), which matches the kernel
+    # only because this drain processes the single events.parquet file in
+    # EXACTLY ONE data batch (the watermark is 0 while it runs, so nothing
+    # closes by timeout mid-drain and no late row is dropped).  A batching
+    # change (maxFilesPerTrigger, a second file matching the glob) must
+    # fail loudly here, not as a silent driver-gate mismatch.
+    if metrics.data_batches != 1:
+        raise AssertionError(
+            f"q64 drained {metrics.data_batches} data batches; the "
+            "positional gap/timeout oracle is only valid for a "
+            "single-data-batch drain"
+        )
+    return emitted.orderBy("user_id", "session_start_ms")
 
 
 STREAMING_AGG_ORACLES: dict[str, str] = {

@@ -43,8 +43,8 @@ def dedup_stream(
     """Drop re-delivered rows by key within the event-time watermark.
 
     ``ts_col`` is cast to an instant (watermarks require TIMESTAMP, not
-    NTZ — pin the session timezone around build+run like q57/q64 when
-    wall-clock alignment matters downstream).
+    NTZ) under the drain runner's UTC session timezone
+    (``streaming/_drain.py``).
     """
     src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return src.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
@@ -73,35 +73,26 @@ def run_dedup_available_now(
     This is the production-parity audit trail the reference kept per ETL
     run (``src/history.py:55-87``): every drain accounts for each input
     row as emitted, deduped, or watermark-dropped.  All counts come from
-    the streaming progress JSON (driver-side, O(batches)) plus ONE
-    distributed count over just this drain's sink files — never O(data)
-    driver traffic.
+    the runner's progress listener (driver-side, O(batches)) plus ONE
+    distributed count over just this drain's committed sink files — never
+    O(data) driver traffic.
     """
-    from ._drain import new_files_frame, run_parquet_drain
+    from ._drain import drain_available_now
 
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        metrics, new_files = run_parquet_drain(
-            spark,
-            input_dir,
-            checkpoint_dir,
-            output_dir,
-            lambda src: dedup_stream(src, key_cols, ts_col, watermark),
-            path_glob_filter=path_glob_filter,
-        )
-        n_input = metrics.input_rows
-        dropped = metrics.dropped_by_watermark
-        n_emitted = (
-            new_files_frame(spark, output_dir, new_files).count()
-            if new_files
-            else 0
-        )
-        return {
-            "n_input_rows": n_input,
-            "n_emitted": n_emitted,
-            "n_duplicates_dropped": n_input - n_emitted - dropped,
-            "rows_dropped_by_watermark": dropped,
-        }
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
+    metrics, emitted = drain_available_now(
+        spark,
+        input_dir,
+        lambda src: dedup_stream(src, key_cols, ts_col, watermark),
+        output_dir=output_dir,
+        checkpoint_dir=checkpoint_dir,
+        options={"pathGlobFilter": path_glob_filter},
+    )
+    n_input = metrics.input_rows
+    dropped = metrics.dropped_by_watermark
+    n_emitted = emitted.count()
+    return {
+        "n_input_rows": n_input,
+        "n_emitted": n_emitted,
+        "n_duplicates_dropped": n_input - n_emitted - dropped,
+        "rows_dropped_by_watermark": dropped,
+    }

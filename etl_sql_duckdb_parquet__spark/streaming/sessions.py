@@ -153,7 +153,7 @@ def sessionize_events(
     """Streaming (user_id, ts, value) → closed sessions, append mode.
 
     Watermarks require an instant column — the NTZ ``ts`` is cast under
-    the caller-pinned session timezone (see :func:`run_sessionize_available_now`).
+    the drain runner's UTC session timezone (``streaming/_drain.py``).
     """
     src = stream_df.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
@@ -196,58 +196,42 @@ def run_sessionize_available_now(
     the stop-and-catch-up cadence of a scheduled ingest job.
 
     Scale note: the report counts are aggregated DISTRIBUTED over just
-    this drain's sink files (listing diff before/after the drain, read
-    back through the ``_spark_metadata``-respecting reader) — driver
-    traffic is O(1) numbers, never O(emitted sessions); a backfill drain
-    that closes hundreds of millions of sessions reports the same few
-    scalars.  Raw rows are returned only under an explicit ``report_rows``
-    cap, fetched as a sorted ``limit(cap)``.  Stale uncommitted files from
-    a crashed earlier drain sit in the before-listing and are ignored by
-    the committed-files reader, so a recovery drain reports exactly its
-    own replayed emissions.
+    the files this drain committed to the sink (the runner lists them from
+    the sink's ``_spark_metadata`` log) — driver traffic is O(1) numbers,
+    never O(emitted sessions); a backfill drain that closes hundreds of
+    millions of sessions reports the same few scalars.  Raw rows are
+    returned only under an explicit ``report_rows`` cap, fetched as a
+    sorted ``limit(cap)``.  Stale uncommitted files from a crashed earlier
+    drain are not in the log, so a recovery drain reports exactly its own
+    replayed emissions.
     """
-    from ._drain import new_files_frame, run_parquet_drain
+    from ._drain import drain_available_now
 
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        metrics, new_files = run_parquet_drain(
-            spark,
-            input_dir,
-            checkpoint_dir,
-            output_dir,
-            lambda src: sessionize_events(src, gap_seconds, watermark),
-            path_glob_filter=path_glob_filter,
-        )
-        report = {
-            "emitted_sessions": 0,
-            "emitted_by": {"gap": 0, "timeout": 0},
-            "rows_dropped_by_watermark": metrics.dropped_by_watermark,
-            "rows": [] if report_rows is not None else None,
-        }
-        if not new_files:
-            return report
-        emitted = new_files_frame(spark, output_dir, new_files)
-        counts = {
-            r["closed_by"]: r["n"]
-            for r in emitted.groupBy("closed_by")
-            .agg(F.count("*").alias("n"))
-            .collect()  # ≤2 rows
-        }
-        report["emitted_by"] = {
-            k: counts.get(k, 0) for k in ("gap", "timeout")
-        }
-        report["emitted_sessions"] = sum(counts.values())
-        if report_rows is not None:
-            report["rows"] = [
-                r.asDict()
-                for r in emitted.orderBy("user_id", "session_start")
-                .limit(report_rows)
-                .collect()
-            ]
-        return report
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
+    metrics, emitted = drain_available_now(
+        spark,
+        input_dir,
+        lambda src: sessionize_events(src, gap_seconds, watermark),
+        output_dir=output_dir,
+        checkpoint_dir=checkpoint_dir,
+        options={"pathGlobFilter": path_glob_filter},
+    )
+    counts = {
+        r["closed_by"]: r["count"]
+        for r in emitted.groupBy("closed_by").count().collect()  # ≤2 rows
+    }
+    return {
+        "emitted_sessions": sum(counts.values()),
+        "emitted_by": {k: counts.get(k, 0) for k in ("gap", "timeout")},
+        "rows_dropped_by_watermark": metrics.dropped_by_watermark,
+        "rows": None
+        if report_rows is None
+        else [
+            r.asDict()
+            for r in emitted.orderBy("user_id", "session_start")
+            .limit(report_rows)
+            .collect()
+        ],
+    }
 
 
 def main(argv: list | None = None) -> dict:

@@ -6,7 +6,9 @@ accumulated store must be bit-identical to the union of the inputs.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
@@ -22,6 +24,10 @@ from etl_sql_duckdb_parquet__spark.encode.synth import (  # noqa: E402
 from etl_sql_duckdb_parquet__spark.streaming import (  # noqa: E402
     run_available_now,
 )
+from etl_sql_duckdb_parquet__spark.streaming._drain import (  # noqa: E402
+    DrainMetricsListener,
+    drain_available_now,
+)
 
 
 def _wave(spark, n_docs: int, seed: int, prefix: str):
@@ -29,6 +35,40 @@ def _wave(spark, n_docs: int, seed: int, prefix: str):
     return synth_token_table(spark, n_docs, seed=seed).withColumn(
         "doc_id", F.concat(F.lit(prefix), F.col("doc_id"))
     )
+
+
+def _land_one_file_per_batch(spark, tmp_path, name, batches, schema):
+    """Land each batch of rows as one parquet file ``f{i}.parquet`` under
+    ``tmp_path/name``, with increasing mtimes: the file source reads them
+    in that order, one per micro-batch under ``maxFilesPerTrigger=1``."""
+    landing = tmp_path / name
+    landing.mkdir()
+    for i, rows in enumerate(batches):
+        stage = str(tmp_path / f"{name}_stage{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(stage)
+        part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
+        dst = landing / f"f{i}.parquet"
+        shutil.copy(os.path.join(stage, part), dst)
+        os.utime(dst, (1_700_000_000 + i * 100,) * 2)
+    return str(landing)
+
+
+def _progress(run_id, rows, dropped=0):
+    """A listener progress event as the Py4J bridge delivers it."""
+
+    class Progress(dict):
+        pass
+
+    p = Progress(
+        numInputRows=rows,
+        stateOperators=[{"numRowsDroppedByWatermark": dropped}],
+    )
+    p.runId = run_id
+    return SimpleNamespace(progress=p)
+
+
+def _terminated(run_id):
+    return SimpleNamespace(runId=run_id)
 
 
 def test_incremental_encode_two_waves_bit_identical(spark, tmp_path):
@@ -145,13 +185,11 @@ def test_watermark_drops_late_events_across_batches(spark, tmp_path):
     an event arriving after its window was flushed in an earlier
     micro-batch must be dropped by the watermark — the finalized window
     keeps its on-time count and no duplicate window row is emitted."""
-    import shutil as _sh
     from datetime import datetime
 
     def _ev(h, m):
         return (datetime(2024, 1, 1, h, m), "click", 1.0)
 
-    sch = "ts timestamp_ntz, event_type string, value double"
     waves = [
         # batch 0: hours 0-5 on time -> end-of-batch watermark 4:30
         [_ev(h, m) for h in range(6) for m in (10, 20, 30)],
@@ -161,73 +199,34 @@ def test_watermark_drops_late_events_across_batches(spark, tmp_path):
         # be dropped; 7:10 advances the watermark so hours 4-5 flush
         [_ev(1, 40), _ev(7, 10)],
     ]
+    landing = _land_one_file_per_batch(
+        spark, tmp_path, "wm_landing", waves,
+        "ts timestamp_ntz, event_type string, value double",
+    )
 
-    landing = tmp_path / "wm_landing"
-    landing.mkdir()
-    for i, rows in enumerate(waves):
-        stage = str(tmp_path / f"wm_stage{i}")
-        spark.createDataFrame(rows, sch).coalesce(1).write.parquet(stage)
-        part = next(
-            p for p in os.listdir(stage) if p.endswith(".parquet")
-        )
-        dst = landing / f"f{i}.parquet"
-        _sh.copy(os.path.join(stage, part), dst)
-        # distinct mtimes pin the file-source processing order
-        os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        src = (
-            spark.readStream.schema(sch)
-            .option("maxFilesPerTrigger", 1)  # one file per micro-batch
-            .parquet(str(landing))
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-        agg = (
+    def hourly(src):
+        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
+        return (
             src.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("win"))
             .agg(F.count("*").alias("n_events"))
             .select(F.hour(F.col("win.start")).alias("h"), "n_events")
         )
-        from etl_sql_duckdb_parquet__spark.streaming._drain import (
-            drain_metrics,
-        )
 
-        with drain_metrics(spark) as metrics:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName("wm_late_test")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            metrics.bind(q.runId)
-            q.awaitTermination()
-        rows = spark.table("wm_late_test").collect()
-        dropped = sum(
-            op["numRowsDroppedByWatermark"]
-            for p in q.recentProgress
-            for op in p["stateOperators"]
-        )
-        # the listener-accumulated audit counters must agree with the
-        # (here un-truncated, 4-batch) progress ring buffer — proving the
-        # per-batch accumulation that stays exact past the ring buffer's
-        # ~100-entry cap on a real backfill drain
-        assert metrics.dropped_by_watermark == dropped
-        assert metrics.input_rows == sum(
-            p["numInputRows"] for p in q.recentProgress
-        )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-        spark.catalog.dropTempView("wm_late_test")
-
+    metrics, emitted = drain_available_now(
+        spark, landing, hourly, memory_view="wm_late_",
+        options={"maxFilesPerTrigger": 1},  # one file per micro-batch
+    )
+    rows = emitted.collect()
+    # the listener saw every row of the three data batches, and the state
+    # operator's one watermark drop
+    assert (metrics.input_rows, metrics.data_batches) == (21, 3)
+    assert metrics.dropped_by_watermark == 1
     got = sorted((r["h"], r["n_events"]) for r in rows)
     # hour 1 keeps its on-time count of 3 (late 1:40 dropped, counted by
     # the state operator), hour 5 includes the on-time 5:40, hour 7 stays
     # open (not emitted), and no window appears twice
     assert got == [(0, 3), (1, 3), (2, 3), (3, 3), (4, 3), (5, 4)]
-    assert dropped == 1
 
 
 def test_q57_twice_in_one_session_is_identical(spark):
@@ -285,91 +284,57 @@ def test_q64_twice_in_one_session_is_identical(spark):
     assert len(views) == 1
 
 
-def test_q64_refuses_a_full_progress_buffer(spark):
-    """q64's one-data-batch check reads ``q.recentProgress``, a ring
-    buffer of ``spark.sql.streaming.numRecentProgressUpdates`` entries: a
-    full buffer may have dropped batches, so q64 must raise rather than
-    pass the check on what is left."""
-    import pytest
-
-    from etl_sql_duckdb_parquet__spark.queries.streaming_agg import (
-        q64_streaming_sessions,
-    )
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01"
-    )
-    conf = "spark.sql.streaming.numRecentProgressUpdates"
-    before = spark.conf.get(conf)
-    spark.conf.set(conf, "1")
-    try:
-        with pytest.raises(AssertionError, match="progress buffer is full"):
-            q64_streaming_sessions(spark, sf_dir)
-    finally:
-        spark.conf.set(conf, before)
+def test_drain_listener_counts_data_batches():
+    """q64's one-data-batch invariant reads ``data_batches``: progress
+    events that read no rows (the trailing watermark-only batches) are not
+    data batches, and another run's events, before or after the bind,
+    never count."""
+    m = DrainMetricsListener()
+    m.onQueryProgress(_progress("other", 9))
+    m.onQueryProgress(_progress("own", 0))
+    m.bind("own")
+    m.onQueryProgress(_progress("own", 5))
+    m.onQueryProgress(_progress("other", 4))
+    m.onQueryProgress(_progress("own", 0))
+    assert (m.data_batches, m.input_rows) == (1, 5)
+    m.onQueryProgress(_progress("own", 1))
+    assert m.data_batches == 2
 
 
 def test_drain_metrics_exact_past_progress_ring_buffer(spark, tmp_path):
     """The audit counters must stay exact when a drain outruns
-    ``q.recentProgress`` (a ring buffer of the last
+    ``StreamingQuery.recentProgress`` (a ring buffer of the last
     ``spark.sql.streaming.numRecentProgressUpdates`` entries, default
-    ~100): shrink the buffer to 3, drain 8 one-file micro-batches, and
-    assert the listener counted all 8 while the ring buffer lost five."""
-    import shutil as _sh
+    ~100): shrink the buffer to 3, drain 8 one-file micro-batches through
+    the runner, and assert its listener counted all 8."""
     from datetime import datetime, timedelta
 
-    from etl_sql_duckdb_parquet__spark.streaming._drain import drain_metrics
-
-    sch = "ts timestamp_ntz, event_type string, value double"
-    landing = tmp_path / "rb_landing"
-    landing.mkdir()
     t0 = datetime(2024, 1, 1, 0, 0)
-    for i in range(8):
-        stage = str(tmp_path / f"rb_stage{i}")
-        spark.createDataFrame(
-            [(t0 + timedelta(minutes=i), "click", 1.0)], sch
-        ).coalesce(1).write.parquet(stage)
-        part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
-        dst = landing / f"f{i}.parquet"
-        _sh.copy(os.path.join(stage, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 100,) * 2)
+    landing = _land_one_file_per_batch(
+        spark, tmp_path, "rb_landing",
+        [[(t0 + timedelta(minutes=i), "click", 1.0)] for i in range(8)],
+        "ts timestamp_ntz, event_type string, value double",
+    )
 
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    rb_before = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "3")
-    try:
-        src = (
-            spark.readStream.schema(sch)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing))
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-        agg = (
+    def per_hour(src):
+        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
+        return (
             src.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour"))
             .agg(F.count("*").alias("n"))
         )
-        with drain_metrics(spark) as metrics:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName("rb_test")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            metrics.bind(q.runId)
-            q.awaitTermination()
-        ring_sum = sum(p["numInputRows"] for p in q.recentProgress)
-        assert len(q.recentProgress) <= 3  # the buffer really truncated
-        assert ring_sum < 8  # ...and its sum silently undercounts
-        assert metrics.input_rows == 8  # the listener counted every batch
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", rb_before
+
+    conf = "spark.sql.streaming.numRecentProgressUpdates"
+    rb_before = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        metrics, _ = drain_available_now(
+            spark, landing, per_hour, memory_view="rb_",
+            options={"maxFilesPerTrigger": 1},
         )
-        spark.catalog.dropTempView("rb_test")
+    finally:
+        spark.conf.set(conf, rb_before)
+    assert (metrics.input_rows, metrics.data_batches) == (8, 8)
 
 
 def test_drain_listener_keeps_events_before_bind():
@@ -377,41 +342,21 @@ def test_drain_listener_keeps_events_before_bind():
     progress, or even its termination, before ``bind(q.runId)``: those
     must count, while another query's events, before or after the bind,
     must not."""
-    from types import SimpleNamespace
-
-    from etl_sql_duckdb_parquet__spark.streaming._drain import (
-        DrainMetricsListener,
-    )
-
-    class Progress(dict):
-        def __init__(self, run_id, rows, dropped=0):
-            super().__init__(
-                numInputRows=rows,
-                stateOperators=[{"numRowsDroppedByWatermark": dropped}],
-            )
-            self.runId = run_id
-
-    def progress(run_id, rows, dropped=0):
-        return SimpleNamespace(progress=Progress(run_id, rows, dropped))
-
-    def terminated(run_id):
-        return SimpleNamespace(runId=run_id)
-
     m = DrainMetricsListener()
-    m.onQueryProgress(progress("stale", 100, 7))
-    m.onQueryTerminated(terminated("stale"))
-    m.onQueryProgress(progress("own", 5, 1))
+    m.onQueryProgress(_progress("stale", 100, 7))
+    m.onQueryTerminated(_terminated("stale"))
+    m.onQueryProgress(_progress("own", 5, 1))
     m.bind("own")
-    m.onQueryProgress(progress("own", 3))
-    m.onQueryProgress(progress("stale", 50, 2))
+    m.onQueryProgress(_progress("own", 3))
+    m.onQueryProgress(_progress("stale", 50, 2))
     assert (m.input_rows, m.dropped_by_watermark) == (8, 1)
     assert not m.wait_terminated(0)
-    m.onQueryTerminated(terminated("own"))
+    m.onQueryTerminated(_terminated("own"))
     assert m.wait_terminated(0)
 
     early = DrainMetricsListener()
-    early.onQueryProgress(progress("own", 4))
-    early.onQueryTerminated(terminated("own"))
+    early.onQueryProgress(_progress("own", 4))
+    early.onQueryTerminated(_terminated("own"))
     early.bind("own")
     assert early.input_rows == 4 and early.wait_terminated(0)
 
@@ -657,26 +602,69 @@ def test_vacuum_aborts_on_marker_appended_mid_vacuum(spark, tmp_path, monkeypatc
     assert verify_roundtrip(df, decode_token_table(spark, out))["ok"]
 
 
-def test_drain_listing_refuses_unlistable_uris(tmp_path):
-    """data_files lists filesystem sinks only: a ``file:`` URI is the
-    same directory, and an object-store URI raises instead of listing
-    nothing (an empty listing would report every drained row as a
-    duplicate)."""
-    import pytest
+def test_drain_sink_as_uri_matches_plain_path(spark, tmp_path):
+    """The runner lists a parquet sink from its ``_spark_metadata`` commit
+    log: a sink named by a ``file:`` URI, or by a URI of a non-``file``
+    Hadoop filesystem (a ``viewfs`` mount of a local directory, standing
+    in for an object store), reports exactly what the plain path reports,
+    and a stray uncommitted part file planted in the sink before the
+    second drain is never counted as emitted."""
+    import datetime as dt
+    import uuid
 
-    from etl_sql_duckdb_parquet__spark.streaming._drain import data_files
+    from etl_sql_duckdb_parquet__spark.streaming import (
+        run_dedup_available_now,
+    )
 
-    sink = tmp_path / "sink"
-    (sink / "_spark_metadata").mkdir(parents=True)
-    (sink / "part-0001.parquet").write_bytes(b"")
-    (sink / "_spark_metadata" / "0.parquet").write_bytes(b"")
-    assert data_files(str(sink)) == {"part-0001.parquet"}
-    assert data_files(f"file:{sink}") == {"part-0001.parquet"}
-    with pytest.raises(NotImplementedError, match="s3a"):
-        data_files("s3a://b/sink")
+    landing = str(tmp_path / "uri_landing")
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    sch = "doc_id string, ts timestamp_ntz, value double"
+    waves = [
+        [("a", t0, 1.0), ("b", t0 + dt.timedelta(minutes=1), 2.0),
+         ("a", t0 + dt.timedelta(minutes=2), 1.5)],
+        [("c", t0 + dt.timedelta(minutes=3), 3.0),
+         ("b", t0 + dt.timedelta(minutes=4), 2.0)],
+    ]
+    mount = f"drain{uuid.uuid4().hex[:8]}"
+    spark.sparkContext._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{mount}.link./out",
+        f"file://{tmp_path / 'viewfs_out'}",
+    )
+    sinks = {
+        "plain": str(tmp_path / "plain_out"),
+        "uri": f"file:{tmp_path / 'uri_out'}",
+        "viewfs": f"viewfs://{mount}/out",
+    }
+    reports = {k: [] for k in sinks}
+    for i, rows in enumerate(waves):
+        spark.createDataFrame(rows, sch).write.mode("append").parquet(landing)
+        for name, out in sinks.items():
+            if i:
+                # an uncommitted copy of a committed part file, as a
+                # failed task attempt leaves one behind
+                local = str(tmp_path / f"{name}_out")
+                part = next(
+                    f for f in sorted(os.listdir(local))
+                    if f.endswith(".parquet")
+                )
+                shutil.copy(
+                    os.path.join(local, part),
+                    os.path.join(local, "part-99999-stray.c000.parquet"),
+                )
+            reports[name].append(
+                run_dedup_available_now(
+                    spark, landing, str(tmp_path / f"{name}_ckpt"), out
+                )
+            )
+    assert reports["uri"] == reports["viewfs"] == reports["plain"] == [
+        {"n_input_rows": 3, "n_emitted": 2, "n_duplicates_dropped": 1,
+         "rows_dropped_by_watermark": 0},
+        {"n_input_rows": 2, "n_emitted": 1, "n_duplicates_dropped": 1,
+         "rows_dropped_by_watermark": 0},
+    ]
 
 
-def test_streaming_dedup_across_drains(spark, tmp_path):
+def test_streaming_dedup_across_drains(spark, tmp_path, monkeypatch):
     """dropDuplicatesWithinWatermark-based feed dedup via the drain
     runner: an in-batch duplicate and a cross-drain re-delivery (state
     carried by the checkpoint) are both dropped and ACCOUNTED FOR in the
@@ -686,11 +674,8 @@ def test_streaming_dedup_across_drains(spark, tmp_path):
     import datetime as dt
 
     from etl_sql_duckdb_parquet__spark.streaming import (
+        _drain,
         run_dedup_available_now,
-    )
-    from etl_sql_duckdb_parquet__spark.streaming._drain import (
-        data_files,
-        new_files_frame,
     )
 
     landing = str(tmp_path / "dd_landing")
@@ -741,14 +726,20 @@ def test_streaming_dedup_across_drains(spark, tmp_path):
         sch,
     )
     w2.write.mode("append").parquet(landing)
-    before = data_files(outdir)
+    emitted = []
+
+    def spy(*args, **kwargs):
+        metrics, frame = drain_available_now(*args, **kwargs)
+        emitted.append(frame)
+        return metrics, frame
+
+    monkeypatch.setattr(_drain, "drain_available_now", spy)
+    before = set(spark.read.parquet(outdir).inputFiles())
     rep = drain()
-    # the report reads only this drain's committed files, not the sink's
-    # history; a set naming no committed file reads nothing
-    new = data_files(outdir) - before
-    read = new_files_frame(spark, outdir, new).inputFiles()
-    assert read and {p.rsplit("/", 1)[-1] for p in read} <= new
-    assert new_files_frame(spark, outdir, {"absent.parquet"}).count() == 0
+    # the report reads only the files this drain committed, not the
+    # sink's history
+    new = set(spark.read.parquet(outdir).inputFiles()) - before
+    assert new and set(emitted[0].inputFiles()) == new
     # d2's re-delivery hit the checkpointed state entry and was dropped;
     # d9 was watermark-dropped (audited separately from dedup); only the
     # genuinely new d4 was emitted

@@ -18,10 +18,7 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from etl_sql_duckdb_parquet__spark.queries.common import TABLES  # noqa: E402
 
 
 def canon(df) -> list[tuple]:
