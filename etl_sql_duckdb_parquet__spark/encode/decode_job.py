@@ -23,7 +23,14 @@ from pyspark.sql import functions as F
 
 from ..codecs import decode_int, decode_strings
 from .encode_job import BLOB_SCHEMA
-from .manifest import blobs_path, local_frame, manifest_rows
+from .manifest import (
+    blobs_path,
+    live_rows,
+    local_frame,
+    manifest_rows,
+    recency,
+    winners,
+)
 
 DECODED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -113,12 +120,13 @@ def winning_blobs(
     ``snapshots="latest"`` (default): only the most recently finished
     input snapshot is decoded — a store that saw the table re-encoded
     after an input change never mixes partitions across snapshots.
-    ``snapshots="all"``: additive/append mode — every snapshot's winning
-    partitions are unioned (each ingest batch encoded as its own snapshot
-    concatenates, the Iceberg-append ingestion shape).  Note the snapshot
-    id includes the encode plan parameters, so the SAME data re-encoded
-    under a different ``target_tokens`` counts as two snapshots here —
-    use "latest" or an explicit id in that situation.
+    ``snapshots="all"``: additive/append mode — the live partitions of
+    every snapshot (:func:`manifest.live_rows`) are unioned: each ingest
+    batch encoded as its own snapshot concatenates (the Iceberg-append
+    ingestion shape), and what a compaction absorbed is left out.  Note
+    the snapshot id includes the encode plan parameters, so the SAME data
+    re-encoded under a different ``target_tokens`` counts as two
+    snapshots here — use "latest" or an explicit id in that situation.
     ``snapshots="snap_..."``: decode exactly that snapshot id (as recorded
     in the manifest), pinning the choice independent of finish order.
     Within a snapshot, the winner per part_id is the latest OK run — the
@@ -137,18 +145,21 @@ def winning_blobs(
     on the same assumption the commit does: a run's directory holds
     exactly that run's commit.
     """
-    rows, _ = _resolve_snapshots(spark, out_dir, snapshots)
-    best: dict[tuple[str, int], dict] = {}
-    for r in rows:
-        key = (r["snapshot_id"], r["part_id"])
-        if key not in best or _recency(r) > _recency(best[key]):
-            best[key] = r
+    ok, _ = _resolve_snapshots(spark, out_dir, snapshots)
+    return scan_winners(spark, out_dir, ok)
+
+
+def scan_winners(
+    spark: SparkSession, out_dir: str, ok: list[dict]
+) -> DataFrame:
+    """The blob rows of the winning partitions among ok manifest rows
+    ``ok`` (see :func:`winning_blobs`)."""
     # only partitions that received docs have blob rows
     stored = {
-        (r["part_id"], r["run_id"]) for r in rows if r["codec"] != "empty"
+        (r["part_id"], r["run_id"]) for r in ok if r["codec"] != "empty"
     }
-    winners = {(r["part_id"], r["run_id"]) for r in best.values()} & stored
-    runs = sorted({run for _, run in winners})
+    won = {(r["part_id"], r["run_id"]) for r in winners(ok)} & stored
+    runs = sorted({run for _, run in won})
     if not runs:
         return local_frame(spark, [], BLOB_SCHEMA)
     root = blobs_path(out_dir)
@@ -157,7 +168,7 @@ def winning_blobs(
         .option("basePath", root)
         .parquet(*(f"{root}/run_id={run}" for run in runs))
     )
-    losing = sorted({pr for pr in stored if pr[1] in runs} - winners)
+    losing = sorted({pr for pr in stored if pr[1] in runs} - won)
     if losing:
         blobs = blobs.filter(
             ~F.struct("part_id", "run_id").isin(
@@ -196,24 +207,21 @@ def decode_token_table(
             f"unknown decode columns {sorted(unknown)}; "
             f"available: {list(_COLUMN_TYPES)}"
         )
-    needed = []
-    for c in cols:
-        for b in _BLOB_DEPS[c]:
-            if b not in needed:
-                needed.append(b)
-    schema = ", ".join(f"{c} {_COLUMN_TYPES[c][0]}" for c in cols)
     blobs = winning_blobs(spark, out_dir, snapshots)
     if parts is not None:
         # partition pruning: the IN filter reaches the blob scan
         # (parquet row-group stats skip the rest); bounded by the lookup's
         # ids, never one literal per store partition
         blobs = blobs.filter(F.col("part_id").isin([int(p) for p in parts]))
-    return blobs.select(*needed).mapInArrow(_make_decoder(cols), schema)
+    return decode_blobs(blobs, cols)
 
 
-def _recency(r: dict) -> tuple:
-    """Commit order of ok manifest rows: ``(finished_at, run_id)``."""
-    return (r["finished_at"], r["run_id"])
+def decode_blobs(blobs: DataFrame, cols=tuple(_COLUMN_TYPES)) -> DataFrame:
+    """Blob rows → the logical columns ``cols``, every codec reversed in
+    one ``mapInArrow``."""
+    needed = list(dict.fromkeys(b for c in cols for b in _BLOB_DEPS[c]))
+    schema = ", ".join(f"{c} {_COLUMN_TYPES[c][0]}" for c in cols)
+    return blobs.select(*needed).mapInArrow(_make_decoder(list(cols)), schema)
 
 
 def _resolve_snapshots(
@@ -227,9 +235,11 @@ def _resolve_snapshots(
     Returns the selection's ok ``(snapshot_id, part_id, run_id, codec,
     finished_at, n_tokens)`` manifest rows and its plan ``(snapshot_id,
     source, part_id, salts)`` rows — one manifest read; every decision
-    after it runs on the driver.  Validates the argument and, for an explicit
-    ``snap_`` id, its existence — a typo'd id must raise here, not
-    surface downstream as a misleading plan-coverage error.
+    after it runs on the driver.  ``"all"`` selects the live rows; the
+    other modes one snapshot's ok rows, absorbed or not.  Validates the
+    argument and, for an explicit ``snap_`` id, its existence — a typo'd
+    id must raise here, not surface downstream as a misleading
+    plan-coverage error.
     """
     if snapshots not in ("all", "latest") and not snapshots.startswith(
         "snap_"
@@ -246,14 +256,16 @@ def _resolve_snapshots(
     )
     if rows is None:
         raise FileNotFoundError(f"no manifest under {out_dir}")
-    ok = [r for r in rows if r["status"] == "ok"]
+    ok = live_rows(rows) if snapshots == "all" else [
+        r for r in rows if r["status"] == "ok"
+    ]
     if snapshots == "latest":
         if not ok:
             raise ValueError(
                 f"manifest under {out_dir} has no status='ok' rows — "
                 "nothing to decode (all runs failed or were aborted)"
             )
-        snapshots = max(ok, key=_recency)["snapshot_id"]
+        snapshots = max(ok, key=recency)["snapshot_id"]
     if snapshots != "all":
         ok = [r for r in ok if r["snapshot_id"] == snapshots]
         if not ok:

@@ -49,6 +49,7 @@ from .manifest import (
     blobs_path,
     completed_parts,
     local_frame,
+    new_run_id,
     read_rows,
 )
 
@@ -385,7 +386,7 @@ def encode_token_table(
     silently vanish from ``decode(snapshots="all")``.  A REPLAY of the same
     batch passes the same salt and still dedupes exactly.
     """
-    run_id = run_id or f"run_{uuid.uuid4().hex[:12]}"
+    run_id = run_id or new_run_id()
     if not 0 < target_tokens <= 2**31 - 1:
         raise ValueError(
             f"target_tokens={target_tokens} out of range (1 .. 2^31-1): "

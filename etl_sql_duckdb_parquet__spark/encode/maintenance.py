@@ -3,12 +3,15 @@
 A streaming-ingested store accumulates one snapshot per micro-batch
 (epoch-scoped, ``streaming/incremental.py``); each is correct but small —
 after N waves a ``decode(snapshots="all")`` unions N snapshots' blobs.
-``compact_store`` re-encodes the union as ONE new snapshot (full-size
-partitions, fresh codec selection over the merged value distribution);
-``vacuum_store`` then drops everything the latest snapshot superseded —
-old run directories under ``blobs/`` and their manifest rows (ok, plan
-and marker rows alike).  This is the maintenance loop the reference's
-background scheduler performed for its Parquet outputs
+``compact_store`` re-encodes the live partitions as ONE new snapshot
+(full-size partitions, fresh codec selection over the merged value
+distribution) and records each absorbed partition as a ``status='merge'``
+manifest row, like an Iceberg ``replace`` snapshot; once it commits,
+those partitions are no longer live (:func:`manifest.live_rows`), so the
+store decodes each doc once, vacuumed or not.  ``vacuum_store`` then
+reclaims the absorbed runs — directories under ``blobs/`` and manifest
+rows — and keeps every live snapshot.  This is the maintenance loop the
+reference's background scheduler performed for its Parquet outputs
 (``src/scheduler.py:17-131``), reshaped for the snapshot/manifest store.
 
 Scale design: compaction is just decode→encode — both ends are the
@@ -16,32 +19,39 @@ distributed mapInArrow engine, no driver data path; vacuum touches only
 metadata (the manifest) plus directory deletes.  Readers must still be
 quiesced (same contract as Iceberg's ``expire_snapshots``), but writers
 are guarded: every encode run appends a ``status='running'`` manifest
-marker before moving blob bytes, and vacuum refuses (without ``force``,
-which also clears stale markers) while ANY uncommitted run exists — an
-in-flight encode can't have its blobs reclaimed out from under it, and
-marker age proves nothing (markers carry run-START times).  The marker
-check is re-run immediately before the manifest swap, shrinking the
-check-then-act window to milliseconds; a writer starting inside THAT
-window is a quiesce violation (the same residual contract as Iceberg's
-``expire_snapshots``), not something a lockless filesystem store can
-exclude.
+marker before moving blob bytes (a compaction's merge rows, written
+before its encode starts, mark it too), and vacuum refuses (without
+``force``, which also clears stale markers) while ANY uncommitted run
+exists — an in-flight encode can't have its blobs reclaimed out from
+under it, and marker age proves nothing (markers carry run-START times).
+The marker check is re-run immediately before the manifest swap,
+shrinking the check-then-act window to milliseconds; a writer starting
+inside THAT window is a quiesce violation (the same residual contract as
+Iceberg's ``expire_snapshots``), not something a lockless filesystem
+store can exclude.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 
 from pyspark.sql import SparkSession
 
-from .decode_job import decode_token_table
+from .decode_job import decode_blobs, scan_winners
 from .encode_job import DEFAULT_TARGET_TOKENS, encode_token_table
 from .manifest import (
     MANIFEST_SCHEMA,
+    append_manifest,
     blobs_path,
     filesystem_path,
+    live_rows,
     manifest_path,
     manifest_rows,
+    new_run_id,
+    recency,
+    winners,
     write_rows,
 )
 
@@ -57,20 +67,17 @@ def _require_filesystem(out_dir: str) -> str:
     return local
 
 
-def _is_compacted(snapshot_id: str) -> bool:
-    return snapshot_id.endswith("-compact")
-
-
 def _uncommitted_runs(rows) -> list[str]:
-    """Run ids with a running marker and no ok rows: in flight, or
-    crashed (marker timestamps are run-START times, so age proves
-    nothing)."""
+    """Run ids with a running marker or merge rows and no ok rows: in
+    flight, or crashed (marker timestamps are run-START times, so age
+    proves nothing)."""
     committed = {r["run_id"] for r in rows if r["status"] == "ok"}
     return sorted(
         {
             r["run_id"]
             for r in rows
-            if r["status"] == "running" and r["run_id"] not in committed
+            if r["status"] in ("running", "merge")
+            and r["run_id"] not in committed
         }
     )
 
@@ -81,29 +88,24 @@ def compact_store(
     target_tokens: int = DEFAULT_TARGET_TOKENS,
     vacuum: bool = True,
 ) -> dict:
-    """Merge every snapshot into one, then (by default) vacuum.
+    """Merge every live snapshot into one, then (by default) vacuum.
 
-    No-ops (returns ``{"compacted": False, ...}``) when the store already
-    holds a single snapshot.  The compacted snapshot's id is
-    content-addressed with a ``compact`` salt, so re-compacting an
-    unchanged store resumes to a no-op instead of re-encoding.
+    No-ops (returns ``{"compacted": False, ...}``) when the store holds
+    at most one live snapshot.  The compacted snapshot's id is
+    content-addressed with a ``compact`` salt.
 
-    ``vacuum=False`` defers the cleanup, but then the old snapshots AND
-    the compacted one coexist — ``decode(snapshots="all")`` double-counts
-    in that state, and a second compact would re-union both, encode the
-    doubled content as the new latest snapshot, and let its vacuum delete
-    the clean originals.  Guarded: compacting a store that already holds
-    a compacted snapshot alongside OLDER snapshots raises — vacuum first.
-    Likewise, ``vacuum=True`` validates EVERY vacuum precondition BEFORE
-    the merge encode — filesystem store AND no uncommitted running
-    markers — so the auto-vacuum can't fail afterwards and strand the
-    store in that half-compacted state.
+    Before the merge encode, one ``status='merge'`` row per live
+    partition records what it absorbs, under the run id the encode
+    commits with; the merge counts once that run has ok rows.  So a
+    crash before the commit changes nothing live, and ``vacuum=False``
+    leaves a store that decodes and re-compacts exactly.  With
+    ``vacuum=True`` the vacuum's preconditions (a filesystem store, no
+    uncommitted runs) are checked first: that only saves a merge whose
+    vacuum would refuse.
     """
-    # one manifest read serves the in-flight guard and the per-snapshot
-    # FIRST- and LAST-commit times (from which the snapshot list derives)
-    rows = manifest_rows(
-        spark, out_dir, ["run_id", "snapshot_id", "status", "finished_at"]
-    )
+    # one manifest read serves the in-flight pre-check, the live set,
+    # the merge rows and the union decode's winners
+    rows = manifest_rows(spark, out_dir)
     if rows is None:
         raise FileNotFoundError(f"no manifest under {out_dir}")
     if vacuum:
@@ -112,63 +114,33 @@ def compact_store(
         if pre_inflight:
             raise RuntimeError(
                 f"uncommitted encode run(s) {pre_inflight} exist under "
-                f"{out_dir} — the post-merge vacuum would refuse, leaving "
-                "the store half-compacted; wait for them to commit, clear "
-                "crashed markers with vacuum_store(force=True), or compact "
-                "with vacuum=False"
+                f"{out_dir} — the post-merge vacuum would refuse; wait "
+                "for them to commit, clear crashed markers with "
+                "vacuum_store(force=True), or compact with vacuum=False"
             )
-    birth_ts, last_ts = {}, {}
-    for r in rows:
-        if r["status"] == "ok":
-            snap, t = r["snapshot_id"], r["finished_at"]
-            birth_ts[snap] = min(birth_ts.get(snap, t), t)
-            last_ts[snap] = max(last_ts.get(snap, t), t)
-    snaps = sorted(birth_ts)
+    live = live_rows(rows)
+    snaps = {r["snapshot_id"] for r in live}
     if len(snaps) <= 1:
         return {"compacted": False, "n_snapshots": len(snaps)}
-    # Half-compacted detection must NOT fire on the normal maintenance
-    # cycle (compact → vacuum → more epochs land → compact again), where
-    # the previous compaction legitimately survives as the OLDEST snapshot
-    # (the additive base).  The hazard state is a compacted snapshot with
-    # anything BORN EARLIER next to it: those snapshots' committed
-    # partitions are (at least partly) inside the compaction, so the
-    # union would double-count them.  Birth = MIN(finished_at): a crashed
-    # epoch that was merged half-committed and then RESUMED after the
-    # compaction keeps its early birth stamp, so it still trips the guard
-    # (its max(finished_at) would not).
-    stale = sorted(
-        c
-        for c in snaps
-        if _is_compacted(c)
-        and any(birth_ts[s] < birth_ts[c] for s in snaps if s != c)
+    run_id = new_run_id()
+    now = datetime.datetime.now(datetime.timezone.utc)
+    append_manifest(
+        spark,
+        out_dir,
+        f"merge-{run_id}.parquet",
+        [
+            {"run_id": run_id, "snapshot_id": r["snapshot_id"],
+             "part_id": r["part_id"], "status": "merge", "finished_at": now}
+            for r in winners(live)
+        ],
     )
-    if stale:
-        latest = max(snaps, key=lambda s: last_ts[s])
-        remedy = (
-            "run vacuum_store() first (the compacted snapshot is the "
-            "latest, so no force is needed)"
-            if _is_compacted(latest)
-            else (
-                "newer ingest epochs landed on top of the half-compacted "
-                "state, so vacuum would drop them or the base — recover "
-                "by decoding each non-superseded snapshot and re-encoding "
-                "into a fresh store"
-            )
-        )
-        raise RuntimeError(
-            f"store under {out_dir} holds compacted snapshot(s) {stale} "
-            "alongside OLDER snapshots (a previous compact ran with "
-            "vacuum=False or its vacuum failed) — decode(snapshots='all') "
-            "double-counts in this state and re-compacting would encode "
-            f"the doubled union; {remedy}"
-        )
-    union = decode_token_table(spark, out_dir, snapshots="all")
     stats = encode_token_table(
         spark,
-        union,
+        decode_blobs(scan_winners(spark, out_dir, live)),
         out_dir,
         target_tokens=target_tokens,
         resume=True,
+        run_id=run_id,
         snapshot_salt="compact",
     )
     result = {
@@ -177,38 +149,31 @@ def compact_store(
         **{f"encode_{k}": v for k, v in stats.items()},
     }
     if vacuum:
-        result["vacuum"] = vacuum_store(spark, out_dir, _compacted=True)
+        result["vacuum"] = vacuum_store(spark, out_dir)
     return result
 
 
 def vacuum_store(
-    spark: SparkSession,
-    out_dir: str,
-    force: bool = False,
-    _compacted: bool = False,
+    spark: SparkSession, out_dir: str, force: bool = False
 ) -> dict:
-    """Keep only the latest snapshot; reclaim everything it superseded.
+    """Reclaim every run no live partition needs; keep every live
+    snapshot.
 
-    Deletes blob ``run_id=...`` directories not referenced by the latest
-    snapshot and rewrites the manifest to that snapshot's ok and plan
-    rows.  After vacuum,
-    ``decode(snapshots="all") == decode(snapshots="latest")``.
+    A run is kept while it holds a live winner (:func:`manifest.live_rows`):
+    its ``run_id=`` directory and ok rows stay, with the plan rows of
+    every snapshot that holds one.  Every other run — those a committed
+    compaction absorbed, and a re-run's superseded predecessor — loses
+    its directory and ok rows; merge rows and running markers go too.
+    ``decode(snapshots="all")`` reads the same docs before and after, so
+    a store no compaction touched loses nothing.  ``kept_snapshot`` is
+    the latest live snapshot.
 
-    Two refusal guards (both overridable with ``force=True``):
-
-    - **additive epochs**: on a multi-snapshot store whose latest snapshot
-      is NOT a compaction, earlier snapshots are additive ingest batches
-      (each holds its own documents), not superseded versions — vacuuming
-      would silently drop data from ``decode(snapshots="all")``.  Run
-      :func:`compact_store` (which merges, then vacuums) instead, or pass
-      ``force=True`` if the latest snapshot really supersedes the rest
-      (e.g. the same table re-encoded after an input change).
-    - **in-flight runs**: a run that appended its ``status='running'``
-      marker but no ok rows yet may still be writing blobs (marker
-      timestamps are run-START times, so age proves nothing) —
-      reclaiming its ``run_id=`` directory would corrupt it.  If the run
-      actually crashed, pass ``force=True`` (which also clears the stale
-      marker).
+    In-flight runs: a run that appended its ``status='running'`` marker
+    (or a compaction's merge rows) but no ok rows yet may still be
+    writing blobs (marker timestamps are run-START times, so age proves
+    nothing) — reclaiming its ``run_id=`` directory would corrupt it.
+    Vacuum refuses while one exists; if the run actually crashed, pass
+    ``force=True``, which also clears its marker and merge rows.
 
     The manifest swap is write-new → rename-old-away → rename-new-in; a
     crash between the two renames leaves the store readable by renaming
@@ -223,28 +188,13 @@ def vacuum_store(
     rows = manifest_rows(spark, out_dir)
     if rows is None:
         raise FileNotFoundError(f"no manifest under {out_dir}")
-    ok_rows = [r for r in rows if r["status"] == "ok"]
-    if not ok_rows:
+    live = winners(live_rows(rows))
+    if not live:
         raise ValueError(f"no status='ok' manifest rows under {out_dir}")
-    snap = max(ok_rows, key=lambda r: (r["finished_at"], r["run_id"]))[
-        "snapshot_id"
-    ]
-    ok_snaps = {r["snapshot_id"] for r in ok_rows}
-    if len(ok_snaps) > 1 and not (_is_compacted(snap) or _compacted or force):
-        raise RuntimeError(
-            f"store under {out_dir} holds {len(ok_snaps)} snapshots and the "
-            f"latest ({snap}) is not a compaction — earlier snapshots are "
-            "additive ingest epochs, so vacuuming would drop their data "
-            "from decode(snapshots='all'); run compact_store() instead, or "
-            "vacuum_store(force=True) if the latest truly supersedes them"
-        )
-    committed = {r["run_id"] for r in ok_rows}
-    # ANY running marker without committed rows counts as in-flight —
-    # marker timestamps are run-START times, so comparing them against
-    # the kept snapshot's commit time would miss a long-running encode
-    # that started before the kept snapshot committed (and is still
-    # writing blobs).  The cost is that a crashed run's stale marker
-    # blocks vacuum until force=True; that is the safe direction.
+    # ANY uncommitted run counts as in-flight — marker timestamps are
+    # run-START times, so no age test can tell a long-running encode from
+    # a crashed one; a stale marker blocks vacuum until force=True, the
+    # safe direction.
     inflight = _uncommitted_runs(rows)
     if inflight and not force:
         raise RuntimeError(
@@ -253,28 +203,32 @@ def vacuum_store(
             "wait for it to commit, or vacuum_store(force=True) if it "
             "actually crashed (force also clears its stale marker)"
         )
-    keep_runs = {
-        r["run_id"] for r in ok_rows if r["snapshot_id"] == snap
-    }
+    snap = max(live, key=recency)["snapshot_id"]
+    keep_runs = {r["run_id"] for r in live}
+    keep_snaps = {r["snapshot_id"] for r in live}
+    # survivors: the kept runs' ok rows and the live snapshots' plan
+    # rows.  No merge row is needed: a snapshot's first run commits all
+    # its parts in one append, so a merge absorbs all of a run's parts or
+    # none, and every absorbed run goes.  No running marker: no
+    # uncommitted run survives (the in-flight guard above, or force).
+    survivors = [
+        r
+        for r in rows
+        if (r["status"] == "ok" and r["run_id"] in keep_runs)
+        or (r["status"] == "plan" and r["snapshot_id"] in keep_snaps)
+    ]
 
-    # Re-check for writers that appended their running marker AFTER the
-    # first manifest read (the guard above is check-then-act — a fresh
-    # encode starting mid-vacuum would have its marker silently dropped by
-    # the rewrite and its blob dir reclaimed by the deletion loop).
-    # Nothing destructive has happened yet, so refusing here is free; the
-    # re-read is a driver-side file read (milliseconds, no Spark job), and
-    # the remaining race window is the time between it and the rename
-    # below, which — like Iceberg's expire_snapshots — is a documented
-    # quiesce requirement, not a guarantee this filesystem store can
-    # provide.
-    late = manifest_rows(spark, out_dir, ["run_id", "status"]) or []
+    # Re-check for runs that wrote manifest rows AFTER the first read
+    # (the guard above is check-then-act — a fresh encode or compaction
+    # starting mid-vacuum would have its rows silently dropped by the
+    # rewrite and its blob dir reclaimed by the deletion loop).  Nothing
+    # destructive has happened yet, so refusing here is free; the re-read
+    # is a driver-side file read (milliseconds, no Spark job), and the
+    # window between it and the rename below is, like Iceberg's
+    # expire_snapshots, a documented quiesce requirement.
+    late = manifest_rows(spark, out_dir, ["run_id"]) or []
     late_ids = sorted(
-        {
-            r["run_id"]
-            for r in late
-            if r["status"] == "running" and r["run_id"] not in committed
-        }
-        - set(inflight)
+        {r["run_id"] for r in late} - {r["run_id"] for r in rows}
     )
     if late_ids and not force:
         raise RuntimeError(
@@ -283,8 +237,8 @@ def vacuum_store(
             "swap; re-run vacuum after they commit"
         )
 
-    # rewrite the manifest to the surviving snapshot's rows (write-new,
-    # swap, drop-old; manifest is metadata-sized)
+    # rewrite the manifest to the survivors (write-new, swap, drop-old;
+    # manifest is metadata-sized)
     mpath = manifest_path(local)
     tmp = mpath + "_vacuum_tmp"
     old = mpath + "_vacuum_old"
@@ -293,28 +247,14 @@ def vacuum_store(
     # discard (mpath already holds the rewritten manifest) — and os.rename
     # below cannot replace a non-empty directory, so clear it first
     shutil.rmtree(old, ignore_errors=True)
-    # keep the surviving snapshot's ok and plan rows (every other
-    # snapshot's plan rows go with it), minus ALL running markers: after
-    # a successful vacuum no uncommitted run survives by construction
-    # (the in-flight guard above, or force), and committed runs' markers
-    # serve no further purpose — carrying them through the rewrite would
-    # leave permanent cruft every manifest reader must filter.
     write_rows(
-        spark,
-        tmp,
-        f"vacuum-{snap}.parquet",
-        [
-            r
-            for r in rows
-            if r["snapshot_id"] == snap and r["status"] != "running"
-        ],
-        MANIFEST_SCHEMA,
+        spark, tmp, f"vacuum-{snap}.parquet", survivors, MANIFEST_SCHEMA
     )
     os.rename(mpath, old)
     os.rename(tmp, mpath)
     shutil.rmtree(old)
 
-    # drop superseded blob run directories
+    # drop the run directories no live partition needs
     bdir = blobs_path(local)
     bytes_reclaimed = 0
     n_deleted = 0

@@ -10,13 +10,18 @@ store's single log::
      raw_bytes, comp_bytes, encode_s, checksum,
      n_distinct, n_runs, vmin, vmax, status, finished_at, source, salts)
 
-Three kinds of row, by ``status``:
+Four kinds of row, by ``status``:
 
 - ``'ok'``: one committed partition (codec choice, sizes, checksum);
 - ``'running'``: a run's in-flight marker (``part_id = -1``);
 - ``'plan'``: one source's slice of the snapshot's doc→partition plan,
   ``part_id = offset + pmod(xxhash64(doc_id), salts)`` with ``part_id``
-  holding the offset.
+  holding the offset;
+- ``'merge'``: one partition a compaction absorbed — ``run_id`` is the
+  compacting run, ``(snapshot_id, part_id)`` the absorbed partition (an
+  Iceberg ``replace`` snapshot's deleted-file entry); :func:`live_rows`,
+  the liveness rule every store read and maintenance call shares, reads
+  them.
 
 Resume = anti-join of the planned partition list against committed
 manifest rows for the same input snapshot — only missing/failed partitions
@@ -198,8 +203,8 @@ def append_running_marker(
     encode starts moving data, in one file with the run's ``plan_rows``.
 
     Lets maintenance see runs that may still be writing blobs: a run_id
-    with a running row and no ok rows is in-flight (or died — the marker
-    alone can't tell, its timestamp is the run START), and
+    with a running (or merge) row and no ok rows is in-flight (or died —
+    the marker alone can't tell, its timestamp is the run START), and
     :func:`maintenance.vacuum_store` refuses to reclaim blob directories
     while any such run exists (``force=True`` overrides and clears the
     marker).
@@ -245,6 +250,46 @@ def append_manifest(
     ``MANIFEST_SCHEMA`` exactly (mixed file schemas read back
     nondeterministically under ``mergeSchema=false``)."""
     write_rows(spark, manifest_path(out_dir), name, rows, MANIFEST_SCHEMA)
+
+
+def new_run_id() -> str:
+    return f"run_{uuid.uuid4().hex[:12]}"
+
+
+def recency(r: dict) -> tuple:
+    """Commit order of ok manifest rows: ``(finished_at, run_id)``."""
+    return (r["finished_at"], r["run_id"])
+
+
+def winners(ok: list[dict]) -> list[dict]:
+    """The winning row of every ``(snapshot_id, part_id)`` among ok rows:
+    the latest commit, so a resumed or re-run snapshot dedupes exactly."""
+    best: dict[tuple[str, int], dict] = {}
+    for r in ok:
+        key = (r["snapshot_id"], r["part_id"])
+        if key not in best or recency(r) > recency(best[key]):
+            best[key] = r
+    return list(best.values())
+
+
+def live_rows(rows: list[dict]) -> list[dict]:
+    """The ok rows of live partitions — THE liveness rule: a merge row
+    counts once its run has ok rows, and a partition is live while no
+    counted merge names its ``(snapshot_id, part_id)``.  Any run's rows
+    of that pair hold the same docs (the snapshot id is content-addressed
+    over data and plan), and parts committed after the merge read the
+    manifest stay live."""
+    committed = {r["run_id"] for r in rows if r["status"] == "ok"}
+    absorbed = {
+        (r["snapshot_id"], r["part_id"])
+        for r in rows
+        if r["status"] == "merge" and r["run_id"] in committed
+    }
+    return [
+        r for r in rows
+        if r["status"] == "ok"
+        and (r["snapshot_id"], r["part_id"]) not in absorbed
+    ]
 
 
 def completed_parts(

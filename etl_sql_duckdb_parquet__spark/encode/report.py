@@ -13,7 +13,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import SparkSession
 
-from .manifest import manifest_rows, read_rows
+from .manifest import live_rows, manifest_rows, read_rows, winners
 
 
 def _round3(x: float) -> float:
@@ -22,16 +22,12 @@ def _round3(x: float) -> float:
 
 
 def manifest_report(spark: SparkSession, out_dir: str) -> str:
-    """Per-codec and per-run totals from the manifest, as markdown."""
-    rows = manifest_rows(
-        spark,
-        out_dir,
-        ["run_id", "codec", "n_docs", "n_tokens", "raw_bytes",
-         "comp_bytes", "encode_s", "status"],
-    )
+    """Per-codec and per-run totals of the store's live partitions (what
+    ``decode(snapshots="all")`` reads), as markdown."""
+    rows = manifest_rows(spark, out_dir)
     if rows is None:
         return "# Encode report\n\nNo manifest found.\n"
-    ok = [r for r in rows if r["status"] == "ok"]
+    ok = winners(live_rows(rows))
     if not ok:
         # an empty manifest directory, or only the running marker of a
         # first encode that never committed

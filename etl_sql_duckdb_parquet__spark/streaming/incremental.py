@@ -27,6 +27,9 @@ Streaming's file source + ``foreachBatch``:
   (``decode_token_table(spark, out_dir, snapshots="all")``): every
   micro-batch is its own epoch-scoped input snapshot, so the union is the
   exact union of the inputs — including content-duplicate batches.
+  ``compact_store`` folds the epochs into one snapshot and its merge rows
+  take the epochs' partitions out of that union, so the union stays
+  exact before its vacuum and while new epochs keep landing.
 
 No per-row Python anywhere: the stream is just file tracking; all data
 movement stays in the batch engine's mapInArrow kernels.

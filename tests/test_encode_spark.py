@@ -669,7 +669,7 @@ def _same_rows(got, want):
 
 def test_read_rows_matches_spark_typed_read(spark, tmp_path):
     """On a store after encode → drain → compact (``vacuum=False``), with
-    ok, plan, running and empty-partition rows, the driver-side reader
+    ok, plan, running, merge and empty-partition rows, the driver-side reader
     returns what the typed Spark read returns through Arrow, row for
     row: same values, types and nulls, ``finished_at`` in UTC."""
     import datetime as dt
@@ -709,7 +709,7 @@ def test_read_rows_matches_spark_typed_read(spark, tmp_path):
     got = read_rows(spark, path, MANIFEST_SCHEMA)
     want = read_typed(spark, path, MANIFEST_SCHEMA).toArrow().to_pylist()
     _same_rows(got, want)
-    assert {r["status"] for r in got} == {"ok", "plan", "running"}
+    assert {r["status"] for r in got} == {"ok", "plan", "running", "merge"}
     assert any(r["codec"] == "empty" for r in got)
     assert all(
         r["finished_at"].utcoffset() == dt.timedelta(0) for r in got

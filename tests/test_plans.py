@@ -310,9 +310,10 @@ def test_store_call_job_budgets(spark, tmp_path):
     - a decode run: the scan alone, winners being a run filter, not a
       broadcast join (1);
     - ``lookup_docs(...).collect()``: the scan, ids being a filter (1);
-    - ``compact_store``: a resumed multi-part encode (5); its guard read,
-      the union decode's plan and vacuum's read and pre-swap re-read run
-      none (5).
+    - ``compact_store``: a resumed multi-part encode (5); its one
+      manifest read (the in-flight pre-check, the live set and the union
+      decode's winners), the merge-row write and vacuum's read and
+      pre-swap re-read run none (5).
     """
     from etl_sql_duckdb_parquet__spark.encode import (
         compact_store,

@@ -421,9 +421,7 @@ def test_compact_and_vacuum_streamed_store(spark, tmp_path):
 
     # the normal maintenance CYCLE keeps working: new epochs land on top
     # of the vacuumed compaction (now the additive BASE, oldest snapshot)
-    # and a second compact must merge base + epochs, not refuse — the
-    # half-compacted guard only fires on compactions with OLDER snapshots
-    # beside them
+    # and a second compact merges base + epochs
     w3 = _wave(spark, 80, seed=23, prefix="m3_")
     w3.write.mode("append").parquet(landing)
     run_available_now(spark, landing, out, target_tokens=20_000)
@@ -755,8 +753,7 @@ def test_streaming_dedup_across_drains(spark, tmp_path, monkeypatch):
 def test_compact_prechecks_inflight_before_encode(spark, tmp_path):
     """compact_store(vacuum=True) must fail BEFORE the merge encode when
     an uncommitted running marker exists — otherwise the post-merge
-    vacuum raises and strands the store half-compacted (originals +
-    compaction coexisting).  vacuum=False still proceeds."""
+    vacuum raises after a wasted merge.  vacuum=False still proceeds."""
     import pytest
 
     from etl_sql_duckdb_parquet__spark.encode import (
@@ -800,20 +797,35 @@ def test_compact_prechecks_inflight_before_encode(spark, tmp_path):
     assert result["compacted"] and result["n_snapshots_merged"] == 2
 
 
-def test_compact_guard_catches_resumed_epoch(spark, tmp_path):
-    """An epoch whose FIRST commit predates the compaction (a crashed
-    encode merged half-committed, then resumed later) must trip the
-    half-compacted guard even though its max(finished_at) is newer than
-    the compaction — re-compacting would double-count its early parts."""
-    import datetime as dt
+def _run_dir_bytes(out: str) -> dict[str, int]:
+    """Bytes on disk of every ``run_id=`` blob directory of a store."""
+    root = os.path.join(out, "blobs")
+    return {
+        d: sum(
+            os.path.getsize(os.path.join(walk, f))
+            for walk, _dirs, files in os.walk(os.path.join(root, d))
+            for f in files
+        )
+        for d in os.listdir(root)
+        if d.startswith("run_id=")
+    }
 
-    import pytest
 
-    from etl_sql_duckdb_parquet__spark.encode import compact_store
-    from etl_sql_duckdb_parquet__spark.encode.manifest import (
-        MANIFEST_COLS,
-        append_manifest,
+def test_epoch_committing_after_merge_stays_live(
+    spark, tmp_path, monkeypatch
+):
+    """Parts that commit after a compaction read the store stay live:
+    the merge rows name only what was committed when the merge read the
+    manifest.  A run commits its parts in one append, so such parts are
+    an epoch encode's that is still in flight (marker and blobs written)
+    when ``compact_store(vacuum=False)`` runs — driven here by compacting
+    from inside the epoch's commit read.  The epoch survives a plain
+    vacuum, and decode(all) is the exact source union."""
+    from etl_sql_duckdb_parquet__spark.encode import (
+        compact_store,
+        encode_job,
         read_manifest,
+        vacuum_store,
     )
 
     landing = str(tmp_path / "re_landing")
@@ -824,43 +836,51 @@ def test_compact_guard_catches_resumed_epoch(spark, tmp_path):
     w2 = _wave(spark, 60, seed=82, prefix="r2_")
     w2.write.mode("append").parquet(landing)
     run_available_now(spark, landing, out, target_tokens=20_000)
-    compact_store(spark, out, target_tokens=20_000)
+    w3 = _wave(spark, 70, seed=83, prefix="r3_")
 
-    # simulate the resumed epoch: one ok row BORN long before the
-    # compaction plus one finished long after it, so min(finished_at)
-    # predates the compaction while max(finished_at) is the newest in the
-    # store — the state the old max-based guard missed
-    base = read_manifest(spark, out).filter(F.col("status") == "ok").limit(1)
-    for ts in (
-        dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc),
-        dt.datetime(2035, 1, 1, tzinfo=dt.timezone.utc),
-    ):
-        resumed = base.select(
-            *[
-                F.lit("run_resumed_sim").alias(c)
-                if c == "run_id"
-                else F.lit("snap_resumed_epoch").alias(c)
-                if c == "snapshot_id"
-                else F.lit(ts).cast("timestamp").alias(c)
-                if c == "finished_at"
-                else F.col(c)
-                for c in MANIFEST_COLS
-            ]
-        )
-        append_manifest(
-            spark, out, f"resumed-{ts.year}.parquet",
-            resumed.toArrow().to_pylist(),
-        )
-    with pytest.raises(RuntimeError, match="compacted snapshot"):
-        compact_store(spark, out, target_tokens=20_000, vacuum=False)
+    real = encode_job.read_rows
+    merged = {}
+
+    def commit_read(sp, path, *args):
+        if not merged:  # the epoch's commit read: compact first
+            merged["running"] = True
+            merged.update(
+                compact_store(spark, out, target_tokens=20_000, vacuum=False)
+            )
+        return real(sp, path, *args)
+
+    monkeypatch.setattr(encode_job, "read_rows", commit_read)
+    epoch = encode_job.encode_token_table(
+        spark, w3, out, target_tokens=20_000, snapshot_salt="e2"
+    )
+    monkeypatch.undo()
+    assert merged["compacted"] and merged["n_snapshots_merged"] == 2
+
+    rows = read_manifest(spark, out).collect()
+    merge_rows = [r for r in rows if r["status"] == "merge"]
+    epoch_ok = [
+        r for r in rows
+        if r["status"] == "ok" and r["snapshot_id"] == epoch["snapshot_id"]
+    ]
+    assert epoch_ok and min(r["finished_at"] for r in epoch_ok) > max(
+        r["finished_at"] for r in merge_rows
+    )
+    assert epoch["snapshot_id"] not in {r["snapshot_id"] for r in merge_rows}
+
+    res = vacuum_store(spark, out)
+    assert res["n_run_dirs_deleted"] == 2 and res["n_runs_kept"] == 2
+    assert f"run_id={epoch['run_id']}" in _run_dir_bytes(out)
+    v = verify_roundtrip(
+        w1.unionByName(w2).unionByName(w3),
+        decode_token_table(spark, out, snapshots="all"),
+    )
+    assert v["ok"] and v["n_union"] == 210, v
 
 
-def test_vacuum_refuses_additive_epochs(spark, tmp_path):
-    """Direct vacuum on a multi-epoch streamed store must refuse: earlier
-    epochs are additive, not superseded — vacuuming would silently drop
-    their docs from decode(snapshots='all')."""
-    import pytest
-
+def test_vacuum_keeps_additive_epochs(spark, tmp_path):
+    """Vacuum on a multi-epoch streamed store no compaction touched
+    reclaims nothing: every epoch is live (each holds its own docs), so
+    the full union still decodes."""
     from etl_sql_duckdb_parquet__spark.encode import vacuum_store
 
     landing = str(tmp_path / "ae_landing")
@@ -872,26 +892,25 @@ def test_vacuum_refuses_additive_epochs(spark, tmp_path):
     w2.write.mode("append").parquet(landing)
     run_available_now(spark, landing, out, target_tokens=20_000)
 
-    with pytest.raises(RuntimeError, match="additive ingest epochs"):
-        vacuum_store(spark, out)
-    # nothing was deleted: the full union still decodes
+    res = vacuum_store(spark, out)
+    assert res["n_run_dirs_deleted"] == 0 and res["bytes_reclaimed"] == 0
+    assert res["n_runs_kept"] == len(_run_dir_bytes(out)) == 2
     v = verify_roundtrip(
         w1.unionByName(w2), decode_token_table(spark, out, snapshots="all")
     )
-    assert v["ok"] and v["n_union"] == 200
+    assert v["ok"] and v["n_union"] == 200, v
 
 
-def test_compact_refuses_half_compacted_store(spark, tmp_path):
-    """compact(vacuum=False) leaves epochs + compacted snapshot coexisting;
-    a second compact must refuse (it would union the doubled content) and
-    a plain vacuum resolves the state (the compaction is the latest
-    snapshot, so no force is needed)."""
-    import pytest
-
+def test_half_compacted_store_decodes_once(spark, tmp_path):
+    """compact(vacuum=False) leaves the epochs' runs beside the compacted
+    snapshot; its merge rows take the epochs out of the live set, so
+    decode(all) is the exact union, a second compact is a no-op and the
+    report totals are the compacted snapshot's alone."""
     from etl_sql_duckdb_parquet__spark.encode import (
         compact_store,
-        vacuum_store,
+        read_manifest,
     )
+    from etl_sql_duckdb_parquet__spark.encode.report import manifest_report
 
     landing = str(tmp_path / "hc_landing")
     out = str(tmp_path / "hc_encoded")
@@ -904,18 +923,114 @@ def test_compact_refuses_half_compacted_store(spark, tmp_path):
 
     result = compact_store(spark, out, target_tokens=20_000, vacuum=False)
     assert result["compacted"] and "vacuum" not in result
-    with pytest.raises(RuntimeError, match="compacted snapshot"):
-        compact_store(spark, out, target_tokens=20_000)
-    vacuum_store(spark, out)
     v = verify_roundtrip(
         w1.unionByName(w2), decode_token_table(spark, out, snapshots="all")
     )
-    assert v["ok"] and v["n_union"] == 160
-    # and the store is compact-idempotent again
+    assert v["ok"] and v["n_union"] == 160, v
     assert compact_store(spark, out, target_tokens=20_000) == {
         "compacted": False,
         "n_snapshots": 1,
     }
+    compacted = [
+        r for r in read_manifest(spark, out).collect()
+        if r["status"] == "ok"
+        and r["snapshot_id"] == result["encode_snapshot_id"]
+    ]
+    raw = sum(r["raw_bytes"] for r in compacted)
+    comp = sum(r["comp_bytes"] for r in compacted)
+    assert sum(r["n_docs"] for r in compacted) == 160
+    assert (
+        f"Runs: 1  |  partitions: {len(compacted)}  |  raw: {raw:,} B  |  "
+        f"compressed: {comp:,} B  |"
+    ) in manifest_report(spark, out)
+
+
+def test_compact_after_deferred_vacuum_and_new_epoch(spark, tmp_path):
+    """compact(vacuum=False), a new epoch, then compact(): the second
+    merge absorbs the first compaction and the new epoch, the store
+    decodes as the exact three-wave union, and the vacuum reclaims
+    exactly the absorbed runs' directories, byte for byte."""
+    from etl_sql_duckdb_parquet__spark.encode import compact_store
+
+    landing = str(tmp_path / "dv_landing")
+    out = str(tmp_path / "dv_encoded")
+    w1 = _wave(spark, 90, seed=91, prefix="d1_")
+    w1.write.parquet(landing)
+    run_available_now(spark, landing, out, target_tokens=20_000)
+    w2 = _wave(spark, 70, seed=92, prefix="d2_")
+    w2.write.mode("append").parquet(landing)
+    run_available_now(spark, landing, out, target_tokens=20_000)
+    first = compact_store(spark, out, target_tokens=20_000, vacuum=False)
+    assert first["compacted"] and first["n_snapshots_merged"] == 2
+    w3 = _wave(spark, 50, seed=93, prefix="d3_")
+    w3.write.mode("append").parquet(landing)
+    run_available_now(spark, landing, out, target_tokens=20_000)
+
+    # every run now on disk is absorbed by one of the two merges: the
+    # first merge's epochs, then the first compaction and the new epoch
+    absorbed = _run_dir_bytes(out)
+    assert len(absorbed) == 4
+    second = compact_store(spark, out, target_tokens=20_000)
+    assert second["compacted"] and second["n_snapshots_merged"] == 2
+    assert second["vacuum"]["n_run_dirs_deleted"] == 4
+    assert second["vacuum"]["bytes_reclaimed"] == sum(absorbed.values())
+    assert set(_run_dir_bytes(out)) == {
+        f"run_id={second['encode_run_id']}"
+    }
+    v = verify_roundtrip(
+        w1.unionByName(w2).unionByName(w3),
+        decode_token_table(spark, out, snapshots="all"),
+    )
+    assert v["ok"] and v["n_union"] == 210, v
+
+
+def test_crashed_compaction_changes_nothing_live(
+    spark, tmp_path, monkeypatch
+):
+    """Merge rows count only once their run commits: a compaction that
+    dies in its encode leaves the live set as it was (decode(all) is the
+    exact union), its merge rows block a plain vacuum like a running
+    marker, and after a forced vacuum clears them a new compaction is
+    exact."""
+    import pytest
+
+    from etl_sql_duckdb_parquet__spark.encode import (
+        compact_store,
+        encode_job,
+        vacuum_store,
+    )
+
+    landing = str(tmp_path / "cc_landing")
+    out = str(tmp_path / "cc_encoded")
+    w1 = _wave(spark, 70, seed=95, prefix="c1_")
+    w1.write.parquet(landing)
+    run_available_now(spark, landing, out, target_tokens=20_000)
+    w2 = _wave(spark, 50, seed=96, prefix="c2_")
+    w2.write.mode("append").parquet(landing)
+    run_available_now(spark, landing, out, target_tokens=20_000)
+    union = w1.unionByName(w2)
+
+    def crash(*_args):
+        raise RuntimeError("simulated executor loss")
+
+    monkeypatch.setattr(encode_job, "encode_sink_frame", crash)
+    with pytest.raises(RuntimeError, match="simulated executor loss"):
+        compact_store(spark, out, target_tokens=20_000, vacuum=False)
+    monkeypatch.undo()
+    v = verify_roundtrip(
+        union, decode_token_table(spark, out, snapshots="all")
+    )
+    assert v["ok"] and v["n_union"] == 120, v
+    with pytest.raises(RuntimeError, match="uncommitted encode run"):
+        vacuum_store(spark, out)
+    assert vacuum_store(spark, out, force=True)["n_run_dirs_deleted"] == 0
+
+    again = compact_store(spark, out, target_tokens=20_000)
+    assert again["compacted"] and again["n_snapshots_merged"] == 2
+    v = verify_roundtrip(
+        union, decode_token_table(spark, out, snapshots="all")
+    )
+    assert v["ok"] and v["n_union"] == 120, v
 
 
 def test_lookup_requires_plan_coverage(spark, tmp_path):
