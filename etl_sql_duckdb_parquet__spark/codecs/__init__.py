@@ -13,13 +13,14 @@ family is implemented from scratch so the engine owns the encoding:
                  required.  The retired VARINT (id 9), FORBLOCK (11) and
                  DEFLATE wrap (13) are not readable: such blobs raise and
                  must be re-encoded from source.
-- ``strings``  — string-array container: pattern-id / dictionary / plain,
-                 selected by shape and cardinality; the byte buffer is
+- ``strings``  — string-array container over an Arrow string array's
+                 offsets and bytes buffers: pattern-id / dictionary /
+                 plain, selected by shape and cardinality; the byte buffer is
                  left to the zstd layer.  Blobs of the retired byte codec
                  (id 5) raise too and must be re-encoded from source.
 
 All kernels are vectorized numpy over contiguous buffers — they are invoked
-from Arrow-batched pandas UDFs, never per row.  Every blob is
+from Arrow-batched UDFs (``mapInArrow``, ``applyInArrow``), never per row.  Every blob is
 self-describing: ``decode_int(encode_int(x)) == x`` bit-identical.
 """
 

@@ -1,13 +1,17 @@
 """String-array codecs: pattern-id / dictionary / plain, auto-selected.
 
-Handles the ``doc_id`` and ``source`` columns of the token table.  Ids of
-one shape (shared prefix + fixed-width decimal suffix) are stored as a
-prefix and an integer blob.  Other arrays are stored as lengths (integer
-blob, auto-selected codec — RLE shines for fixed-width ids) + the plain
-byte buffer, which the caller's ``zwrap_best`` zstd layer compresses (a
-symbol-table byte codec under it never won on a measured column: CLAUDE.md
-"Codec family").  Low-cardinality arrays (``source`` has a handful of
-distinct values) go through a string dictionary first.
+Handles the ``doc_id`` and ``source`` columns of the token table.  The
+kernels work on an Arrow string array's two buffers (offsets and UTF-8
+bytes), never on one string at a time: :func:`encode_strings` reads them
+from a ``pa.string()`` array and :func:`decode_strings` builds one from
+them.  Ids of one shape (shared prefix + fixed-width decimal suffix) are
+stored as a prefix and an integer blob.  Other arrays are stored as
+lengths (integer blob, auto-selected codec — equal lengths pick FOR at
+bit width 0) + the plain byte buffer, which the caller's ``zwrap_best``
+zstd layer compresses (a symbol-table byte codec under it never won on a
+measured column: CLAUDE.md "Codec family").  Low-cardinality arrays
+(``source`` has a handful of distinct values) go through a string
+dictionary first.
 
 Blob layouts (little-endian)::
 
@@ -26,6 +30,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .core import decode_int, encode_int_best, zunwrap
 
@@ -35,134 +41,141 @@ CODEC_STRDICT = 8
 CODEC_PATTERNID = 12
 
 
-def _try_pattern_id(strs: list[bytes]) -> bytes | None:
+def _buffers(arr: pa.StringArray) -> tuple[np.ndarray, np.ndarray]:
+    """The int64 offsets (rebased to 0) and uint8 bytes of a
+    ``pa.string()`` array, honouring a slice's ``arr.offset``."""
+    if len(arr) == 0:
+        return np.zeros(1, np.int64), np.zeros(0, np.uint8)
+    _, obuf, dbuf = arr.buffers()
+    offsets = np.frombuffer(obuf, np.int32, len(arr) + 1, 4 * arr.offset)
+    data = np.frombuffer(dbuf or b"", np.uint8)[offsets[0] : offsets[-1]]
+    return offsets.astype(np.int64) - offsets[0], data
+
+
+def _string_array(offsets: np.ndarray, data) -> pa.StringArray:
+    if offsets[-1] > 2**31 - 1:
+        raise ValueError(
+            f"string blob holds {offsets[-1]} bytes, beyond the int32 "
+            "Arrow offset range"
+        )
+    return pa.StringArray.from_buffers(
+        len(offsets) - 1,
+        pa.py_buffer(offsets.astype(np.int32)),
+        pa.py_buffer(data),
+    )
+
+
+def _try_pattern_id(offsets: np.ndarray, data: np.ndarray) -> bytes | None:
     """PATTERNID: every string = shared prefix + fixed-width decimal suffix
     (e.g. ``doc_0000000042``) → store prefix once + the ints (delta/FOR).
 
     The dominant id shape for sequence tables; beats generic byte codecs by
-    orders of magnitude.  Detection is fully vectorized; returns None when
-    the shape doesn't hold.
+    orders of magnitude.  Equal lengths make the bytes an (n, length)
+    matrix; returns None when the shape doesn't hold.
     """
-    n = len(strs)
-    if n == 0:
+    n = len(offsets) - 1
+    if n == 0 or (np.diff(offsets) != offsets[1]).any():
         return None
-    length = len(strs[0])
-    first = strs[0]
+    buf = data.reshape(n, int(offsets[1]))
+    digit = (buf >= 48) & (buf <= 57)
     # suffix = trailing decimal digits of the first string, capped at 18
-    ndig = 0
-    while ndig < min(length, 18) and 48 <= first[length - 1 - ndig] <= 57:
-        ndig += 1
-    if ndig == 0:
-        return None
-    prefix = first[: length - ndig]
-    if any(len(s) != length for s in strs):
-        return None
-    buf = np.frombuffer(b"".join(strs), dtype=np.uint8).reshape(n, length)
-    plen = length - ndig
-    if plen and not (buf[:, :plen] == np.frombuffer(prefix, np.uint8)).all():
-        return None
-    dig = buf[:, plen:].astype(np.int64) - 48
-    if dig.min() < 0 or dig.max() > 9:
+    ndig = int(np.cumprod(digit[0, ::-1][:18]).sum())
+    plen = buf.shape[1] - ndig
+    if (
+        ndig == 0
+        or not digit[:, plen:].all()
+        or not (buf[:, :plen] == buf[0, :plen]).all()
+    ):
         return None
     powers = 10 ** np.arange(ndig - 1, -1, -1, dtype=np.int64)
-    vals = dig @ powers
+    vals = (buf[:, plen:].astype(np.int64) - 48) @ powers
     return (
         struct.pack("<BQBH", CODEC_PATTERNID, n, ndig, plen)
-        + prefix
+        + buf[0, :plen].tobytes()
         + encode_int_best(vals)
     )
 
 
-def _decode_pattern_id(buf: memoryview, off: int) -> list[bytes]:
+def _decode_pattern_id(buf: memoryview, off: int) -> pa.StringArray:
     n, ndig, plen = struct.unpack_from("<QBH", buf, off + 1)
     p = off + 12
-    prefix = bytes(buf[p : p + plen])
     vals = decode_int(bytes(buf[p + plen :]))
-    digits = np.empty((n, ndig), dtype=np.uint8)
-    v = vals.copy()
-    for k in range(ndig - 1, -1, -1):
-        digits[:, k] = (v % 10) + 48
-        v //= 10
-    flat = digits.tobytes()
-    return [prefix + flat[i * ndig : (i + 1) * ndig] for i in range(n)]
+    powers = 10 ** np.arange(ndig - 1, -1, -1, dtype=np.int64)
+    chars = np.empty((n, plen + ndig), dtype=np.uint8)
+    chars[:, :plen] = np.frombuffer(buf[p : p + plen], np.uint8)
+    chars[:, plen:] = vals[:, None] // powers % 10 + 48
+    return _string_array(np.arange(n + 1) * (plen + ndig), chars)
 
 
 def _encode_bytes(data: bytes) -> bytes:
     return struct.pack("<BQ", CODEC_PLAINBYTES, len(data)) + data
 
 
-def _decode_bytes(buf: memoryview, off: int) -> bytes:
+def _decode_bytes(buf: memoryview, off: int) -> memoryview:
     if buf[off] != CODEC_PLAINBYTES:
         raise ValueError(f"unknown bytes codec id {buf[off]}")
     (n,) = struct.unpack_from("<Q", buf, off + 1)
-    return bytes(buf[off + 9 : off + 9 + n])
+    return buf[off + 9 : off + 9 + n]
 
 
 def _nested(blob: bytes) -> bytes:
     return struct.pack("<Q", len(blob)) + blob
 
 
-def _encode_strarr(strs: list[bytes]) -> bytes:
-    lengths = np.fromiter((len(s) for s in strs), dtype=np.int64, count=len(strs))
-    data = b"".join(strs)
+def _encode_strarr(offsets: np.ndarray, data: np.ndarray) -> bytes:
     return (
-        struct.pack("<BQ", CODEC_STRARR, len(strs))
-        + _nested(encode_int_best(lengths))
-        + _nested(_encode_bytes(data))
+        struct.pack("<BQ", CODEC_STRARR, len(offsets) - 1)
+        + _nested(encode_int_best(np.diff(offsets)))
+        + _nested(_encode_bytes(data.tobytes()))
     )
 
 
-def _decode_strarr(buf: memoryview, off: int) -> tuple[list[bytes], int]:
-    (n,) = struct.unpack_from("<Q", buf, off + 1)
+def _decode_strarr(buf: memoryview, off: int) -> pa.StringArray:
     p = off + 9
     (ln,) = struct.unpack_from("<Q", buf, p)
     lengths = decode_int(bytes(buf[p + 8 : p + 8 + ln]))
-    p += 8 + ln
-    (ln2,) = struct.unpack_from("<Q", buf, p)
-    data = _decode_bytes(buf, p + 8)
-    p += 8 + ln2
-    out = []
-    pos = 0
-    for length in lengths:
-        out.append(data[pos : pos + length])
-        pos += length
-    return out, p
+    offsets = np.concatenate(([0], np.cumsum(lengths)))
+    return _string_array(offsets, _decode_bytes(buf, p + 16 + ln))
 
 
 def encode_strings(values) -> bytes:
-    """Encode a sequence of strings: pattern-id → dictionary → plain."""
-    strs = [v.encode("utf-8") if isinstance(v, str) else bytes(v) for v in values]
-    n = len(strs)
-    pat = _try_pattern_id(strs)
+    """Encode a string array: pattern-id → dictionary → plain.
+
+    ``values`` is a ``pa.string()`` array (sliced or chunked), or any
+    sequence of ``str``, which is converted once here."""
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    if not isinstance(values, pa.Array):
+        values = pa.array(values, pa.string())
+    if values.null_count:
+        raise ValueError("string codecs take no nulls")
+    arr = values.cast(pa.string())
+    offsets, data = _buffers(arr)
+    pat = _try_pattern_id(offsets, data)
     if pat is not None:
         return pat
-    uniq = sorted(set(strs))
+    n = len(arr)
+    uniq = pc.unique(arr)
     if n > 0 and len(uniq) <= n // 2:
-        code_of = {s: i for i, s in enumerate(uniq)}
-        codes = np.fromiter((code_of[s] for s in strs), dtype=np.int64, count=n)
+        uniq = uniq.take(pc.array_sort_indices(uniq))
+        codes = pc.index_in(arr, value_set=uniq).to_numpy().astype(np.int64)
         return (
             struct.pack("<BQ", CODEC_STRDICT, n)
             + _nested(encode_int_best(codes))
-            + _nested(_encode_strarr(uniq))
+            + _nested(_encode_strarr(*_buffers(uniq)))
         )
-    return _encode_strarr(strs)
+    return _encode_strarr(offsets, data)
 
 
-def decode_strings(blob: bytes) -> list[str]:
-    blob = zunwrap(blob)
-    buf = memoryview(blob)
+def decode_strings(blob: bytes) -> pa.StringArray:
+    buf = memoryview(zunwrap(blob))
     codec_id = buf[0]
     if codec_id == CODEC_STRARR:
-        strs, _ = _decode_strarr(buf, 0)
-        return [s.decode("utf-8") for s in strs]
+        return _decode_strarr(buf, 0)
     if codec_id == CODEC_STRDICT:
-        (n,) = struct.unpack_from("<Q", buf, 1)
-        p = 9
-        (ln,) = struct.unpack_from("<Q", buf, p)
-        codes = decode_int(bytes(buf[p + 8 : p + 8 + ln]))
-        p += 8 + ln
-        uniq, _ = _decode_strarr(buf, p + 8)
-        return [uniq[c].decode("utf-8") for c in codes]
+        (ln,) = struct.unpack_from("<Q", buf, 9)
+        codes = decode_int(bytes(buf[17 : 17 + ln]))
+        return _decode_strarr(buf, 17 + ln + 8).take(pa.array(codes))
     if codec_id == CODEC_PATTERNID:
-        return [s.decode("utf-8") for s in _decode_pattern_id(buf, 0)]
+        return _decode_pattern_id(buf, 0)
     raise ValueError(f"unknown string codec id {codec_id}")

@@ -77,7 +77,11 @@ def main(argv: list[str] | None = None) -> dict:
     args = ap.parse_args(argv)
 
     from ..session import get_spark
-    from .decode_job import decode_token_table, verify_roundtrip
+    from .decode_job import (
+        DECODED_SCHEMA,
+        decode_token_table,
+        verify_roundtrip,
+    )
     from .encode_job import encode_token_table
     from .synth import synth_token_table, tokenize_documents
 
@@ -132,7 +136,7 @@ def main(argv: list[str] | None = None) -> dict:
         return stats
 
     if args.stream_input_dir:
-        from ..streaming.incremental import TOKEN_SCHEMA, run_available_now
+        from ..streaming.incremental import run_available_now
 
         t0 = time.perf_counter()
         run_available_now(
@@ -149,7 +153,7 @@ def main(argv: list[str] | None = None) -> dict:
             "drain_wall_s": round(time.perf_counter() - t0, 3),
         }
         if not args.no_verify:
-            src = spark.read.schema(TOKEN_SCHEMA).parquet(
+            src = spark.read.schema(DECODED_SCHEMA).parquet(
                 args.stream_input_dir
             )
             decoded = decode_token_table(spark, args.out, snapshots="all")

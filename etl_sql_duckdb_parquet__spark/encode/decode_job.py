@@ -7,9 +7,10 @@ a crashed run can never leak into results; the blob
 scan then lists only the winning runs' ``run_id=`` directories (by path:
 no join, no broadcast job), and every codec is reversed inside an
 Arrow-native ``mapInArrow``.  The token lists are assembled ZERO-COPY with
-``pa.ListArray.from_arrays(offsets, values)`` — no per-document
-``np.split``/pandas-object materialization, which dominated decode time at
-many-docs scale (tens of thousands of small docs per partition).
+``pa.ListArray.from_arrays(offsets, values)`` and the id and source
+strings from their offsets and bytes buffers — no per-document
+``np.split``, pandas object or Python string, which dominated decode time
+at many-docs scale (tens of thousands of small docs per partition).
 Verification is a distributed join on doc_id with null-safe array
 equality — no driver-side collection.
 """
@@ -87,18 +88,9 @@ def _make_decoder(columns: list[str]):
                         )
                     elif c == "n_tok":
                         arr = pa.array(lengths.astype(np.int32))
-                    elif c == "doc_id":
-                        arr = pa.array(
-                            decode_strings(blob_cols["docids_blob"][i].as_py()),
-                            pa.string(),
-                        )
-                    else:  # source
-                        arr = pa.array(
-                            decode_strings(
-                                blob_cols["sources_blob"][i].as_py()
-                            ),
-                            pa.string(),
-                        )
+                    else:  # doc_id, source
+                        (blob,) = _BLOB_DEPS[c]
+                        arr = decode_strings(blob_cols[blob][i].as_py())
                     arrays.append(arr)
                     n_docs = len(arr)
                 if n_docs:
@@ -381,7 +373,9 @@ def verify_roundtrip(src: DataFrame, decoded: DataFrame) -> dict:
 
     Mirrors the reference's readback-fidelity check (its queries over
     written Parquet match golden outputs, ``docs/example_output.md``) but
-    enforced exactly: every doc's token array must be bit-identical.
+    enforced exactly: every doc's token array must be bit-identical, and
+    each side must hold every ``doc_id`` once — a duplicated doc matches
+    each of its copies in the join, so only the distinct count shows it.
     """
     a = src.select(
         "doc_id",
@@ -396,6 +390,7 @@ def verify_roundtrip(src: DataFrame, decoded: DataFrame) -> dict:
     joined = a.join(b, "doc_id", "full_outer")
     row = joined.agg(
         F.count("*").alias("n_union"),
+        F.countDistinct("doc_id").alias("n_ids"),
         F.sum(
             F.when(
                 F.col("_t_src").eqNullSafe(F.col("_t_dec"))
@@ -408,8 +403,9 @@ def verify_roundtrip(src: DataFrame, decoded: DataFrame) -> dict:
     ).first()
     return {
         "n_union": row["n_union"],
+        "n_doc_ids": row["n_ids"],
         "n_match": row["n_match"],
         "n_extra_decoded": row["n_extra"],
         "n_missing_decoded": row["n_missing"],
-        "ok": row["n_union"] == row["n_match"],
+        "ok": row["n_union"] == row["n_match"] == row["n_ids"],
     }

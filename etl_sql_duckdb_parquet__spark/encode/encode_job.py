@@ -46,6 +46,7 @@ from ..codecs.core import CODEC_ZSTD, zwrap_best
 from .manifest import (
     append_manifest,
     append_running_marker,
+    arrow_schema,
     blobs_path,
     completed_parts,
     local_frame,
@@ -207,16 +208,15 @@ def plan_partitions(
     return out, n_parts, rows
 
 
-def _encode_blob_row(
-    part_id: int,
-    values: np.ndarray,
-    lengths: np.ndarray,
-    docids: list,
-    sources: list,
-    t_acc: float,
-) -> dict:
-    """Encode one logical partition's accumulated columns → blob row dict."""
+def _encode_blob_row(part_id: int, part, t_acc: float) -> dict:
+    """Encode one logical partition's slice of the sorted input (an Arrow
+    table of ``tokens``, ``doc_id`` and ``source``) → blob row dict."""
+    import pyarrow.compute as pc
+
     t0 = time.perf_counter()
+    tokens = part.column("tokens")
+    values = pc.list_flatten(tokens).to_numpy().astype(np.int64)
+    lengths = pc.list_value_length(tokens).to_numpy().astype(np.int64)
     if len(values) > 2**31 - 1:
         # the decode path materializes Arrow ListArray offsets as int32;
         # fail the encode rather than durably committing an undecodable
@@ -233,13 +233,11 @@ def _encode_blob_row(
     raw_tokens_blob, tok_stats = encode_int_best_with_stats(values)
     tokens_blob = zwrap_best(raw_tokens_blob)
     lengths_blob = zwrap_best(encode_int_best(lengths))
-    docids_blob = zwrap_best(encode_strings(docids))
-    sources_blob = zwrap_best(encode_strings(sources))
-    raw_bytes = (
-        4 * len(values)
-        + 4 * len(lengths)
-        + sum(len(d.encode("utf-8")) for d in docids)
-        + sum(len(s.encode("utf-8")) for s in sources)
+    docids_blob = zwrap_best(encode_strings(part.column("doc_id")))
+    sources_blob = zwrap_best(encode_strings(part.column("source")))
+    raw_bytes = 4 * len(values) + 4 * len(lengths) + sum(
+        pc.sum(pc.binary_length(part.column(c))).as_py() or 0
+        for c in ("doc_id", "source")
     )
     comp_bytes = (
         len(tokens_blob) + len(lengths_blob) + len(docids_blob) + len(sources_blob)
@@ -281,60 +279,29 @@ def _encode_arrow_partition(batches):
 
     After ``repartition(n_parts, part_id)`` every logical partition lives
     entirely in one physical partition (a physical partition may carry a
-    few part_ids on hash collision).  Working on Arrow batches directly —
-    ``ListArray.flatten()`` is a zero-copy view of the token values,
-    ``take`` and ``list_value_length`` are C++ kernels — avoids the
-    grouped-map path's per-key sort and per-row pandas materialization
-    entirely; Python only ever touches whole columns.
+    few part_ids on hash collision).  The partition's batches become one
+    table, taken once in a stable ``part_id`` order (each part keeps its
+    docs' arrival order), and each part's slice is encoded.  Sort, take,
+    flatten and lengths are C++ kernels over whole columns: no grouped-map
+    sort per key, no pandas rows, no Python loop over documents.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    acc: dict[int, dict] = {}
     t0 = time.perf_counter()
-    for b in batches:
-        pids = b.column("part_id").to_numpy(zero_copy_only=False)
-        if len(pids) == 0:
-            continue
-        for p in np.unique(pids):
-            idx = pa.array(np.flatnonzero(pids == p))
-            toks = b.column("tokens").take(idx)
-            a = acc.setdefault(
-                int(p), {"vals": [], "lens": [], "ids": [], "srcs": []}
-            )
-            a["vals"].append(
-                toks.flatten().to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False
-                )
-            )
-            a["lens"].append(
-                pc.list_value_length(toks)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64, copy=False)
-            )
-            a["ids"].extend(b.column("doc_id").take(idx).to_pylist())
-            a["srcs"].extend(b.column("source").take(idx).to_pylist())
-    t_acc = time.perf_counter() - t0
-
-    schema = pa.schema(
-        [
-            ("part_id", pa.int32()),
-            ("tokens_blob", pa.binary()),
-            ("lengths_blob", pa.binary()),
-            ("docids_blob", pa.binary()),
-            ("sources_blob", pa.binary()),
-            ("meta", pa.string()),
-        ]
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    table = pa.Table.from_batches(batches).select(
+        ["part_id", "tokens", "doc_id", "source"]
     )
-    share = t_acc / len(acc) if acc else 0.0
-    for p, a in acc.items():
-        values = (
-            np.concatenate(a["vals"]) if a["vals"] else np.zeros(0, np.int64)
-        )
-        lengths = (
-            np.concatenate(a["lens"]) if a["lens"] else np.zeros(0, np.int64)
-        )
-        row = _encode_blob_row(p, values, lengths, a["ids"], a["srcs"], share)
+    table = table.take(pc.sort_indices(table.column("part_id")))
+    pids = table.column("part_id").to_numpy()
+    starts = np.flatnonzero(np.diff(pids, prepend=-1))
+    share = (time.perf_counter() - t0) / len(starts)
+    schema = arrow_schema(ENCODED_SCHEMA)
+    for s, e in zip(starts, [*starts[1:], len(pids)]):
+        row = _encode_blob_row(int(pids[s]), table.slice(s, e - s), share)
         yield pa.RecordBatch.from_pydict(
             {k: [v] for k, v in row.items()}, schema=schema
         )
@@ -434,78 +401,70 @@ def encode_token_table(
     # "all planned parts already in the manifest" decides completion without
     # evaluating `pending` (an isEmpty() here would cost an extra pass over
     # the input)
+    written, empty_ids = [], []
     if skipped >= n_parts:
         if plan:
             append_manifest(spark, out_dir, f"plan-{run_id}.parquet", plan)
-        return {
-            "run_id": run_id,
-            "snapshot_id": snapshot_id,
-            "n_parts_planned": n_parts,
-            "n_parts_skipped_resume": skipped,
-            "n_parts_encoded": 0,
-            "n_docs": 0,
-            "n_tokens": 0,
-            "raw_bytes": 0,
-            "comp_bytes": 0,
-            "encode_cpu_s": 0.0,
-        }
+    else:
+        # in-flight marker BEFORE any blob bytes move: a concurrent/later
+        # vacuum sees this run as running-until-committed and refuses to
+        # reclaim its blob directory (maintenance.vacuum_store's guard)
+        append_running_marker(spark, out_dir, run_id, snapshot_id, plan)
 
-    # in-flight marker BEFORE any blob bytes move: a concurrent/later
-    # vacuum sees this run as running-until-committed and refuses to
-    # reclaim its blob directory (maintenance.vacuum_store's guard)
-    append_running_marker(spark, out_dir, run_id, snapshot_id, plan)
+        (
+            encode_sink_frame(pending, n_parts, run_id)
+            .write.mode("append")
+            .option("compression", "none")
+            .partitionBy("run_id")
+            .parquet(blobs_path(out_dir))
+        )
 
-    (
-        encode_sink_frame(pending, n_parts, run_id)
-        .write.mode("append")
-        .option("compression", "none")
-        .partitionBy("run_id")
-        .parquet(blobs_path(out_dir))
-    )
-
-    # Commit: ONE metadata read of this run's (part_id, meta) rows —
-    # parquet column pruning skips the blob bytes — and the manifest rows,
-    # the empty-partition backfill and the run totals all derive from them
-    # on the driver.  Read ONLY this run's blob directory: a whole-tree
-    # read would re-list every historical run's files (O(store) metadata
-    # I/O per encode on an object store) just to filter them out.
-    run_blobs = read_rows(
-        spark,
-        f"{blobs_path(out_dir)}/run_id={run_id}",
-        ENCODED_SCHEMA,
-        ["part_id", "meta"],
-    )
-    # A run whose pending parts were ALL empty writes no blob rows, so its
-    # run_id= directory never materializes — and ONLY that case (a
-    # missing path, the one failure read_rows maps to None) may commit
-    # nothing but empties.  Any other failure (transient FS error, corrupt
-    # footer, executor death) re-raises: swallowing it would durably
-    # commit status='ok' codec='empty' manifest rows for partitions that
-    # DO hold data — silent loss that resume then treats as complete.
-    written = [
-        (r["part_id"], json.loads(r["meta"])) for r in run_blobs or []
-    ]
-    # A planned partition can legitimately receive ZERO docs (a salted hot
-    # source whose few doc-id hashes don't cover every salt bucket).  The
-    # kernel yields no blob row for it, so without a manifest row resume
-    # would re-plan it forever: skipped < n_parts on every re-run, each
-    # appending a new running marker that never commits — permanently
-    # blocking vacuum/compact.  Commit empty partitions as zero-row ok
-    # facts instead (no blob; decode's join to blobs skips them).
-    empty_ids = sorted(
-        set(range(n_parts)) - done_ids - {p for p, _ in written}
-    )
-    now = datetime.datetime.now(datetime.timezone.utc)
-    append_manifest(
-        spark,
-        out_dir,
-        f"ok-{run_id}-{uuid.uuid4().hex[:8]}.parquet",
-        [
-            {"run_id": run_id, "snapshot_id": snapshot_id,
-             "part_id": p, **meta, "status": "ok", "finished_at": now}
-            for p, meta in written + [(p, _EMPTY_META) for p in empty_ids]
-        ],
-    )
+        # Commit: ONE metadata read of this run's (part_id, meta) rows —
+        # parquet column pruning skips the blob bytes — and the manifest
+        # rows, the empty-partition backfill and the run totals all derive
+        # from them on the driver.  Read ONLY this run's blob directory: a
+        # whole-tree read would re-list every historical run's files
+        # (O(store) metadata I/O per encode on an object store) just to
+        # filter them out.
+        run_blobs = read_rows(
+            spark,
+            f"{blobs_path(out_dir)}/run_id={run_id}",
+            ENCODED_SCHEMA,
+            ["part_id", "meta"],
+        )
+        # A run whose pending parts were ALL empty writes no blob rows, so
+        # its run_id= directory never materializes — and ONLY that case (a
+        # missing path, the one failure read_rows maps to None) may commit
+        # nothing but empties.  Any other failure (transient FS error,
+        # corrupt footer, executor death) re-raises: swallowing it would
+        # durably commit status='ok' codec='empty' manifest rows for
+        # partitions that DO hold data — silent loss that resume then
+        # treats as complete.
+        written = [
+            (r["part_id"], json.loads(r["meta"])) for r in run_blobs or []
+        ]
+        # A planned partition can legitimately receive ZERO docs (a salted
+        # hot source whose few doc-id hashes don't cover every salt
+        # bucket).  The kernel yields no blob row for it, so without a
+        # manifest row resume would re-plan it forever: skipped < n_parts
+        # on every re-run, each appending a new running marker that never
+        # commits — permanently blocking vacuum/compact.  Commit empty
+        # partitions as zero-row ok facts instead (no blob; decode's join
+        # to blobs skips them).
+        empty_ids = sorted(
+            set(range(n_parts)) - done_ids - {p for p, _ in written}
+        )
+        now = datetime.datetime.now(datetime.timezone.utc)
+        append_manifest(
+            spark,
+            out_dir,
+            f"ok-{run_id}-{uuid.uuid4().hex[:8]}.parquet",
+            [
+                {"run_id": run_id, "snapshot_id": snapshot_id,
+                 "part_id": p, **meta, "status": "ok", "finished_at": now}
+                for p, meta in written + [(p, _EMPTY_META) for p in empty_ids]
+            ],
+        )
 
     def total(key: str):
         return sum(meta[key] for _, meta in written)

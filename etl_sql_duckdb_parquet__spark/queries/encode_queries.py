@@ -1,7 +1,7 @@
 """Codec-engine showcase queries — the north-star compression engine
 exercised through the driver query contract.
 
-q50/q52 run the real numpy codec kernels inside applyInPandas over the
+q50/q52 run the real numpy codec kernels inside applyInArrow over the
 SAME token-mass-proportional salted partition plan the encode job uses
 (``encode_job.plan_partitions``) — a 90%-hot source is split across
 proportionally many partitions instead of funneling through one Python
@@ -16,7 +16,7 @@ a two-phase distributed rank join.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -27,25 +27,22 @@ from ..encode.synth import tokenize_documents
 from .common import t
 
 
-def _encode_stats_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def _encode_stats_group(table: pa.Table) -> pa.Table:
     """Encode ONE salted partition's token stream through the real kernels."""
-    source = pdf["source"].iloc[0]
-    arrs = [np.asarray(a, dtype=np.int64) for a in pdf["tokens"]]
     values = (
-        np.concatenate(arrs) if arrs else np.zeros(0, dtype=np.int64)
+        table.column("tokens").combine_chunks().flatten().to_numpy()
+        .astype(np.int64)
     )
     blob = encode_int_best(values)
-    ok = bool(np.array_equal(decode_int(blob), values))
-    raw = 4 * len(values)
-    return pd.DataFrame(
+    return pa.table(
         {
-            "source": [source],
+            "source": [table.column("source")[0].as_py()],
             "codec": [codec_of(blob)],
-            "n_docs": [len(arrs)],
+            "n_docs": [table.num_rows],
             "n_tokens": [len(values)],
-            "raw_bytes": [raw],
+            "raw_bytes": [4 * len(values)],
             "comp_bytes": [len(blob)],
-            "roundtrip_ok": [ok],
+            "roundtrip_ok": [bool(np.array_equal(decode_int(blob), values))],
         }
     )
 
@@ -72,7 +69,7 @@ def encoded_source_stats(
     unsalted encode.
     """
     planned, _, _ = plan_partitions(toks, target_tokens)
-    per_part = planned.groupBy("source", "part_id").applyInPandas(
+    per_part = planned.groupBy("source", "part_id").applyInArrow(
         _encode_stats_group, _STATS_SCHEMA
     )
     return per_part.groupBy("source").agg(

@@ -42,9 +42,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..encode.decode_job import DECODED_SCHEMA
 from ..encode.encode_job import DEFAULT_TARGET_TOKENS, encode_token_table
-
-TOKEN_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
 
 def encode_stream(
@@ -64,7 +63,7 @@ def encode_stream(
     ``max_files_per_trigger`` so one huge drop does not produce one huge
     batch).
     """
-    reader = spark.readStream.schema(TOKEN_SCHEMA)
+    reader = spark.readStream.schema(DECODED_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)

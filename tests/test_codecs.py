@@ -11,6 +11,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -201,7 +202,7 @@ STRING_CASES = {
 @pytest.mark.parametrize("name", sorted(STRING_CASES))
 def test_strings_roundtrip(name):
     vals = STRING_CASES[name]
-    assert decode_strings(encode_strings(vals)) == vals
+    assert decode_strings(encode_strings(vals)).to_pylist() == vals
 
 
 def test_urls_keep_plain_bytes():
@@ -222,19 +223,19 @@ def test_strdict_picked_for_low_cardinality():
 @given(st.lists(st.text(max_size=40), max_size=120))
 @settings(max_examples=100, deadline=None)
 def test_strings_roundtrip_property(vals):
-    assert decode_strings(encode_strings(vals)) == vals
+    assert decode_strings(encode_strings(vals)).to_pylist() == vals
 
 
 def test_pattern_id_roundtrip_and_size():
     ids = [f"doc_{i:010d}" for i in range(5000)]
     blob = encode_strings(ids)
     assert blob[0] == 12  # CODEC_PATTERNID
-    assert decode_strings(blob) == ids
+    assert decode_strings(blob).to_pylist() == ids
     assert len(blob) < 0.02 * sum(len(s) for s in ids)
     # shuffled (non-sequential) still pattern-encodable
     shuffled = [ids[(i * 2654435761) % 5000] for i in range(5000)]
     blob2 = encode_strings(shuffled)
-    assert decode_strings(blob2) == shuffled
+    assert decode_strings(blob2).to_pylist() == shuffled
 
 
 def test_pattern_id_rejects_non_uniform():
@@ -245,8 +246,49 @@ def test_pattern_id_rejects_non_uniform():
         [],
     ):
         blob = encode_strings(vals)
-        assert decode_strings(blob) == vals
+        assert decode_strings(blob).to_pylist() == vals
         assert blob[0] != 12
+
+
+# one input per string codec, each with non-ASCII bytes
+ARROW_CASES = {
+    12: [f"żółć_{i:06d}" for i in range(400)],  # PATTERNID
+    8: ["web", "wiki-żółć", "日本語", "code"] * 100,  # STRDICT
+    6: [f"https://例え.jp/{i}?q={i * 7}" for i in range(400)],  # STRARR
+}
+
+
+def _arrow_shape(vals: list[str], shape: str):
+    padded = pa.array(["pad", *vals, "pad"], pa.string())
+    return {
+        "whole": lambda: pa.array(vals, pa.string()),
+        "sliced": lambda: padded.slice(1, len(vals)),
+        "chunked": lambda: pa.chunked_array(
+            [vals[:150], vals[150:]], pa.string()
+        ),
+        "empty": lambda: padded.slice(1, 0),
+    }[shape]()
+
+
+@pytest.mark.parametrize("shape", ["whole", "sliced", "chunked", "empty"])
+@pytest.mark.parametrize("codec_id", sorted(ARROW_CASES))
+def test_strings_arrow_input_roundtrip(codec_id, shape):
+    """The encode kernel passes sliced and chunked Arrow arrays: each
+    encodes to the bytes of its list form, by the expected codec, and
+    decodes to a ``pa.string()`` array of the same values."""
+    arr = _arrow_shape(ARROW_CASES[codec_id], shape)
+    assert shape != "sliced" or arr.offset == 1
+    vals = arr.to_pylist()
+    blob = encode_strings(arr)
+    assert blob == encode_strings(vals)
+    assert blob[0] == (codec_id if vals else 6)
+    out = decode_strings(zwrap_best(blob))
+    assert out.type == pa.string() and out.to_pylist() == vals
+
+
+def test_strings_reject_nulls():
+    with pytest.raises(ValueError, match="no nulls"):
+        encode_strings(pa.array(["a", None, "b"]))
 
 
 def test_zwrap_roundtrip_and_gate():
@@ -267,7 +309,7 @@ def test_zwrap_roundtrip_and_gate():
 def test_zwrap_strings_dispatch():
     vals = [f"user_{i % 7}@example.com" for i in range(5000)]
     blob = encode_strings(vals)
-    assert decode_strings(zwrap_best(blob)) == vals
+    assert decode_strings(zwrap_best(blob)).to_pylist() == vals
 
 
 def test_encode_meta_names_codec_without_decompressing(monkeypatch):
@@ -288,13 +330,81 @@ def test_encode_meta_names_codec_without_decompressing(monkeypatch):
 
     monkeypatch.setattr(core, "zunwrap", boom)
     monkeypatch.setattr(encode_job, "zunwrap", boom, raising=False)
-    row = encode_job._encode_blob_row(
-        3,
-        values,
-        np.array([12_000, 8_000], dtype=np.int32),
-        ["doc_0000000001", "doc_0000000002"],
-        ["web", "web"],
-        0.0,
+    part = pa.table(
+        {
+            "tokens": pa.ListArray.from_arrays(
+                pa.array([0, 12_000, 20_000], pa.int32()), pa.array(values)
+            ),
+            "doc_id": ["doc_0000000001", "doc_0000000002"],
+            "source": ["web", "web"],
+        }
     )
+    row = encode_job._encode_blob_row(3, part, 0.0)
     assert row["tokens_blob"][0] == CODEC_ZSTD
     assert json.loads(row["meta"])["codec"] == expected
+
+
+def _two_part_batches() -> list:
+    """A seeded partition holding two part ids, interleaved over three
+    batches: pattern ids in part 0, URL ids in part 1, three sources (one
+    non-ASCII)."""
+    rng = np.random.default_rng(11)
+    n = 600
+    part = rng.integers(0, 2, n).astype(np.int32)
+    lens = rng.integers(0, 400, n)
+    values = np.floor(50257 * rng.random(int(lens.sum())) ** 3).astype(I32)
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(I32)
+    hashes = rng.integers(0, 2**62, n)
+    ids = [
+        f"doc_{i:010d}" if p == 0 else f"https://example.com/{h:x}"
+        for i, (p, h) in enumerate(zip(part, hashes))
+    ]
+    sources = np.array(["web", "wiki-żółć", "news"])[rng.integers(0, 3, n)]
+    table = pa.table(
+        {
+            "doc_id": pa.array(ids, pa.string()),
+            "tokens": pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(values)
+            ),
+            "n_tok": pa.array(lens.astype(I32)),
+            "source": pa.array(sources.tolist(), pa.string()),
+            "part_id": pa.array(part),
+        }
+    )
+    return table.to_batches(max_chunksize=200)
+
+
+def test_encode_kernel_blob_bytes_pinned():
+    """The encode kernel's four blob columns, byte for byte: the sha1 of
+    each column over the partition's blob rows in part order.  The digests
+    were taken from the per-batch accumulator kernel this one replaced; a
+    moved byte in any codec, or a doc reordered within a part, fails."""
+    import hashlib
+    import json
+
+    from etl_sql_duckdb_parquet__spark.encode import encode_job
+
+    rows = sorted(
+        (
+            r
+            for b in encode_job._encode_arrow_partition(iter(_two_part_batches()))
+            for r in b.to_pylist()
+        ),
+        key=lambda r: r["part_id"],
+    )
+    digests = {
+        c: hashlib.sha1(b"".join(r[c] for r in rows)).hexdigest()
+        for c in ("tokens_blob", "lengths_blob", "docids_blob", "sources_blob")
+    }
+    assert digests == {
+        "tokens_blob": "db1df70a7e754c2d6b60f4e5f3e63cab97f438bd",
+        "lengths_blob": "dda1ba74d78fef868d5cb9b87578cfcd9d0723be",
+        "docids_blob": "f590cd108f414bc9b881a0c9ec5690f23d0bf4fd",
+        "sources_blob": "d925f6e470ebedec9b78a8c173d95ef1529991b2",
+    }
+    metas = [json.loads(r["meta"]) for r in rows]
+    assert [(r["part_id"], m["n_docs"], m["raw_bytes"], m["codec"])
+            for r, m in zip(rows, metas)] == [
+        (0, 302, 246_871, "for+z"),
+        (1, 298, 250_734, "for+z"),
+    ]

@@ -221,6 +221,29 @@ def test_resume_skips_completed_partitions(spark, token_df, tmp_path):
     assert v["ok"], v
 
 
+def test_resumed_noop_returns_the_fresh_run_keys(spark, tmp_path):
+    """A fully resumed run reports the same stats keys as the run that
+    encoded, ``n_parts_empty`` included."""
+    df = synth_token_table(spark, 200, avg_len=16, seed=3)
+    out = str(tmp_path / "enc_keys")
+    fresh = encode_token_table(spark, df, out, target_tokens=2_000)
+    again = encode_token_table(spark, df, out, target_tokens=2_000)
+    assert again["n_parts_encoded"] == 0
+    assert list(again) == list(fresh)
+
+
+def test_verify_roundtrip_rejects_duplicated_docs(spark, tmp_path):
+    """A decode holding every doc twice matches each copy in the join;
+    the distinct doc-id count still makes ``ok`` false."""
+    df = synth_token_table(spark, 200, avg_len=16, seed=4)
+    out = str(tmp_path / "enc_dup")
+    encode_token_table(spark, df, out, target_tokens=2_000)
+    decoded = decode_token_table(spark, out)
+    assert verify_roundtrip(df, decoded)["ok"]
+    v = verify_roundtrip(df, decoded.unionByName(decoded))
+    assert not v["ok"] and v["n_union"] == 2 * v["n_doc_ids"] == 400, v
+
+
 def test_resume_ignores_other_plan_params(spark, token_df, tmp_path):
     """Same data, different target_tokens => a DIFFERENT partition plan,
     whose part_ids are incomparable with the first run's.  Resume must not
