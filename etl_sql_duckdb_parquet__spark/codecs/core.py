@@ -5,20 +5,12 @@ Numpy kernels plus pyarrow's bundled ZSTD, no Spark dependency —
 unit-testable standalone and invoked from Arrow-batched UDFs in
 ``encode.encode_job``.
 
-Blob layout (all little-endian)::
-
-    [u8 codec_id][codec-specific header][payload]
-
-    PLAIN : u64 n, u8 itemsize(4|8)      | n * int32 or int64
-    FOR   : u64 n, i64 ref, u8 width     | bit-packed (v - ref), width bits each
-    DELTA : u64 n, i64 first             | nested blob of diffs (n-1 values)
-    RLE   : u64 n                        | nested(run values) + nested(run lengths)
-    DICT  : u64 n, u32 card, u8 codewidth| nested(sorted unique) + bit-packed codes
-    VARDICT: u64 n, u32 card             | nested(uniques by frequency rank)
-                                           + u64 len + LEB128 rank codes
-    ZSTD  : u64 raw_len, u64 zlen        | zstd frame of any other blob
-
-"nested blob" = u64 byte-length prefix + a recursively encoded blob, so every
+Blob layout (all little-endian): ``[u8 codec_id][header][payload]``.
+Each codec's header, codec id first, is one ``struct.Struct`` declared
+below with its payload beside it (``_PLAIN_HDR`` … ``_ZSTD_HDR``, and
+``_LEN``, the u64 byte length in front of a nested blob); the sizer
+(:func:`_sizes`), the encoder and the decoder all read that declaration.
+A "nested blob" is a ``_LEN`` prefix + a recursively selected blob, so every
 blob is self-describing and ``decode_int`` needs no side metadata.
 
 All values flow as int64 internally (DELTA diffs of int32 inputs can exceed
@@ -28,10 +20,8 @@ int32 at the boundary.  Bit-identity invariant:
 pairwise differences fit in int64 (always true for int32-range tokens).
 
 Design notes for scale: kernels operate on one Spark-partition's worth of
-concatenated token values at a time (tens of MB).  Bit-packing is chunked
-(``_CHUNK`` values per step) to bound intermediate memory; the chunk size is
-a multiple of 8 so per-chunk bit counts stay byte-aligned and chunks
-concatenate exactly.
+concatenated token values at a time (tens of MB).  Bit packing is word
+arithmetic over the whole array (a few uint64 temporaries of ``n`` values).
 
 Capability parity: the reference attributes its compression win to
 dictionary/delta/bit-packing inside Parquet (reference
@@ -71,11 +61,26 @@ CODEC_NAMES = {
     CODEC_ZSTD: "zstd",
 }
 
-# Values per bit-pack chunk. Must be a multiple of 8 (byte alignment of
-# chunk boundaries for every width). 2^18 values * 32 bits = 1 MiB packed,
-# ~16 MiB transient uint8 bit matrix at width 64 — bounded regardless of
-# partition size.
-_CHUNK = 1 << 18
+# One declaration per blob header, codec id first; the payload follows.
+# "nested" = a ``_LEN`` byte length + a blob the selector picks.
+_PLAIN_HDR = struct.Struct("<BQB")  # n, itemsize (4|8) | n int32 or int64
+_FOR_HDR = struct.Struct("<BQqB")  # n, ref, width | bit-packed (v - ref)
+_DELTA_HDR = struct.Struct("<BQq")  # n, first | nested(n - 1 diffs)
+_RLE_HDR = struct.Struct("<BQ")  # n | nested(run values) + nested(run lengths)
+# n, card, code width | nested(sorted uniques) + bit-packed codes
+_DICT_HDR = struct.Struct("<BQIB")
+# n, card | nested(uniques by frequency rank) + _LEN + LEB128 rank codes
+_VARDICT_HDR = struct.Struct("<BQI")
+_ZSTD_HDR = struct.Struct("<BQQ")  # raw_len, zlen | zstd frame of any blob
+_LEN = struct.Struct("<Q")
+_INT_HDRS = {
+    CODEC_PLAIN: _PLAIN_HDR,
+    CODEC_FOR: _FOR_HDR,
+    CODEC_DELTA: _DELTA_HDR,
+    CODEC_RLE: _RLE_HDR,
+    CODEC_DICT: _DICT_HDR,
+    CODEC_VARDICT: _VARDICT_HDR,
+}
 
 _MAX_NEST_DEPTH = 3
 
@@ -86,7 +91,7 @@ _MAX_NEST_DEPTH = 3
 # MB/s), since match-finding beyond greedy buys nothing once the light codec
 # removed the structure.
 _ZSTD = pa.Codec("zstd", compression_level=1)
-# keep the frame only when it saves ≥ 2% (17-byte header included)
+# keep the frame only when it saves ≥ 2% (its header included)
 _ZSTD_MIN_RATIO = 0.98
 
 
@@ -153,7 +158,7 @@ def unpack_uint(buf: bytes, n: int, width: int) -> np.ndarray:
     if width == 0 or n == 0:
         return np.zeros(n, dtype=np.uint64)
     if width in _BYTE_WIDTH_DTYPE:
-        return np.frombuffer(buf, dtype=_BYTE_WIDTH_DTYPE[width]).astype(np.uint64)
+        return np.frombuffer(buf, _BYTE_WIDTH_DTYPE[width], n).astype(np.uint64)
     nbytes = (n * width + 7) // 8
     padded = np.zeros((nbytes + 7) // 8 * 8 + 8, dtype=np.uint8)
     padded[:nbytes] = np.frombuffer(buf, dtype=np.uint8, count=nbytes)
@@ -244,9 +249,10 @@ def _plain_itemsize(vmin: int, vmax: int) -> int:
 def _prepare(v64: np.ndarray) -> dict:
     """One pass of shared statistics feeding both sizing and encoding.
 
-    Uses a single ``np.sort`` (not ``np.unique(return_inverse=True)``, whose
-    argsort is ~2× slower); the code assignment needed by dict/vardict is
-    recovered lazily with ``np.searchsorted`` only when one of them wins.
+    Uses a single ``np.sort`` (a unique-with-inverse pass argsorts, ~2×
+    slower); the codes DICT and VARDICT need are recovered with
+    ``np.searchsorted`` in :func:`encode_int`, only when one of them is
+    encoded.
     """
     n = len(v64)
     vmin = int(v64.min())
@@ -261,7 +267,6 @@ def _prepare(v64: np.ndarray) -> dict:
     ranks = np.empty(len(uniq), dtype=np.int64)
     ranks[order] = np.arange(len(uniq))
     return {
-        "v": v64,
         "n": n,
         "vmin": vmin,
         "vmax": vmax,
@@ -275,81 +280,79 @@ def _prepare(v64: np.ndarray) -> dict:
     }
 
 
-def _inverse(prep: dict) -> np.ndarray:
-    """Codes of each value into prep['uniq'] (lazy, O(n log card))."""
-    return np.searchsorted(prep["uniq"], prep["v"])
-
-
 def _sizes(prep: dict) -> dict[str, int]:
+    """Exact PLAIN and FOR sizes; upper bounds for the codecs that nest a
+    blob, sized as if each nested blob were FOR (the selector may nest a
+    smaller one)."""
     n = prep["n"]
     vmin, vmax = prep["vmin"], prep["vmax"]
-    sizes: dict[str, int] = {}
-    sizes["plain"] = 10 + _plain_itemsize(vmin, vmax) * n
     w_for = _width(vmin, vmax)
-    sizes["for"] = 18 + _packed_bytes(n, w_for)
 
+    def nested_for(m: int, w: int) -> int:
+        return _LEN.size + _FOR_HDR.size + _packed_bytes(m, w)
+
+    sizes = {
+        "plain": _PLAIN_HDR.size + _plain_itemsize(vmin, vmax) * n,
+        "for": _FOR_HDR.size + _packed_bytes(n, w_for),
+    }
     if n >= 2:
         d = prep["d"]
-        w_d = _width(int(d.min()), int(d.max()))
-        # DELTA = header(17) + nested-len(8) + FOR blob of n-1 diffs
-        sizes["delta"] = 17 + 8 + 18 + _packed_bytes(n - 1, w_d)
-
+        sizes["delta"] = _DELTA_HDR.size + nested_for(
+            n - 1, _width(int(d.min()), int(d.max()))
+        )
     n_runs = prep["n_runs"]
     if n_runs < n:
         run_lens = np.diff(np.r_[0, prep["change"] + 1, n])
         w_rl = _width(int(run_lens.min()), int(run_lens.max()))
+        # run values share the input's range
         sizes["rle"] = (
-            9
-            + 8
-            + 18
-            + _packed_bytes(n_runs, w_for)  # run values share the range
-            + 8
-            + 18
-            + _packed_bytes(n_runs, w_rl)
+            _RLE_HDR.size + nested_for(n_runs, w_for) + nested_for(n_runs, w_rl)
         )
-
     card = len(prep["uniq"])
-    dict_blob_bound = 18 + _packed_bytes(card, w_for)
     if card < n:
-        w_codes = max(card - 1, 0).bit_length()
-        sizes["dict"] = 14 + 8 + dict_blob_bound + _packed_bytes(n, w_codes)
-
-    # vardict: frequency-rank codes as varints + dictionary in rank order
+        sizes["dict"] = (
+            _DICT_HDR.size
+            + nested_for(card, w_for)
+            + _packed_bytes(n, _width(0, card - 1))
+        )
     rank_nb = _varint_nbytes(prep["ranks"].astype(np.uint64))
     sizes["vardict"] = (
-        13 + 8 + dict_blob_bound + 8 + int((rank_nb * prep["counts"]).sum())
+        _VARDICT_HDR.size
+        + nested_for(card, w_for)
+        + _LEN.size
+        + int((rank_nb * prep["counts"]).sum())
     )
     return sizes
+
+
+def _stats(prep: dict | None) -> dict:
+    """The selector's statistics of a prepared input (``None``: empty)."""
+    if prep is None:
+        return {"n": 0, "n_distinct": 0, "n_runs": 0, "vmin": 0, "vmax": 0}
+    return {
+        "n": prep["n"],
+        "n_distinct": len(prep["uniq"]),
+        "n_runs": prep["n_runs"],
+        "vmin": prep["vmin"],
+        "vmax": prep["vmax"],
+    }
 
 
 def analyze_int(vals: np.ndarray) -> dict:
     """Exact per-buffer statistics driving codec selection.
 
-    Returns n, vmin, vmax, n_runs, n_distinct, and the exact-or-upper-bound
-    encoded size per candidate codec — selection is a pure argmin, fully
-    deterministic and unit-testable.
+    Returns n, vmin, vmax, n_runs, n_distinct, mean_run_len and the
+    exact-or-upper-bound encoded size per candidate codec — selection is a
+    pure argmin, fully deterministic and unit-testable.
     """
-    v = np.asarray(vals)
-    n = len(v)
-    if n == 0:
-        return {
-            "n": 0,
-            "vmin": 0,
-            "vmax": 0,
-            "n_runs": 0,
-            "n_distinct": 0,
-            "mean_run_len": 0.0,
-            "sizes": {"plain": 10},
-        }
-    v64 = np.ascontiguousarray(v, dtype=np.int64)
-    prep = _prepare(v64)
+    v = np.ascontiguousarray(vals, dtype=np.int64)
+    if len(v) == 0:
+        sizes = {"plain": _PLAIN_HDR.size}
+        return {**_stats(None), "mean_run_len": 0.0, "sizes": sizes}
+    prep = _prepare(v)
     return {
-        "n": n,
-        "vmin": prep["vmin"],
-        "vmax": prep["vmax"],
-        "n_runs": prep["n_runs"],
-        "n_distinct": len(prep["uniq"]),
-        "mean_run_len": n / prep["n_runs"],
+        **_stats(prep),
+        "mean_run_len": prep["n"] / prep["n_runs"],
         "sizes": _sizes(prep),
     }
 
@@ -372,88 +375,62 @@ _TIE_ORDER = {
 def encode_int(
     vals: np.ndarray, codec: str, _depth: int = 0, _prep: dict | None = None
 ) -> bytes:
-    """Encode an integer array (int64-safe) with a specific codec."""
+    """Encode an integer array (int64-safe) with a specific codec.
+
+    Empty input, and DELTA of one value, is PLAIN.  DICT and VARDICT take
+    their dictionary from ``_prepare`` (the selector passes its own)."""
+    if codec not in _TIE_ORDER:
+        raise ValueError(f"unknown integer codec: {codec!r}")
     v = np.ascontiguousarray(vals, dtype=np.int64)
     n = len(v)
-    if codec == "plain":
-        itemsize = 4 if n == 0 else _plain_itemsize(int(v.min()), int(v.max()))
-        payload = v.astype("<i4" if itemsize == 4 else "<i8").tobytes()
-        return struct.pack("<BQB", CODEC_PLAIN, n, itemsize) + payload
     if codec == "for":
-        if n == 0:
-            return struct.pack("<BQqB", CODEC_FOR, 0, 0, 0)
-        ref = int(v.min())
-        w = _width(ref, int(v.max()))
-        return struct.pack("<BQqB", CODEC_FOR, n, ref, w) + pack_uint(
+        ref, top = (int(v.min()), int(v.max())) if n else (0, 0)
+        w = _width(ref, top)
+        return _FOR_HDR.pack(CODEC_FOR, n, ref, w) + pack_uint(
             (v - ref).astype(np.uint64), w
         )
+    if codec == "plain" or n == 0 or (codec == "delta" and n == 1):
+        itemsize = _plain_itemsize(int(v.min()), int(v.max())) if n else 4
+        dtype = "<i4" if itemsize == 4 else "<i8"
+        return _PLAIN_HDR.pack(CODEC_PLAIN, n, itemsize) + v.astype(dtype).tobytes()
+    depth = _depth + 1
     if codec == "delta":
-        if n < 2:
-            return encode_int(v, "plain")
-        first = int(v[0])
-        nested = _encode_nested(np.diff(v), _depth + 1)
-        return struct.pack("<BQq", CODEC_DELTA, n, first) + nested
+        diffs = encode_int_best(np.diff(v), depth)
+        return _DELTA_HDR.pack(CODEC_DELTA, n, int(v[0])) + _nest(diffs)
     if codec == "rle":
-        if n == 0:
-            return encode_int(v, "plain")
-        change = np.flatnonzero(np.diff(v))
-        starts = np.r_[0, change + 1]
-        run_vals = v[starts]
-        run_lens = np.diff(np.r_[starts, n])
+        starts = np.r_[0, np.flatnonzero(np.diff(v)) + 1]
         return (
-            struct.pack("<BQ", CODEC_RLE, n)
-            + _encode_nested(run_vals, _depth + 1)
-            + _encode_nested(run_lens, _depth + 1)
+            _RLE_HDR.pack(CODEC_RLE, n)
+            + _nest(encode_int_best(v[starts], depth))
+            + _nest(encode_int_best(np.diff(np.r_[starts, n]), depth))
         )
+    prep = _prepare(v) if _prep is None else _prep
+    uniq = prep["uniq"]
+    # codes of each value into the sorted uniques, found only once a
+    # dictionary codec is picked
+    codes = np.searchsorted(uniq, v)
     if codec == "dict":
-        if n == 0:
-            return encode_int(v, "plain")
-        if _prep is not None:
-            uniq, codes = _prep["uniq"], _inverse(_prep)
-        else:
-            uniq, codes = np.unique(v, return_inverse=True)
-        card = len(uniq)
-        w_codes = max(card - 1, 0).bit_length()
+        w_codes = _width(0, len(uniq) - 1)
         return (
-            struct.pack("<BQIB", CODEC_DICT, n, card, w_codes)
-            + _encode_nested(uniq, _depth + 1)
+            _DICT_HDR.pack(CODEC_DICT, n, len(uniq), w_codes)
+            + _nest(encode_int_best(uniq, depth))
             + pack_uint(codes.astype(np.uint64), w_codes)
         )
-    if codec == "vardict":
-        if n == 0:
-            return encode_int(v, "plain")
-        if _prep is not None:
-            uniq, inv, ranks, order = (
-                _prep["uniq"],
-                _inverse(_prep),
-                _prep["ranks"],
-                _prep["order"],
-            )
-        else:
-            uniq, inv, counts = np.unique(
-                v, return_inverse=True, return_counts=True
-            )
-            order = np.lexsort((uniq, -counts))
-            ranks = np.empty(len(uniq), dtype=np.int64)
-            ranks[order] = np.arange(len(uniq))
-        payload = varint_encode(ranks[inv].astype(np.uint64))
-        return (
-            struct.pack("<BQI", CODEC_VARDICT, n, len(uniq))
-            + _encode_nested(uniq[order], _depth + 1)
-            + struct.pack("<Q", len(payload))
-            + payload
-        )
-    raise ValueError(f"unknown integer codec: {codec!r}")
+    payload = varint_encode(prep["ranks"][codes].astype(np.uint64))
+    return (
+        _VARDICT_HDR.pack(CODEC_VARDICT, n, len(uniq))
+        + _nest(encode_int_best(uniq[prep["order"]], depth))
+        + _nest(payload)
+    )
 
 
-def _encode_nested(vals: np.ndarray, depth: int) -> bytes:
-    blob = encode_int_best(vals, _depth=depth)
-    return struct.pack("<Q", len(blob)) + blob
+def _nest(blob: bytes) -> bytes:
+    return _LEN.pack(len(blob)) + blob
 
 
 def encode_int_best(vals: np.ndarray, _depth: int = 0) -> bytes:
     """Auto-select the codec by exact size and encode (the hot path)."""
-    blob, _stats = encode_int_best_with_stats(vals, _depth=_depth)
+    blob, _ = encode_int_best_with_stats(vals, _depth=_depth)
     return blob
 
 
@@ -465,39 +442,17 @@ def encode_int_best_with_stats(
     the encode manifest so every partition's codec choice is auditable."""
     v = np.ascontiguousarray(vals, dtype=np.int64)
     if len(v) == 0:
-        return encode_int(v, "plain"), {
-            "n": 0,
-            "n_distinct": 0,
-            "n_runs": 0,
-            "vmin": 0,
-            "vmax": 0,
-            "codec": "plain",
-        }
-    if _depth >= _MAX_NEST_DEPTH:
-        vmin, vmax = int(v.min()), int(v.max())
-        sz_for = 18 + _packed_bytes(len(v), _width(vmin, vmax))
-        sz_plain = 10 + _plain_itemsize(vmin, vmax) * len(v)
-        codec = "for" if sz_for < sz_plain else "plain"
-        return encode_int(v, codec), {
-            "n": len(v),
-            "n_distinct": -1,
-            "n_runs": -1,
-            "vmin": vmin,
-            "vmax": vmax,
-            "codec": codec,
-        }
+        return encode_int(v, "plain"), {**_stats(None), "codec": "plain"}
     prep = _prepare(v)
     sizes = _sizes(prep)
-    codec = min(sizes, key=lambda k: (sizes[k], _TIE_ORDER[k]))
-    stats = {
-        "n": prep["n"],
-        "n_distinct": len(prep["uniq"]),
-        "n_runs": prep["n_runs"],
-        "vmin": prep["vmin"],
-        "vmax": prep["vmax"],
-        "codec": codec,
-    }
-    return encode_int(v, codec, _depth=_depth, _prep=prep), stats
+    if _depth >= _MAX_NEST_DEPTH:
+        # nesting stops here: only the codecs without a nested blob, and
+        # a size tie keeps PLAIN (min returns the first of equal keys)
+        codec = min(("plain", "for"), key=sizes.__getitem__)
+    else:
+        codec = min(sizes, key=lambda k: (sizes[k], _TIE_ORDER[k]))
+    blob = encode_int(v, codec, _depth=_depth, _prep=prep)
+    return blob, {**_stats(prep), "codec": codec}
 
 
 # ---------------------------------------------------------------------------
@@ -517,8 +472,8 @@ def zwrap_best(blob: bytes) -> bytes:
     containers) — decoders dispatch on the leading codec id.
     """
     z = bytes(_ZSTD.compress(blob))
-    if len(z) + 17 < _ZSTD_MIN_RATIO * len(blob):
-        return struct.pack("<BQQ", CODEC_ZSTD, len(blob), len(z)) + z
+    if len(z) + _ZSTD_HDR.size < _ZSTD_MIN_RATIO * len(blob):
+        return _ZSTD_HDR.pack(CODEC_ZSTD, len(blob), len(z)) + z
     return blob
 
 
@@ -526,13 +481,10 @@ def zunwrap(blob: bytes | memoryview) -> bytes:
     """Remove the ZSTD entropy layer if present."""
     buf = memoryview(blob)
     if len(buf) and buf[0] == CODEC_ZSTD:
-        raw_len, zlen = struct.unpack_from("<QQ", buf, 1)
+        _, raw_len, zlen = _ZSTD_HDR.unpack_from(buf)
+        frame = bytes(buf[_ZSTD_HDR.size : _ZSTD_HDR.size + zlen])
         try:
-            return bytes(
-                _ZSTD.decompress(
-                    bytes(buf[17 : 17 + zlen]), decompressed_size=raw_len
-                )
-            )
+            return bytes(_ZSTD.decompress(frame, decompressed_size=raw_len))
         except OSError as e:
             # pyarrow raises when the frame does not decompress to exactly
             # the header's raw_len: a truncated or corrupt blob must never
@@ -551,22 +503,22 @@ def decode_int(blob: bytes) -> np.ndarray:
 
 
 def _decode_at(buf: memoryview, off: int) -> tuple[np.ndarray, int]:
-    codec_id = buf[off]
+    hdr = _INT_HDRS.get(buf[off])
+    if hdr is None:
+        raise ValueError(f"unknown codec id {buf[off]} at offset {off}")
+    codec_id, n, *fields = hdr.unpack_from(buf, off)
+    p = off + hdr.size
     if codec_id == CODEC_PLAIN:
-        n, itemsize = struct.unpack_from("<QB", buf, off + 1)
-        start = off + 10
-        end = start + itemsize * n
-        dt = "<i4" if itemsize == 4 else "<i8"
-        return np.frombuffer(buf[start:end], dtype=dt).astype(np.int64), end
+        (itemsize,) = fields
+        dtype = "<i4" if itemsize == 4 else "<i8"
+        return np.frombuffer(buf, dtype, n, p).astype(np.int64), p + itemsize * n
     if codec_id == CODEC_FOR:
-        n, ref, w = struct.unpack_from("<QqB", buf, off + 1)
-        start = off + 18
-        nbytes = _packed_bytes(n, w)
-        u = unpack_uint(bytes(buf[start : start + nbytes]), n, w)
-        return u.astype(np.int64) + ref, start + nbytes
+        ref, w = fields
+        end = p + _packed_bytes(n, w)
+        return unpack_uint(bytes(buf[p:end]), n, w).astype(np.int64) + ref, end
     if codec_id == CODEC_DELTA:
-        n, first = struct.unpack_from("<Qq", buf, off + 1)
-        diffs, end = _decode_nested(buf, off + 17)
+        (first,) = fields
+        diffs, end = _decode_nested(buf, p)
         v = np.empty(n, dtype=np.int64)
         v[0] = first
         if n > 1:
@@ -574,28 +526,24 @@ def _decode_at(buf: memoryview, off: int) -> tuple[np.ndarray, int]:
             v[1:] += first
         return v, end
     if codec_id == CODEC_RLE:
-        (n,) = struct.unpack_from("<Q", buf, off + 1)
-        run_vals, mid = _decode_nested(buf, off + 9)
+        run_vals, mid = _decode_nested(buf, p)
         run_lens, end = _decode_nested(buf, mid)
         return np.repeat(run_vals, run_lens), end
+    uniq, mid = _decode_nested(buf, p)
     if codec_id == CODEC_DICT:
-        n, card, w_codes = struct.unpack_from("<QIB", buf, off + 1)
-        uniq, mid = _decode_nested(buf, off + 14)
-        nbytes = _packed_bytes(n, w_codes)
-        codes = unpack_uint(bytes(buf[mid : mid + nbytes]), n, w_codes)
-        return uniq[codes.astype(np.int64)], mid + nbytes
-    if codec_id == CODEC_VARDICT:
-        n, card = struct.unpack_from("<QI", buf, off + 1)
-        dictvals, mid = _decode_nested(buf, off + 13)
-        (plen,) = struct.unpack_from("<Q", buf, mid)
-        codes = varint_decode(bytes(buf[mid + 8 : mid + 8 + plen]), n)
-        return dictvals[codes.astype(np.int64)], mid + 8 + plen
-    raise ValueError(f"unknown codec id {codec_id} at offset {off}")
+        _card, w_codes = fields
+        end = mid + _packed_bytes(n, w_codes)
+        codes = unpack_uint(bytes(buf[mid:end]), n, w_codes)
+        return uniq[codes.astype(np.int64)], end
+    (plen,) = _LEN.unpack_from(buf, mid)
+    p = mid + _LEN.size
+    codes = varint_decode(bytes(buf[p : p + plen]), n)
+    return uniq[codes.astype(np.int64)], p + plen
 
 
 def _decode_nested(buf: memoryview, off: int) -> tuple[np.ndarray, int]:
-    (length,) = struct.unpack_from("<Q", buf, off)
-    start = off + 8
+    (length,) = _LEN.unpack_from(buf, off)
+    start = off + _LEN.size
     vals, _ = _decode_at(buf, start)
     return vals, start + length
 

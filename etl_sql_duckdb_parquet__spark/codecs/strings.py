@@ -13,16 +13,9 @@ measured column: CLAUDE.md "Codec family").  Low-cardinality arrays
 (``source`` has a handful of distinct values) go through a string
 dictionary first.
 
-Blob layouts (little-endian)::
-
-    PLAINBYTES(7): [u8=7][u64 len][bytes]
-    STRARR(6)    : [u8=6][u64 n][nested int blob: utf8 lengths]
-                   [nested bytes blob: concatenated utf8]
-    STRDICT(8)   : [u8=8][u64 n][nested int blob: codes][nested STRARR: uniques]
-    PATTERNID(12): [u8=12][u64 n][u8 digits][u16 prefix len][prefix]
-                   [int blob: suffix values]
-
-"nested" = u64 byte-length prefix + blob.
+Blob layouts (little-endian): each header, codec id first, is one
+``struct.Struct`` declared below with its payload beside it; "nested" is
+the integer codecs' ``_LEN`` byte length + a blob.
 """
 
 from __future__ import annotations
@@ -33,12 +26,27 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .core import decode_int, encode_int_best, zunwrap
+from .core import (
+    _LEN,
+    _decode_at,
+    _decode_nested,
+    _nest,
+    encode_int_best,
+    zunwrap,
+)
 
 CODEC_STRARR = 6
 CODEC_PLAINBYTES = 7
 CODEC_STRDICT = 8
 CODEC_PATTERNID = 12
+
+# n | nested(int blob: utf8 lengths) + nested(PLAINBYTES: concatenated utf8)
+_STRARR_HDR = struct.Struct("<BQ")
+_PLAINBYTES_HDR = struct.Struct("<BQ")  # byte length | the bytes
+# n | nested(int blob: codes) + nested(STRARR: sorted uniques)
+_STRDICT_HDR = struct.Struct("<BQ")
+# n, digits, prefix length | prefix + int blob (not nested): suffix values
+_PATTERNID_HDR = struct.Struct("<BQBH")
 
 
 def _buffers(arr: pa.StringArray) -> tuple[np.ndarray, np.ndarray]:
@@ -90,16 +98,16 @@ def _try_pattern_id(offsets: np.ndarray, data: np.ndarray) -> bytes | None:
     powers = 10 ** np.arange(ndig - 1, -1, -1, dtype=np.int64)
     vals = (buf[:, plen:].astype(np.int64) - 48) @ powers
     return (
-        struct.pack("<BQBH", CODEC_PATTERNID, n, ndig, plen)
+        _PATTERNID_HDR.pack(CODEC_PATTERNID, n, ndig, plen)
         + buf[0, :plen].tobytes()
         + encode_int_best(vals)
     )
 
 
-def _decode_pattern_id(buf: memoryview, off: int) -> pa.StringArray:
-    n, ndig, plen = struct.unpack_from("<QBH", buf, off + 1)
-    p = off + 12
-    vals = decode_int(bytes(buf[p + plen :]))
+def _decode_pattern_id(buf: memoryview) -> pa.StringArray:
+    _, n, ndig, plen = _PATTERNID_HDR.unpack_from(buf)
+    p = _PATTERNID_HDR.size
+    vals, _ = _decode_at(buf, p + plen)
     powers = 10 ** np.arange(ndig - 1, -1, -1, dtype=np.int64)
     chars = np.empty((n, plen + ndig), dtype=np.uint8)
     chars[:, :plen] = np.frombuffer(buf[p : p + plen], np.uint8)
@@ -107,35 +115,25 @@ def _decode_pattern_id(buf: memoryview, off: int) -> pa.StringArray:
     return _string_array(np.arange(n + 1) * (plen + ndig), chars)
 
 
-def _encode_bytes(data: bytes) -> bytes:
-    return struct.pack("<BQ", CODEC_PLAINBYTES, len(data)) + data
-
-
-def _decode_bytes(buf: memoryview, off: int) -> memoryview:
-    if buf[off] != CODEC_PLAINBYTES:
-        raise ValueError(f"unknown bytes codec id {buf[off]}")
-    (n,) = struct.unpack_from("<Q", buf, off + 1)
-    return buf[off + 9 : off + 9 + n]
-
-
-def _nested(blob: bytes) -> bytes:
-    return struct.pack("<Q", len(blob)) + blob
-
-
 def _encode_strarr(offsets: np.ndarray, data: np.ndarray) -> bytes:
     return (
-        struct.pack("<BQ", CODEC_STRARR, len(offsets) - 1)
-        + _nested(encode_int_best(np.diff(offsets)))
-        + _nested(_encode_bytes(data.tobytes()))
+        _STRARR_HDR.pack(CODEC_STRARR, len(offsets) - 1)
+        + _nest(encode_int_best(np.diff(offsets)))
+        + _nest(
+            _PLAINBYTES_HDR.pack(CODEC_PLAINBYTES, data.nbytes) + data.tobytes()
+        )
     )
 
 
 def _decode_strarr(buf: memoryview, off: int) -> pa.StringArray:
-    p = off + 9
-    (ln,) = struct.unpack_from("<Q", buf, p)
-    lengths = decode_int(bytes(buf[p + 8 : p + 8 + ln]))
+    lengths, end = _decode_nested(buf, off + _STRARR_HDR.size)
+    off = end + _LEN.size  # the nested bytes blob
+    codec_id, nbytes = _PLAINBYTES_HDR.unpack_from(buf, off)
+    if codec_id != CODEC_PLAINBYTES:
+        raise ValueError(f"unknown bytes codec id {codec_id}")
+    off += _PLAINBYTES_HDR.size
     offsets = np.concatenate(([0], np.cumsum(lengths)))
-    return _string_array(offsets, _decode_bytes(buf, p + 16 + ln))
+    return _string_array(offsets, buf[off : off + nbytes])
 
 
 def encode_strings(values) -> bytes:
@@ -160,9 +158,9 @@ def encode_strings(values) -> bytes:
         uniq = uniq.take(pc.array_sort_indices(uniq))
         codes = pc.index_in(arr, value_set=uniq).to_numpy().astype(np.int64)
         return (
-            struct.pack("<BQ", CODEC_STRDICT, n)
-            + _nested(encode_int_best(codes))
-            + _nested(_encode_strarr(*_buffers(uniq)))
+            _STRDICT_HDR.pack(CODEC_STRDICT, n)
+            + _nest(encode_int_best(codes))
+            + _nest(_encode_strarr(*_buffers(uniq)))
         )
     return _encode_strarr(offsets, data)
 
@@ -173,9 +171,8 @@ def decode_strings(blob: bytes) -> pa.StringArray:
     if codec_id == CODEC_STRARR:
         return _decode_strarr(buf, 0)
     if codec_id == CODEC_STRDICT:
-        (ln,) = struct.unpack_from("<Q", buf, 9)
-        codes = decode_int(bytes(buf[17 : 17 + ln]))
-        return _decode_strarr(buf, 17 + ln + 8).take(pa.array(codes))
+        codes, end = _decode_nested(buf, _STRDICT_HDR.size)
+        return _decode_strarr(buf, end + _LEN.size).take(pa.array(codes))
     if codec_id == CODEC_PATTERNID:
-        return _decode_pattern_id(buf, 0)
+        return _decode_pattern_id(buf)
     raise ValueError(f"unknown string codec id {codec_id}")

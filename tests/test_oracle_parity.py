@@ -5,7 +5,6 @@ column names, and order-insensitive canonical values must match.  Mirrors the dr
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -16,6 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from etl_sql_duckdb_parquet__spark.queries.common import TABLES  # noqa: E402
+from tools.parity import canon  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
 
@@ -33,20 +33,6 @@ def duck():
         )
     yield con
     con.close()
-
-
-def canon(df) -> list[tuple]:
-    cols = sorted(df.columns)
-    out = []
-    for _, row in df[cols].iterrows():
-        vals = []
-        for v in row:
-            if isinstance(v, float):
-                vals.append("NaN" if math.isnan(v) else f"{v:.9g}")
-            else:
-                vals.append(str(v))
-        out.append(tuple(vals))
-    return sorted(out)
 
 
 def test_all_oracle_keys_have_queries():

@@ -22,17 +22,15 @@ from etl_sql_duckdb_parquet__spark.queries.common import TABLES  # noqa: E402
 
 
 def canon(df) -> list[tuple]:
-    """Column-name-sorted, row-sorted canonical value table."""
+    """Column-name-sorted, row-sorted canonical value table (the parity
+    comparison of this tool and of ``tests/test_oracle_parity.py``)."""
     cols = sorted(df.columns)
     out = []
     for _, row in df[cols].iterrows():
         vals = []
         for v in row:
             if isinstance(v, float):
-                if math.isnan(v):
-                    vals.append("NaN")
-                else:
-                    vals.append(f"{v:.9g}")
+                vals.append("NaN" if math.isnan(v) else f"{v:.9g}")
             else:
                 vals.append(str(v))
         out.append(tuple(vals))
